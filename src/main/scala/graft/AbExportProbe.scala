@@ -47,7 +47,7 @@ object AbExportProbe {
     def phashPixelFrame: org.apache.spark.sql.DataFrame = {
       val tk = slice(split(col("text"), " "), 1, 9)
       val ts = (0 until 9).map(c =>
-        coalesce(element_at(tk, c + 1), lit(s"pad:$c")))
+        coalesce(try_element_at(tk, lit(c + 1)), lit(s"pad:$c")))
       val px = array((for (r <- 0 until 8; c <- 0 until 9) yield
         conv(substring(md5(ts(c)), 2 * r + 1, 2), 16, 10).cast("int")): _*)
       val docsPx = docs.select(col("doc_id"), px.as("px"))

@@ -1577,11 +1577,13 @@ object LlmExtras {
   /** The phash fixture frame shared by the dedup and apply keys:
     * pixel matrices from the first-9-token md5 lattice plus the two
     * probe matrices (one patched pixel — both affected dHash bits in
-    * one band, so the pair is pigeonhole-guaranteed caught). */
+    * one band, so the pair is pigeonhole-guaranteed caught). A document
+    * of fewer than 9 tokens pads column c with `pad:c`, as the oracle's
+    * `COALESCE(tk[c+1], 'pad:c')` does. */
   private def phashPixelFrame(s: SparkSession, d: String): DataFrame = {
     val tk = slice(split(col("text"), " "), 1, 9)
     val ts = (0 until 9).map(c =>
-      coalesce(element_at(tk, c + 1), lit(s"pad:$c")))
+      coalesce(try_element_at(tk, lit(c + 1)), lit(s"pad:$c")))
     val px = array((for (r <- 0 until 8; c <- 0 until 9) yield
       conv(substring(md5(ts(c)), 2 * r + 1, 2), 16, 10).cast("int")): _*)
     val docsPx = documents(s, d).select(col("doc_id"), px.as("px"))

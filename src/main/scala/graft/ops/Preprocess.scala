@@ -11,9 +11,13 @@ import graft.pipeline._
   * fit/transform Pipeline API in `graft.pipeline` (the reference library's
   * actual identity: sklearn-style nodes over dataframes).
   *
-  * Every declared query builds a Pipeline, fits it, and applies it — fit
-  * statistics flow as broadcast joins inside one Catalyst plan; there is no
-  * driver-side collect anywhere (100 TB rule, SURVEY §7.3.5).
+  * Every declared query builds a Pipeline, fits it, and applies it. The
+  * fit runs during key construction, one job per stateful node, and holds
+  * each node's statistics as rows; the returned plan applies them as
+  * broadcast joins and scans its input once. The only driver-side collect
+  * is of those statistics: model-sized (a few rows, or one per category),
+  * and already bounded by the broadcast every transform does with them
+  * (100 TB rule, SURVEY §7.3.5).
   *
   * The fixtures contain no NULLs (FIXTURES.md), so the NA-handling keys
   * first inject NULLs with a deterministic predicate and then repair them —
@@ -303,7 +307,8 @@ object Preprocess {
     }),
 
     // the full DAG: derive type_class → robust-categorize brand → one-hot
-    // type_class → min-max scale price, fit-then-transform as ONE plan
+    // type_class → min-max scale price; each stateful node fits in its own
+    // job, then the transform is ONE plan over `part`
     "pipeline_chain" -> ((s, d) => {
       val p = part(s, d)
       val chain = new Pipeline(Seq(

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.util.Det._
@@ -10,17 +12,24 @@ import graft.util.Det._
   * the lazy expression chain).
   *
   * Spark-first re-expression:
-  *  - a Node's fitted state is a SMALL DataFrame of statistics (means,
-  *    frequency tables, min/max), never a driver-side collect: transforms
-  *    apply statistics via `crossJoin(broadcast(stats))` (scalar stats) or
+  *  - a Node's fitted state is a SMALL table of statistics (means,
+  *    frequency tables, min/max): transforms apply it via
+  *    `crossJoin(broadcast(stats))` (scalar stats) or
   *    `join(broadcast(freqTable))` (per-category stats). At 100 TB the fit
   *    aggregation is one partial+final shuffle and the transform side is a
   *    map-only broadcast join — no extra shuffle on the big table.
-  *  - `fit` is lazy end to end: the statistics DataFrame is itself an
-  *    unexecuted plan, so fit→transform composes into ONE Catalyst plan
-  *    (the fit agg becomes a broadcast-exchange subtree). Persisting fitted
-  *    params (`save`/`load`) materializes exactly those small DataFrames —
-  *    the moral equivalent of dask-pipes' yaml'd fit params.
+  *  - `fit` runs ONE job per stateful node and holds the collected
+  *    statistics rows in the plan as a local relation, like dask-pipes'
+  *    eagerly computed fit params. `transform`, `save` and reads of the
+  *    statistics never re-run a fit aggregate over the training rows.
+  *    The collect adds no new memory bound: the statistics already pass
+  *    through the driver as the broadcast build side of every transform.
+  *    Rows, not a `cache`/`localCheckpoint` pin, because a fitted
+  *    pipeline outlives any one query: once a pin is released, a cached
+  *    plan re-runs the fit and a checkpointed one fails.
+  *  - `save`/`load` persist and rehydrate exactly those rows (one parquet
+  *    dir per stateful stage); a loaded pipeline holds its statistics the
+  *    same way a fitted one does.
   *  - sequential semantics match the reference: node i is fit on the output
   *    of the (i-1) fitted transforms.
   */
@@ -30,11 +39,18 @@ trait Node {
   def fitStats(df: DataFrame): Option[DataFrame]
   /** Build the (lazy) transform given the fitted statistics. */
   def transform(stats: Option[DataFrame]): DataFrame => DataFrame
-  final def fit(df: DataFrame): Fitted = Fitted(this, fitStats(df))
+  final def fit(df: DataFrame): Fitted =
+    Fitted(this, fitStats(df).map(Fitted.hold))
 }
 
 final case class Fitted(node: Node, stats: Option[DataFrame]) {
   def apply(df: DataFrame): DataFrame = node.transform(stats)(df)
+}
+object Fitted {
+  /** Run `stats` once and hold its rows as a local relation. */
+  private[pipeline] def hold(stats: DataFrame): DataFrame =
+    stats.sparkSession.createDataFrame(stats.collect().toSeq.asJava,
+      stats.schema)
 }
 
 final class Pipeline(nodes: Seq[Node]) {
@@ -56,12 +72,18 @@ final class FittedPipeline(val stages: Seq[Fitted]) {
   }
 }
 object FittedPipeline {
-  /** Rehydrate fitted params for the same node list (no refit). */
-  def load(spark: SparkSession, dir: String, nodes: Seq[Node]): FittedPipeline =
+  /** Rehydrate fitted params for the same node list (no refit). `dir` may
+    * be any Hadoop path or URI the session can write (`file:`, `hdfs:`,
+    * `s3a:`, or a plain local path). */
+  def load(spark: SparkSession, dir: String,
+      nodes: Seq[Node]): FittedPipeline = {
+    val conf = spark.sparkContext.hadoopConfiguration
     new FittedPipeline(nodes.zipWithIndex.map { case (n, i) =>
-      val p = new java.io.File(s"$dir/stage_$i")
-      Fitted(n, if (p.exists) Some(spark.read.parquet(p.getPath)) else None)
+      val p = new Path(s"$dir/stage_$i")
+      Fitted(n, if (p.getFileSystem(conf).exists(p))
+        Some(Fitted.hold(spark.read.parquet(p.toString))) else None)
     })
+  }
 }
 
 /** Arbitrary stateless step (dask-pipes lets any user function be a node). */

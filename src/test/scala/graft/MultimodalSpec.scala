@@ -401,6 +401,24 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("llm_multimodal_phash_dedup: a document shorter than the 9-token " +
+      "pixel lattice pads with pad:c like its oracle, instead of " +
+      "throwing") {
+    import spark.implicits._
+    val dir = tempDir("graft_phash_short_").toString
+    // doc 2 spells doc 1's padding out, so their pixel matrices (and
+    // dHash bits) are identical only if the short doc pads with pad:c
+    Seq((1L, "a", "alpha beta gamma"),
+      (2L, "b", "alpha beta gamma pad:3 pad:4 pad:5 pad:6 pad:7 pad:8"),
+      (3L, "c", "one two three four five six seven eight nine ten"))
+      .toDF("doc_id", "source", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val pairs = SparkEntry.queries("llm_multimodal_phash_dedup")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(pairs.contains((1L, 2L, 0)), pairs.mkString(","))
+    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), pairs.mkString(","))
+  }
+
   test("payloadNearDups: planted byte-flip copy caught, exact copy at " +
       "jaccard 1, unrelated payload screened out") {
     import spark.implicits._

@@ -47,6 +47,56 @@ class PipelineSpec extends AnyFunSuite {
     assert(a == b)
   }
 
+  test("fit holds each stage's statistics as rows: transform and save " +
+      "survive a release of every persisted RDD and never re-run a fit " +
+      "aggregate, for a fitted and a loaded pipeline alike") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+      LocalRelation}
+    val c = Tables.customer(spark, SparkFixture.sf0001)
+    val train = c.filter(col("c_custkey") % 2 === 0)
+    val heldOut = c.filter(col("c_custkey") % 2 === 1)
+    val fitted = pipe.fit(train)
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    def check(f: FittedPipeline, what: String): Seq[String] = {
+      assert(f.stages.flatMap(_.stats).size == 3, what)
+      f.stages.flatMap(_.stats).foreach { st =>
+        assert(st.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+          s"$what stats not held as rows:\n${st.queryExecution.optimizedPlan}")
+      }
+      val out = f.transform(heldOut)
+      val fitAggs = out.queryExecution.optimizedPlan.collect {
+        case a: Aggregate
+            if a.collectLeaves().exists(!_.isInstanceOf[LocalRelation]) => a
+      }
+      assert(fitAggs.isEmpty,
+        s"$what transform re-runs a fit aggregate:\n${out.queryExecution
+          .optimizedPlan}")
+      out.orderBy("c_custkey").collect().map(_.toString).toSeq
+    }
+    val expected = check(fitted, "fitted")
+    assert(expected.size == heldOut.count())
+    val dir = SparkFixture.tempDir("graft_pipe_held").toString
+    fitted.save(dir)
+    val loaded = FittedPipeline.load(spark, dir, fitted.stages.map(_.node))
+    assert(check(loaded, "loaded") == expected)
+  }
+
+  test("save/load through a file: URI keeps every stage's statistics") {
+    val c = Tables.customer(spark, SparkFixture.sf0001)
+    val fitted = pipe.fit(c)
+    val uri = SparkFixture.tempDir("graft_pipe_uri").toURI.toString
+      .stripSuffix("/")
+    assert(uri.startsWith("file:"))
+    fitted.save(uri)
+    val loaded = FittedPipeline.load(spark, uri, fitted.stages.map(_.node))
+    assert(loaded.stages.map(_.stats.isDefined) ==
+      fitted.stages.map(_.stats.isDefined))
+    def rows(f: FittedPipeline) = f.transform(c).orderBy("c_custkey")
+      .collect().map(_.toString).toSeq
+    assert(rows(loaded) == rows(fitted))
+  }
+
   test("sequential fit: later nodes see earlier transforms") {
     val c = Tables.customer(spark, SparkFixture.sf0001)
       .withColumn("c_acctbal",

@@ -194,10 +194,18 @@ class PlanSpec extends AnyFunSuite {
       s"running total should not add extra shuffles:\n$p")
   }
 
-  test("prep_fillna_mean: fit statistics broadcast, no driver collect") {
-    val p = plan("prep_fillna_mean")
+  test("prep_fillna_mean: held fit statistics broadcast; one customer " +
+      "scan, no fit re-run") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val df = q("prep_fillna_mean")
+    val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastNestedLoopJoin") ||
       p.contains("BroadcastExchange"), s"fit stats must broadcast:\n$p")
+    val scans = df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.mkString
+    }
+    assert(scans.size == 1 && scans.head.contains("customer"),
+      s"expected one customer scan, got ${scans.mkString(", ")}:\n$p")
   }
 
   test("whole-stage codegen covers the scalar-function projections") {

@@ -69,7 +69,6 @@ class PlanSweepSpec extends AnyFunSuite {
     "llm_sim_topk_ivfpq" -> "codebook/centroid ordinals (k-means fit frames, ≤ 256 rows)",
     "llm_sim_topk_pq" -> "codebook ordinal over the centroid frame",
     "llm_vocab_coverage" -> "running coverage over FREQUENCY CLASSES — distinct freq values are ≤ ~√(2N) (Σ f·count(f) = N), a sub-linear stats frame, never tokens",
-    "prep_label_encode" -> "category codes over the distinct-category stats table (|categories| rows; Pipeline.LabelEncoder scaladoc)",
     "window_cumsum_global" -> "the Overlap two-phase prefix sum's TOTALS frame (≤ buckets rows by construction — the data-path window is group-partitioned)",
     "window_row_number_global" -> "the same Overlap totals frame (running count of ones)",
     "window_dense_rank_global" -> "the Overlap denseRank distinct-count TOTALS frame (≤ buckets rows; data-path dense_rank is group-partitioned)",
