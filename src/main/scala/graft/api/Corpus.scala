@@ -568,19 +568,13 @@ object Corpus {
 
   /** Compact appended generations to one row per token + one rewrite
     * (vocab-sized — a file-count concern, never correctness; reads are
-    * generation-blind). Rename-swap via the Hadoop FS API (the
-    * compactCms idiom). Not concurrent-safe with appends/reads. */
+    * generation-blind). Committed through [[graft.util.Swap]]. Not
+    * concurrent-safe with appends/reads. */
   def compactTokenCounts(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val tmp = s"${path}__compacting"
-    readTokenCounts(spark, path).write.mode("overwrite").parquet(tmp)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.delete(p, true))
-      throw new java.io.IOException(s"compaction failed to remove $path")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), p))
-      throw new java.io.IOException(
-        s"compaction failed to swap $tmp into place — counts are at $tmp")
+    readTokenCounts(spark, path).write.mode("overwrite")
+      .parquet(graft.util.Swap.next(path))
+    graft.util.Swap.promote(spark, path)
   }
 
   /** Per-token drift of a new slice against the PERSISTED reference

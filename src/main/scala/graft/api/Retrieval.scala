@@ -129,9 +129,9 @@ object Retrieval {
     * RetrievalSpec).
     *
     * Postings append IN PLACE as delta-sized parquet files (O(delta) —
-    * disjoint rows need no merge); only the 1-row stats table stages
-    * through `dir/stats.new` and swaps, because Spark cannot
-    * read-and-overwrite the same parquet path in one job. Crash
+    * disjoint rows need no merge); only the 1-row stats table is
+    * staged and committed through [[graft.util.Swap]], because Spark
+    * cannot read-and-overwrite the same parquet path in one job. Crash
     * consistency is correspondingly weaker than a staged rewrite: a
     * mid-append failure leaves partial postings files — remove them and
     * re-run, or commit via manifest on stores that support it. */
@@ -168,20 +168,8 @@ object Retrieval {
     oldStats.unionByName(deltaStats)
       .agg(sum(col("__n_docs")).as("__n_docs"),
         sum(col("__total_tokens")).as("__total_tokens"))
-      .write.mode("overwrite").parquet(s"$dir/stats.new")
-    replace(spark, s"$dir/stats.new", s"$dir/stats")
-  }
-
-  /** Atomic-enough directory swap for the staged append (test/local
-    * harness; object stores do this with a manifest commit). */
-  private def replace(spark: org.apache.spark.sql.SparkSession,
-      src: String, dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dst).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dst), true)
-    fs.rename(new org.apache.hadoop.fs.Path(src),
-      new org.apache.hadoop.fs.Path(dst))
-    ()
+      .write.mode("overwrite").parquet(graft.util.Swap.next(s"$dir/stats"))
+    graft.util.Swap.promote(spark, s"$dir/stats")
   }
 
   private def queryTerms(queries: DataFrame, sep: String): DataFrame =

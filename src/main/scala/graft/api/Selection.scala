@@ -299,22 +299,14 @@ object Selection {
   /** Compact a grown sketch in place: collapse appended generations to
     * one row per cell + one rewrite (≤ depth·width rows — a file-count
     * concern, never correctness; estimates are generation-blind).
-    * Rename-swap via the Hadoop FS API (the compactSubstringIndex
-    * idiom), so it works on HDFS/object-store paths. Do not run
-    * concurrently with an append or probe on the same sketch. */
+    * Committed through [[graft.util.Swap]]. Do not run concurrently
+    * with an append or probe on the same sketch. */
   def compactCms(spark: org.apache.spark.sql.SparkSession,
       path: String, depth: Int = 4, width: Int = 64): Unit = {
     val cells = s"$path/cells"
-    val tmp = s"$path/cells__compacting"
     readCms(spark, path, depth, width)
-      .write.mode("overwrite").parquet(tmp)
-    val cPath = new org.apache.hadoop.fs.Path(cells)
-    val fs = cPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.delete(cPath, true))
-      throw new java.io.IOException(s"compaction failed to remove $cells")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), cPath))
-      throw new java.io.IOException(
-        s"compaction failed to swap $tmp into place — sketch is at $tmp")
+      .write.mode("overwrite").parquet(graft.util.Swap.next(cells))
+    graft.util.Swap.promote(spark, cells)
   }
 
   /** Heavy hitters with the sketch next to ground truth: top-`k`

@@ -1460,8 +1460,7 @@ object Similarity {
     * right-to-be-forgotten step every production index needs (the
     * [[TextDedup.removeFromSignatureIndex]] shape applied to ANN): the
     * lists table is rewritten WITHOUT the given ids via an anti-join
-    * through the staged [[rewriteLists]] swap (data is never deleted
-    * before its replacement is in place). Params/centroids are
+    * through the staged [[rewriteLists]] swap. Params/centroids are
     * untouched. After removal a probe behaves exactly as if the index
     * had been rebuilt without those vectors (rows are per-vector and
     * independent — the llm_sim_index_forget oracle certifies it). Do
@@ -1485,18 +1484,13 @@ object Similarity {
   }
 
   /** Staged rewrite of an IVF index's lists table shared by
-    * [[removeFromIvfIndex]] and [[compactIvfIndex]]: materialize the
-    * transformed table to a sibling temp dir, retire the live dir to a
-    * `.bak` sibling, promote the temp, then drop the `.bak` — data is
-    * NEVER deleted before its replacement is fully in place, so every
-    * single-point crash leaves the complete table at the live path or
-    * at one recoverable sibling (the error messages name it). Works on
-    * HDFS/object-store paths (Hadoop FS API). */
+    * [[removeFromIvfIndex]] and [[compactIvfIndex]]: the transformed
+    * table is materialized in full, then committed through
+    * [[graft.util.Swap]] (its crash contract applies). */
   private def rewriteLists(spark: SparkSession, path: String,
       partitionCol: String)(transform: DataFrame => DataFrame): Unit = {
     val live = s"$path/lists"
-    val tmp = s"$path/lists__next"
-    val bak = s"$path/lists__old"
+    val tmp = graft.util.Swap.next(live)
     val lPath = new org.apache.hadoop.fs.Path(live)
     val fs = lPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the live table prices the rewrite for free (r16, ADVICE): its
@@ -1515,12 +1509,9 @@ object Similarity {
         col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
     // a ZERO-row transform writes no parquet files under a partitioned
-    // write (files are emitted per partition value) — promoting the
-    // empty dir would leave an unreadable lists table and every later
-    // probe/append/compact would die with an opaque schema-inference
-    // error instead of this message. Detect it from the FS listing
-    // (free — no extra Spark job) and refuse BEFORE touching the live
-    // table.
+    // write; promoting that empty dir would leave an unreadable lists
+    // table (opaque schema-inference errors on every later read), so
+    // refuse here, from the FS listing (no Spark job)
     val tPath = new org.apache.hadoop.fs.Path(tmp)
     val files = fs.listFiles(tPath, true)
     var hasData = false
@@ -1534,26 +1525,15 @@ object Similarity {
           "untouched. A removal that purges every remaining vector " +
           "should delete the whole index instead.")
     }
-    val bPath = new org.apache.hadoop.fs.Path(bak)
-    fs.delete(bPath, true) // drop any stale .bak from a prior crash
-    if (!fs.rename(lPath, bPath))
-      throw new java.io.IOException(
-        s"lists rewrite failed to retire $live — new table is at $tmp")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), lPath))
-      throw new java.io.IOException(
-        s"lists rewrite failed to promote $tmp — previous table is at " +
-          bak)
-    fs.delete(bPath, true)
+    graft.util.Swap.promote(spark, live)
   }
 
   /** COMPACT a persisted IVF index's lists table — the maintenance step
     * after a run of nightly appends: each append lands one more small
     * file per touched list directory, and probe scan cost is paid per
     * FILE open, not per row. Compaction rewrites the lists back to the
-    * one-file-per-list layout through the staged [[rewriteLists]] swap
-    * (data is never deleted before its replacement is in place; a crash
-    * leaves the complete table at the live path or one recoverable
-    * sibling). Rows are per-vector and unique, so compaction is pure
+    * one-file-per-list layout through the staged [[rewriteLists]] swap.
+    * Rows are per-vector and unique, so compaction is pure
     * file consolidation — probe results are identical before and after
     * (ApiSpec pin). Works on both the sign-bucket and trained layouts
     * (`partitionCol` = "bucket" / "cluster_id"). */

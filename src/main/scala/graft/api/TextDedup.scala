@@ -330,9 +330,14 @@ object TextDedup {
   }
 
   /** Fail loudly when caller parameters disagree with the values the
-    * index was written with (the silent-empty-screen hazard). */
+    * index was written with (the silent-empty-screen hazard), or when
+    * an interrupted [[removeFromSignatureIndex]] left its two tables
+    * from different generations. */
   private def requireIndexParams(spark: SparkSession, path: String,
       shingleWidth: Int, bands: Int, rowsPerBand: Int): Unit = {
+    graft.util.Swap.requireSettled(spark, path,
+      "re-run removeFromSignatureIndex with the same ids (it is " +
+        "idempotent) before screening or appending")
     val Seq(w0, b0, r0) = graft.util.IndexMeta.readInts(spark, path,
       "shingle_width", "bands", "rows_per_band")
     require(w0 == shingleWidth && b0 == bands && r0 == rowsPerBand,
@@ -370,20 +375,14 @@ object TextDedup {
   /** DELETE docs from a persisted signature index — the
     * right-to-be-forgotten step every production index needs: both
     * tables (shingles, sigs) are rewritten WITHOUT the given ids via an
-    * anti-join + rename-swap (the compaction idiom — materialize the
-    * survivor table to a sibling temp dir BEFORE touching the live one,
-    * then swap through the Hadoop FS API, so it works on
-    * HDFS/object-store paths). Params are untouched. After removal, a
-    * screen behaves exactly as if the index had been rebuilt without
-    * those docs (certified by the llm_dedup_forget oracle). Do not run
-    * concurrently with an append or screen on the same index.
-    *
-    * Crash contract: a failure during the STAGED WRITES leaves both
-    * live tables untouched. The two swaps themselves are not atomic
-    * across tables — that window is bracketed by a `__swap_pending`
-    * marker file (created before the first swap, removed after the
-    * last), so a half-swapped index is detectable; re-running the
-    * removal is idempotent and repairs it.
+    * anti-join, staged in full, then committed together through
+    * [[graft.util.Swap]] (its crash contract applies; screens and
+    * appends refuse a half-swapped index, and re-running the removal
+    * is idempotent and repairs it). Params are untouched. After
+    * removal, a screen behaves exactly as if the index had been
+    * rebuilt without those docs (certified by the llm_dedup_forget
+    * oracle). Do not run concurrently with an append or screen on the
+    * same index.
     *
     * `ids` must carry a `doc_id` column. Cost: one scan+rewrite of each
     * table (the index is ~1% of corpus bytes — a cheap pass); the
@@ -395,48 +394,19 @@ object TextDedup {
     // anti-join must stay valid either way. Both tables key docs as
     // `__id` (the md5Shingles/md5BandSigs contract).
     val rm = ids.select(col("doc_id").as("__id")).distinct()
-    val tables = Seq("shingles", "sigs")
-    // STAGE both survivor tables before touching either live dir. The
-    // two anti-join rewrites are independent jobs, so they run from
-    // two driver threads and Spark back-fills one job's task tail with
-    // the other's tasks (optimization guide §2.6 — r15, measured:
-    // remove phase 0.95 → 0.55 s warm; each rewrite alone underuses
-    // the cores). Staging-before-swap also tightens crash behavior:
-    // a failure during either write leaves BOTH live tables untouched
-    // (the previous table-at-a-time loop could crash with shingles
-    // swapped and sigs not).
-    // Par.both collects BOTH outcomes before rethrowing (r16 ADVICE
-    // fix): the old fail-fast Await rethrew while the sibling job kept
-    // writing <table>__removing in the background, so a caller retry
-    // could race the orphaned overwrite.
-    def stage(table: String): Unit =
-      spark.read.parquet(s"$path/$table")
+    val lives = Seq("shingles", "sigs").map(t => s"$path/$t")
+    // STAGE both survivor tables before promoting either. The two
+    // anti-join rewrites are independent jobs, so they run from two
+    // driver threads and Spark back-fills one job's task tail with the
+    // other's tasks (optimization guide §2.6 — r15, measured: remove
+    // phase 0.95 → 0.55 s warm). Par.both collects BOTH outcomes
+    // before rethrowing, so no staged write outlives a failed call.
+    def stage(live: String): Unit =
+      spark.read.parquet(live)
         .join(rm, Seq("__id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$path/${table}__removing")
-    graft.util.Par.both(stage(tables(0)), stage(tables(1)))
-    // SWAP PHASE — still non-atomic ACROSS the two tables: a crash
-    // between the two delete+rename pairs leaves shingles swapped and
-    // sigs not. The marker bounds that window detectably (r16): it is
-    // created before the first swap and deleted after the last, so an
-    // index carrying __swap_pending is known-inconsistent — readers of
-    // a crashed index can refuse or re-run the removal (idempotent:
-    // the anti-join of an already-swapped table is a no-op rewrite).
-    val fs0 = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$path/__swap_pending")
-    fs0.create(marker, true).close()
-    tables.foreach { table =>
-      val live = s"$path/$table"
-      val tmp = s"$path/${table}__removing"
-      val lPath = new org.apache.hadoop.fs.Path(live)
-      val fs = lPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.delete(lPath, true))
-        throw new java.io.IOException(s"removal failed to delete $live")
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), lPath))
-        throw new java.io.IOException(
-          s"removal failed to swap $tmp into place — table is at $tmp")
-    }
-    fs0.delete(marker, false)
+        .write.mode("overwrite").parquet(graft.util.Swap.next(live))
+    graft.util.Par.both(stage(lives(0)), stage(lives(1)))
+    graft.util.Swap.promote(spark, lives: _*)
   }
 
   /** Screen a delta shard against a PERSISTED signature index written
@@ -1401,19 +1371,6 @@ object TextDedup {
     simhashMd5Bands(df, id, text)
       .write.mode("overwrite").parquet(s"$path/bands")
 
-  /** Screen a delta shard against a persisted [[writeSimhashMd5Index]]:
-    * (doc_a = shard id, doc_b = index id, hamming ≤ maxDist). The
-    * corpus text is never re-read — the probe is a band equi-join
-    * against the 4-int index rows. */
-  def simhashMd5ScreenAgainstIndex(shard: DataFrame, id: Column,
-      text: Column, path: String, maxDist: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = ckptFn(shard.sparkSession, checkpointDir)
-    bandedHammingCrossPairs(
-      ck(simhashMd5Bands(shard, id, text)),
-      shard.sparkSession.read.parquet(s"$path/bands"), maxDist)
-  }
-
   /** The complete nightly accept-screen for md5-SimHash dedup: shard
     * members with a near-dup in the INDEX or earlier WITHIN the shard
     * (keep-min — pairs arriving together never meet the index) are
@@ -1422,7 +1379,7 @@ object TextDedup {
       text: Column, path: String, maxDist: Int = 3): DataFrame =
     // ONE pinned band frame feeds both screens (r12, the
     // dedupShardAgainstIndex / phashDedupShardAgainstIndex rule):
-    // routing through the two public entry points computed and pinned
+    // routing through one entry point per screen computed and pinned
     // the shard's simhash bands twice — the per-token md5 fold is the
     // expensive step
     simhashMd5DedupSignedShardAgainstIndex(shard, id,
@@ -1719,25 +1676,19 @@ object TextDedup {
   /** Compact a substring index in place: global re-distinct of the
     * hashes table + one rewrite — collapses cross-append duplicate rows
     * and the per-append small files (a bytes/file-count concern, never
-    * a correctness one; the probe semi-join is duplicate-blind). Runs
-    * through the Hadoop FS API (rename-swap via a sibling temp dir), so
-    * it works on HDFS/object-store paths, not just local disk. Do not
-    * run concurrently with a probe or append on the same index. */
+    * a correctness one; the probe semi-join is duplicate-blind).
+    * Committed through [[graft.util.Swap]]. Do not run concurrently
+    * with a probe or append on the same index. */
   def compactSubstringIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String): Unit = compactHashes(spark, path)
+
+  /** Re-distinct `<path>/hashes` (substring and line indexes). */
+  private def compactHashes(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val hashes = s"$path/hashes"
-    val tmp = s"$path/hashes__compacting"
-    // materialize the distinct BEFORE touching the live table: parquet
-    // reads are lazy, so an in-place overwrite would read-while-deleting
     spark.read.parquet(hashes).distinct()
-      .write.mode("overwrite").parquet(tmp)
-    val hPath = new org.apache.hadoop.fs.Path(hashes)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.delete(hPath, true))
-      throw new java.io.IOException(s"compaction failed to remove $hashes")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), hPath))
-      throw new java.io.IOException(
-        s"compaction failed to swap $tmp into place — index is at $tmp")
+      .write.mode("overwrite").parquet(graft.util.Swap.next(hashes))
+    graft.util.Swap.promote(spark, hashes)
   }
 
   /** Incremental substring dedup of a delta shard against a
@@ -2049,22 +2000,10 @@ object TextDedup {
   }
 
   /** Collapse appended generations to distinct hashes + one rewrite,
-    * rename-swapped via the Hadoop FS API (the compactCms idiom). Not
-    * concurrent-safe with appends/probes. */
+    * committed through [[graft.util.Swap]]. Not concurrent-safe with
+    * appends/probes. */
   def compactLineIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val hashes = s"$path/hashes"
-    val tmp = s"$path/hashes__compacting"
-    spark.read.parquet(hashes).distinct()
-      .write.mode("overwrite").parquet(tmp)
-    val hPath = new org.apache.hadoop.fs.Path(hashes)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.delete(hPath, true))
-      throw new java.io.IOException(s"compaction failed to remove $hashes")
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), hPath))
-      throw new java.io.IOException(
-        s"compaction failed to swap $tmp into place — index is at $tmp")
-  }
+      path: String): Unit = compactHashes(spark, path)
 
   /** The nightly screen: [[dedupLines]] for a DELTA shard against the
     * persisted index — every line whose hash is already indexed is cut

@@ -1476,7 +1476,7 @@ object LlmExtras {
       // + codegen paid the doubled tree every run. Pinning the 4-column
       // (doc_id, source, ref, __n) projection (~50 bytes/doc; corpus
       // text consumed AT the pin, never downstream) halves the plan;
-      // paired A/B (AbExportProbe, same-session alternation): the slim
+      // paired same-session A/B (OPTIMIZATION_r16.md §10): the slim
       // arm won every rep pair, medians 2.77 -> 2.62 s. Expressions are
       // identical to the inline forms — output bit-identical (oracle
       // re-gated).

@@ -747,28 +747,8 @@ object Multimodal {
     df.select(id.as("__id"), dhashBands(pixels).as("__bd"))
       .write.mode("append").parquet(s"$path/bands")
 
-  /** Screen a delta shard against a [[writePhashIndex]] index:
-    * (doc_a from the shard, doc_b from the index, hamming ≤ maxDist).
-    * Same pigeonhole-complete band candidates + exact hamming verify
-    * as [[phashNearDups]], with the index side read from parquet —
-    * payload bytes and pixels of the CORPUS are never touched. */
-  def phashScreenAgainstIndex(shard: DataFrame, id: Column,
-      pixels: Column, path: String, maxDist: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val spark = shard.sparkSession
-    val ck = graft.api.TextDedup.ckptFn(spark, checkpointDir)
-    // cross core shared with the md5-SimHash index screen
-    // (TextDedup.bandedHammingCrossPairs): hot-bucket guard on BOTH
-    // sides (r11) — the accept-screen discipline keeps a live index
-    // free of identical hashes, but the guard no longer relies on
-    // callers honoring that precondition
-    graft.api.TextDedup.bandedHammingCrossPairs(
-      ck(shard.select(id.as("__id"), dhashBands(pixels).as("__bd"))),
-      spark.read.parquet(s"$path/bands"), maxDist)
-  }
-
   /** The complete nightly accept-screen for perceptual dedup: shard
-    * members with a near-dup in the INDEX ([[phashScreenAgainstIndex]])
+    * members with a near-dup in the INDEX ([[phashDropsAgainstIndex]])
     * or earlier WITHIN the shard ([[phashNearDups]] keep-min — pairs
     * arriving together never meet the index) are dropped; survivors
     * keep all original columns (the dedupShardAgainstIndex contract
@@ -777,7 +757,7 @@ object Multimodal {
       pixels: Column, path: String, maxDist: Int = 3): DataFrame = {
     val spark = shard.sparkSession
     // ONE pinned band frame feeds both screens (r12): routing through
-    // phashScreenAgainstIndex + phashNearDups separately computed and
+    // an index screen + phashNearDups separately computed and
     // localCheckpointed the shard's dHash bands twice — two jobs over
     // the same 4-int-per-doc frame
     val bd = graft.api.TextDedup.ckptFn(spark, None)(

@@ -14,24 +14,20 @@ import org.apache.spark.sql.SparkSession
   * jobs in the bench suite, all to move a few ints. Index parameters
   * are driver-side METADATA, not a dataset — the manifest-file
   * convention of the table formats (optimization guide §6) — so this
-  * writes them through the Hadoop FS API (works on HDFS/object-store
-  * paths exactly like the rename-swap compactors) as `key=value`
-  * lines with URL-encoded values (a line-index delimiter can be
-  * "\n"). Readers keep the identical loud-mismatch contract the
-  * parquet form had; a missing sidecar fails with the same
-  * "no such index" loudness a missing parquet dir did.
+  * writes them through the Hadoop FS API as `key=value` lines with
+  * URL-encoded values (a line-index delimiter can be "\n"). Readers
+  * keep the loud-mismatch contract the parquet form had; a missing
+  * sidecar fails as loudly as a missing parquet dir did.
   *
-  * Crash safety (r16, ADVICE): the sidecar is staged to a `__tmp`
-  * sibling and RENAMED into place — the repo's rename-swap idiom — and
-  * carries a terminator line that [[read]] requires, so a torn write
-  * can never yield a sidecar whose truncated numeric value (`width=6`
-  * from `width=64`) silently mis-geometries every later probe; the
-  * parquet form's footer check made partial writes unreadable, and the
-  * terminator restores that property. [[read]] also falls back to the
-  * legacy 1-row-parquet `<index>/params` dir when no sidecar exists
-  * (indexes written by pre-r15 builds stay readable), and [[write]]
-  * retires any such legacy dir so an overwritten index never carries
-  * two generations of metadata. */
+  * Crash safety (r16, ADVICE): the sidecar is committed through
+  * [[Swap]] and ends in a terminator line that [[read]] requires, so a
+  * torn write can never yield a truncated numeric value (`width=6`
+  * from `width=64`) that silently mis-geometries every later probe —
+  * the property the parquet footer check gave. [[read]] also falls back
+  * to the legacy 1-row-parquet `<index>/params` dir when no sidecar
+  * exists (pre-r15 indexes stay readable), and [[write]] retires any
+  * such legacy dir so an overwritten index never carries two
+  * generations of metadata. */
 object IndexMeta {
 
   private def metaPath(dir: String) = new Path(s"$dir/params.txt")
@@ -40,7 +36,7 @@ object IndexMeta {
     * completed. */
   private val Terminator = "#end"
 
-  /** Overwrite the sidecar (staged `__tmp` + rename — never in place).
+  /** Overwrite the sidecar (staged + [[Swap.promote]] — never in place).
     * Field order is preserved (stable bytes for a given index —
     * diff-friendly, like every other index artifact). */
   def write(spark: SparkSession, dir: String,
@@ -50,16 +46,12 @@ object IndexMeta {
     // retire a legacy parquet params dir so the index carries exactly
     // one generation of metadata after an overwrite
     fs.delete(new Path(s"$dir/params"), true)
-    val tmp = new Path(s"$dir/params.txt__tmp")
-    val out = fs.create(tmp, true)
+    val out = fs.create(new Path(Swap.next(p.toString)), true)
     try out.write((fields.map { case (k, v) =>
       k + "=" + java.net.URLEncoder.encode(v, "UTF-8")
     }.mkString("", "\n", "\n") + Terminator + "\n").getBytes("UTF-8"))
     finally out.close()
-    fs.delete(p, false) // rename does not overwrite on HDFS
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(
-        s"failed to promote index params $tmp to $p")
+    Swap.promote(spark, p.toString)
   }
 
   def writeInts(spark: SparkSession, dir: String,
@@ -82,14 +74,7 @@ object IndexMeta {
       }.toMap
     }
     val in = fs.open(p)
-    val body =
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray, "UTF-8")
-      } finally in.close()
+    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     val lines = body.split("\n").iterator.filter(_.nonEmpty).toSeq
     require(lines.lastOption.contains(Terminator),
       s"index params at $p are truncated (no terminator) — the sidecar " +

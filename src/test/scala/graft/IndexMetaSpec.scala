@@ -10,7 +10,7 @@ class IndexMetaSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
 
   test("write/read roundtrip preserves fields incl. newline values, " +
-      "leaves no __tmp behind") {
+      "leaves no staged or retired copy behind") {
     val dir = SparkFixture.tempDir("idxmeta").getAbsolutePath
     graft.util.IndexMeta.write(spark, dir,
       Seq("bits" -> "8", "dim" -> "64", "delim" -> "\n"))
@@ -18,8 +18,11 @@ class IndexMetaSpec extends AnyFunSuite {
     assert(m == Map("bits" -> "8", "dim" -> "64", "delim" -> "\n"))
     assert(graft.util.IndexMeta.readInts(spark, dir, "bits", "dim")
       == Seq(8, 64))
-    assert(!new java.io.File(dir, "params.txt__tmp").exists,
-      "staging file must be renamed away")
+    // write twice so the second commit retires a live sidecar
+    graft.util.IndexMeta.write(spark, dir, Seq("bits" -> "8"))
+    for (sibling <- Seq("params.txt__next", "params.txt__old"))
+      assert(!new java.io.File(dir, sibling).exists,
+        s"$sibling must not outlive the commit")
   }
 
   test("a truncated sidecar (no terminator) is rejected loudly, not " +
