@@ -1172,7 +1172,7 @@ object Similarity {
     * the CALLER's policy: an empty corpus write is a loud error, an
     * empty delta append is a no-op, an empty query batch probes nothing
     * (a streaming source legitimately yields 0-row micro-batches — the
-    * foreachBatch twins must not die on one). */
+    * per-batch probes must not die on one). */
   private def vecDimOpt(df: DataFrame, vec: Column): Option[Int] =
     df.select(size(vec).as("__d")).limit(1).collect()
       .headOption.map(_.getAs[Int]("__d"))

@@ -98,20 +98,9 @@ object TextDedup {
   def nearMinhashMd5(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
       minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // shingle frame pinned: three map-side consumers (the lshAudit /
-    // decision-table rule); shingle-text-sized — larger than the hash
-    // pins but held in the block manager, never shuffled
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val sh = ck(md5Shingles(df, id, text, shingleWidth))
-    // signature frame pinned too: the k-digest minhash pass is the
-    // expensive step and the collapse reads it three times
-    val mh = ck(md5MinhashSigs(sh, bands * rowsPerBand))
-    val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
-    val cand = expandSelfPairs(
-      selfBandCandidates(bandsFromMh(reps, bands, rowsPerBand)), members)
-    jaccardVerify(joinShingles(cand, sh, sh), minJaccard)
-  }
+      checkpointDir: Option[String] = None): DataFrame =
+    selfPairs(signShard(df, id, text, shingleWidth, bands, rowsPerBand,
+      checkpointDir), minJaccard)
 
   /** Cross-frame variant of [[nearMinhashMd5]]: near-dup pairs BETWEEN
     * two corpora — the fuzzy-decontamination primitive (screen training
@@ -127,33 +116,18 @@ object TextDedup {
       rightText: Column, shingleWidth: Int = 3, bands: Int = 4,
       rowsPerBand: Int = 4, minJaccard: Double = 0.8,
       checkpointDir: Option[String] = None): DataFrame = {
-    // each side's shingle frame has two map-side consumers (its band
-    // sigs + its verify side) — same pin, per side. The two sides'
-    // pin CHAINS (shingles → k-digest minhash) are independent, so they
-    // run from two driver threads (guide §2.6, r16): serially, four
-    // eager pin jobs ran back to back with each underusing the cores;
-    // overlapped, one side's k-digest pass back-fills the other's task
-    // tail. Same pins, same frames, bit-identical output.
-    val ck = ckptFn(left.sparkSession, checkpointDir)
-    def sideChain(df: DataFrame, id: Column,
-        text: Column): (DataFrame, DataFrame) = {
-      val sh = ck(md5Shingles(df, id, text, shingleWidth))
-      (sh, ck(md5MinhashSigs(sh, bands * rowsPerBand)))
-    }
-    // hot-bucket guard on BOTH sides: the quadratic needs identical-sig
-    // groups on both, but collapsing each is one cheap agg over a
-    // pinned hash-sized frame — and the big (train) side is the one
-    // that really needs it
-    val ((shA, mhA), (shB, mhB)) = graft.util.Par.both(
-      sideChain(left, leftId, leftText),
-      sideChain(right, rightId, rightText))
-    val (repsA, memA) = collapseSigGroups(mhA, fullSigKey(col("mh")))
-    val (repsB, memB) = collapseSigGroups(mhB, fullSigKey(col("mh")))
-    val cand = expandCrossPairs(
-      crossBandCandidates(bandsFromMh(repsA, bands, rowsPerBand),
-        bandsFromMh(repsB, bands, rowsPerBand)),
-      Some(memA), Some(memB))
-    jaccardVerify(joinShingles(cand, shA, shB), minJaccard)
+    // the two sides' pin chains are independent, so they run from two
+    // driver threads (guide §2.6, r16): serially, four eager pin jobs
+    // ran back to back with each underusing the cores; overlapped, one
+    // side's k-digest pass back-fills the other's task tail. Both sides
+    // collapse identical signatures — the big (train) side is the one
+    // that really needs the hot-bucket guard.
+    def side(df: DataFrame, id: Column, text: Column) =
+      signShard(df, id, text, shingleWidth, bands, rowsPerBand,
+        checkpointDir)
+    val (a, b) = graft.util.Par.both(side(left, leftId, leftText),
+      side(right, rightId, rightText))
+    crossPairs(a, b.bandSigs, Some(b.members), b.sh, minJaccard)
   }
 
   /** [[nearMinhashMd5]] with Kirsch–Mitzenmacher double hashing
@@ -259,9 +233,8 @@ object TextDedup {
     * shard itself ([[nearMinhashMd5]] — pairs arriving together never
     * meet the index; pairwise keep-min retains the earliest id).
     * Returns the shard's surviving rows with all original columns —
-    * exactly what [[appendToSignatureIndex]] then accepts. One
-    * definition shared by the batch key and the streaming
-    * per-micro-batch twin, so the two paths cannot drift. */
+    * exactly what [[appendToSignatureIndex]] then accepts. Streams per
+    * micro-batch through [[graft.ops.Streaming.perBatch]]. */
   def dedupShardAgainstIndex(shard: DataFrame, id: Column, text: Column,
       indexPath: String, shingleWidth: Int = 3, bands: Int = 4,
       rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
@@ -274,56 +247,81 @@ object TextDedup {
       indexPath, minJaccard)
   }
 
-  /** Eagerly-pinned signature lattice of a delta shard — the shard-side
-    * half of [[dedupShardAgainstIndex]], split out (r16, guide §2.6) so
-    * a caller that pays an index WRITE in the same timed path can sign
-    * the shard CONCURRENTLY with the write from a second driver thread
-    * (graft.util.Par.both): the lattice is a pure function of the shard
-    * and never touches the index. ONE shingle pass, ONE k-digest minhash
-    * pass, ONE collapse feed both of the eventual screens (the r12
-    * rule). */
+  /** Eagerly-pinned md5-MinHash signature lattice of one frame — the one
+    * thing every md5-MinHash entry point composes from (self pairs,
+    * cross pairs against another lattice or against a persisted index,
+    * the accept-screen). ONE shingle pass, ONE k-digest minhash pass, ONE
+    * identical-signature collapse feed every screen over it (the r12
+    * rule). Built apart from the screens (r16, guide §2.6) so a caller
+    * that pays an index WRITE in the same timed path can sign the shard
+    * CONCURRENTLY with the write from a second driver thread
+    * (graft.util.Par.both): the lattice is a pure function of its frame
+    * and never touches an index. */
   private[graft] final case class SignedShard(sh: DataFrame,
-      reps: DataFrame, members: DataFrame, bandSigs: DataFrame,
+      members: DataFrame, bandSigs: DataFrame,
       shingleWidth: Int, bands: Int, rowsPerBand: Int)
 
-  /** Build a [[SignedShard]]: the two pins run NOW (eager
-    * localCheckpoint jobs); everything else stays lazy. */
-  private[graft] def signShard(shard: DataFrame, id: Column, text: Column,
-      shingleWidth: Int = 3, bands: Int = 4,
-      rowsPerBand: Int = 4): SignedShard = {
-    val ck = ckptFn(shard.sparkSession, None)
-    val sh = ck(md5Shingles(shard, id, text, shingleWidth))
+  /** Build a [[SignedShard]]: the two pins run NOW (eager checkpoint
+    * jobs — the shingle frame has three map-side consumers, the k-digest
+    * minhash pass is the expensive step and the collapse reads it three
+    * times); everything else stays lazy. Band rows carry ONLY
+    * (__id, band, sig) and only REPRESENTATIVE rows reach them (the r6
+    * exchange-volume rule, the r10 hot-bucket guard). */
+  private[graft] def signShard(df: DataFrame, id: Column, text: Column,
+      shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
+      checkpointDir: Option[String] = None): SignedShard = {
+    val ck = ckptFn(df.sparkSession, checkpointDir)
+    val sh = ck(md5Shingles(df, id, text, shingleWidth))
     val mh = ck(md5MinhashSigs(sh, bands * rowsPerBand))
     val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
-    SignedShard(sh, reps, members, bandsFromMh(reps, bands, rowsPerBand),
+    SignedShard(sh, members, bandsFromMh(reps, bands, rowsPerBand),
       shingleWidth, bands, rowsPerBand)
   }
 
+  /** Verified near-dup pairs WITHIN one lattice: band self-join over the
+    * representatives, member expansion, exact jaccard ≥ `minJaccard`.
+    * Output: (doc_a, doc_b, jaccard 4 dp), doc_a < doc_b. */
+  private def selfPairs(s: SignedShard, minJaccard: Double): DataFrame =
+    jaccardVerify(joinShingles(
+        expandSelfPairs(selfBandCandidates(s.bandSigs), s.members),
+        s.sh, s.sh),
+      minJaccard)
+
+  /** Verified near-dup pairs BETWEEN a lattice and another side given as
+    * its band keys, member map (None when the side was not collapsed — a
+    * persisted index, see [[expandCrossPairs]]) and shingle frame. The
+    * candidate frame is LSH-bounded and broadcasts, so attaching the
+    * other side's shingles is a map-side probe — never a shuffle of its
+    * arrays. Output: (doc_a from `a`, doc_b from the other side,
+    * jaccard 4 dp). */
+  private def crossPairs(a: SignedShard, bSigs: DataFrame,
+      bMembers: Option[DataFrame], bSh: DataFrame,
+      minJaccard: Double): DataFrame =
+    jaccardVerify(joinShingles(
+        expandCrossPairs(crossBandCandidates(a.bandSigs, bSigs),
+          Some(a.members), bMembers),
+        a.sh, bSh),
+      minJaccard)
+
+  /** [[crossPairs]] against the persisted index at `indexPath`, after the
+    * index-params contract is re-checked against the lattice's. */
+  private def indexPairs(a: SignedShard, indexPath: String,
+      minJaccard: Double): DataFrame = {
+    val spark = a.sh.sparkSession
+    requireIndexParams(spark, indexPath, a.shingleWidth, a.bands,
+      a.rowsPerBand)
+    crossPairs(a, spark.read.parquet(s"$indexPath/sigs"), None,
+      spark.read.parquet(s"$indexPath/shingles"), minJaccard)
+  }
+
   /** [[dedupShardAgainstIndex]] over a pre-built [[SignedShard]] —
-    * bit-identical output (the public entry point delegates here), with
-    * the index-params contract re-checked against the lattice's
-    * parameters at screen time. */
+    * bit-identical output (the public entry point delegates here). */
   private[graft] def dedupSignedShardAgainstIndex(shard: DataFrame,
       id: Column, signed: SignedShard, indexPath: String,
       minJaccard: Double = 0.8): DataFrame = {
-    val spark = shard.sparkSession
-    requireIndexParams(spark, indexPath, signed.shingleWidth,
-      signed.bands, signed.rowsPerBand)
-    val inter = jaccardVerify(
-        joinShingles(
-          expandCrossPairs(
-            crossBandCandidates(signed.bandSigs,
-              spark.read.parquet(s"$indexPath/sigs")),
-            Some(signed.members), None),
-          signed.sh, spark.read.parquet(s"$indexPath/shingles")),
-        minJaccard)
+    val inter = indexPairs(signed, indexPath, minJaccard)
       .select(col("doc_a"))
-    val intra = jaccardVerify(
-        joinShingles(
-          expandSelfPairs(selfBandCandidates(signed.bandSigs),
-            signed.members),
-          signed.sh, signed.sh),
-        minJaccard)
+    val intra = selfPairs(signed, minJaccard)
       .select(col("doc_b").as("doc_a"))
     shard.join(inter.union(intra).distinct(), id === col("doc_a"),
       "left_anti")
@@ -425,29 +423,11 @@ object TextDedup {
   def screenAgainstIndex(delta: DataFrame, id: Column, text: Column,
       indexPath: String, shingleWidth: Int = 3, bands: Int = 4,
       rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
-    val spark = delta.sparkSession
-    requireIndexParams(spark, indexPath, shingleWidth, bands, rowsPerBand)
-    val shA = md5Shingles(delta, id, text, shingleWidth)
-    // hot-bucket guard on the DELTA side only (dirty input shards DO
-    // arrive with identical-sig groups); the index side needs none —
-    // the accept-screen discipline keeps it free of identical
-    // signatures (a shard doc whose signature already exists in the
-    // index is a jaccard-1 near-dup and is dropped before append)
-    // delta-sized signature pin: the collapse reads the frame three
-    // times and the k-digest pass is the expensive step
-    val mhA = ckptFn(spark, None)(
-      md5MinhashSigs(shA, bands * rowsPerBand))
-    val (repsA, memA) = collapseSigGroups(mhA, fullSigKey(col("mh")))
-    val cand = expandCrossPairs(
-      crossBandCandidates(bandsFromMh(repsA, bands, rowsPerBand),
-        spark.read.parquet(s"$indexPath/sigs")),
-      Some(memA), None)
-    // the candidate frame is LSH-bounded and broadcasts, so attaching
-    // the index side's shingles is a map-side probe over the shingles
-    // parquet (a scan of the ~1%-of-corpus index, never a shuffle of
-    // its arrays and never a read of corpus text)
-    val shB = spark.read.parquet(s"$indexPath/shingles")
-    jaccardVerify(joinShingles(cand, shA, shB), minJaccard)
+    // params first (before any pin job), as dedupShardAgainstIndex
+    requireIndexParams(delta.sparkSession, indexPath, shingleWidth, bands,
+      rowsPerBand)
+    indexPairs(signShard(delta, id, text, shingleWidth, bands, rowsPerBand),
+      indexPath, minJaccard)
   }
 
   /** (doc_a, doc_b) distinct candidate pairs from ONE signature frame's
@@ -1253,30 +1233,89 @@ object TextDedup {
     * band frame (three consumers). Candidates are pairs sharing ≥ 1
     * band (equi-join, LSH-bounded, hot buckets collapsed via
     * [[collapseSigGroups]] — within-group pairs are hamming-0
-    * candidates by construction); verify is exact 64-bit hamming
-    * (Σ bit_count(xor) per band). PIGEONHOLE: hamming ≤ 3 differs in
-    * ≤ 3 of 4 bands ⇒ recall is deterministically 1.0 — `maxDist` is
-    * capped at 3 to keep that guarantee.
+    * candidates by construction); verify is [[hammingVerify]].
     * Output: (doc_a, doc_b, hamming), doc_a < doc_b. */
   private[graft] def bandedHammingPairs(bw: DataFrame,
       maxDist: Int): DataFrame = {
+    requireHammingComplete(maxDist)
+    val (reps, members) = collapseSigGroups(bw, col("__bd"))
+    hammingVerify(
+      expandSelfPairs(selfBandCandidates(bandRows(reps)), members),
+      bw, bw, maxDist)
+  }
+
+  /** Cross-frame sibling of [[bandedHammingPairs]] — shard band frame
+    * `sb` (PINNED (\_\_id, \_\_bd)) against an index band frame `ib`.
+    * BOTH sides run the [[collapseSigGroups]] hot-bucket guard (r11):
+    * nothing enforces the accept-screen's no-identical-signatures
+    * precondition on an arbitrary index (a rebuilt one, a fixture with
+    * planted dups), and g identical index rows would turn every matching
+    * probe into g band-join rows. The member expansion reinstates every
+    * (shard, index) pair before the verify, so outputs are identical.
+    * Output: (doc_a = shard id, doc_b = index id, hamming ≤ maxDist). */
+  private[graft] def bandedHammingCrossPairs(sb: DataFrame, ib: DataFrame,
+      maxDist: Int): DataFrame = {
+    requireHammingComplete(maxDist)
+    val (reps, members) = collapseSigGroups(sb, col("__bd"))
+    val (repsB, membersB) = collapseSigGroups(ib, col("__bd"))
+    hammingVerify(
+      expandCrossPairs(crossBandCandidates(bandRows(reps), bandRows(repsB)),
+        Some(members), Some(membersB)),
+      sb, ib, maxDist)
+  }
+
+  /** PIGEONHOLE: hamming ≤ 3 differs in ≤ 3 of 4 bands ⇒ every pair the
+    * verify keeps shares a band, so recall is deterministically 1.0 —
+    * `maxDist` is capped at 3 to keep that guarantee. */
+  private def requireHammingComplete(maxDist: Int): Unit =
     require(maxDist >= 0 && maxDist <= 3,
       s"maxDist=$maxDist: the 4-band screen is complete only for " +
         "hamming <= 3 (pigeonhole); shrink maxDist or add bands")
-    val (reps, members) = collapseSigGroups(bw, col("__bd"))
-    val sigs = reps.select(col("__id"),
-      posexplode(col("__bd")).as(Seq("band", "sig")))
-    val cand = expandSelfPairs(selfBandCandidates(sigs), members)
+
+  /** (\_\_id, band, sig) band-bucket rows of a (\_\_id, \_\_bd) frame. */
+  private def bandRows(bd: DataFrame): DataFrame =
+    bd.select(col("__id"), posexplode(col("__bd")).as(Seq("band", "sig")))
+
+  /** Exact 64-bit hamming (Σ bit_count(xor) over the four bands) of
+    * (doc_a, doc_b) candidates, doc_a's bands from `a`, doc_b's from `b`;
+    * keeps pairs at or below `maxDist`. */
+  private def hammingVerify(cand: DataFrame, a: DataFrame, b: DataFrame,
+      maxDist: Int): DataFrame = {
     val ham = (0 until 4).map(k =>
       bit_count(element_at(col("__ba"), k + 1)
         .bitwiseXOR(element_at(col("__bb"), k + 1)))).reduce(_ + _)
     cand
-      .join(bw.select(col("__id").as("doc_a"), col("__bd").as("__ba")),
+      .join(a.select(col("__id").as("doc_a"), col("__bd").as("__ba")),
         "doc_a")
-      .join(bw.select(col("__id").as("doc_b"), col("__bd").as("__bb")),
+      .join(b.select(col("__id").as("doc_b"), col("__bd").as("__bb")),
         "doc_b")
       .select(col("doc_a"), col("doc_b"), ham.cast("int").as("hamming"))
       .filter(col("hamming") <= maxDist)
+  }
+
+  /** Persist a 4-band hamming index: the (\_\_id, \_\_bd) frame lands as
+    * `path/bands`, ~20 bytes/doc — the one layout the md5-SimHash and
+    * dHash indexes share. Band rows are deterministic per input, so
+    * accepting a screened shard = appending its rows (mode("append")). */
+  private[graft] def writeBandIndex(bd: DataFrame, path: String): Unit =
+    bd.select(col("__id"), col("__bd"))
+      .write.mode("overwrite").parquet(s"$path/bands")
+
+  /** The keep-min DROP SET of a 4-band accept-screen — the one
+    * definition both band families use: `bd` is the shard's PINNED
+    * (\_\_id, \_\_bd) frame (it feeds both screens), output is one
+    * `__drop_id` column naming every shard member with a near-dup in the
+    * [[writeBandIndex]] index at `path` or an EARLIER near-dup within
+    * the shard itself (pairs arriving together never meet the index;
+    * keep-min retains the smallest id). */
+  private[graft] def bandDrops(bd: DataFrame, path: String,
+      maxDist: Int = 3): DataFrame = {
+    val inter = bandedHammingCrossPairs(bd,
+        bd.sparkSession.read.parquet(s"$path/bands"), maxDist)
+      .select(col("doc_a"))
+    val intra = bandedHammingPairs(bd, maxDist)
+      .select(col("doc_b").as("doc_a"))
+    inter.union(intra).distinct().select(col("doc_a").as("__drop_id"))
   }
 
   /** md5-derived SimHash band signature: per-doc DISTINCT tokens, token
@@ -1317,98 +1356,22 @@ object TextDedup {
     bandedHammingPairs(ck(simhashMd5Bands(df, id, text)), maxDist)
   }
 
-  /** Cross-frame sibling of [[bandedHammingPairs]] — shard band frame
-    * `sb` (PINNED (\_\_id, \_\_bd)) against an index band frame `ib`.
-    * BOTH sides run the [[collapseSigGroups]] hot-bucket guard (r11):
-    * the accept-screen discipline keeps a LIVE index free of identical
-    * signatures, but nothing enforces that precondition on arbitrary
-    * callers (a rebuilt index, a fixture corpus with planted dups), and
-    * an uncollapsed hot index signature re-grows candidate fan-out per
-    * shard probe — g identical index rows would turn every matching
-    * probe into g band-join rows. Collapsing costs one groupBy over the
-    * 4-int index frame and restores the one-row-per-signature bound
-    * unconditionally; outputs are identical (the member expansion
-    * reinstates every (shard, index) pair before the exact hamming
-    * verify). Output: (doc_a = shard id, doc_b = index id,
-    * hamming ≤ maxDist). */
-  private[graft] def bandedHammingCrossPairs(sb: DataFrame, ib: DataFrame,
-      maxDist: Int): DataFrame = {
-    require(maxDist >= 0 && maxDist <= 3,
-      s"maxDist=$maxDist: the 4-band screen is complete only for " +
-        "hamming <= 3 (pigeonhole)")
-    def long(f: DataFrame) = f.select(col("__id"),
-      posexplode(col("__bd")).as(Seq("band", "sig")))
-    val (reps, members) = collapseSigGroups(sb, col("__bd"))
-    val (repsB, membersB) = collapseSigGroups(ib, col("__bd"))
-    val cand = expandCrossPairs(
-      long(reps).alias("a")
-        .join(long(repsB).alias("b"),
-          col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
-        .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
-        .dropDuplicates("doc_a", "doc_b"),
-      Some(members), Some(membersB))
-    val ham = (0 until 4).map(k =>
-      bit_count(element_at(col("__ba"), k + 1)
-        .bitwiseXOR(element_at(col("__bb"), k + 1)))).reduce(_ + _)
-    cand
-      .join(sb.select(col("__id").as("doc_a"), col("__bd").as("__ba")),
-        "doc_a")
-      .join(ib.select(col("__id").as("doc_b"), col("__bd").as("__bb")),
-        "doc_b")
-      .select(col("doc_a"), col("doc_b"), ham.cast("int").as("hamming"))
-      .filter(col("hamming") <= maxDist)
-  }
-
-  /** Persist an md5-SimHash band index — the nightly form of SimHash
-    * dedup (the writePhashIndex discipline over token space): corpus
-    * band signatures land ONCE as (\_\_id, \_\_bd ARRAY<INT> of 4),
-    * ~20 bytes/doc; deltas screen with a band equi-join instead of
-    * re-tokenizing the corpus. Signatures are deterministic per text,
-    * so accepting a screened shard = appending its rows
-    * (mode("append")); rebuild only if the band geometry changes. */
+  /** Persist an md5-SimHash band index ([[writeBandIndex]]) — the
+    * nightly form of SimHash dedup: deltas screen with a band equi-join
+    * instead of re-tokenizing the corpus. */
   def writeSimhashMd5Index(df: DataFrame, id: Column, text: Column,
       path: String): Unit =
-    simhashMd5Bands(df, id, text)
-      .write.mode("overwrite").parquet(s"$path/bands")
+    writeBandIndex(simhashMd5Bands(df, id, text), path)
 
   /** The complete nightly accept-screen for md5-SimHash dedup: shard
-    * members with a near-dup in the INDEX or earlier WITHIN the shard
-    * (keep-min — pairs arriving together never meet the index) are
-    * dropped; survivors keep all original columns. */
+    * members in the [[bandDrops]] keep-min drop set are dropped;
+    * survivors keep all original columns. ONE pinned band frame feeds
+    * both screens (r12) — the per-token md5 fold is the expensive step. */
   def simhashMd5DedupShardAgainstIndex(shard: DataFrame, id: Column,
       text: Column, path: String, maxDist: Int = 3): DataFrame =
-    // ONE pinned band frame feeds both screens (r12, the
-    // dedupShardAgainstIndex / phashDedupShardAgainstIndex rule):
-    // routing through one entry point per screen computed and pinned
-    // the shard's simhash bands twice — the per-token md5 fold is the
-    // expensive step
-    simhashMd5DedupSignedShardAgainstIndex(shard, id,
-      simhashSignShard(shard, id, text), path, maxDist)
-
-  /** The eager shard-side pin of [[simhashMd5DedupShardAgainstIndex]],
-    * split out (r16, guide §2.6) so a caller that also pays the index
-    * WRITE in the same timed path can compute the shard's bands
-    * concurrently with the write (graft.util.Par.both) — the band frame
-    * is a pure function of the shard, independent of the index. */
-  private[graft] def simhashSignShard(shard: DataFrame, id: Column,
-      text: Column): DataFrame =
-    ckptFn(shard.sparkSession, None)(simhashMd5Bands(shard, id, text))
-
-  /** [[simhashMd5DedupShardAgainstIndex]] over a pre-pinned
-    * [[simhashSignShard]] band frame — bit-identical output (the public
-    * entry point delegates here). */
-  private[graft] def simhashMd5DedupSignedShardAgainstIndex(
-      shard: DataFrame, id: Column, bd: DataFrame, path: String,
-      maxDist: Int = 3): DataFrame = {
-    val spark = shard.sparkSession
-    val inter = bandedHammingCrossPairs(bd,
-        spark.read.parquet(s"$path/bands"), maxDist)
-      .select(col("doc_a"))
-    val intra = bandedHammingPairs(bd, maxDist)
-      .select(col("doc_b").as("doc_a"))
-    shard.join(inter.union(intra).distinct(), id === col("doc_a"),
-      "left_anti")
-  }
+    shard.join(bandDrops(ckptFn(shard.sparkSession, None)(
+        simhashMd5Bands(shard, id, text)), path, maxDist),
+      id === col("__drop_id"), "left_anti")
 
   /** min-k shingle-hash fingerprint per row (winnowing-style). */
   def fingerprint(df: DataFrame, id: Column, text: Column,
@@ -1657,16 +1620,10 @@ object TextDedup {
     * nothing — distinct-of-union ≡ union-of-distincts (grown ≡ rebuilt,
     * pinned in ApiSpec). Duplicates and per-append small files DO
     * accumulate bytes; [[compactSubstringIndex]] on its own cadence.
-    * `windowTokens` is checked against the recorded params — a mismatch
-    * would append hashes no probe can ever match. */
+    * `windowTokens` is checked by [[requireWindowTokens]]. */
   def appendToSubstringIndex(df: DataFrame, id: Column, text: Column,
       path: String, windowTokens: Int = 8): Unit = {
-    val spark = df.sparkSession
-    val w0 = graft.util.IndexMeta.readInt(spark, path, "window_tokens")
-    require(w0 == windowTokens,
-      s"substring index at $path was written with windowTokens=$w0 " +
-        s"but caller passed $windowTokens — appended hashes could never " +
-        "match a probe")
+    requireWindowTokens(df.sparkSession, path, windowTokens)
     rollingWindows(df.select(id.as("doc_id"), split(text, " ").as("__tk")),
         windowTokens)
       .select("h").distinct()
@@ -1706,53 +1663,58 @@ object TextDedup {
       text: Column, indexPath: String, windowTokens: Int = 8): DataFrame = {
     // params first (before any pin job): a mismatch must fail before the
     // shard pays its window pass
-    val w0 = graft.util.IndexMeta.readInt(shard.sparkSession, indexPath,
-      "window_tokens")
-    require(w0 == windowTokens,
-      s"substring index at $indexPath was written with windowTokens=$w0 " +
-        s"but caller passed $windowTokens — every window hash differs, " +
-        "the screen would silently cut nothing")
+    requireWindowTokens(shard.sparkSession, indexPath, windowTokens)
     dedupWindowedShardAgainstIndex(
-      windowShard(shard, id, text, windowTokens), indexPath, windowTokens)
+      windowShard(shard, id, text, windowTokens), indexPath)
   }
 
-  /** The eager shard-side pins of [[dedupSubstringsAgainstIndex]], split
-    * out (r16, guide §2.6) so a caller that also pays the index WRITE in
-    * the same timed path can window the shard concurrently with the
-    * write (graft.util.Par.both) — both frames are pure functions of the
-    * shard. SHARD-sized — safe to pin (the appendToSignatureIndex
-    * precedent): toks feeds the window lattice plus removeCoveredSpans'
-    * two projections, wins feeds the index probe plus the intra-shard
-    * rule; without the pins each consumer re-tokenizes the shard.
-    * Returns (toks, wins). */
+  /** Fail loudly when `windowTokens` disagrees with the width the
+    * substring index at `path` was written with: every window hash
+    * differs, so a screen would silently cut nothing and an append would
+    * add hashes no probe can ever match. */
+  private def requireWindowTokens(spark: SparkSession, path: String,
+      windowTokens: Int): Unit = {
+    val w0 = graft.util.IndexMeta.readInt(spark, path, "window_tokens")
+    require(w0 == windowTokens,
+      s"substring index at $path was written with windowTokens=$w0 " +
+        s"but the caller's windows are $windowTokens tokens wide — every " +
+        "window hash differs")
+  }
+
+  /** The eagerly-pinned window lattice of a delta shard, with the width
+    * its windows were cut at — built apart from the screen (r16, guide
+    * §2.6) so a caller that also pays the index WRITE in the same timed
+    * path can window the shard concurrently with the write
+    * (graft.util.Par.both). SHARD-sized — safe to pin (the
+    * appendToSignatureIndex precedent): `toks` feeds the window lattice
+    * plus removeCoveredSpans' two projections, `wins` feeds the index
+    * probe plus the intra-shard rule; without the pins each consumer
+    * re-tokenizes the shard. */
+  private[graft] final case class WindowedShard(toks: DataFrame,
+      wins: DataFrame, windowTokens: Int)
+
   private[graft] def windowShard(shard: DataFrame, id: Column,
-      text: Column, windowTokens: Int): (DataFrame, DataFrame) = {
+      text: Column, windowTokens: Int): WindowedShard = {
     val toks = shard.select(id.as("doc_id"), split(text, " ").as("__tk"))
       .localCheckpoint()
-    val wins = rollingWindows(toks, windowTokens).localCheckpoint()
-    (toks, wins)
+    WindowedShard(toks,
+      rollingWindows(toks, windowTokens).localCheckpoint(), windowTokens)
   }
 
-  /** [[dedupSubstringsAgainstIndex]] over pre-pinned [[windowShard]]
-    * frames — bit-identical output (the public entry point delegates
-    * here), with the index-params contract re-checked at screen time. */
-  private[graft] def dedupWindowedShardAgainstIndex(
-      shardFrames: (DataFrame, DataFrame), indexPath: String,
-      windowTokens: Int = 8): DataFrame = {
-    val (toks, wins) = shardFrames
-    val spark = toks.sparkSession
-    val w0 =
-      graft.util.IndexMeta.readInt(spark, indexPath, "window_tokens")
-    require(w0 == windowTokens,
-      s"substring index at $indexPath was written with windowTokens=$w0 " +
-        s"but caller passed $windowTokens — every window hash differs, " +
-        "the screen would silently cut nothing")
-    val idx = spark.read.parquet(s"$indexPath/hashes")
-    val inCorpus = wins.join(idx, Seq("h"), "left_semi")
+  /** [[dedupSubstringsAgainstIndex]] over a pre-built [[WindowedShard]]
+    * — bit-identical output (the public entry point delegates here),
+    * with the index's recorded width checked against the width the
+    * lattice was cut at. */
+  private[graft] def dedupWindowedShardAgainstIndex(shard: WindowedShard,
+      indexPath: String): DataFrame = {
+    val spark = shard.toks.sparkSession
+    requireWindowTokens(spark, indexPath, shard.windowTokens)
+    val inCorpus = shard.wins
+      .join(spark.read.parquet(s"$indexPath/hashes"), Seq("h"), "left_semi")
       .select(col("doc_id").as("__fd"), col("pos").as("__fp"))
-    removeCoveredSpans(toks,
-      inCorpus.unionByName(laterOccurrences(wins)).distinct(),
-      windowTokens)
+    removeCoveredSpans(shard.toks,
+      inCorpus.unionByName(laterOccurrences(shard.wins)).distinct(),
+      shard.windowTokens)
   }
 
   def dupChunkFrac(df: DataFrame, id: Column, text: Column,

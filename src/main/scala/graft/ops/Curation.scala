@@ -244,14 +244,11 @@ object Curation {
       val docs = documents(s, d)
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val delta = docs.filter(col("doc_id") % 10 === 0)
-      // harness-local index location, keyed by the sanitized sf-dir
-      // string — hashCode would risk a silent collision across sf dirs
-      // (screening a delta against the WRONG corpus index) and gives no
-      // diagnosable path name; a real deployment passes an object-store
-      // path and writes once per refresh, not per query (the write is
-      // timed here — honest cost)
-      val idx = new java.io.File("target/graft-sig-index/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      // harness-local index location (graft.util.Staging: distinct sf
+      // dirs and concurrent runs never share an index); a real
+      // deployment passes an object-store path and writes once per
+      // refresh, not per query (the write is timed here — honest cost)
+      val idx = graft.util.Staging.dir("sig_index", d)
       // the delta's signing pins are independent of the index write —
       // overlap the two chains from two driver threads (guide §2.6, the
       // llm_dedup_forget spelling); index screen + intra-shard
@@ -715,8 +712,7 @@ object Curation {
       val docs = documents(s, d)
       val corpus = docs.filter(col("doc_id") % 10 =!= 0)
       val delta = docs.filter(col("doc_id") % 10 === 0)
-      val idx = new java.io.File("target/graft-substr-index/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("substr_index", d)
       // the delta's window pins are independent of the index write —
       // overlap the two chains from two driver threads (guide §2.6,
       // the llm_dedup_forget spelling)
@@ -744,8 +740,7 @@ object Curation {
         col("doc_id") % 10 =!= 3)
       val day1 = docs.filter(col("doc_id") % 10 === 3)
       val delta = docs.filter(col("doc_id") % 10 === 0)
-      val idx = new java.io.File("target/graft-substr-grow/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("substr_grow", d)
       // the delta's window pins are independent of the write+append
       // chain — overlap the two from two driver threads (guide §2.6,
       // the llm_dedup_forget spelling); the append itself stays strictly
@@ -977,8 +972,7 @@ object Curation {
       val feats = QualityShared.feats(docs)
       val labels = QualityShared.seedLabels(docs)
       val m2 = QualityShared.model2(s, d)
-      val dest = new java.io.File("target/graft-qmodel/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val dest = graft.util.Staging.dir("qmodel", d)
       graft.api.Quality.writeModel(m2, dest)
       graft.api.Quality
         .trainStep(feats, labels, graft.api.Quality.readModel(s, dest))
@@ -1101,8 +1095,7 @@ object Curation {
     // sides from scratch, so the gate certifies stored ≡ corpus.
     "llm_corpus_drift_delta" -> ((s, d) => {
       val docs = documents(s, d)
-      val idx = new java.io.File("target/graft-vocab-counts/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("vocab_counts", d)
       graft.api.Corpus.writeTokenCounts(
         docs.filter(col("source") =!= "src0"), col("text"), idx)
       graft.api.Corpus.driftAgainstCounts(
@@ -1119,8 +1112,7 @@ object Curation {
     // cms_grow/substring_grow pattern applied to the drift reference.
     "llm_corpus_drift_grow" -> ((s, d) => {
       val docs = documents(s, d)
-      val idx = new java.io.File("target/graft-vocab-grow/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("vocab_grow", d)
       graft.api.Corpus.writeTokenCounts(
         docs.filter(col("doc_id") % 2 === 0), col("text"), idx)
       graft.api.Corpus.appendToTokenCounts(

@@ -208,8 +208,8 @@ object LlmExtras {
     // corpus text never re-tokenized at screen time), the day's delta
     // (doc_id % 10 = 0, the fixture role split every *_delta key uses)
     // screens against the index AND itself with keep-min
-    // (simhashMd5DedupShardAgainstIndex); probes are band equi-joins
-    // against the 4-int rows
+    // (TextDedup.bandDrops, the rule simhashMd5DedupShardAgainstIndex
+    // applies); probes are band equi-joins against the 4-int rows
     "llm_dedup_simhash_delta" -> ((s, d) => {
       val docs = documents(s, d)
       val delta = docs.filter(col("doc_id") % 10 === 0)
@@ -221,11 +221,11 @@ object LlmExtras {
         graft.api.TextDedup.writeSimhashMd5Index(
           docs.filter(col("doc_id") % 10 =!= 0), col("doc_id"),
           col("text"), idx),
-        graft.api.TextDedup.simhashSignShard(delta, col("doc_id"),
-          col("text")))
-      graft.api.TextDedup
-        .simhashMd5DedupSignedShardAgainstIndex(delta, col("doc_id"),
-          bd, idx)
+        graft.api.TextDedup.simhashMd5Bands(delta, col("doc_id"),
+          col("text")).localCheckpoint())
+      delta
+        .join(graft.api.TextDedup.bandDrops(bd, idx),
+          col("doc_id") === col("__drop_id"), "left_anti")
         .select(col("doc_id"), col("source"))
         .orderBy("doc_id")
     }),
@@ -408,8 +408,7 @@ object LlmExtras {
       val corpus = emb.filter(col("vec_id") % 10 =!= 0)
       val q = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val idx = new java.io.File("target/graft-ivf-index/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("ivf_index", d)
       graft.api.Similarity.writeIvfIndex(corpus, col("vec_id"),
         col("embedding"), idx, bits = IvfIndexBits)
       graft.api.Similarity.topKAgainstIvfIndex(s, idx, q, k = 5, nprobe = 2)
@@ -432,8 +431,7 @@ object LlmExtras {
       val day1 = emb.filter(col("vec_id") % 10 === 3)
       val q = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val idx = new java.io.File("target/graft-ivf-grow/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("ivf_grow", d)
       graft.api.Similarity.writeIvfIndex(day0, col("vec_id"),
         col("embedding"), idx, bits = IvfIndexBits)
       graft.api.Similarity.appendToIvfIndex(day1, col("vec_id"),
@@ -463,8 +461,7 @@ object LlmExtras {
       val day1 = emb.filter(col("vec_id") % 10 === 3)
       val q = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val idx = new java.io.File("target/graft-ivf-compact/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("ivf_compact", d)
       graft.api.Similarity.writeIvfIndex(day0, col("vec_id"),
         col("embedding"), idx, bits = IvfIndexBits)
       graft.api.Similarity.appendToIvfIndex(day1, col("vec_id"),
@@ -493,8 +490,7 @@ object LlmExtras {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val cb = graft.api.Similarity.pqSeedCodebook(corpus,
         col("vec_id"), col("embedding"), m = 8, subDim = 8, k = 16)
-      val idx = new java.io.File("target/graft-ivf-pq/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("ivf_pq", d)
       graft.api.Similarity.writeIvfPqIndex(corpus, col("vec_id"),
         col("embedding"), cb, idx, bits = IvfIndexBits, m = 8, subDim = 8)
       graft.api.Similarity.topKAgainstIvfPqIndex(s, idx, q, k = 5,
@@ -522,8 +518,7 @@ object LlmExtras {
         .select(col("cid"), col("embedding").as("ce"))
       val q = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val idx = new java.io.File("target/graft-ivf-trained/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("ivf_trained", d)
       graft.api.Similarity.writeIvfIndexTrained(corpus, col("vec_id"),
         col("embedding"), cents, idx)
       graft.api.Similarity
@@ -550,8 +545,7 @@ object LlmExtras {
       val corpus = emb.filter(col("vec_id") % 10 =!= 0)
       val q = emb.filter(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      val idx = new java.io.File("target/graft-ivf-forget/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("ivf_forget", d)
       graft.api.Similarity.writeIvfIndex(corpus, col("vec_id"),
         col("embedding"), idx, bits = IvfIndexBits)
       graft.api.Similarity.removeFromIvfIndex(s, idx,
@@ -1411,12 +1405,12 @@ object LlmExtras {
           graft.sources.Multimodal.dhashBands(col("px")).as("__bd"))
         .localCheckpoint()
       val idx = graft.util.Staging.dir("phash_band_index", d)
-      graft.sources.Multimodal.writePhashBandIndex(
+      graft.api.TextDedup.writeBandIndex(
         bands.filter(col("__id") % 10 =!= 0), idx)
       val deltaBd = bands.filter(col("__id") % 10 === 0)
       deltaBd
-        .join(graft.sources.Multimodal.phashDropsAgainstIndex(
-          deltaBd, idx), col("__id") === col("__drop_id"), "left_anti")
+        .join(graft.api.TextDedup.bandDrops(deltaBd, idx),
+          col("__id") === col("__drop_id"), "left_anti")
         .select(col("__id").as("doc_id"))
         .join(documents(s, d).select(col("doc_id"), col("source")),
           Seq("doc_id"))

@@ -102,8 +102,7 @@ object Retrieval {
     // oracle answers; index-vs-direct equality is additionally pinned
     // in RetrievalSpec.
     "llm_bm25_index" -> ((s, d) => {
-      val idx = new java.io.File("target/graft-bm25-index/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("bm25_index", d)
       graft.api.Retrieval.writeBm25Index(documents(s, d), col("doc_id"),
         col("text"), idx)
       val qdf = s.createDataFrame(Bm25Queries).toDF("query_id", "qtext")
@@ -121,8 +120,7 @@ object Retrieval {
     // direct-scoring oracle (the llm_dedup_substring_grow shape; both
     // writes timed, honest nightly cost).
     "llm_bm25_grow" -> ((s, d) => {
-      val idx = new java.io.File("target/graft-bm25-grow/" +
-        d.replaceAll("[^A-Za-z0-9._-]", "_")).getAbsolutePath
+      val idx = graft.util.Staging.dir("bm25_grow", d)
       val docs = documents(s, d)
       graft.api.Retrieval.writeBm25Index(
         docs.filter(col("doc_id") % 10 =!= 0), col("doc_id"), col("text"),

@@ -11,9 +11,10 @@ import graft.util.Det._
   *
   * Strategy (SURVEY §7.4): `window` / `session_window` / `groupBy.count`
   * evaluate identically in batch and in Structured Streaming, so each key
-  * declares the BATCH plan (oracle-able in DuckDB) while `streamTwin*`
+  * declares the BATCH plan (oracle-able in DuckDB) while the `twin*`
   * builders expose the same computation over a streaming DataFrame with
-  * watermarks. The one deliberate divergence: streaming dedup uses
+  * watermarks, and [[perBatch]] streams any stateless batch operator.
+  * The one deliberate divergence: streaming dedup uses
   * dropDuplicatesWithinWatermark, which equals the batch distinct only for
   * replays arriving within the watermark horizon — the price of a state
   * store that actually evicts. StreamingSpec drives the twins
@@ -233,279 +234,31 @@ object Streaming {
   def twinStatefulCounts(stream: DataFrame): DataFrame =
     stream.groupBy("user_id").agg(count(lit(1)).as("n_events"))
 
-  /** Streaming incremental dedup against a PERSISTED signature index —
-    * the continuous-ingestion form of `llm_dedup_incremental`'s nightly
-    * batch: each micro-batch of arriving documents screens against the
-    * index written by `graft.api.TextDedup.writeSignatureIndex` and
-    * `emit` receives the batch's SURVIVORS (docs with no near-dup in
-    * the index). Runs the batch `screenAgainstIndex` verbatim inside
-    * `foreachBatch`: every operator is stateless per micro-batch (a
-    * stream-STATIC screen, no stream-stream state), so there is no
-    * state store to grow regardless of index size — the scaling knob is
-    * the static index alone, exactly as in the batch path. A real
-    * deployment appends each emitted batch's signatures to the index
-    * (`appendToSignatureIndex`) on its refresh cadence; the index
-    * snapshot a given micro-batch sees is the last refresh, the
-    * standard freshness trade of every stream-static join.
-    * `id`/`text` select the document key and body from `docs`'s
-    * schema. */
-  def twinDedupAgainstIndex(docs: DataFrame, id: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column, indexPath: String,
-      shingleWidth: Int = 3)(
+  /** The one streaming form of every STATELESS batch operator — the
+    * index screens (signature, substring, dHash, line), the IVF probes,
+    * quality classify, split assign, DSIR weights, the count-min grow
+    * and the drift monitor: each micro-batch runs `batchOp` — the batch
+    * operator itself, verbatim — inside `foreachBatch`, and `emit`
+    * receives its result (a real pipeline writes a sink here).
+    *
+    * The stream-STATIC contract, stated once: every operator is
+    * stateless per micro-batch, so there is no state store to grow
+    * whatever the stream's length — the only state is the persisted
+    * index, model, sketch or reference the operator reads, and it
+    * refreshes on its own cadence (appending accepted survivors,
+    * re-fitting, or a rebuild). The snapshot a micro-batch sees is the
+    * last refresh, the standard freshness trade of every stream-static
+    * join. Duplicates arriving in the SAME micro-batch are caught by the
+    * operator's intra-shard rule; duplicates split across batches are
+    * the refresh cadence's job — the one documented divergence from a
+    * single batch run. StreamingSpec pins multi-batch ≡ batch-union for
+    * every operator above. */
+  def perBatch(stream: DataFrame)(batchOp: DataFrame => DataFrame)(
       emit: DataFrame => Unit)
       : org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        // index screen + intra-batch self-screen (pairs arriving in the
-        // SAME micro-batch never meet the index; cross-batch dups are
-        // the append cadence's job) — the exact batch accept-screen.
-        // `text` is any token stream: document text with the default
-        // width, or payload BLOCK tokens (Multimodal.payloadBlockTokens,
-        // width 2) — the multimodal screen streams through the same twin
-        emit(graft.api.TextDedup.dedupShardAgainstIndex(batch, id, text,
-          indexPath, shingleWidth))
-    }
-
-  /** Streaming twin of the INCREMENTAL SUBSTRING screen — the same
-    * stream-static shape as [[twinDedupAgainstIndex]]: each micro-batch
-    * runs the batch `dedupSubstringsAgainstIndex` verbatim against the
-    * persisted window-hash index (zero state store; the index is the
-    * only state, refreshed on its own append cadence). Spans duplicated
-    * WITHIN one micro-batch are cut by the intra-shard rule; dup spans
-    * split across batches are the index-append cadence's job — the
-    * documented divergence from a single batch run, identical to the
-    * signature-screen twin's contract. */
-  def twinSubstringDedupAgainstIndex(docs: DataFrame,
-      id: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column, indexPath: String)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.TextDedup.dedupSubstringsAgainstIndex(batch, id,
-          text, indexPath))
-    }
-
-  /** Streaming twin of the PERCEPTUAL (dHash) delta screen (r12 verdict
-    * #6 — the one index-screen family without a foreachBatch twin; the
-    * payload BLOCK-token screen already streams through
-    * [[twinDedupAgainstIndex]] since its batch step IS
-    * dedupShardAgainstIndex): each micro-batch runs the batch
-    * `Multimodal.phashDedupShardAgainstIndex` verbatim against the
-    * persisted band index — stream-static, zero state store; the index
-    * is the only state, refreshed on its own cadence with EITHER form:
-    * nightly `Multimodal.appendToPhashIndex` of accepted survivors
-    * (|shard|-cost, the signature-index discipline) or a full
-    * `writePhashIndex` rebuild (mode("overwrite") — dHash rows are
-    * 8 bytes/doc, so even the rebuild is cheap; reserve it for dHash
-    * geometry changes). Pairs arriving in the SAME
-    * micro-batch are cut by the intra-shard keep-min rule; perceptual
-    * dups split across batches are the index-append cadence's job —
-    * the same documented divergence as the signature-screen twin.
-    * `emit` receives the batch's survivors with all original columns. */
-  def twinPhashDedupAgainstIndex(shard: DataFrame,
-      id: org.apache.spark.sql.Column,
-      pixels: org.apache.spark.sql.Column, indexPath: String,
-      maxDist: Int = 3)(emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    shard.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.sources.Multimodal.phashDedupShardAgainstIndex(batch,
-          id, pixels, indexPath, maxDist))
-    }
-
-  /** Streaming twin of the persisted-IVF ANN probe (r14) — the
-    * continuous-serving form of `llm_sim_index`: each micro-batch of
-    * arriving queries (qid, qe) runs the batch
-    * `Similarity.topKAgainstIvfIndex` verbatim against the static index
-    * written by `writeIvfIndex`/`appendToIvfIndex` — a stream-STATIC
-    * probe with ZERO state store (every operator is stateless per
-    * micro-batch; the index is the only state, rebuilt via overwrite or
-    * grown via append on its own cadence). The index snapshot a given
-    * micro-batch sees is the last refresh — the standard freshness
-    * trade of every stream-static join. `emit` receives the batch's
-    * (qid, vec_id, sim_r, rk ≤ k) rows; multi-batch ≡ batch-union is
-    * pinned in StreamingSpec. */
-  def twinTopKAgainstIvfIndex(queries: DataFrame, indexPath: String,
-      k: Int, nprobe: Int = 1, excludeSelf: Boolean = true)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Similarity.topKAgainstIvfIndex(batch.sparkSession,
-          indexPath, batch, k, nprobe, excludeSelf))
-    }
-
-  /** [[twinTopKAgainstIvfIndex]] for the TRAINED-coarse-quantizer index
-    * (`Similarity.writeIvfIndexTrained`): identical stream-static shape
-    * — the stored centroids + quantized lists are the only state, zero
-    * state store; each micro-batch runs the batch probe verbatim.
-    * StreamingSpec pins multi-batch ≡ batch-union. */
-  def twinTopKAgainstIvfIndexTrained(queries: DataFrame,
-      indexPath: String, k: Int, nprobe: Int = 2,
-      excludeSelf: Boolean = true)(emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Similarity.topKAgainstIvfIndexTrained(
-          batch.sparkSession, indexPath, batch, k, nprobe, excludeSelf))
-    }
-
-  /** [[twinTopKAgainstIvfIndex]] for the PRODUCT-QUANTIZED index
-    * (`Similarity.writeIvfPqIndex`): identical stream-static shape —
-    * the stored codebook + 1-byte code lists are the only state, zero
-    * state store; each micro-batch builds its own ADC LUTs and runs
-    * the batch probe verbatim. StreamingSpec pins multi-batch ≡
-    * batch-union. */
-  def twinTopKAgainstIvfPqIndex(queries: DataFrame, indexPath: String,
-      k: Int, nprobe: Int = 2, excludeSelf: Boolean = true)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    queries.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Similarity.topKAgainstIvfPqIndex(
-          batch.sparkSession, indexPath, batch, k, nprobe, excludeSelf))
-    }
-
-  /** Streaming twin of the LEARNED quality filter — scoring a fitted
-    * model is stateless, so the serving path streams for free: each
-    * micro-batch featurizes ([[graft.api.Corpus.hashFeatures]]) and
-    * classifies against the static fitted model exp-free (the integer-
-    * margin rule), a stream-static join with zero state store. The
-    * model frame is 16^nibbles rows (broadcast-sized by the hashing
-    * trick — this is why serving needs no vocabulary state either);
-    * model refresh happens on its own retrain cadence, the standard
-    * freshness trade of every stream-static join. `emit` receives
-    * (doc_id, score_micro, keep) per batch; batch ≡ streaming
-    * equality is pinned in StreamingSpec. */
-  def twinQualityClassify(docs: DataFrame,
-      id: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column, model: DataFrame,
-      thresholdMicro: Long = 0L)(emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Quality.classify(
-          graft.api.Corpus.hashFeatures(batch, id, text), model,
-          thresholdMicro))
-    }
-
-  /** Streaming twin of the deterministic split — the ingestion-time
-    * router: because [[graft.api.Corpus.splitAssign]] is a pure
-    * per-row function of (salt, key), each micro-batch routes with
-    * ZERO state store and zero coordination — the property the no-RNG
-    * design buys (an RNG split would need to remember every past
-    * draw). A doc arriving in any batch, on any executor, on any
-    * replay lands in the SAME split — exactly-once routing without
-    * idempotency machinery. `emit` receives the batch + `split`;
-    * batch ≡ streaming equality is pinned in StreamingSpec. */
-  def twinSplitAssign(docs: DataFrame, key: org.apache.spark.sql.Column,
-      salt: String = "split", valPermille: Int = 100,
-      testPermille: Int = 100)(emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Corpus.splitAssign(batch, key, salt,
-          valPermille, testPermille))
-    }
-
-  /** Streaming twin of the persisted count-min sketch's accept step —
-    * the [[twinDedupAgainstIndex]] shape applied to frequency tracking:
-    * each micro-batch builds its delta sketch and APPENDS the cells
-    * (graft.api.Selection.appendToCms — yesterday's stream is never
-    * re-read; count-min additivity makes the append the whole merge),
-    * then `emit` receives the collapsed up-to-now sketch. Zero state
-    * store: the persisted sketch IS the state, depth×width rows
-    * regardless of stream length — the bounded-memory streaming
-    * frequency tracker. Streamed-appends ≡ one-batch-build is pinned
-    * in StreamingSpec. */
-  def twinCmsGrow(docs: DataFrame, text: org.apache.spark.sql.Column,
-      sketchPath: String, depth: Int = 4, width: Int = 64)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        graft.api.Selection.appendToCms(batch, text, sketchPath, depth,
-          width)
-        emit(graft.api.Selection.readCms(batch.sparkSession, sketchPath,
-          depth, width))
-    }
-
-  /** Streaming twin of DSIR importance weighting — like
-    * [[twinQualityClassify]], scoring against a FITTED model is
-    * stateless, so the serving path streams for free: each micro-batch
-    * featurizes and weights against the static (bucket, llr_micro)
-    * model (graft.api.Selection.weightsAgainstModel — one broadcast
-    * join + one exact integer agg, zero state store; the model is
-    * DENSE over the 16^nibbles universe, so no shard can hash outside
-    * it). Model refresh rides its own re-fit cadence. `emit` receives
-    * (doc_id, w_micro) per batch; batch ≡ streaming pinned in
-    * StreamingSpec. */
-  def twinDsirWeights(docs: DataFrame,
-      id: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column, model: DataFrame,
-      bucketNibbles: Int = 1, wordNgrams: Int = 2)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Selection.weightsAgainstModel(
-          graft.api.Corpus.hashFeatures(batch, id, text, bucketNibbles,
-            wordNgrams), model))
-    }
-
-  /** Streaming twin of the incremental LINE (paragraph) dedup — the
-    * [[twinSubstringDedupAgainstIndex]] shape at line granularity: each
-    * micro-batch runs the batch `dedupLinesAgainstIndex` verbatim
-    * against the persisted line-hash index (zero state store; the
-    * Heaps-bounded index is the only state, refreshed by
-    * appendToLineIndex on its own cadence). Lines repeated WITHIN one
-    * micro-batch dedup keep-first by the intra-shard rule; repeats
-    * split across batches are the append cadence's job — the family's
-    * standard divergence contract. */
-  def twinLineDedupAgainstIndex(docs: DataFrame,
-      id: org.apache.spark.sql.Column,
-      text: org.apache.spark.sql.Column, indexPath: String,
-      delim: String = "\n")(emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.TextDedup.dedupLinesAgainstIndex(batch, id, text,
-          indexPath, delim))
-    }
-
-  /** Streaming twin of the nightly DRIFT monitor — the
-    * [[twinQualityClassify]] shape applied to distribution monitoring:
-    * each micro-batch's token distribution compares against the
-    * PERSISTED reference vocabulary
-    * (graft.api.Corpus.driftSummaryAgainstCounts — the reference
-    * corpus is never re-read; the slice is the only corpus pass), and
-    * `emit` receives the one-row JS/churn summary per batch — the
-    * "this crawl slice skewed" alert, live. Zero state store: the
-    * persisted counts are the state; reference refresh
-    * (appendToTokenCounts) rides its own cadence, the standard
-    * freshness trade of every stream-static comparison. Batch ≡
-    * streaming pinned in StreamingSpec. */
-  def twinDriftMonitor(docs: DataFrame,
-      text: org.apache.spark.sql.Column, countsPath: String)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        emit(graft.api.Corpus.driftSummaryAgainstCounts(batch, text,
-          countsPath))
+    stream.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, _: Long) => emit(batchOp(batch))
     }
 
   /** Streaming twin of `Overlap.runningSum` (r11) — the global-order
@@ -514,19 +267,19 @@ object Streaming {
     * single-partition window anywhere), shifted by the persisted running
     * offset of everything before it; the offset then advances by the
     * batch total. The one-row offset frame is the only state — the
-    * index-file discipline of the dedup twins applied to an aggregate
-    * (zero state store; `offsetPath` advances once per batch through the
-    * crash-safe staged swap below — EXACT under foreachBatch retries: a
-    * batch whose swap already landed re-reads its pre-batch offset from
-    * the retained `.bak` generation and skips the re-advance, so emits
-    * recompute identically and the sum never double-advances). Correct under the family's
-    * standard cadence contract: batches arrive in global `order` (every
-    * row of batch b+1 follows every row of batch b — a time-ordered
-    * ingest); rows violating the cadence are the ingest's bug, exactly
-    * as late lines are for the line-dedup twin. `value` must be an EXACT
-    * (decimal/integral) expression — the runningSum contract, and what
-    * makes offset addition order-free. Multi-batch ≡ batch-union pinned
-    * in StreamingSpec. */
+    * index-file discipline of the [[perBatch]] screens applied to an
+    * aggregate (zero state store; `offsetPath` advances once per batch
+    * through the crash-safe staged swap below — EXACT under foreachBatch
+    * retries: a batch whose swap already landed re-reads its pre-batch
+    * offset from the retained `.bak` generation and skips the re-advance,
+    * so emits recompute identically and the sum never double-advances).
+    * Correct under the family's standard cadence contract: batches
+    * arrive in global `order` (every row of batch b+1 follows every row
+    * of batch b — a time-ordered ingest); rows violating the cadence are
+    * the ingest's bug, exactly as late lines are for the per-batch line
+    * screen. `value` must be an EXACT (decimal/integral) expression — the
+    * runningSum contract, and what makes offset addition order-free.
+    * Multi-batch ≡ batch-union pinned in StreamingSpec. */
   // ----- crash-safe one-frame state for the foreachBatch twins --------
   // The state at `path` advances once per micro-batch through a staged
   // swap: stage at `path.next`, retire the current generation to

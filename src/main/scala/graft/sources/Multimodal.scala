@@ -709,26 +709,18 @@ object Multimodal {
 
   /** Persist a dHash band index — the nightly form of perceptual dedup
     * (the writeSignatureIndex discipline applied to pixel space): the
-    * accumulated corpus's band signatures land ONCE as a parquet table
-    * of (__id, __bd ARRAY<INT> of 4); each delta shard then screens
-    * with a band equi-join instead of re-decoding anything. Signatures
-    * are deterministic per payload, so accepting a screened shard =
-    * appending its 4-int rows (mode("append") on the same path);
-    * rebuild only if the dHash geometry changes. The index is ~20
-    * bytes/doc regardless of media size — the whole point at 100 TB
-    * of media. */
+    * accumulated corpus's band signatures land ONCE through
+    * [[graft.api.TextDedup.writeBandIndex]] (the layout the md5-SimHash
+    * index shares); each delta shard then screens with a band equi-join
+    * instead of re-decoding anything. Signatures are deterministic per
+    * payload, so accepting a screened shard = appending its 4-int rows
+    * ([[appendToPhashIndex]]); rebuild only if the dHash geometry
+    * changes. The index is ~20 bytes/doc regardless of media size — the
+    * whole point at 100 TB of media. */
   def writePhashIndex(df: DataFrame, id: Column, pixels: Column,
       path: String): Unit =
-    writePhashBandIndex(
+    graft.api.TextDedup.writeBandIndex(
       df.select(id.as("__id"), dhashBands(pixels).as("__bd")), path)
-
-  /** Band-frame form of [[writePhashIndex]] for callers that already
-    * hold the (__id, __bd) band frame — e.g. ONE shared pin feeding
-    * the index write and both screens (the r16 phash-delta shape):
-    * identical layout, no pixel recompute. */
-  def writePhashBandIndex(bands: DataFrame, path: String): Unit =
-    bands.select(col("__id"), col("__bd"))
-      .write.mode("overwrite").parquet(s"$path/bands")
 
   /** Append a screened shard's band rows to an existing
     * [[writePhashIndex]] index — the accept step of the nightly
@@ -748,38 +740,15 @@ object Multimodal {
       .write.mode("append").parquet(s"$path/bands")
 
   /** The complete nightly accept-screen for perceptual dedup: shard
-    * members with a near-dup in the INDEX ([[phashDropsAgainstIndex]])
-    * or earlier WITHIN the shard ([[phashNearDups]] keep-min — pairs
-    * arriving together never meet the index) are dropped; survivors
-    * keep all original columns (the dedupShardAgainstIndex contract
-    * over pixel space). */
+    * members in the [[graft.api.TextDedup.bandDrops]] keep-min drop set
+    * are dropped; survivors keep all original columns (the
+    * dedupShardAgainstIndex contract over pixel space). ONE pinned band
+    * frame feeds both screens (r12). */
   def phashDedupShardAgainstIndex(shard: DataFrame, id: Column,
-      pixels: Column, path: String, maxDist: Int = 3): DataFrame = {
-    val spark = shard.sparkSession
-    // ONE pinned band frame feeds both screens (r12): routing through
-    // an index screen + phashNearDups separately computed and
-    // localCheckpointed the shard's dHash bands twice — two jobs over
-    // the same 4-int-per-doc frame
-    val bd = graft.api.TextDedup.ckptFn(spark, None)(
-      shard.select(id.as("__id"), dhashBands(pixels).as("__bd")))
-    shard.join(phashDropsAgainstIndex(bd, path, maxDist),
+      pixels: Column, path: String, maxDist: Int = 3): DataFrame =
+    shard.join(graft.api.TextDedup.bandDrops(
+        graft.api.TextDedup.ckptFn(shard.sparkSession, None)(
+          shard.select(id.as("__id"), dhashBands(pixels).as("__bd"))),
+        path, maxDist),
       id === col("__drop_id"), "left_anti")
-  }
-
-  /** Band-frame form of the accept-screen's DROP SET: `bands` is the
-    * shard's already-PINNED (__id, __bd) frame (no second pin job runs
-    * — the r16 phash-delta shape), output is one `__drop_id` column
-    * naming every shard member with a near-dup in the index or an
-    * earlier near-dup within the shard (the
-    * [[phashDedupShardAgainstIndex]] keep-min rule). */
-  def phashDropsAgainstIndex(bands: DataFrame, path: String,
-      maxDist: Int = 3): DataFrame = {
-    val spark = bands.sparkSession
-    val inter = graft.api.TextDedup.bandedHammingCrossPairs(
-        bands, spark.read.parquet(s"$path/bands"), maxDist)
-      .select(col("doc_a"))
-    val intra = graft.api.TextDedup.bandedHammingPairs(bands, maxDist)
-      .select(col("doc_b").as("doc_a"))
-    inter.union(intra).distinct().select(col("doc_a").as("__drop_id"))
-  }
 }

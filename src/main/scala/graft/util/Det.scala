@@ -37,7 +37,6 @@ object Det {
 
   /** Hash-stable SUM of an already-exact decimal expression. */
   def dsumExpr(c: Column): Column = sum(c).cast("double")
-  def dsumExprSql(c: String): String = s"CAST(SUM($c) AS DOUBLE)"
 
   /** Hash-stable AVG: exact decimal sum → double, IEEE-divided by count. */
   def davg(c: Column): Column = dsum(c) / count(c)

@@ -529,11 +529,11 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("overlapped write∥sign spelling (Par.both + signed-shard screens) " +
-      "equals the serial public path for all three index families") {
+      "equals the serial public path for all four index families") {
     // the r16 delta-screen overlap: the *_delta/forget keys sign the
     // shard on a second driver thread while the index writes — this
-    // pins that the signed-shard screen variants the keys now call are
-    // bit-identical to the serial public entry points
+    // pins that the lattice spellings the keys call are bit-identical
+    // to the serial public entry points
     val rnd = new scala.util.Random(23)
     val vocab = (0 until 120).map(i => s"w$i")
     def doc() = Seq.fill(30)(vocab(rnd.nextInt(vocab.length))).mkString(" ")
@@ -563,14 +563,15 @@ class ApiSpec extends AnyFunSuite {
     assert(sigGot == sigRef && sigGot.size < deltaRows.size,
       "signature family: overlapped spelling diverges from serial")
 
-    // md5-SimHash band family
+    // md5-SimHash band family (the llm_dedup_simhash_delta spelling)
     val shIdx = base.resolve("simhash").toString
     val (_, bd) = graft.util.Par.both(
       TextDedup.writeSimhashMd5Index(corpus, col("doc_id"), col("text"),
         shIdx),
-      TextDedup.simhashSignShard(delta, col("doc_id"), col("text")))
-    val shGot = rows(TextDedup.simhashMd5DedupSignedShardAgainstIndex(
-      delta, col("doc_id"), bd, shIdx))
+      TextDedup.simhashMd5Bands(delta, col("doc_id"), col("text"))
+        .localCheckpoint())
+    val shGot = rows(delta.join(TextDedup.bandDrops(bd, shIdx),
+      col("doc_id") === col("__drop_id"), "left_anti"))
     val shRef = rows(TextDedup.simhashMd5DedupShardAgainstIndex(delta,
       col("doc_id"), col("text"), shIdx))
     assert(shGot == shRef && shGot.size < deltaRows.size,
@@ -592,6 +593,54 @@ class ApiSpec extends AnyFunSuite {
       col("doc_id"), col("text"), ssIdx))
     assert(ssGot == ssRef && ssGot.nonEmpty,
       "substring family: overlapped spelling diverges from serial")
+
+    // dHash band family (the llm_multimodal_phash_delta spelling): ONE
+    // pinned band frame over corpus ∪ delta feeds the index write and
+    // the delta's drop set
+    def img() = Array.fill(72)(rnd.nextInt(256))
+    val pxCorpus = (0L until 30L).map(i => (i, img()))
+    val variant = pxCorpus(2)._2.clone()
+    variant(40) = (variant(40) + 97) % 256
+    val fresh = img()
+    val pxDelta = Seq((100L, pxCorpus(0)._2.clone()), (101L, variant),
+      (102L, fresh), (103L, fresh.clone())) ++
+      (104L until 110L).map(i => (i, img()))
+    val bands = (pxCorpus ++ pxDelta).toDF("doc_id", "px")
+      .select(col("doc_id").as("__id"),
+        graft.sources.Multimodal.dhashBands(col("px")).as("__bd"))
+      .localCheckpoint()
+    val pxIdx = base.resolve("phash").toString
+    TextDedup.writeBandIndex(bands.filter(col("__id") < 100L), pxIdx)
+    val deltaBd = bands.filter(col("__id") >= 100L)
+    val pxGot = deltaBd
+      .join(TextDedup.bandDrops(deltaBd, pxIdx),
+        col("__id") === col("__drop_id"), "left_anti")
+      .select(col("__id")).collect().map(_.getLong(0)).toSet
+    val pxRefIdx = base.resolve("phash_ref").toString
+    graft.sources.Multimodal.writePhashIndex(pxCorpus.toDF("doc_id", "px"),
+      col("doc_id"), col("px"), pxRefIdx)
+    val pxRef = rows(graft.sources.Multimodal.phashDedupShardAgainstIndex(
+      pxDelta.toDF("doc_id", "px"), col("doc_id"), col("px"), pxRefIdx))
+    assert(pxGot == pxRef && pxGot.size < pxDelta.size &&
+        !pxGot.contains(100L) && !pxGot.contains(101L) &&
+        !pxGot.contains(103L),
+      s"dHash family: pinned-band spelling $pxGot diverges from serial " +
+        s"$pxRef or misses a planted dup")
+  }
+
+  test("the substring screen refuses a window lattice cut at a width " +
+      "other than the one its index was written with") {
+    val text = (1 to 12).map(i => s"t$i").mkString(" ")
+    val idx = java.nio.file.Files.createTempDirectory("graft-ss-width")
+      .resolve("idx").toString
+    TextDedup.writeSubstringIndex(Seq((1L, text)).toDF("doc_id", "text"),
+      col("doc_id"), col("text"), idx, windowTokens = 8)
+    val wind = TextDedup.windowShard(Seq((10L, text)).toDF("doc_id", "text"),
+      col("doc_id"), col("text"), windowTokens = 5)
+    val e = intercept[IllegalArgumentException] {
+      TextDedup.dedupWindowedShardAgainstIndex(wind, idx)
+    }
+    assert(e.getMessage.contains("windowTokens=8"), e.getMessage)
   }
 
   /** identity helper so the planted exact dup is a distinct String

@@ -125,8 +125,9 @@ class StreamingSpec extends AnyFunSuite {
       col("doc_id"), col("text"), dir)
     val in = MemoryStream[(Long, String)]
     val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streaming.twinDedupAgainstIndex(
-        in.toDF.toDF("doc_id", "text"), col("doc_id"), col("text"), dir) {
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text"))(
+        graft.api.TextDedup.dedupShardAgainstIndex(_, col("doc_id"),
+          col("text"), dir)) {
       batch => emitted.synchronized {
         emitted ++= batch.select("doc_id").collect().map(_.getLong(0))
       }
@@ -176,9 +177,9 @@ class StreamingSpec extends AnyFunSuite {
       dir, shingleWidth = 2)
     val in = MemoryStream[(Long, Array[Byte])]
     val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streaming.twinDedupAgainstIndex(
-        bt(in.toDF.toDF("doc_id", "payload")), col("doc_id"), col("bt"),
-        dir, shingleWidth = 2) {
+    val q = Streaming.perBatch(bt(in.toDF.toDF("doc_id", "payload")))(
+        graft.api.TextDedup.dedupShardAgainstIndex(_, col("doc_id"),
+          col("bt"), dir, shingleWidth = 2)) {
       batch => emitted.synchronized {
         emitted ++= batch.select("doc_id").collect().map(_.getLong(0))
       }
@@ -226,8 +227,9 @@ class StreamingSpec extends AnyFunSuite {
       corpus.drop(5).toDF("doc_id", "px"), col("doc_id"), col("px"), dir)
     val in = MemoryStream[(Long, Array[Int])]
     val emitted = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Streaming.twinPhashDedupAgainstIndex(
-        in.toDF.toDF("doc_id", "px"), col("doc_id"), col("px"), dir) {
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "px"))(
+        graft.sources.Multimodal.phashDedupShardAgainstIndex(_,
+          col("doc_id"), col("px"), dir)) {
       batch => emitted.synchronized {
         emitted ++= batch.select("doc_id").collect().map(_.getLong(0))
       }
@@ -284,8 +286,9 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Array[Float])]
     val emitted =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    val q = Streaming.twinTopKAgainstIvfIndex(
-        in.toDF.toDF("qid", "qe"), dir, k = 3, nprobe = 2) {
+    val q = Streaming.perBatch(in.toDF.toDF("qid", "qe"))(b =>
+        graft.api.Similarity.topKAgainstIvfIndex(b.sparkSession, dir, b,
+          k = 3, nprobe = 2)) {
       batch => emitted.synchronized {
         emitted ++= batch.select("qid", "vec_id", "rk").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -344,8 +347,9 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Array[Float])]
     val emitted =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    val q = Streaming.twinTopKAgainstIvfIndexTrained(
-        in.toDF.toDF("qid", "qe"), dir, k = 3, nprobe = 2) {
+    val q = Streaming.perBatch(in.toDF.toDF("qid", "qe"))(b =>
+        graft.api.Similarity.topKAgainstIvfIndexTrained(b.sparkSession,
+          dir, b, k = 3, nprobe = 2)) {
       batch => emitted.synchronized {
         emitted ++= batch.select("qid", "vec_id", "rk").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -386,8 +390,9 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Array[Float])]
     val emitted =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-    val q = Streaming.twinTopKAgainstIvfPqIndex(
-        in.toDF.toDF("qid", "qe"), dir, k = 3, nprobe = 2) {
+    val q = Streaming.perBatch(in.toDF.toDF("qid", "qe"))(b =>
+        graft.api.Similarity.topKAgainstIvfPqIndex(b.sparkSession, dir, b,
+          k = 3, nprobe = 2)) {
       batch => emitted.synchronized {
         emitted ++= batch.select("qid", "vec_id", "rk").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
@@ -621,8 +626,9 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, String)]
     val emitted =
       scala.collection.mutable.Map.empty[Long, (Long, String)]
-    val q = Streaming.twinSubstringDedupAgainstIndex(
-        in.toDF.toDF("doc_id", "text"), col("doc_id"), col("text"), dir) {
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text"))(
+        graft.api.TextDedup.dedupSubstringsAgainstIndex(_, col("doc_id"),
+          col("text"), dir)) {
       batch => emitted.synchronized {
         batch.collect().foreach(row =>
           emitted(row.getLong(0)) = (row.getLong(2), row.getString(3)))
@@ -658,8 +664,8 @@ class StreamingSpec extends AnyFunSuite {
       "fixture ids must spread over at least two splits")
     val in = MemoryStream[Long]
     val emitted = scala.collection.mutable.Map.empty[Long, String]
-    val q = Streaming.twinSplitAssign(in.toDF.toDF("doc_id"),
-        col("doc_id")) { batch =>
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id"))(
+        Corpus.splitAssign(_, col("doc_id"))) { batch =>
       emitted.synchronized {
         batch.collect().foreach(r =>
           emitted(r.getLong(0)) = r.getString(1))
@@ -695,8 +701,9 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     val in = MemoryStream[(Long, String)]
     val emitted = scala.collection.mutable.Map.empty[Long, (Long, Boolean)]
-    val q = Streaming.twinQualityClassify(
-        in.toDF.toDF("doc_id", "text"), col("doc_id"), col("text"), model) {
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text"))(b =>
+        Quality.classify(Corpus.hashFeatures(b, col("doc_id"), col("text")),
+          model)) {
       batch => emitted.synchronized {
         batch.collect().foreach(row =>
           emitted(row.getLong(0)) = (row.getLong(1), row.getBoolean(2)))
@@ -733,8 +740,10 @@ class StreamingSpec extends AnyFunSuite {
       model).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val in = MemoryStream[(Long, String)]
     val emitted = scala.collection.mutable.Map.empty[Long, Long]
-    val q = Streaming.twinDsirWeights(in.toDF.toDF("doc_id", "text"),
-        col("doc_id"), col("text"), model) { batch =>
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text"))(b =>
+        graft.api.Selection.weightsAgainstModel(Corpus.hashFeatures(b,
+          col("doc_id"), col("text"), bucketNibbles = 1, wordNgrams = 2),
+          model)) { batch =>
       emitted.synchronized {
         batch.collect().foreach(r => emitted(r.getLong(0)) = r.getLong(1))
       }
@@ -769,8 +778,12 @@ class StreamingSpec extends AnyFunSuite {
       .as[(Int, Long, Long)].collect().toSet
     val in = MemoryStream[(Long, String)]
     @volatile var last: Set[(Int, Long, Long)] = Set.empty
-    val q = Streaming.twinCmsGrow(in.toDF.toDF("doc_id", "text"),
-        col("text"), path, depth = 4, width = 8) { sketch =>
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text")) { b =>
+        graft.api.Selection.appendToCms(b, col("text"), path, depth = 4,
+          width = 8)
+        graft.api.Selection.readCms(b.sparkSession, path, depth = 4,
+          width = 8)
+      } { sketch =>
       last = sketch.collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     }.start()
@@ -799,8 +812,9 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toString).toSet
     val in = MemoryStream[(Long, String)]
     @volatile var last: Set[String] = Set.empty
-    val q = Streaming.twinLineDedupAgainstIndex(
-        in.toDF.toDF("doc_id", "text"), col("doc_id"), col("text"), path) {
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text"))(
+        graft.api.TextDedup.dedupLinesAgainstIndex(_, col("doc_id"),
+          col("text"), path)) {
       out => last = out.collect().map(_.toString).toSet
     }.start()
     try {
@@ -825,9 +839,10 @@ class StreamingSpec extends AnyFunSuite {
       slice.toDF("doc_id", "text"), col("text"), path).collect()(0)
     val in = MemoryStream[(Long, String)]
     @volatile var last: Option[org.apache.spark.sql.Row] = None
-    val q = Streaming.twinDriftMonitor(in.toDF.toDF("doc_id", "text"),
-        col("text"), path) { s => last = Some(s.collect()(0)) }
-      .start()
+    val q = Streaming.perBatch(in.toDF.toDF("doc_id", "text"))(
+        graft.api.Corpus.driftSummaryAgainstCounts(_, col("text"), path)) {
+      s => last = Some(s.collect()(0))
+    }.start()
     try {
       in.addData(slice: _*)
       q.processAllAvailable()
