@@ -88,12 +88,12 @@ object Bpe {
   /** [[train]] from a pre-built segmented vocabulary (sym, w_n) — the
     * entry point when the caller already paid the wordFreq shuffle (and
     * wants to reuse it for the encode side, e.g. llm_bpe_encode). */
-  def trainFromVocab(vocab0: DataFrame, nMerges: Int): Seq[(String, String)] = {
-    var vocab = vocab0.localCheckpoint()
-    var prevGen = TextDedup.checkpointRdd(vocab)
+  def trainFromVocab(vocab0: DataFrame,
+      nMerges: Int): Seq[(String, String)] = graft.util.Pin.scope { p =>
+    var vocab = p.next(vocab0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     // ONE job per merge round, not two (r16): the previous spelling
-    // localCheckpointed the vocab after EVERY round — a full eager
+    // pinned the vocab after EVERY round — a full eager
     // materialization job to truncate a plan that only grows by one
     // map-side literal `replace` per round. Re-running ≤3 replaces
     // inside the next round's pair aggregate is far cheaper than the
@@ -116,14 +116,11 @@ object Bpe {
         // no pin after the FINAL round — the returned value is the
         // merge list; the last vocab frame is never evaluated again
         if (depth >= PinEvery && rounds < nMerges) {
-          vocab = vocab.localCheckpoint()
-          prevGen.foreach(_.unpersist(blocking = false))
-          prevGen = TextDedup.checkpointRdd(vocab)
+          vocab = p.next(vocab)
           depth = 0
         }
       }
     }
-    prevGen.foreach(_.unpersist(blocking = false))
     merges.toSeq
   }
 

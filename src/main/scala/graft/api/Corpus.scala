@@ -275,7 +275,7 @@ object Corpus {
     // (the mixture keys' executed plans carried up to 20 parquet
     // scans). One corpus aggregate job; everything downstream reads
     // the bounded pin.
-    val perG = TextDedup.ckptFn(df.sparkSession, None)(
+    val perG = graft.util.Pin(
       df.groupBy(group.as("group"))
         .agg(sum(tokens.cast("long")).as("n_tokens"))
         .withColumn("__sq",

@@ -202,8 +202,8 @@ object Overlap {
     * number of groups, per-group row counts); G == 0 means the input
     * was empty. Exposed private[graft] for the ApiSpec tie-split pin. */
   private[graft] def assignGroups(df: DataFrame, bucketKey: Column,
-      order: Seq[Column], buckets0: Int, minRows: Int,
-      checkpointDir: Option[String]): (DataFrame, Int, Array[Long]) = {
+      order: Seq[Column], buckets0: Int,
+      minRows: Int): (DataFrame, Int, Array[Long]) = {
     require(buckets0 >= 0, s"buckets must be >= 0 (0 = auto), got $buckets0")
     require(order.nonEmpty, "order must name at least one column")
     val spark = df.sparkSession
@@ -212,8 +212,8 @@ object Overlap {
     // each re-scan the source — five full reads of a 100 TB input. One
     // materialization; everything below re-derives map-side from it
     // (the group-partitioned exchanges dedupe via ReuseExchange).
-    val keyed = TextDedup.ckptFn(spark, checkpointDir)(
-      df.withColumn(Bkt, bucketKey.cast("double")))
+    val keyed =
+      graft.util.Pin(df.withColumn(Bkt, bucketKey.cast("double")))
     // three scalars — bounded driver work at any data size
     val mm = keyed.agg(min(col(Bkt)), max(col(Bkt)),
       count(when(col(Bkt).isNull, 1)), count(lit(1))).collect()(0)
@@ -361,12 +361,11 @@ object Overlap {
     * truncating at group boundaries). The result carries `df`'s columns
     * plus the outputs. */
   def rollingRows(df: DataFrame, bucketKey: Column, order: Seq[Column],
-      before: Int, after: Int, buckets: Int = 0,
-      checkpointDir: Option[String] = None)
+      before: Int, after: Int, buckets: Int = 0)
       (aggs: WindowSpec => Seq[Column]): DataFrame = {
     require(before >= 0 && after >= 0, "frame bounds must be >= 0")
     val (grouped0, groups, sizes) = assignGroups(df, bucketKey, order,
-      buckets, math.max(math.max(before, after), 1), checkpointDir)
+      buckets, math.max(math.max(before, after), 1))
     val w = Window.partitionBy(Grp).orderBy(order: _*)
     val outs = aggs(w)
     checkFrames(outs, before, after)
@@ -409,14 +408,13 @@ object Overlap {
     * imperative per-partition logic. */
   def mapOverlap(df: DataFrame, bucketKey: Column, order: Seq[Column],
       before: Int, after: Int, outSchema: StructType, buckets: Int = 0,
-      checkpointDir: Option[String] = None,
       maxGroupRows: Long = DefaultMaxGroupRows)
       (fn: Seq[Row] => Seq[Row]): DataFrame = {
     require(before >= 0 && after >= 0, "halo widths must be >= 0")
     require(maxGroupRows >= 1, "maxGroupRows must be >= 1")
     val spark = df.sparkSession
     val (grouped0, groups, sizes) = assignGroups(df, bucketKey, order,
-      buckets, math.max(math.max(before, after), 1), checkpointDir)
+      buckets, math.max(math.max(before, after), 1))
     // the "group fits one task" contract, enforced off counts the merge
     // walk already collected — a skew-swollen group raises a steer
     // instead of an executor OOM
@@ -478,14 +476,12 @@ object Overlap {
     * needs no tie-split here: all rows share ONE frame, and the
     * single-group plan is honestly that frame. */
   def rollingRange(df: DataFrame, key: Column, rangeBefore: Long,
-      rangeAfter: Long, buckets: Int = 0,
-      checkpointDir: Option[String] = None)
+      rangeAfter: Long, buckets: Int = 0)
       (aggs: WindowSpec => Seq[Column]): DataFrame = {
     require(rangeBefore >= 0 && rangeAfter >= 0, "range bounds must be >= 0")
     // same single-materialization rule as assignGroups: mm + the three
     // role selections below would otherwise re-scan the source
-    val keyed = TextDedup.ckptFn(df.sparkSession, checkpointDir)(
-      df.withColumn(Bkt, key.cast("long")))
+    val keyed = graft.util.Pin(df.withColumn(Bkt, key.cast("long")))
     val mm = keyed.agg(min(col(Bkt)), max(col(Bkt)),
       count(when(col(Bkt).isNull, 1)), count(lit(1))).collect()(0)
     require(mm.getLong(2) == 0L, "Overlap range key contains " +
@@ -549,10 +545,9 @@ object Overlap {
     * fixture in ApiSpec). On the value-range path equal keys never
     * split, so the correction is zero there. */
   def denseRank(df: DataFrame, bucketKey: Column, order: Seq[Column],
-      out: String, buckets: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val (grouped, groups, _) = assignGroups(df, bucketKey, order, buckets,
-      1, checkpointDir)
+      out: String, buckets: Int = 0): DataFrame = {
+    val (grouped, groups, _) =
+      assignGroups(df, bucketKey, order, buckets, 1)
     val key = struct(order: _*)
     val inGrp = dense_rank().over(
       Window.partitionBy(Grp).orderBy(order: _*)).cast("long")
@@ -582,11 +577,9 @@ object Overlap {
     * Spark/SQL's fill rule spelled in exact integer arithmetic: the
     * first `total % n` tiles carry ⌈total/n⌉ rows, the rest ⌊total/n⌋. */
   def ntile(df: DataFrame, bucketKey: Column, order: Seq[Column], n: Int,
-      out: String, buckets: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      out: String, buckets: Int = 0): DataFrame = {
     require(n >= 1, s"ntile n must be >= 1, got $n")
-    val rn = runningSum(df, bucketKey, order, lit(1L), "__ovl_rn", buckets,
-      checkpointDir)
+    val rn = runningSum(df, bucketKey, order, lit(1L), "__ovl_rn", buckets)
     val tot = rn.agg(max(col("__ovl_rn")).as("__ovl_tot"))
     rn.crossJoin(broadcast(tot))
       .withColumn(out, expr(
@@ -613,12 +606,11 @@ object Overlap {
     * never touches corpus-sized data. Output columns: `rank_out`,
     * `pct_out`, `cume_out` appended to df. */
   def rankGlobal(df: DataFrame, key: Column, rankOut: String,
-      pctOut: String, cumeOut: String, buckets: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      pctOut: String, cumeOut: String, buckets: Int = 0): DataFrame = {
     val kc = df.select(key.as("__ovl_k")).groupBy("__ovl_k")
       .agg(count(lit(1)).as("__ovl_n"))
     val cum = runningSum(kc, col("__ovl_k"), Seq(col("__ovl_k")),
-      col("__ovl_n"), "__ovl_cum", buckets, checkpointDir)
+      col("__ovl_n"), "__ovl_cum", buckets)
     val tot = cum.agg(max(col("__ovl_cum")).as("__ovl_tot"))
     val keyed = cum.crossJoin(broadcast(tot))
       .select(col("__ovl_k"),
@@ -631,10 +623,9 @@ object Overlap {
   }
 
   def runningSum(df: DataFrame, bucketKey: Column, order: Seq[Column],
-      value: Column, out: String, buckets: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val (grouped, groups, _) = assignGroups(df, bucketKey, order, buckets,
-      1, checkpointDir)
+      value: Column, out: String, buckets: Int = 0): DataFrame = {
+    val (grouped, groups, _) =
+      assignGroups(df, bucketKey, order, buckets, 1)
     val inGrp = sum(value).over(
       Window.partitionBy(Grp).orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow))

@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Pin
 
 /** Learned quality classifier — the fastText/CCNet-style linear model
   * every production curation stack trains next to its heuristic gates
@@ -40,7 +41,7 @@ import org.apache.spark.sql.functions._
   * construction — the hashing trick fixes the feature space up front,
   * no vocabulary merge, no driver collect anywhere). At 100 TB the
   * corpus-sized feature frame is featurized once ([[Corpus.hashFeatures]])
-  * and checkpointed; each epoch reuses it.
+  * and pinned; each epoch reuses it.
   */
 object Quality {
 
@@ -140,48 +141,31 @@ object Quality {
   }
 
   /** Train `epochs` full-batch epochs from the zero model. The feature
-    * frame is materialized ONCE (corpus-sized — the expensive side) and
-    * every epoch reuses it; per-epoch model frames are 16^nibbles rows,
-    * checkpointed only to truncate plan growth, released with the house
-    * generation discipline. Pass `checkpointDir` (HDFS/object store) for
-    * fault-tolerant truncation on a real cluster — by default the
-    * corpus-sized feature materialization is `localCheckpoint`
-    * (executor-local, unreplicated: one lost executor kills the fit;
-    * same hazard note as [[TextQuality.langIdConfusion]]).
+    * frame is pinned ONCE (corpus-sized — the expensive side) and every
+    * epoch reuses it; per-epoch model frames are 16^nibbles rows, pinned
+    * only to truncate plan growth, one generation each
+    * ([[graft.util.Pin]]).
     *
     * Pinned step-for-step against a pure-Scala reference in ApiSpec;
     * the single-epoch `llm_quality_train_step` key is its oracle-checked
     * step. */
   def train(feats: DataFrame, labels: DataFrame, epochs: Int,
-      lrMicro: Long = 500000L,
-      checkpointDir: Option[String] = None): DataFrame = {
+      lrMicro: Long = 500000L): DataFrame = Pin.scope { p =>
     require(epochs >= 1, s"epochs=$epochs must be >= 1")
-    val ck = TextDedup.ckptFn(feats.sparkSession, checkpointDir)
-    val f = ck(feats)
-    val fGen = TextDedup.checkpointRdd(f)
-    val l = ck(labels)
-    val lGen = TextDedup.checkpointRdd(l)
+    val f = p(feats)
+    val l = p(labels)
     var model = trainStep(f, l, emptyWeights(feats), lrMicro)
     var e = 1
-    var prevGen: Option[org.apache.spark.rdd.RDD[_]] = None
     while (e < epochs) {
       // shallow-chain fuse rule (r12): a 2-epoch fit needs no
-      // intermediate truncation — both epochs land in the final ck job
-      if (epochs > 2) {
-        model = ck(model)
-        prevGen.foreach(_.unpersist(blocking = false))
-        prevGen = TextDedup.checkpointRdd(model)
-      }
+      // intermediate truncation — both epochs land in the final pin job
+      if (epochs > 2) model = p.next(model)
       model = trainStep(f, l, model, lrMicro)
       e += 1
     }
-    // materialize the final model BEFORE releasing the inputs it still
-    // references lazily (the returned frame must survive the unpersists)
-    model = ck(model)
-    prevGen.foreach(_.unpersist(blocking = false))
-    fGen.foreach(_.unpersist(blocking = false))
-    lGen.foreach(_.unpersist(blocking = false))
-    model
+    // the scope releases f and l only after the final model is pinned:
+    // the lazy model still reads them
+    p.keep(p.next(model))
   }
 
   /** The zero model: an empty (bucket, w_micro) frame — [[trainStep]]'s
@@ -246,28 +230,23 @@ object Quality {
     * generalization — the number that catches an overfit seed rule or
     * a leaky feature before production.
     *
-    * Scale shape: the corpus-sized feature frame is materialized ONCE
-    * and reused across all `folds`·`epochs` declarative steps (pass
-    * `checkpointDir` for fault-tolerant truncation on a real cluster);
-    * per-fold work is the same two map-side-combinable aggregates as
+    * Scale shape: the corpus-sized feature frame is pinned ONCE and
+    * reused across all `folds`·`epochs` declarative steps; per-fold
+    * work is the same two map-side-combinable aggregates as
     * [[trainStep]]; fold count is a constant. All counts exact
     * integers; accuracy is ONE IEEE division — with the fold gate and
     * the epoch chain both engine-reproducible, the whole loop is
     * oracle-checkable. Output: (fold, n_train, n_test, tp, fp, fn, tn,
     * accuracy), fold ascending. */
   def crossValidate(feats: DataFrame, labels: DataFrame, folds: Int = 3,
-      epochs: Int = 2, lrMicro: Long = 500000L, salt: String = "cv",
-      checkpointDir: Option[String] = None): DataFrame = {
+      epochs: Int = 2, lrMicro: Long = 500000L,
+      salt: String = "cv"): DataFrame = Pin.scope { p =>
     require(folds >= 2, s"folds=$folds must be at least 2")
     require(epochs >= 1, s"epochs=$epochs must be at least 1")
     val u = conv(substring(md5(concat(lit(salt), lit("|"),
       col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long")
-    val ck = TextDedup.ckptFn(feats.sparkSession, checkpointDir)
-    val f = ck(feats)
-    val fGen = TextDedup.checkpointRdd(f)
-    val l = ck(labels.withColumn("__fold", (u % folds).cast("int")))
-    val lGen = TextDedup.checkpointRdd(l)
-    var gens = List.empty[org.apache.spark.rdd.RDD[_]]
+    val f = p(feats)
+    val l = p(labels.withColumn("__fold", (u % folds).cast("int")))
     val rows = (0 until folds).map { k =>
       val trainLab = l.filter(col("__fold") =!= k)
         .select(col("doc_id"), col("y"))
@@ -280,11 +259,9 @@ object Quality {
         // whole 2-epoch fold fuses into the ONE final job (every fold
         // running concurrently — measured ~1.5x at sf0.1, r12), and at
         // depth 2 the un-truncated plan stays small; deeper chains keep
-        // the per-epoch truncation (plan doubles per un-pinned epoch)
-        if (epochs > 2) {
-          model = ck(model)
-          TextDedup.checkpointRdd(model).foreach(r => gens = r :: gens)
-        }
+        // the per-epoch truncation (plan doubles per un-pinned epoch);
+        // every fold's pins live until the scope's result is pinned
+        if (epochs > 2) model = p(model)
         model = trainStep(f, trainLab, model, lrMicro)
         e += 1
       }
@@ -305,12 +282,7 @@ object Quality {
         ((col("tp") + col("tn")).cast("double")
           / col("n_test").cast("double")).as("accuracy"))
       .orderBy("fold")
-    // materialize BEFORE releasing the frames the plan still references
-    val res = ck(out)
-    gens.foreach(_.unpersist(blocking = false))
-    fGen.foreach(_.unpersist(blocking = false))
-    lGen.foreach(_.unpersist(blocking = false))
-    res
+    p.keep(p(out))
   }
 
   /** Persist a fitted (bucket, w_micro) model — the classifier trained
@@ -342,16 +314,15 @@ object Quality {
     * [[crossValidate]]'s generalization. Rate 0 reproduces the
     * standard fit exactly (cross-key consistency with the eval key).
     *
-    * Scale shape: feature frame materialized ONCE (the
-    * [[crossValidate]] discipline, optional reliable `checkpointDir`);
-    * per-rate work = one fit + one doc-keyed eval aggregate. Counts
-    * exact integers, accuracy one IEEE division — oracle-checkable end
-    * to end. Output: (flip_permille, n_flipped, tp, fp, fn, tn,
-    * accuracy), rate ascending. */
+    * Scale shape: feature frame pinned ONCE (the [[crossValidate]]
+    * discipline); per-rate work = one fit + one doc-keyed eval
+    * aggregate. Counts exact integers, accuracy one IEEE division —
+    * oracle-checkable end to end. Output: (flip_permille, n_flipped,
+    * tp, fp, fn, tn, accuracy), rate ascending. */
   def labelNoiseAudit(feats: DataFrame, labels: DataFrame,
       ratesPermille: Seq[Int] = Seq(0, 100, 300), epochs: Int = 2,
-      lrMicro: Long = 500000L, salt: String = "noise",
-      checkpointDir: Option[String] = None): DataFrame = {
+      lrMicro: Long = 500000L,
+      salt: String = "noise"): DataFrame = Pin.scope { p =>
     require(ratesPermille.nonEmpty &&
       ratesPermille == ratesPermille.sorted &&
       ratesPermille.forall(r => r >= 0 && r <= 1000),
@@ -361,12 +332,8 @@ object Quality {
     val Two32 = 4294967296L
     val u = conv(substring(md5(concat(lit(salt), lit("|"),
       col("doc_id").cast("string"))), 1, 8), 16, 10).cast("long")
-    val ck = TextDedup.ckptFn(feats.sparkSession, checkpointDir)
-    val f = ck(feats)
-    val fGen = TextDedup.checkpointRdd(f)
-    val l = ck(labels.withColumn("__u", u))
-    val lGen = TextDedup.checkpointRdd(l)
-    var gens = List.empty[org.apache.spark.rdd.RDD[_]]
+    val f = p(feats)
+    val l = p(labels.withColumn("__u", u))
     val rows = ratesPermille.map { rate =>
       val flip = col("__u") * 1000L < lit(rate.toLong * Two32)
       val noisy = l.select(col("doc_id"),
@@ -375,10 +342,7 @@ object Quality {
       var e = 1
       while (e < epochs) {
         // same shallow-chain fuse rule as crossValidate (r12)
-        if (epochs > 2) {
-          model = ck(model)
-          TextDedup.checkpointRdd(model).foreach(r => gens = r :: gens)
-        }
+        if (epochs > 2) model = p(model)
         model = trainStep(f, noisy, model, lrMicro)
         e += 1
       }
@@ -401,11 +365,7 @@ object Quality {
         ((col("tp") + col("tn")).cast("double")
           / col("__n").cast("double")).as("accuracy"))
       .orderBy("flip_permille")
-    val res = ck(out)
-    gens.foreach(_.unpersist(blocking = false))
-    fGen.foreach(_.unpersist(blocking = false))
-    lGen.foreach(_.unpersist(blocking = false))
-    res
+    p.keep(p(out))
   }
 
   /** Interpretability audit of a fitted model — "what did the filter

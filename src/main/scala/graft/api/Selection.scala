@@ -86,22 +86,18 @@ object Selection {
     * broadcast into ONE corpus-sized feature pass (explode → map-side
     * partial agg → one (doc, bucket) shuffle → doc-keyed agg). The raw
     * feature frame has THREE consumers (the model's bucket counts, its
-    * 1-row total, and the weight join), so it is MATERIALIZED once —
-    * `localCheckpoint` by default (executor-local, unreplicated); pass
-    * `checkpointDir` (HDFS/object store) for a reliable checkpoint on a
-    * real cluster, the house `TextDedup.ckptFn` discipline. At 100 TB
+    * 1-row total, and the weight join), so it is pinned once
+    * ([[graft.util.Pin]]). At 100 TB
     * the same frame is the [[Quality]] featurization reused —
     * featurize once, weight and classify off it. */
   def dsirWeights(raw: DataFrame, target: DataFrame, id: Column,
       text: Column, bucketNibbles: Int = 1,
-      wordNgrams: Int = 2, checkpointDir: Option[String] = None)
-      : DataFrame = {
-    val ck = TextDedup.ckptFn(raw.sparkSession, checkpointDir)
-    val rawFeats = ck(Corpus.hashFeatures(raw, id, text, bucketNibbles,
-      wordNgrams))
+      wordNgrams: Int = 2): DataFrame = {
+    val rawFeats = graft.util.Pin(
+      Corpus.hashFeatures(raw, id, text, bucketNibbles, wordNgrams))
     // the target side is a SAMPLE by the method's design (its two
     // consumers are both tiny aggregates) — featurizing it twice is
-    // cheaper than a checkpoint job, so it stays lazy
+    // cheaper than a pin job, so it stays lazy
     val tgtFeats = Corpus.hashFeatures(target, id, text, bucketNibbles,
       wordNgrams)
     val buckets = (0 until bucketNibbles).foldLeft(1L)((a, _) => a * 16L)
@@ -127,13 +123,11 @@ object Selection {
     * heads + one k-row merge), never a full sort. */
   def dsirSelect(raw: DataFrame, target: DataFrame, id: Column,
       text: Column, k: Int, bucketNibbles: Int = 1,
-      wordNgrams: Int = 2, checkpointDir: Option[String] = None)
-      : DataFrame = {
+      wordNgrams: Int = 2): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("w_micro").desc, col("doc_id"))
-    dsirWeights(raw, target, id, text, bucketNibbles, wordNgrams,
-      checkpointDir)
+    dsirWeights(raw, target, id, text, bucketNibbles, wordNgrams)
       .orderBy(col("w_micro").desc, col("doc_id")).limit(k)
       // row_number over the ≤k-row survivor frame — bounded, not a
       // corpus-wide single-partition window
@@ -156,8 +150,7 @@ object Selection {
     * driver-side randomness. */
   def dsirGumbelTopK(raw: DataFrame, target: DataFrame, id: Column,
       text: Column, k: Int, salt: String = "dsir",
-      bucketNibbles: Int = 1, wordNgrams: Int = 2,
-      checkpointDir: Option[String] = None): DataFrame = {
+      bucketNibbles: Int = 1, wordNgrams: Int = 2): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
     // (h+1)/(2^60+1): h is the 60-bit md5 prefix, so u ∈ (0,1) strictly
     // — both ln calls see arguments inside their domains. The +1 happens
@@ -170,8 +163,7 @@ object Selection {
     val g = round(-log(-log(u)) * lit(Micro.toDouble)).cast("long")
     val w = org.apache.spark.sql.expressions.Window
       .orderBy((col("w_micro") + col("g_micro")).desc, col("doc_id"))
-    dsirWeights(raw, target, id, text, bucketNibbles, wordNgrams,
-        checkpointDir)
+    dsirWeights(raw, target, id, text, bucketNibbles, wordNgrams)
       .withColumn("g_micro", g)
       .orderBy((col("w_micro") + col("g_micro")).desc, col("doc_id"))
       .limit(k)
@@ -330,7 +322,7 @@ object Selection {
     // every consumer (sketch build, probe candidates, final join —
     // 6 parquet scans in the executed plan, ReuseExchange never
     // unified them because pruning differentiated the subtrees).
-    val exact = TextDedup.ckptFn(df.sparkSession, None)(
+    val exact = graft.util.Pin(
       df.select(explode(split(text, " ")).as("token"))
         .groupBy("token").agg(count(lit(1)).as("exact_count")))
     val cms = exact

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs
+import graft.util.Pin
 
 /** User-facing similarity-search API over embedding columns
   * (`array<float>`, unit-norm ⇒ cosine ≡ dot). Generic forms behind the
@@ -268,26 +269,16 @@ object Similarity {
     * straight into [[assignClusters]] / the SemDeDup and IVF paths.
     * Training averages in float, so like [[pqTrainCodebook]] this is the
     * production fit step, not an oracle-checked op. Empty clusters keep
-    * their previous centroid.
-    *
-    * `checkpointDir`: the corpus projection is pinned for every Lloyd
-    * round; by default via `localCheckpoint` (executor-local,
-    * unreplicated — one lost executor kills the fit). Pass a reliable
-    * directory (HDFS/object store) for fault-tolerant `.checkpoint()`
-    * — the [[TextDedup.clusters]]/langIdConfusion discipline. */
+    * their previous centroid. The corpus projection is pinned for every
+    * Lloyd round ([[graft.util.Pin]]). */
   def kMeansFit(corpus: DataFrame, id: Column, vec: Column,
-      k: Int, iters: Int = 5,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = TextDedup.ckptFn(corpus.sparkSession, checkpointDir)
-    val c = ck(corpus.select(id.as("vec_id"), vec.as("__v")))
-    var cents = ck(c.orderBy("vec_id").limit(k)
+      k: Int, iters: Int = 5): DataFrame = Pin.scope { p =>
+    val c = p(corpus.select(id.as("vec_id"), vec.as("__v")))
+    // each round's pin supersedes the previous centroids
+    var cents = p.next(c.orderBy("vec_id").limit(k)
       .withColumn("cid",
         (row_number().over(Window.orderBy("vec_id")) - 1).cast("int"))
       .select(col("cid"), col("__v").as("ce")))
-    // TextDedup.clusters' generation discipline: each round's checkpoint
-    // supersedes the previous one — release it, or a long-lived session
-    // accumulates one persisted RDD per round per fit call
-    var prevGen = TextDedup.checkpointRdd(cents)
     (1 to iters).foreach { _ =>
       val assigned = assignClusters(c, col("vec_id"), col("__v"), cents)
         .select(col("vec_id"), col("cluster_id"))
@@ -305,16 +296,11 @@ object Similarity {
           when(col("norm") === 0.0, col("mean"))
             .otherwise(transform(col("mean"), x => x / col("norm")))
             .as("newc"))
-      cents = ck(cents.join(means, Seq("cid"), "left")
+      cents = p.next(cents.join(means, Seq("cid"), "left")
         .select(col("cid"),
           coalesce(col("newc").cast("array<float>"), col("ce")).as("ce")))
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = TextDedup.checkpointRdd(cents)
     }
-    // the final centroids are materialized — the corpus projection is no
-    // longer reachable from the result and can release now
-    TextDedup.checkpointRdd(c).foreach(_.unpersist(blocking = false))
-    cents
+    p.keep(cents)
   }
 
   /** Near-dup by sign-bucket LSH + similarity verify (the embedding-space
@@ -423,22 +409,17 @@ object Similarity {
     * per-(subspace, code) element-wise mean, seeded by
     * [[pqSeedCodebook]]. Each round is one broadcast-codebook assignment
     * (map-side, same plan as [[pqEncode]]) plus one partial-agg mean —
-    * never a corpus collect; rounds truncate lineage (`localCheckpoint`,
+    * never a corpus collect; rounds truncate lineage (a pin,
     * the iterative-Spark rule). Empty clusters keep their previous
     * centroid. Training averages in float — inherently not
     * engine-reproducible, so trained codebooks are for production use
     * and the recall test; the oracle-checked keys use the seed
-    * codebook.
-    *
-    * `checkpointDir`: the subvector frame is corpus-sized (m rows per
-    * vector) and pinned for every Lloyd round; by default via
-    * `localCheckpoint` — pass a reliable directory (HDFS/object store)
-    * for fault-tolerant `.checkpoint()`, the [[kMeansFit]] rule. */
+    * codebook. The subvector frame is corpus-sized (m rows per vector)
+    * and pinned for every Lloyd round, the [[kMeansFit]] rule. */
   def pqTrainCodebook(corpus: DataFrame, id: Column, vec: Column,
-      m: Int, subDim: Int, k: Int = 16, iters: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = TextDedup.ckptFn(corpus.sparkSession, checkpointDir)
-    val sub = ck(corpus.select(id.as("vec_id"), vec.as("__v"))
+      m: Int, subDim: Int, k: Int = 16,
+      iters: Int = 3): DataFrame = Pin.scope { p =>
+    val sub = p(corpus.select(id.as("vec_id"), vec.as("__v"))
       .select(col("vec_id"),
         explode(sequence(lit(0), lit(m - 1))).as("j"), col("__v"))
       .select(col("vec_id"), col("j"),
@@ -447,9 +428,7 @@ object Similarity {
         (a, b) => (a.cast("double") - b.cast("double"))
           * (a.cast("double") - b.cast("double"))),
       lit(0.0), (acc, x) => acc + x)
-    var cb = ck(pqSeedCodebook(corpus, id, vec, m, subDim, k))
-    // same generation-release discipline as kMeansFit / TextDedup.clusters
-    var prevGen = TextDedup.checkpointRdd(cb)
+    var cb = p.next(pqSeedCodebook(corpus, id, vec, m, subDim, k))
     (1 to iters).foreach { _ =>
       val assigned = sub.join(broadcast(cb), "j")
         .withColumn("d2_r", round(d2, 6))
@@ -467,14 +446,11 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("mx")))),
           s => s.getField("mx").cast("float")).as("newc"))
-      cb = ck(cb.join(means, Seq("j", "code"), "left")
+      cb = p.next(cb.join(means, Seq("j", "code"), "left")
         .select(col("j"), col("code"),
           coalesce(col("newc"), col("cvec")).as("cvec")))
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = TextDedup.checkpointRdd(cb)
     }
-    TextDedup.checkpointRdd(sub).foreach(_.unpersist(blocking = false))
-    cb
+    p.keep(cb)
   }
 
   /** Inverse of [[pqEncode]]: stitch each vector's centroid slices back

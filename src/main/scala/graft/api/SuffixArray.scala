@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.Pin
 
 /** EXACT substring dedup via distributed suffix-array rank construction —
   * the published standard the repo's block/window-hash family
@@ -105,10 +106,8 @@ object SuffixArray {
     * key), plus the block column names. See the object scaladoc for the
     * construction. */
   private def windowClasses(docs: DataFrame, id: Column, text: Column,
-      minLen: Int, checkpointDir: Option[String])
-      : (DataFrame, Seq[String]) = {
+      minLen: Int): (DataFrame, Seq[String]) = Pin.scope { p =>
     require(minLen >= 2, s"minLen must be >= 2, got $minLen")
-    val ckpt = TextDedup.ckptFn(docs.sparkSession, checkpointDir)
 
     // token lattice — the one corpus-sized explode; doc length carried
     // from the split so no later length window is needed
@@ -130,18 +129,17 @@ object SuffixArray {
     // relabel round at the cost of a two-short-strings first key (the
     // md5-key scale the hash family ships); the "t"/"$" marking keeps
     // the end-of-doc sentinel provably disjoint from every real token.
-    // Each relabel input is PINNED (localCheckpoint + generation
-    // release): the relabel consumes it twice — the class groupBy's
-    // exchange carries PARTIAL-AGG rows while the join probe's carries
-    // raw rows, so the two exchanges never unify and an unpinned chain
+    // Each relabel input is PINNED (one generation each): the relabel
+    // consumes it twice — the class groupBy's exchange carries
+    // PARTIAL-AGG rows while the join probe's carries raw rows, so the
+    // two exchanges never unify and an unpinned chain
     // re-executes its whole subtree per round (2^rounds corpus scans at
     // 100 TB — measured as duplicated stages at sf0.1 too).
-    val g0 = ckpt(lattice
+    val g0 = p.next(lattice
       .withColumn("__nl", lead(col("tok"), 1).over(byDoc))
       .withColumn("__nxt", when(col("__nl").isNull, lit("$"))
         .otherwise(concat(lit("t"), col("__nl"))))
       .drop("__nl"))
-    var prevGen = TextDedup.checkpointRdd(g0)
     var ranked = relabel(g0, "tok", "__nxt", "doc", "pos", "rank")
 
     // double to the largest power of two ≤ minLen/2, then finish with a
@@ -150,11 +148,8 @@ object SuffixArray {
     // at ≤ 32 bytes of key
     var k = 2
     while (k * 4 <= minLen) {
-      val next = ckpt(ranked.withColumn("__nxt",
+      val next = p.next(ranked.withColumn("__nxt",
         coalesce(lead(col("rank"), k).over(byDoc), lit(Sent))))
-      val gen = TextDedup.checkpointRdd(next)
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = gen
       ranked = relabel(next, "rank", "__nxt", "doc", "pos", "rank")
       k *= 2
     }
@@ -170,15 +165,14 @@ object SuffixArray {
     val blockNames = offsets.indices.map(i => s"__b$i")
     // pinned: the dup-class detection consumes wins twice (same
     // partial-agg-vs-raw exchange split as relabel)
-    val wins = ckpt(ranked
+    val wins = p.next(ranked
       .select(col("doc") +: col("pos") +: col("__len") +: blockCols: _*)
       .filter(col("pos") + minLen - 1 <= col("__len"))
       .select(col("doc") +: col("pos") +: blockNames.map(col): _*))
-    prevGen.foreach(_.unpersist(blocking = false))
     // the wins pin stays alive under the returned plan; Verify/Bench
     // drain persistent RDDs between queries (the house rule for
     // iterative ops)
-    (wins, blockNames)
+    (p.keep(wins), blockNames)
   }
 
   /** Per-document maximal duplicated token ranges (runs of length ≥
@@ -186,13 +180,10 @@ object SuffixArray {
     * coverage merged). Tokens = the house single-space split, positions
     * 1-based. Output: (doc_id, span_start, span_end, span_tokens,
     * n_dup_windows) — span bounds inclusive token positions,
-    * n_dup_windows the duplicated L-window starts inside the run.
-    * `checkpointDir` routes the per-round pins to reliable storage on a
-    * real cluster (see TextDedup.ckptFn). */
+    * n_dup_windows the duplicated L-window starts inside the run. */
   def duplicateSpans(docs: DataFrame, id: Column, text: Column,
-      minLen: Int = 12, checkpointDir: Option[String] = None): DataFrame = {
-    val (wins, blockNames) =
-      windowClasses(docs, id, text, minLen, checkpointDir)
+      minLen: Int = 12): DataFrame = {
+    val (wins, blockNames) = windowClasses(docs, id, text, minLen)
     val byDoc = Window.partitionBy("doc").orderBy("pos")
 
     // duplicated window starts: classes with ≥2 members, semi-joined back
@@ -231,9 +222,8 @@ object SuffixArray {
     * map-side-combinable groupBy on the class key + join-back, skew-safe
     * for boilerplate heavy hitters. */
   def dedupSpans(docs: DataFrame, id: Column, text: Column,
-      minLen: Int = 12, checkpointDir: Option[String] = None): DataFrame = {
-    val (wins, blockNames) =
-      windowClasses(docs, id, text, minLen, checkpointDir)
+      minLen: Int = 12): DataFrame = {
+    val (wins, blockNames) = windowClasses(docs, id, text, minLen)
 
     // non-canonical duplicated starts: class members beyond the min
     // packed occurrence

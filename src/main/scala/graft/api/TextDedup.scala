@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.VectorExprs
+import graft.util.Pin
 
 /** User-facing deduplication API over arbitrary DataFrames — the generic
   * forms behind the fixture-bound `SparkEntry` queries. A reference-library
@@ -36,16 +37,14 @@ object TextDedup {
     * corpus size. Output: (doc_a, doc_b, jaccard). */
   def nearMinhash(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minJaccard: Double = 0.8): DataFrame = {
     val k = bands * rowsPerBand
     // (__id, hs): sorted distinct shingle hashes — the verify operand.
     // PINNED (r9, the materialization decision table): three consumers
     // (band sigs + both verify sides), all map-side construction below
     // any exchange, so ReuseExchange cannot dedupe it; the pinned frame
     // is hash-sized (8-byte values), never text.
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val docs = ck(df.select(id.as("__id"),
+    val docs = Pin(df.select(id.as("__id"),
         array_sort(VectorExprs.shingleHashes(split(text, " "), shingleWidth))
           .as("hs"))
       .filter(size(col("hs")) > 0))
@@ -56,7 +55,7 @@ object TextDedup {
     }
     // (__id, mh) PINNED: the k-minhash pass is the expensive step and
     // the identical-signature collapse reads the frame three times
-    val mh = ck(docs.select(col("__id"),
+    val mh = Pin(docs.select(col("__id"),
       VectorExprs.minhashSig(col("hs"), k).as("mh")))
     val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
     // band rows carry ONLY (__id, band, sig): shuffling the full shingle
@@ -97,10 +96,9 @@ object TextDedup {
     * external corpus index). Output: (doc_a, doc_b, jaccard 4 dp). */
   def nearMinhashMd5(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame =
-    selfPairs(signShard(df, id, text, shingleWidth, bands, rowsPerBand,
-      checkpointDir), minJaccard)
+      minJaccard: Double = 0.8): DataFrame =
+    selfPairs(signShard(df, id, text, shingleWidth, bands, rowsPerBand),
+      minJaccard)
 
   /** Cross-frame variant of [[nearMinhashMd5]]: near-dup pairs BETWEEN
     * two corpora — the fuzzy-decontamination primitive (screen training
@@ -114,8 +112,7 @@ object TextDedup {
   def nearMinhashMd5Between(left: DataFrame, leftId: Column,
       leftText: Column, right: DataFrame, rightId: Column,
       rightText: Column, shingleWidth: Int = 3, bands: Int = 4,
-      rowsPerBand: Int = 4, minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
     // the two sides' pin chains are independent, so they run from two
     // driver threads (guide §2.6, r16): serially, four eager pin jobs
     // ran back to back with each underusing the cores; overlapped, one
@@ -123,8 +120,7 @@ object TextDedup {
     // collapse identical signatures — the big (train) side is the one
     // that really needs the hot-bucket guard.
     def side(df: DataFrame, id: Column, text: Column) =
-      signShard(df, id, text, shingleWidth, bands, rowsPerBand,
-        checkpointDir)
+      signShard(df, id, text, shingleWidth, bands, rowsPerBand)
     val (a, b) = graft.util.Par.both(side(left, leftId, leftText),
       side(right, rightId, rightText))
     crossPairs(a, b.bandSigs, Some(b.members), b.sh, minJaccard)
@@ -144,12 +140,10 @@ object TextDedup {
     * (doc_a, doc_b, jaccard 4 dp). */
   def nearMinhashKM(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minJaccard: Double = 0.8): DataFrame = {
     // same pins and hot-bucket collapse as nearMinhashMd5
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val sh = ck(md5Shingles(df, id, text, shingleWidth))
-    val mh = ck(kmMinhashSigs(sh, bands * rowsPerBand))
+    val sh = Pin(md5Shingles(df, id, text, shingleWidth))
+    val mh = Pin(kmMinhashSigs(sh, bands * rowsPerBand))
     val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
     val cand = expandSelfPairs(
       selfBandCandidates(kmBandsFromMh(reps, bands, rowsPerBand)),
@@ -216,8 +210,8 @@ object TextDedup {
     // shingles land first; the sig table derives from the WRITTEN
     // parquet, so the corpus is tokenized exactly once regardless of
     // scale (re-deriving from text would re-run split+distinct per
-    // output; a localCheckpoint would pin corpus-sized arrays in
-    // executor memory). The multi-table write is not atomic: a failure
+    // output; a pin would hold corpus-sized arrays in executor
+    // memory). The multi-table write is not atomic: a failure
     // between writes leaves a partial index — re-run the write (it
     // overwrites), or stage to a temp path and rename on stores that
     // support atomic rename.
@@ -268,11 +262,10 @@ object TextDedup {
     * (__id, band, sig) and only REPRESENTATIVE rows reach them (the r6
     * exchange-volume rule, the r10 hot-bucket guard). */
   private[graft] def signShard(df: DataFrame, id: Column, text: Column,
-      shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      checkpointDir: Option[String] = None): SignedShard = {
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val sh = ck(md5Shingles(df, id, text, shingleWidth))
-    val mh = ck(md5MinhashSigs(sh, bands * rowsPerBand))
+      shingleWidth: Int = 3, bands: Int = 4,
+      rowsPerBand: Int = 4): SignedShard = {
+    val sh = Pin(md5Shingles(df, id, text, shingleWidth))
+    val mh = Pin(md5MinhashSigs(sh, bands * rowsPerBand))
     val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
     SignedShard(sh, members, bandsFromMh(reps, bands, rowsPerBand),
       shingleWidth, bands, rowsPerBand)
@@ -362,12 +355,12 @@ object TextDedup {
     // index, defeating the append
     requireIndexParams(df.sparkSession, path, shingleWidth, bands,
       rowsPerBand)
-    val sh = md5Shingles(df, id, text, shingleWidth).localCheckpoint()
-    try {
+    Pin.scope { p =>
+      val sh = p(md5Shingles(df, id, text, shingleWidth))
       sh.write.mode("append").parquet(s"$path/shingles")
       md5BandSigs(sh, bands, rowsPerBand)
         .write.mode("append").parquet(s"$path/sigs")
-    } finally checkpointRdd(sh).foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** DELETE docs from a persisted signature index — the
@@ -633,10 +626,8 @@ object TextDedup {
     * 5-task enumeration and an evenly-spread equi-join at corpus scale. */
   def jaccardWithinBucket(df: DataFrame, id: Column, bucket: Column,
       text: Column, minJaccard: Double = 0.95,
-      prefilterSlack: Double = 0.0001,
-      checkpointDir: Option[String] = None): DataFrame =
-    jaccardWithinBucketOnLattice(
-      hashedTokenLattice(df, id, bucket, text, checkpointDir),
+      prefilterSlack: Double = 0.0001): DataFrame =
+    jaccardWithinBucketOnLattice(hashedTokenLattice(df, id, bucket, text),
       minJaccard, prefilterSlack)
 
   /** The PINNED hashed-token lattice [[jaccardWithinBucket]] runs on —
@@ -654,9 +645,8 @@ object TextDedup {
     * weightedJaccardOnPairs tok finding, whose consumers share one
     * exchange). */
   def hashedTokenLattice(df: DataFrame, id: Column, bucket: Column,
-      text: Column, checkpointDir: Option[String] = None): DataFrame =
-    ckptFn(df.sparkSession, checkpointDir)(
-      df.select(id.as("__id"), bucket.as("__bucket"),
+      text: Column): DataFrame =
+    Pin(df.select(id.as("__id"), bucket.as("__bucket"),
         array_sort(array_distinct(transform(split(text, " "),
           w => xxhash64(w)))).as("tk"))
       .withColumn("ntk", size(col("tk"))))
@@ -797,19 +787,13 @@ object TextDedup {
     * shingle inventory on (bucket, shingle): pair-space is bounded by
     * per-shingle document frequency, and w-token shingles (not tokens)
     * keep that df small — the selectivity knob. Output: (bucket,
-    * doc_small, doc_big, containment 4 dp).
-    *
-    * `checkpointDir`: the shingle frame is corpus-sized and pinned for
-    * four consumers; by default it truncates via `localCheckpoint`
-    * (executor-local, unreplicated — one lost executor mid-query kills
-    * the job). Pass a reliable directory (HDFS/object store) to switch
-    * to fault-tolerant `.checkpoint()` — the [[clusters]] /
-    * [[TextQuality.langIdConfusion]] discipline. */
+    * doc_small, doc_big, containment 4 dp). The shingle frame is
+    * corpus-sized and pinned for four consumers ([[graft.util.Pin]]
+    * states what a pin survives). */
   def containmentWithinBucket(df: DataFrame, id: Column, bucket: Column,
       text: Column, minContainment: Double = 0.9,
       shingleWidth: Int = 3,
-      prefilterSlack: Double = 0.0001,
-      checkpointDir: Option[String] = None): DataFrame = {
+      prefilterSlack: Double = 0.0001): DataFrame = {
     // the slack keeps the rounded-threshold edge inside the recall
     // guarantee (a true containment of 0.89995 rounds up to the 0.9
     // gate — the prefix bound must be computed at r, not c; same rule
@@ -821,11 +805,8 @@ object TextDedup {
     // MATERIALIZED once for its four consumers (prefix explode, full
     // inventory explode, both verify joins) — without the pin each one
     // re-runs the corpus tokenization + shingle sort (the
-    // langIdConfusion multiple-consumer hazard). The pinned frame is
-    // corpus-sized; `checkpointDir` upgrades the pin to a reliable
-    // checkpoint (scaladoc above).
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val base = ck(df.select(id.as("__id"), bucket.as("__bucket"),
+    // langIdConfusion multiple-consumer hazard)
+    val base = Pin(df.select(id.as("__id"), bucket.as("__bucket"),
         split(text, " ").as("tk"))
       .filter(size(col("tk")) >= shingleWidth)
       .select(col("__id"), col("__bucket"), array_sort(array_distinct(
@@ -870,7 +851,7 @@ object TextDedup {
     * `localFinishEdges`): min-label propagation to a fixpoint — every
     * round is one shuffle equi-join + partial-agg min, state is exactly
     * one (node, label) row per member, rounds bounded by component
-    * diameter. Each round MUST truncate lineage (`localCheckpoint`): the
+    * diameter. Each round MUST truncate lineage (a pin): the
     * step references `labels` twice, so without truncation the logical
     * plan doubles every round and Catalyst analysis alone goes
     * exponential — the classic iterative-Spark failure mode. Phase 2
@@ -882,21 +863,8 @@ object TextDedup {
     * documents), so at ANY corpus scale the distributed rounds run only
     * while they genuinely pay for themselves. At extreme scale prefer the
     * large-star/small-star variant [[clustersStar]] (O(log²) rounds
-    * regardless of diameter) and a reliable `checkpointDir` over
-    * executor-local.
-    *
-    * `checkpointDir`: by default rounds truncate via `localCheckpoint` —
-    * executor-local, unreplicated, so on a real cluster losing ONE
-    * executor mid-job kills a multi-hour dedup run ("lineage truncated …
-    * cannot be recomputed"). Pass a reliable directory (HDFS/object
-    * store) to switch every round to fault-tolerant `.checkpoint()` —
-    * the standard production answer; costs one distributed write per
-    * round, and superseded round files stay on disk until session end
-    * (enable `spark.cleaner.referenceTracking.cleanCheckpoints` to reap
-    * them eagerly). If the session ALREADY has a checkpoint directory
-    * configured, that one is honored and the argument is ignored —
-    * setting ours would be a global mutation redirecting the caller's
-    * unrelated `.checkpoint()` use.
+    * regardless of diameter). Round state is pinned through
+    * [[graft.util.Pin]], which states what survives executor loss.
     */
   /** Canonical-member election under a QUALITY policy: given cluster
     * membership (doc_id, cluster_id, …) and a per-doc `score`, mark the
@@ -918,48 +886,42 @@ object TextDedup {
 
   def clusters(pairs: DataFrame, a: Column, b: Column,
       maxIters: Int = 25,
-      localFinishEdges: Long = DefaultLocalFinishEdges,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = ckptFn(pairs.sparkSession, checkpointDir)
-    val fwd = ck(pairs.select(a.as("x"), b.as("y")))
-    if (fwd.count() <= localFinishEdges) return localComponents(fwd)
-    val fwdGen = checkpointRdd(fwd)
-    val edges = ck(fwd.union(fwd.select(col("y").as("x"), col("x").as("y"))))
-    fwdGen.foreach(_.unpersist(blocking = false))
-    var labels = ck(edges.select(col("x").as("node")).distinct()
-      .withColumn("label", col("node")))
-    // each round's eager checkpoint supersedes the previous generation —
-    // unpersist it, or a long-lived session accumulates one persisted RDD
-    // per round per clusters() call (measured: a ~170-query bench session
-    // degraded ~25% from the leaked generations)
-    var prevGen = checkpointRdd(labels)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val nbrMin = edges.join(labels, col("y") === col("node"))
-        .groupBy(col("x")).agg(min(col("label")).as("nbr_label"))
-      val joined = ck(labels.join(nbrMin, col("node") === col("x"), "left")
-        .select(col("node"), col("label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("newl")))
-      changed = joined.filter(col("newl") < col("label")).count()
-      labels = joined.select(col("node"), col("newl").as("label"))
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = checkpointRdd(joined)
-      iter += 1
+      localFinishEdges: Long = DefaultLocalFinishEdges): DataFrame =
+    Pin.scope { p =>
+      // each round's pin supersedes the previous generation — a
+      // long-lived session that kept them degraded ~25 % over ~170 bench
+      // queries
+      val fwd = p.next(pairs.select(a.as("x"), b.as("y")))
+      if (fwd.count() <= localFinishEdges) localComponents(p.keep(fwd))
+      else {
+        val edges = p(fwd.union(fwd.select(col("y").as("x"),
+          col("x").as("y"))))
+        var labels = p.next(edges.select(col("x").as("node")).distinct()
+          .withColumn("label", col("node")))
+        var changed = 1L
+        var iter = 0
+        while (changed > 0 && iter < maxIters) {
+          val nbrMin = edges.join(labels, col("y") === col("node"))
+            .groupBy(col("x")).agg(min(col("label")).as("nbr_label"))
+          val joined = p.next(labels.join(nbrMin,
+              col("node") === col("x"), "left")
+            .select(col("node"), col("label"),
+              least(col("label"), coalesce(col("nbr_label"), col("label")))
+                .as("newl")))
+          changed = joined.filter(col("newl") < col("label")).count()
+          labels = joined.select(col("node"), col("newl").as("label"))
+          iter += 1
+        }
+        // a silently non-converged result would split one component into
+        // several cluster_ids and callers would KEEP duplicate docs — fail
+        // loudly instead (raise maxIters, or switch to large-star/small-star)
+        require(changed == 0,
+          s"clusters() did not converge within $maxIters rounds — " +
+            "component diameter exceeds the cap; raise maxIters or use " +
+            "the large-star/small-star variant for deep-chain graphs")
+        p.keep(labels.select(col("node"), col("label").as("cluster_id")))
+      }
     }
-    // a silently non-converged result would split one component into
-    // several cluster_ids and callers would KEEP duplicate docs — fail
-    // loudly instead (raise maxIters, or switch to large-star/small-star)
-    require(changed == 0,
-      s"clusters() did not converge within $maxIters rounds — component " +
-        "diameter exceeds the cap; raise maxIters or use the " +
-        "large-star/small-star variant for deep-chain graphs")
-    // the result reads only the FINAL labels checkpoint; the edge list is
-    // no longer reachable from it
-    checkpointRdd(edges).foreach(_.unpersist(blocking = false))
-    labels.select(col("node"), col("label").as("cluster_id"))
-  }
 
   /** Connected components by alternating large-star/small-star (Kiveris
     * et al., "Connected Components in MapReduce and Beyond", SoCC 2014 —
@@ -975,87 +937,86 @@ object TextDedup {
     *    ≤ u) and u itself link to m.
     * Fixpoint: the edge set stops changing; every edge then points at its
     * component's minimum, which is exactly [[clusters]]' labeling (the
-    * equivalence is property-tested on random graphs). Same checkpoint
+    * equivalence is property-tested on random graphs). Same pin
     * discipline as [[clusters]]: truncate lineage every round, release
-    * superseded generations; pass `checkpointDir` for fault-tolerant
-    * round state on a real cluster (see [[clusters]]). */
+    * superseded generations, pin the labeling and release the rest. */
   def clustersStar(pairs: DataFrame, a: Column, b: Column,
       maxIters: Int = 50,
-      localFinishEdges: Long = DefaultLocalFinishEdges,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = ckptFn(pairs.sparkSession, checkpointDir)
-    // the pairs input is typically the expensive stage (an LSH/jaccard
-    // self-join): checkpoint the projection ONCE so the edge
-    // canonicalization and the self-pair branch below both read the
-    // materialization, never re-running the join
-    val fwd0 = ck(pairs.select(a.as("u"), b.as("v")))
-    // same two-phase contract as clusters(): star rounds only while the
-    // edge list exceeds one task's memory, then a single-task finish
-    if (fwd0.count() <= localFinishEdges) return localComponents(fwd0)
-    val fwdGen = checkpointRdd(fwd0)
-    // self-pairs carry no connectivity but DO declare their node: keep
-    // them as singleton components, exactly like clusters() does (tiny,
-    // checkpointed so fwd0 can release after the initial edge set)
-    val selfs = ck(fwd0.filter(col("u") === col("v"))
-      .select(col("u").as("n")).distinct())
-    var e = ck(fwd0.filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct())
-    fwdGen.foreach(_.unpersist(blocking = false))
-    var prevGen = checkpointRdd(e)
-    var eCount = e.count()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      // large-star over the BIDIRECTIONAL view: m(u) = min(N(u) ∪ {u});
-      // strictly-larger neighbors re-link to m
-      val bidir = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mL = bidir.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val afterLarge = bidir.filter(col("v") > col("u"))
-        .join(mL, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-      // small-star over the high→low direction: u and every (≤) neighbor
-      // link to m
-      val mS = afterLarge.groupBy("u")
-        .agg(least(min(col("v")), first(col("u"))).as("m"))
-      val withM = afterLarge.join(mS, "u")
-      val next = ck(withM.select(col("v").as("u"), col("m").as("v"))
-        .union(withM.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .distinct())
-      // set equality in 1 count + at most 1 anti-join: |next| = |e| plus
-      // next ⊆ e (both distinct sets) ⇒ next = e — halves the old
-      // two-exceptAll check's per-round job cost
-      val nextCount = next.count()
-      changed =
-        if (nextCount != eCount) 1L
-        else next.exceptAll(e).limit(1).count()
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = checkpointRdd(next)
-      e = next
-      eCount = nextCount
-      iter += 1
+      localFinishEdges: Long = DefaultLocalFinishEdges): DataFrame =
+    Pin.scope { p =>
+      // the pairs input is typically the expensive stage (an LSH/jaccard
+      // self-join): pin the projection ONCE so the edge canonicalization
+      // and the self-pair branch below both read the materialization,
+      // never re-running the join
+      val fwd0 = p.next(pairs.select(a.as("u"), b.as("v")))
+      // same two-phase contract as clusters(): star rounds only while the
+      // edge list exceeds one task's memory, then a single-task finish
+      if (fwd0.count() <= localFinishEdges) localComponents(p.keep(fwd0))
+      else {
+        // self-pairs carry no connectivity but DO declare their node: keep
+        // them as singleton components, exactly like clusters() does
+        // (tiny, pinned so fwd0 can release after the initial edge set)
+        val selfs = p(fwd0.filter(col("u") === col("v"))
+          .select(col("u").as("n")).distinct())
+        var e = p.next(fwd0.filter(col("u") =!= col("v"))
+          .select(greatest(col("u"), col("v")).as("u"),
+            least(col("u"), col("v")).as("v"))
+          .distinct())
+        var eCount = e.count()
+        var changed = 1L
+        var iter = 0
+        while (changed > 0 && iter < maxIters) {
+          // large-star over the BIDIRECTIONAL view: m(u) = min(N(u) ∪ {u});
+          // strictly-larger neighbors re-link to m
+          val bidir = e.union(e.select(col("v").as("u"), col("u").as("v")))
+          val mL = bidir.groupBy("u")
+            .agg(least(min(col("v")), first(col("u"))).as("m"))
+          val afterLarge = bidir.filter(col("v") > col("u"))
+            .join(mL, "u")
+            .select(col("v").as("u"), col("m").as("v"))
+            .filter(col("u") =!= col("v"))
+          // small-star over the high→low direction: u and every (≤)
+          // neighbor link to m
+          val mS = afterLarge.groupBy("u")
+            .agg(least(min(col("v")), first(col("u"))).as("m"))
+          val withM = afterLarge.join(mS, "u")
+          // held, not `next`: the fixpoint check below still reads e
+          val next = p(withM.select(col("v").as("u"), col("m").as("v"))
+            .union(withM.select(col("u"), col("m").as("v")))
+            .filter(col("u") =!= col("v"))
+            .select(greatest(col("u"), col("v")).as("u"),
+              least(col("u"), col("v")).as("v"))
+            .distinct())
+          // set equality in 1 count + at most 1 anti-join: |next| = |e|
+          // plus next ⊆ e (both distinct sets) ⇒ next = e — halves the
+          // old two-exceptAll check's per-round job cost
+          val nextCount = next.count()
+          changed =
+            if (nextCount != eCount) 1L
+            else next.exceptAll(e).limit(1).count()
+          Pin.release(e)
+          e = next
+          eCount = nextCount
+          iter += 1
+        }
+        require(changed == 0,
+          s"clustersStar() did not converge within $maxIters rounds")
+        // at the fixpoint every edge is (member, component-min): members
+        // read off the u side, centers label themselves from the v side —
+        // every connected node appears (real edges are u ≠ v, so
+        // components have ≥ 2 members), no join back to the input needed
+        val connected = e.select(col("u").as("node"),
+            col("v").as("cluster_id"))
+          .union(e.select(col("v").as("node"), col("v").as("cluster_id"))
+            .distinct())
+        // nodes seen ONLY as self-pairs become singleton components
+        val singletons = selfs
+          .join(connected.select(col("node").as("n")), Seq("n"), "left_anti")
+          .select(col("n").as("node"), col("n").as("cluster_id"))
+        // one pin for the labeling, so the round state and selfs release
+        p.keep(p(connected.union(singletons)))
+      }
     }
-    require(changed == 0,
-      s"clustersStar() did not converge within $maxIters rounds")
-    // at the fixpoint every edge is (member, component-min): members read
-    // off the u side, centers label themselves from the v side — every
-    // connected node appears (real edges are u ≠ v, so components have
-    // ≥ 2 members), no join back to the input needed
-    val connected = e.select(col("u").as("node"), col("v").as("cluster_id"))
-      .union(e.select(col("v").as("node"), col("v").as("cluster_id"))
-        .distinct())
-    // nodes seen ONLY as self-pairs become singleton components
-    val singletons = selfs
-      .join(connected.select(col("node").as("n")), Seq("n"), "left_anti")
-      .select(col("n").as("node"), col("n").as("cluster_id"))
-    connected.union(singletons)
-  }
 
   /** Edge-count bound for the single-task union-find finish: 4M edges ≈
     * two ids + map entry per edge ≈ a few hundred MB in one task — far
@@ -1111,44 +1072,6 @@ object TextDedup {
       StructField("node", dt), StructField("cluster_id", dt))))
   }
 
-  /** Round-state truncation strategy: executor-local (fast, default) or
-    * reliable (fault-tolerant, when a checkpoint directory is given).
-    * setCheckpointDir is called ONCE per engine invocation — it mints a
-    * UUID subdirectory, so calling it per round would scatter files.
-    * With the reliable path the superseded-generation `unpersist` calls
-    * below are harmless no-ops (reliable checkpoints live in files, not
-    * the block manager). */
-  private[graft] def ckptFn(spark: SparkSession,
-      dir: Option[String]): DataFrame => DataFrame = dir match {
-    case Some(d) =>
-      // respect a caller-configured checkpoint directory: overwriting it
-      // here would silently redirect the session's unrelated
-      // .checkpoint() use (see clusters() scaladoc) — only set ours when
-      // the session has none
-      val sc = spark.sparkContext
-      if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-      df => df.checkpoint()
-    case None => df => df.localCheckpoint()
-  }
-
-  /** The persisted RDD backing an (eager) localCheckpoint result — the
-    * handle needed to release a superseded checkpoint generation. None
-    * for non-checkpoint plans (then nothing is unpersisted). Shared with
-    * Similarity's iterative fits (kMeansFit / pqTrainCodebook), which
-    * follow the same generation-release discipline. */
-  private[api] def checkpointRdd(
-      df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
-      case _ => None
-    }
-
-  /** Release the persisted RDD behind a localCheckpoint result — the
-    * generation-release step exposed for callers outside the api package
-    * (the streaming twins pin each micro-batch and must drop it after). */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(blocking = false))
-
   /** 64-bit SimHash signature per row (one-pass native expression). */
   def simhash(df: DataFrame, id: Column, text: Column): DataFrame =
     df.select(id.as("doc_id"),
@@ -1181,11 +1104,10 @@ object TextDedup {
     // at rep level, then restore member pairs: cross-group pairs carry
     // their reps' hamming (members are sig-identical to their rep) and
     // within-group pairs are hamming-0 candidates by construction.
-    val ck = ckptFn(sigs.sparkSession, None)
     // null signatures never equi-join in the band buckets — keep that
     // contract by excluding them before the collapse (a null GROUP would
     // otherwise emit within-group pairs the original join never made)
-    val sigsSel = ck(sigs.select(id.as("__id"), sig.as("__sig"))
+    val sigsSel = Pin(sigs.select(id.as("__id"), sig.as("__sig"))
       .filter(col("__sig").isNotNull))
     val (reps, members) = collapseSigGroups(sigsSel, col("__sig"))
     val banded = reps
@@ -1350,11 +1272,8 @@ object TextDedup {
     * [[bandedHammingPairs]] (pigeonhole-complete ≤ 3, hot buckets
     * collapsed). Output: (doc_a, doc_b, hamming), doc_a < doc_b. */
   def nearSimhashMd5(df: DataFrame, id: Column, text: Column,
-      maxDist: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    bandedHammingPairs(ck(simhashMd5Bands(df, id, text)), maxDist)
-  }
+      maxDist: Int = 3): DataFrame =
+    bandedHammingPairs(Pin(simhashMd5Bands(df, id, text)), maxDist)
 
   /** Persist an md5-SimHash band index ([[writeBandIndex]]) — the
     * nightly form of SimHash dedup: deltas screen with a band equi-join
@@ -1369,8 +1288,8 @@ object TextDedup {
     * both screens (r12) — the per-token md5 fold is the expensive step. */
   def simhashMd5DedupShardAgainstIndex(shard: DataFrame, id: Column,
       text: Column, path: String, maxDist: Int = 3): DataFrame =
-    shard.join(bandDrops(ckptFn(shard.sparkSession, None)(
-        simhashMd5Bands(shard, id, text)), path, maxDist),
+    shard.join(
+      bandDrops(Pin(simhashMd5Bands(shard, id, text)), path, maxDist),
       id === col("__drop_id"), "left_anti")
 
   /** min-k shingle-hash fingerprint per row (winnowing-style). */
@@ -1425,15 +1344,13 @@ object TextDedup {
     * in-engine production spelling (survivor-equality vs the md5 path
     * pinned in ApiSpec); the md5 default is what keeps the stats
     * engine-portable and DuckDB-oracle-checkable. `skewSafe = true`
-    * swaps the occurrence window for a checkpointed groupBy +
+    * swaps the occurrence window for a pinned groupBy +
     * join-back — map-side partial counts + AQE-splittable equi-join —
     * for corpora with heavy-hitter boilerplate windows (same output,
-    * pinned); pass `checkpointDir` to make the materialization survive
-    * executor loss on a real cluster. */
+    * pinned). */
   def dupSubstringStats(df: DataFrame, id: Column, text: Column,
       windowTokens: Int = 8, xxHash: Boolean = false,
-      skewSafe: Boolean = false,
-      checkpointDir: Option[String] = None): DataFrame = {
+      skewSafe: Boolean = false): DataFrame = {
     require(windowTokens >= 2,
       s"windowTokens=$windowTokens must be >= 2 (1 would degrade to " +
         "token frequency)")
@@ -1446,8 +1363,7 @@ object TextDedup {
     // splitting, so one ubiquitously repeated window (license
     // boilerplate at web scale) funnels all its occurrences through a
     // single task. `skewSafe = true` is the heavy-hitter spelling: the
-    // window frame materializes ONCE (checkpoint — reliable when
-    // `checkpointDir` is set, the langIdConfusion discipline), the
+    // window frame materializes ONCE (a pin), the
     // occurrence counts come from a map-side-combinable groupBy over it
     // (a boilerplate hash arrives at its reducer as ≤ #map-tasks
     // partial counts, not raw occurrences), and the flag join back is
@@ -1457,7 +1373,7 @@ object TextDedup {
       df.select(id.as("doc_id"), split(text, " ").as("__tk")), w, xxHash)
     val flagged =
       if (skewSafe) {
-        val w0 = ckptFn(df.sparkSession, checkpointDir)(wins)
+        val w0 = Pin(wins)
         val freq = w0.groupBy("h").agg(count(lit(1)).as("__n_occ"))
         w0.join(freq, Seq("h"))
           .select(col("doc_id"), col("pos"), (col("__n_occ") > 1).as("dup"))
@@ -1695,10 +1611,8 @@ object TextDedup {
 
   private[graft] def windowShard(shard: DataFrame, id: Column,
       text: Column, windowTokens: Int): WindowedShard = {
-    val toks = shard.select(id.as("doc_id"), split(text, " ").as("__tk"))
-      .localCheckpoint()
-    WindowedShard(toks,
-      rollingWindows(toks, windowTokens).localCheckpoint(), windowTokens)
+    val toks = Pin(shard.select(id.as("doc_id"), split(text, " ").as("__tk")))
+    WindowedShard(toks, Pin(rollingWindows(toks, windowTokens)), windowTokens)
   }
 
   /** [[dedupSubstringsAgainstIndex]] over a pre-built [[WindowedShard]]
@@ -1815,32 +1729,23 @@ object TextDedup {
     * because the lines being deduped are heavy hitters by definition;
     * the rebuild is one per-doc aggregate sorting INSIDE the row. Line
     * text travels only lattice→rebuild (output-sized), never through
-    * the election shuffle. Pass `checkpointDir` to materialize the
-    * lattice once reliably instead of re-splitting for the probe side
-    * (the langIdConfusion discipline; None re-derives — two cheap
-    * map-side splits, zero checkpoint risk). */
+    * the election shuffle. The lattice is not pinned: the probe side
+    * re-derives it, two cheap map-side splits. */
   def dedupLines(df: DataFrame, id: Column, text: Column,
-      delim: String = "\n",
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ln = guardedLineFrame(df, id, text, delim, checkpointDir)
+      delim: String = "\n"): DataFrame = {
+    val ln = guardedLineFrame(df, id, text, delim)
     val kept = keepFirstLines(ln)
     rebuildFromLines(df, id, ln, kept, delim, "text_dedup")
   }
 
-  /** [[lineFrame]] with the packed-key precondition enforced per row and
-    * the optional reliable checkpoint applied. */
+  /** [[lineFrame]] with the packed-key precondition enforced per row. */
   private def guardedLineFrame(df: DataFrame, id: Column, text: Column,
-      delim: String, checkpointDir: Option[String]): DataFrame = {
-    val ln0 = lineFrame(df, id, text, delim)
+      delim: String): DataFrame =
+    lineFrame(df, id, text, delim)
       .filter(assert_true(col("doc_id") >= 0L && col("ln_no") < 1000000L,
         lit("line dedup packed-key precondition violated: needs doc_id " +
           ">= 0 and < 1e6 lines per doc — split oversized docs or remap " +
           "ids")).isNull)
-    checkpointDir match {
-      case Some(_) => ckptFn(df.sparkSession, checkpointDir)(ln0)
-      case None => ln0
-    }
-  }
 
   /** Keep-first election over a (doc_id, ln_no, line, h) lattice: the
     * globally first (min packed doc·10⁶+line) occurrence of each hash
@@ -1982,12 +1887,11 @@ object TextDedup {
     * broadcasts the smaller side); election and rebuild are the batch
     * spelling over the SHARD only. */
   def dedupLinesAgainstIndex(df: DataFrame, id: Column, text: Column,
-      path: String, delim: String = "\n",
-      checkpointDir: Option[String] = None): DataFrame = {
+      path: String, delim: String = "\n"): DataFrame = {
     val spark = df.sparkSession
     requireLineIndexParams(spark, path, delim)
     val idx = spark.read.parquet(s"$path/hashes")
-    val ln = guardedLineFrame(df, id, text, delim, checkpointDir)
+    val ln = guardedLineFrame(df, id, text, delim)
     val fresh = ln.join(idx, Seq("h"), "left_anti")
     rebuildFromLines(df, id, ln, keepFirstLines(fresh), delim,
       "text_dedup")
@@ -2014,8 +1918,7 @@ object TextDedup {
     * double (one IEEE division of exact counts — no rounding boundary).
     * Output: (source_a, source_b, n_a, n_b, n_shared, jaccard). */
   def sourceOverlapMatrix(df: DataFrame, id: Column, text: Column,
-      group: Column, windowTokens: Int = 8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      group: Column, windowTokens: Int = 8): DataFrame = {
     require(windowTokens >= 2,
       s"windowTokens=$windowTokens must be >= 2")
     val w = windowTokens
@@ -2024,7 +1927,7 @@ object TextDedup {
     // — and the executed plan re-ran the corpus explode + distinct
     // under every one (8 parquet scans / 0 reused exchanges in the
     // sweep). One corpus pass; consumers read the pinned narrow rows.
-    val gh = ckptFn(df.sparkSession, checkpointDir)(
+    val gh = Pin(
       df.select(group.as("g"), split(text, " ").as("__tk"))
         .filter(size(col("__tk")) >= w)
         .select(col("g"), explode(transform(
@@ -2130,9 +2033,7 @@ object TextDedup {
     * construction below the exchanges re-evaluates per consumer, which
     * made this audit contention-sensitive (7 s alone, 38 s in-suite in
     * the r8 driver run). All pinned frames are hash-sized, never
-    * corpus text; pass `checkpointDir` for the reliable form on a real
-    * cluster (the [[clusters]] discipline — callers own the release of
-    * the final pin, see [[winnowCandidates]]).
+    * corpus text ([[graft.util.Pin]]).
     *
     * "Exact" ground truth is exact MODULO 64-BIT HASHING (r13 ADVICE):
     * the truth verify intersects sorted xxhash64 shingle arrays, so a
@@ -2145,14 +2046,12 @@ object TextDedup {
   def lshAudit(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, k: Int = 16,
       bandsOptions: Seq[Int] = Seq(2, 4, 8),
-      minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame = {
+      minJaccard: Double = 0.8): DataFrame = {
     require(bandsOptions.nonEmpty && bandsOptions == bandsOptions.sorted,
       s"bandsOptions must be non-empty ascending, got $bandsOptions")
     require(bandsOptions.forall(b => b >= 1 && k % b == 0),
       s"every bands option must divide k=$k, got $bandsOptions")
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val sh = ck(md5Shingles(df, id, text, shingleWidth))
+    val sh = Pin(md5Shingles(df, id, text, shingleWidth))
     // ground truth with deterministic 100% recall via the All-Pairs
     // PREFIX filter on the hashed shingle inventory (the
     // jaccardPrefixFiltered engine applied to shingle sets): a pair at
@@ -2178,13 +2077,13 @@ object TextDedup {
       // the same jaccard modulo a 64-bit hash collision (the tolerance
       // the prefix filter riding these hashes already accepts) at a
       // fraction of the compare + shuffle bytes.
-      val hs = ck(sh.select(col("__id"),
+      val hs = Pin(sh.select(col("__id"),
           array_sort(transform(col("sh"), x => xxhash64(x))).as("hs"))
         .withColumn("nsh", size(col("hs"))))
       // pinned too: the self-join below consumes it TWICE, and its
       // lineage (slice + explode over the hash arrays) re-evaluates per
       // consumer otherwise
-      val pref = ck(hs.select(col("__id"), col("nsh"),
+      val pref = Pin(hs.select(col("__id"), col("nsh"),
         explode(slice(col("hs"), lit(1),
           (col("nsh") - ceil(col("nsh") * r) + 1).cast("int"))).as("__pk")))
       val a = pref.alias("a"); val b = pref.alias("b")
@@ -2203,7 +2102,7 @@ object TextDedup {
       // join, the semi join) rely on is now local.
       val inter = size(array_intersect(col("__ha"), col("__hb")))
         .cast("double")
-      ck(tCand
+      Pin(tCand
         .join(hs.select(col("__id").as("doc_a"), col("hs").as("__ha"),
           col("nsh").as("__na")), "doc_a")
         .join(hs.select(col("__id").as("doc_b"), col("hs").as("__hb"),
@@ -2219,7 +2118,7 @@ object TextDedup {
       // only re-slices the same mh vector), pinned like its consumers'
       // other inputs — 3 options otherwise re-run the k×|shingles| md5
       // traversal three times
-      ck(md5MinhashSigs(sh, k))
+      Pin(md5MinhashSigs(sh, k))
     })
     val truthCnt = truth.agg(count(lit(1)).as("n_truth"))
     // ONE band self-join shared by every bands option (r12): when the
@@ -2340,7 +2239,7 @@ object TextDedup {
     // consumer, and every downstream caller (stitchApply's three edge
     // consumers, stitchChains) multiplied it again — the doc_stitch
     // keys' executed plans carried up to 40 parquet scans.
-    val cand = ckptFn(df.sparkSession, None)(tails.join(heads, "__h")
+    val cand = Pin(tails.join(heads, "__h")
       .filter(col("prev_id") =!= col("next_id"))
       .select(col("prev_id"), col("next_id")))
     val outd = cand.groupBy("prev_id").agg(count(lit(1)).as("__out"))
@@ -2370,9 +2269,8 @@ object TextDedup {
     // edge frame pinned (r16): three consumers below (the pair frame
     // and both chain-interior anti-join probes) — same rule as the
     // stitchCandidates cand pin
-    val edges = ckptFn(df.sparkSession, None)(
-      stitchCandidates(df, id, text, w)
-        .filter(col("unambiguous")))
+    val edges = Pin(stitchCandidates(df, id, text, w)
+      .filter(col("unambiguous")))
     // pair-only chains: prev must not be a next, next must not be a prev
     val pairOnly = edges
       .join(edges.select(col("next_id").as("prev_id")), Seq("prev_id"),
@@ -2408,9 +2306,8 @@ object TextDedup {
     * its ancestor's ancestor and adds the distances, so a chain of
     * length L resolves in ⌈log₂ L⌉ rounds of shuffle equi-joins — a
     * 1M-fragment chain is 20 rounds, where naive edge-following would
-    * be 10⁶. The same generation-release checkpoint discipline as
-    * [[clusters]] truncates lineage per round (pass `checkpointDir`
-    * for a reliable location on a real cluster).
+    * be 10⁶. The same generation-release pin discipline as [[clusters]]
+    * truncates lineage per round.
     *
     * Output: (chain_id, n_frags, text_merged) — chain_id = the head
     * fragment's id, one row per ≥2-fragment chain; singletons are not
@@ -2424,10 +2321,9 @@ object TextDedup {
     * unresolved node fails the job with its id rather than silently
     * dropping or mis-merging. */
   def stitchChains(df: DataFrame, id: Column, text: Column,
-      w: Int = 8, maxIters: Int = 48,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val edges = ck(stitchCandidates(df, id, text, w)
+      w: Int = 8, maxIters: Int = 48): DataFrame = Pin.scope { pin =>
+    // the candidate pin inside stitchCandidates is superseded by `edges`
+    val edges = pin(pin.adopt(stitchCandidates(df, id, text, w))
       .filter(col("unambiguous")).select(col("prev_id"), col("next_id")))
     // heads: chain starts — a prev that is nobody's next
     val heads = edges.select(col("prev_id").as("node"))
@@ -2438,8 +2334,7 @@ object TextDedup {
     // every next starts pointing one hop back at its predecessor
     val tails = edges.select(col("next_id").as("node"),
       col("prev_id").as("anc"), lit(1L).as("d"), lit(false).as("done"))
-    var state = ck(heads.unionByName(tails))
-    var prevGen = checkpointRdd(state)
+    var state = pin.next(heads.unionByName(tails))
     var pending = state.filter(!col("done")).count()
     var iter = 0
     while (pending > 0 && iter < maxIters) {
@@ -2451,10 +2346,8 @@ object TextDedup {
         .join(p, col("anc") === col("__pn"))
         .select(col("node"), col("__pa").as("anc"),
           (col("d") + col("__pd")).as("d"), col("__pdone").as("done"))
-      state = ck(state.filter(col("done")).unionByName(stepped))
+      state = pin.next(state.filter(col("done")).unionByName(stepped))
       pending = state.filter(!col("done")).count()
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = checkpointRdd(state)
       iter += 1
     }
     if (pending > 0) {
@@ -2468,7 +2361,7 @@ object TextDedup {
     // interior/tail fragments drop their first w (overlap) tokens; the
     // merge is an in-row sort + flatten, never a global sort
     val body = df.select(id.as("node"), split(text, " ").as("__tk"))
-    state.join(body, "node")
+    pin.keep(state.join(body, "node")
       .select(col("anc").as("chain_id"), col("d").as("__pos"),
         when(col("d") === 0L, col("__tk"))
           .otherwise(slice(col("__tk"), lit(w + 1),
@@ -2477,7 +2370,7 @@ object TextDedup {
       .agg(count(lit(1)).as("n_frags"),
         concat_ws(" ", flatten(transform(
           array_sort(collect_list(struct(col("__pos"), col("__cut")))),
-          s => s("__cut")))).as("text_merged"))
+          s => s("__cut")))).as("text_merged")))
   }
 
   /** IDF-weighted jaccard re-score of a candidate pair frame — the
@@ -2689,24 +2582,20 @@ object TextDedup {
     * must be at the ARRAY level, the exact plan the fast
     * llm_fingerprint_winnow key runs). The pinned frame is
     * fingerprint-set-sized (id + ~n_windows 8-byte values — a fraction
-    * of corpus bytes); pass `checkpointDir` for the reliable form on a
-    * real cluster (the [[clusters]] discipline).
+    * of corpus bytes).
     *
-    * Pin lifecycle (r10): the kMeansFit generation-release discipline —
-    * the RESULT is eagerly checkpointed (pair-sized), which supersedes
-    * the fingerprint-set pin, and the superseded pin is unpersisted
-    * before returning; repeated calls therefore accrete only pair-sized
-    * pins, not fingerprint-set-sized ones (asserted in PropertiesSpec).
+    * Pin lifecycle (r10): the RESULT is pinned too (pair-sized), which
+    * supersedes the fingerprint-set pin, released before returning;
+    * repeated calls therefore accrete only pair-sized pins, not
+    * fingerprint-set-sized ones (asserted in PropertiesSpec).
     * The final pin is caller-owned as everywhere: materialize, then
     * release (`spark.sparkContext.getPersistentRDDs.values.foreach(
     * _.unpersist(false))` — the Bench harness does exactly this between
     * keys).
     * Output: (doc_a, doc_b, n_shared_fp), doc_a < doc_b. */
   def winnowCandidates(df: DataFrame, id: Column, text: Column,
-      k: Int = 4, win: Int = 4,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = ckptFn(df.sparkSession, checkpointDir)
-    val fpSets = ck(winnowFingerprints(df, id, text, k, win)
+      k: Int = 4, win: Int = 4): DataFrame = Pin.scope { p =>
+    val fpSets = p(winnowFingerprints(df, id, text, k, win)
       .select(col("doc_id"), col("fingerprints")))
     val fps = fpSets
       .select(col("doc_id"), explode(col("fingerprints")).as("__fp"))
@@ -2715,14 +2604,6 @@ object TextDedup {
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared_fp"))
-    // generation release (r9 ADVICE, the kMeansFit discipline): the
-    // checkpoint is EAGER, so by here `out` is materialized with
-    // truncated lineage and the fingerprint-set pin it consumed is
-    // superseded — drop it now instead of leaking one per call in a
-    // long-lived session. Only the pair-sized FINAL pin survives, and
-    // that one is caller-owned as before.
-    val out = ck(pairs)
-    checkpointRdd(fpSets).foreach(_.unpersist(blocking = false))
-    out
+    p.keep(p(pairs))
   }
 }

@@ -2,6 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.util.Pin
 
 /** User-facing text-quality API over arbitrary DataFrames — the generic
   * forms behind the fixture-bound `SparkEntry` quality/scrub keys, in the
@@ -260,23 +261,16 @@ object TextQuality {
     * |vocab| × |labels| and vocabulary grows with the corpus (Heaps' law),
     * so a broadcast hint would OOM executors at web scale; AQE may still
     * pick BHJ from runtime stats at small scale — the planner's call.
-    *
-    * `checkpointDir`: by default the two materializations truncate via
-    * `localCheckpoint` — executor-local and unreplicated, so on a real
-    * cluster losing ONE executor mid-query kills it (the per-doc token
-    * frame is corpus-sized — this is the same hazard [[TextDedup.clusters]]
-    * documents). Pass a reliable directory (HDFS/object store) to switch
-    * both to fault-tolerant `.checkpoint()`; a checkpoint directory the
-    * session already configured is honored and the argument ignored. */
+    * The per-doc token frame is corpus-sized ([[graft.util.Pin]] states
+    * what its pin survives). */
   def langIdConfusion(df: DataFrame, id: Column, label: Column,
-      text: Column, checkpointDir: Option[String] = None): DataFrame = {
+      text: Column): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val ck = TextDedup.ckptFn(df.sparkSession, checkpointDir)
     val toks = df.select(id.as("__id"), label.as("__label"),
       explode(split(text, " ")).as("token"))
-    val docTok = ck(toks.groupBy(col("__id"), col("__label"), col("token"))
+    val docTok = Pin(toks.groupBy(col("__id"), col("__label"), col("token"))
       .agg(count(lit(1)).as("n_tok")))
-    val langTok = ck(docTok.groupBy(col("__label"), col("token"))
+    val langTok = Pin(docTok.groupBy(col("__label"), col("token"))
       .agg(sum(col("n_tok")).as("c_lt")))
     val vocabN = langTok.filter(col("c_lt") > 0)
       .select("token").distinct().agg(count(lit(1)).as("v"))
@@ -336,17 +330,14 @@ object TextQuality {
     *
     * Determinism and plan shape follow [[langIdConfusion]]: 9-dp-rounded
     * DECIMAL log-prob sums (order-free), the (label, token) model table
-    * materialized once (`checkpointDir` for a reliable location on real
-    * clusters — the same corpus-sized-frame hazard), the scoring join a
+    * materialized once, the scoring join a
     * plain shuffle equi-join on token (Heaps'-law model, no broadcast
     * hint). Lines whose every token is outside the model vocabulary
     * cast no vote but still count in n_lines (major_frac < 1 flags
     * them); with the model fit on the same corpus this is vacuous. */
   def langSegments(df: DataFrame, id: Column, label: Column,
-      text: Column, delim: String = "\n",
-      checkpointDir: Option[String] = None): DataFrame = {
+      text: Column, delim: String = "\n"): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val ck = TextDedup.ckptFn(df.sparkSession, checkpointDir)
     // ONE tokenization pass feeds both the model fit and the per-line
     // probe: the (doc, line, token) lattice (delim-split, then
     // space-split — a token never spans a line boundary)
@@ -354,14 +345,14 @@ object TextQuality {
         posexplode(split(text, delim)).as(Seq("__p", "__line")))
       .select(col("__id"), (col("__p") + 1L).as("__ln"), col("__line"))
       .filter(trim(col("__line")) =!= "")
-    val lnTok = ck(lines
+    val lnTok = Pin(lines
       .select(col("__id"), col("__ln"),
         explode(split(col("__line"), " ")).as("token"))
       .groupBy(col("__id"), col("__ln"), col("token"))
       .agg(count(lit(1)).as("n_tok")))
     // --- model fit: identical arithmetic to langIdConfusion -----------
     val labels = df.select(id.as("__lid"), label.as("__label"))
-    val langTok = ck(lnTok
+    val langTok = Pin(lnTok
       .join(labels, col("__id") === col("__lid"))
       .groupBy(col("__label"), col("token"))
       .agg(sum(col("n_tok")).as("c_lt")))

@@ -145,11 +145,9 @@ object Unigram {
     * against a pure-Scala reference in ApiSpec; the single-round
     * `llm_unigram_em_step` key is its oracle-checked step. */
   def train(docs: DataFrame, text: Column, rounds: Int,
-      maxPieceLen: Int = 4): DataFrame = {
-    val wf = Bpe.wordFreq(docs, text).localCheckpoint()
-    val wfGen = TextDedup.checkpointRdd(wf)
-    var model = seedPieces(wf, maxPieceLen).localCheckpoint()
-    var prevGen = TextDedup.checkpointRdd(model)
+      maxPieceLen: Int = 4): DataFrame = graft.util.Pin.scope { p =>
+    val wf = p(Bpe.wordFreq(docs, text))
+    var model = p.next(seedPieces(wf, maxPieceLen))
     var r = 0
     while (r < rounds) {
       val used = emStep(wf, model, maxPieceLen)
@@ -160,13 +158,10 @@ object Unigram {
         .join(used.select(col("piece").as("__p")),
           col("piece") === col("__p"), "left_anti")
         .select(col("piece"), lit(0L).as("cnt"), col("cost"))
-      model = used.unionByName(singles).localCheckpoint()
-      prevGen.foreach(_.unpersist(blocking = false))
-      prevGen = TextDedup.checkpointRdd(model)
+      model = p.next(used.unionByName(singles))
       r += 1
     }
-    wfGen.foreach(_.unpersist(blocking = false))
-    model
+    p.keep(model)
   }
 
   /** Per-group tokenizer FERTILITY audit — the compression table a

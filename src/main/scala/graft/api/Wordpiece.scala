@@ -88,9 +88,8 @@ object Wordpiece {
     * corpus-sized wordFreq shuffle (and pinned it for other consumers)
     * never pays it twice; train ≡ trainFromVocab is pinned in ApiSpec. */
   def trainFromVocab(vocab0: DataFrame,
-      nMerges: Int): Seq[(String, String)] = {
-    var vocab = vocab0.localCheckpoint()
-    var prevGen = TextDedup.checkpointRdd(vocab)
+      nMerges: Int): Seq[(String, String)] = graft.util.Pin.scope { p =>
+    var vocab = p.next(vocab0)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var rounds = 0
     while (rounds < nMerges) {
@@ -101,14 +100,11 @@ object Wordpiece {
       else {
         val Array(a, b) = top(0).getString(0).split(" ", 2)
         merges += ((a, b))
-        vocab = vocab.select(Bpe.applyMerge(col("sym"), a, b).as("sym"),
-          col("w_n")).localCheckpoint()
-        prevGen.foreach(_.unpersist(blocking = false))
-        prevGen = TextDedup.checkpointRdd(vocab)
+        vocab = p.next(vocab.select(
+          Bpe.applyMerge(col("sym"), a, b).as("sym"), col("w_n")))
         rounds += 1
       }
     }
-    prevGen.foreach(_.unpersist(blocking = false))
     merges.toSeq
   }
 

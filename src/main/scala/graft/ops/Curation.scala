@@ -298,7 +298,7 @@ object Curation {
       // each source's whole vocabulary through one task at web scale.
       // counts is |source × token|-sized (vocab, not corpus) — safe to
       // pin; the totals frame is |sources| rows and broadcasts.
-      val cts = counts.localCheckpoint()
+      val cts = graft.util.Pin(counts)
       val tot = cts.groupBy("source")
         .agg(sum(col("c")).as("tot"), count(lit(1)).as("n_distinct"))
       val p = col("c").cast("double") / col("tot")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.util.Pin
 import graft.util.Tables._
 
 /** Beyond-§2 training-data operators (the north star's full list: SimHash,
@@ -221,8 +222,8 @@ object LlmExtras {
         graft.api.TextDedup.writeSimhashMd5Index(
           docs.filter(col("doc_id") % 10 =!= 0), col("doc_id"),
           col("text"), idx),
-        graft.api.TextDedup.simhashMd5Bands(delta, col("doc_id"),
-          col("text")).localCheckpoint())
+        Pin(graft.api.TextDedup.simhashMd5Bands(delta, col("doc_id"),
+          col("text"))))
       delta
         .join(graft.api.TextDedup.bandDrops(bd, idx),
           col("doc_id") === col("__drop_id"), "left_anti")
@@ -353,10 +354,10 @@ object LlmExtras {
     // fitted naive-Bayes language-ID: per-(lang, token) Laplace-smoothed
     // log-odds, doc score = order-free DECIMAL sum of rounded log-probs,
     // output = confusion matrix of true vs predicted lang. Plan shape,
-    // checkpoint discipline, and the no-broadcast scoring-join rule live
-    // in TextQuality.langIdConfusion's scaladoc (production callers pass
-    // a reliable checkpointDir there; the harness default is
-    // executor-local).
+    // pins, and the no-broadcast scoring-join rule live in
+    // TextQuality.langIdConfusion's scaladoc; whether its pins survive
+    // executor loss is graft.util.Pin's policy (a deployment sets
+    // spark.checkpoint.dir; the harness sets none).
     "llm_lang_id" -> ((s, d) =>
       graft.api.TextQuality
         .langIdConfusion(documents(s, d), col("doc_id"), col("lang"),
@@ -842,9 +843,8 @@ object LlmExtras {
       // pinned for the same reason as llm_wordpiece_merge_step: the
       // segmentation feeds pair counts + the merge rewrite + the final
       // counts — unpinned, each reference re-ran the corpus aggregate
-      val vocab = graft.api.Bpe.wordFreq(documents(s, d), col("text"))
-        .select(graft.api.Bpe.wrapChars(col("word")).as("sym"), col("w_n"))
-        .localCheckpoint()
+      val vocab = Pin(graft.api.Bpe.wordFreq(documents(s, d), col("text"))
+        .select(graft.api.Bpe.wrapChars(col("word")).as("sym"), col("w_n")))
       val pc = graft.api.Bpe.pairCounts(vocab, col("sym"), col("w_n"))
       val top1 = pc.orderBy(col("n").desc, col("pair")).limit(1)
         .select(split(col("pair"), " ").getItem(0).as("__a"),
@@ -884,8 +884,7 @@ object LlmExtras {
     // corpus never re-enters after the one wordFreq shuffle, which is
     // pinned because it feeds BOTH the train loop and the encode walk.
     "llm_bpe_encode" -> ((s, d) => {
-      val wf = graft.api.Bpe.wordFreq(documents(s, d), col("text"))
-        .localCheckpoint()
+      val wf = Pin(graft.api.Bpe.wordFreq(documents(s, d), col("text")))
       val vocab = wf.select(
         graft.api.Bpe.wrapChars(col("word")).as("sym"), col("w_n"))
       val merges = graft.api.Bpe.trainFromVocab(vocab, BpeTrainMerges)
@@ -905,8 +904,7 @@ object LlmExtras {
     // aggregate; fertility is one IEEE divide of exact longs.
     "llm_bpe_fertility" -> ((s, d) => {
       val docs = documents(s, d)
-      val wf = graft.api.Bpe.wordFreq(docs, col("text"))
-        .localCheckpoint()
+      val wf = Pin(graft.api.Bpe.wordFreq(docs, col("text")))
       val vocab = wf.select(
         graft.api.Bpe.wrapChars(col("word")).as("sym"), col("w_n"))
       val merges = graft.api.Bpe.trainFromVocab(vocab, BpeTrainMerges)
@@ -969,11 +967,10 @@ object LlmExtras {
       // unpinned, the corpus-sized wordFreq aggregate re-ran per
       // reference (measured 5.1 s at sf0.1). The pins are VOCAB-sized
       // (Heaps-bounded) and eagerly timed in-key.
-      val v0 = graft.api.Bpe.wordFreq(documents(s, d), col("text"))
-        .select(graft.api.Bpe.wrapChars(col("word")).as("sym"), col("w_n"))
-        .localCheckpoint()
-      val v1 = graft.api.Wordpiece.mergeOnce(v0).localCheckpoint()
-      val v2 = graft.api.Wordpiece.mergeOnce(v1).localCheckpoint()
+      val v0 = Pin(graft.api.Bpe.wordFreq(documents(s, d), col("text"))
+        .select(graft.api.Bpe.wrapChars(col("word")).as("sym"), col("w_n")))
+      val v1 = Pin(graft.api.Wordpiece.mergeOnce(v0))
+      val v2 = Pin(graft.api.Wordpiece.mergeOnce(v1))
       graft.api.Wordpiece.pairScores(v2)
         .orderBy(col("score").desc, col("pair"))
         .limit(20)
@@ -1021,8 +1018,7 @@ object LlmExtras {
     "llm_wordpiece_encode" -> ((s, d) => {
       // wf feeds both the vocabulary and the encode walk — pinned
       // (vocab-sized) so the corpus aggregate runs once
-      val wf = graft.api.Bpe.wordFreq(documents(s, d), col("text"))
-        .localCheckpoint()
+      val wf = Pin(graft.api.Bpe.wordFreq(documents(s, d), col("text")))
       graft.api.Wordpiece
         .encode(wf, graft.api.Wordpiece.vocabPieces(wf))
         .orderBy("word")
@@ -1300,12 +1296,11 @@ object LlmExtras {
       // write (corpus role) AND the two-sided delta screen — the 24-
       // md5s/doc chain would otherwise re-run per consumer (a real
       // media corpus starts from stored bytes and has no such chain)
-      val bt = documents(s, d).select(col("doc_id"), col("source"),
+      val bt = Pin(documents(s, d).select(col("doc_id"), col("source"),
         graft.sources.Multimodal.payloadBlockTokens(
           unhex(concat_ws("", transform(
             slice(split(col("text"), " "), 1, PayloadChunks),
-            t => md5(t))))).as("bt"))
-        .localCheckpoint()
+            t => md5(t))))).as("bt")))
       val corpus = bt.filter(col("doc_id") % 10 =!= 0)
       val delta = bt.filter(col("doc_id") % 10 === 0)
       val idx = graft.util.Staging.dir("payload_sig_index", d)
@@ -1400,10 +1395,9 @@ object LlmExtras {
       // jobs over the same tiny rows, with the px matrices re-riding
       // every consumer plan. Pixels are consumed in the pin pass and
       // never appear downstream.
-      val bands = phashPixelFrame(s, d)
+      val bands = Pin(phashPixelFrame(s, d)
         .select(col("doc_id").as("__id"),
-          graft.sources.Multimodal.dhashBands(col("px")).as("__bd"))
-        .localCheckpoint()
+          graft.sources.Multimodal.dhashBands(col("px")).as("__bd")))
       val idx = graft.util.Staging.dir("phash_band_index", d)
       graft.api.TextDedup.writeBandIndex(
         bands.filter(col("__id") % 10 =!= 0), idx)
@@ -1474,9 +1468,8 @@ object LlmExtras {
       // arm won every rep pair, medians 2.77 -> 2.62 s. Expressions are
       // identical to the inline forms — output bit-identical (oracle
       // re-gated).
-      val survSlim = surv.select(col("doc_id"), col("source"),
-          md5(ph).as("ref"), size(split(col("text"), " ")).as("__n"))
-        .localCheckpoint()
+      val survSlim = Pin(surv.select(col("doc_id"), col("source"),
+          md5(ph).as("ref"), size(split(col("text"), " ")).as("__n")))
       val media = survSlim.select(col("doc_id"), lit(0).as("chunk_id"),
         col("source"), lit("media").as("kind"),
         lit(MediaTokens).as("n_tokens"), col("ref"))
@@ -1514,8 +1507,8 @@ object LlmExtras {
       wf: DataFrame, bpeSeg: DataFrame, wpVoc: DataFrame,
       ugModel: DataFrame, famNp: DataFrame, bySource: DataFrame)
 
-  private def tokenizerFamilies(s: SparkSession, d: String,
-      pinArtifacts: Boolean = false): TokenizerFamilies = {
+  private def tokenizerFamilies(s: SparkSession,
+      d: String): TokenizerFamilies = {
     val docs = documents(s, d)
     // bySource (the one corpus-sized per-(source, word) aggregate) is
     // independent of the whole BPE chain, and the merge loop is
@@ -1528,32 +1521,27 @@ object LlmExtras {
     // (oracle re-gated on both consumer keys).
     val ((wf, merges), bySource) = graft.util.Par.both(
       {
-        val wf0 = graft.api.Bpe.wordFreq(docs, col("text"))
-          .localCheckpoint()
+        val wf0 = Pin(graft.api.Bpe.wordFreq(docs, col("text")))
         val m = graft.api.Bpe.trainFromVocab(
           wf0.select(graft.api.Bpe.wrapChars(col("word")).as("sym"),
             col("w_n")),
           BpeTrainMerges)
         (wf0, m)
       },
-      docs
+      Pin(docs
         .select(col("source"),
           explode(split(col("text"), " ")).as("word"))
         .filter(col("word").rlike("^[A-Za-z]+$"))
-        .groupBy("source", "word").agg(count(lit(1)).as("__n"))
-        .localCheckpoint())
-    // pinArtifacts measured SLOWER and stays off for both callers (r13,
-    // REPEATS=3 fair host: card key 3.28 s pinned vs 2.40 s unpinned):
-    // wpVoc/ugModel sit above exchanges ReuseExchange already dedupes,
-    // and bpeSeg's merge-apply chain is a map-side walk over the PINNED
-    // vocab-sized wf — cheaper to re-run than to materialize (the
-    // SCALE.md "consumers above a shuffle" row). The knob is kept so the
-    // next double-consumer caller can re-measure in one line.
-    val pin: DataFrame => DataFrame =
-      if (pinArtifacts) _.localCheckpoint() else identity
-    val bpeSeg = pin(graft.api.Bpe.segment(wf, col("word"), merges))
-    val wpVoc = pin(graft.api.Wordpiece.vocabPieces(wf))
-    val ugModel = pin(graft.api.Unigram.seedPieces(wf))
+        .groupBy("source", "word").agg(count(lit(1)).as("__n"))))
+    // the family artifacts stay unpinned: pinning them measured SLOWER
+    // (r13, REPEATS=3 fair host: card key 3.28 s pinned vs 2.40 s
+    // unpinned) — wpVoc/ugModel sit above exchanges ReuseExchange
+    // already dedupes, and bpeSeg's merge-apply chain is a map-side walk
+    // over the PINNED vocab-sized wf, cheaper to re-run than to
+    // materialize (the SCALE.md "consumers above a shuffle" row)
+    val bpeSeg = graft.api.Bpe.segment(wf, col("word"), merges)
+    val wpVoc = graft.api.Wordpiece.vocabPieces(wf)
+    val ugModel = graft.api.Unigram.seedPieces(wf)
     val bpeNp = bpeSeg.select(lit("bpe").as("family"), col("word"),
       size(col("tokens")).cast("long").as("__np"), lit(true).as("__cov"))
     val wpNp = graft.api.Wordpiece.encode(wf, wpVoc)

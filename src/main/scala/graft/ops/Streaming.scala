@@ -367,7 +367,7 @@ object Streaming {
     val spark = batch.sparkSession
     // the exact batch total and the emitted shift both need the
     // batch twice — pin once (micro-batch-sized)
-    val pinned = batch.localCheckpoint()
+    val pinned = graft.util.Pin(batch)
     val summed = graft.api.Overlap.runningSum(pinned, bucketKey,
       order, value, out)
     val sumType = summed.schema(out).dataType
@@ -395,7 +395,7 @@ object Streaming {
     }
     // release the per-batch pin (generation discipline — a long
     // stream would otherwise accumulate one persisted RDD per batch)
-    graft.api.TextDedup.releaseCheckpoint(pinned)
+    graft.util.Pin.release(pinned)
   }
 
   /** Streaming twin of `Overlap.rollingRows` for TRAILING frames (r11)
@@ -439,7 +439,7 @@ object Streaming {
         Seq[org.apache.spark.sql.Column])(
       emit: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val pinned = batch.localCheckpoint()
+    val pinned = graft.util.Pin(batch)
     val tagged = pinned.withColumn("__tail", lit(false))
     val (state, alreadyAdvanced) =
       readTwinState(spark, tailPath, batchId)
@@ -465,7 +465,7 @@ object Streaming {
             java.util.Arrays.asList(tailRows: _*), pinned.schema),
           tailPath, batchId)
     }
-    graft.api.TextDedup.releaseCheckpoint(pinned)
+    graft.util.Pin.release(pinned)
   }
 
   /** Streaming twin of `Overlap.rollingRange` for TRAILING value frames
@@ -508,7 +508,7 @@ object Streaming {
         Seq[org.apache.spark.sql.Column])(
       emit: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val pinned = batch.localCheckpoint()
+    val pinned = graft.util.Pin(batch)
     val tagged = pinned.withColumn("__tail", lit(false))
     val (state, alreadyAdvanced) =
       readTwinState(spark, tailPath, batchId)
@@ -536,7 +536,7 @@ object Streaming {
           .filter(key.cast("long") >= mx.getLong(0) - rangeBefore),
         tailPath, batchId)
     }
-    graft.api.TextDedup.releaseCheckpoint(pinned)
+    graft.util.Pin.release(pinned)
   }
 
   /** Streaming twin of the global gaps-and-islands sessionizer (r12 —
@@ -586,7 +586,7 @@ object Streaming {
       tieBreak: Seq[org.apache.spark.sql.Column], gap: Long, out: String,
       statePath: String)(emit: DataFrame => Unit): Unit = {
     val spark = batch.sparkSession
-    val pinned = batch.localCheckpoint()
+    val pinned = graft.util.Pin(batch)
     val keyed = pinned.withColumn("__sess_k", key.cast("long"))
     val (state, alreadyAdvanced) =
       readTwinState(spark, statePath, batchId)
@@ -627,7 +627,7 @@ object Streaming {
             lit(stats.getLong(1)).as("session_offset")),
           statePath, batchId)
     }
-    graft.api.TextDedup.releaseCheckpoint(pinned)
+    graft.util.Pin.release(pinned)
   }
 
   /** CUSTOM state via flatMapGroupsWithState (the escape hatch beyond

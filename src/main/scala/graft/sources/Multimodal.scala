@@ -548,8 +548,8 @@ object Multimodal {
     * planted byte-flip recall pin lives in MultimodalSpec.
     *
     * Pinning: the engine pins its SHINGLE frame (three consumers —
-    * band sigs + both verify sides; `checkpointDir` forwards for the
-    * reliable form), which already cuts the hex + block-split recompute
+    * band sigs + both verify sides), which already cuts the hex +
+    * block-split recompute
     * over full payload bytes; the block-token frame itself has one
     * consumer and is deliberately NOT pinned (the r9 spelling
     * double-pinned). Caller owns the final pin's release, the
@@ -559,18 +559,16 @@ object Multimodal {
     * Output: (doc_a, doc_b, jaccard 4 dp). */
   def payloadNearDups(df: DataFrame, id: Column, bytes: Column,
       blockBytes: Int = 16, shingleWidth: Int = 2, bands: Int = 4,
-      rowsPerBand: Int = 4, minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame =
+      rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame =
     // no pin here: the block-token frame has ONE consumer (the engine's
     // shingle builder) — the multi-consumer pin lives INSIDE
-    // nearMinhashMd5 on its shingle frame, and checkpointDir forwards
-    // so the reliable-checkpoint form holds end to end (r9 ADVICE:
-    // the old spelling double-pinned and dropped the dir)
+    // nearMinhashMd5 on its shingle frame (r9 ADVICE: the old spelling
+    // double-pinned)
     graft.api.TextDedup.nearMinhashMd5(
       df.select(id.as("__pid"),
         payloadBlockTokens(bytes, blockBytes).as("__bt")),
       col("__pid"), col("__bt"), shingleWidth, bands, rowsPerBand,
-      minJaccard, checkpointDir)
+      minJaccard)
 
   /** Cross-corpus payload near-dup — MEDIA DECONTAMINATION: training
     * payloads whose byte stream near-dups an EVAL-set payload (the
@@ -585,8 +583,8 @@ object Multimodal {
   def payloadNearDupsBetween(train: DataFrame, trainId: Column,
       trainBytes: Column, eval0: DataFrame, evalId: Column,
       evalBytes: Column, blockBytes: Int = 16, shingleWidth: Int = 2,
-      bands: Int = 4, rowsPerBand: Int = 4, minJaccard: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame =
+      bands: Int = 4, rowsPerBand: Int = 4,
+      minJaccard: Double = 0.8): DataFrame =
     graft.api.TextDedup.nearMinhashMd5Between(
       train.select(trainId.as("__pid"),
         payloadBlockTokens(trainBytes, blockBytes).as("__bt")),
@@ -594,7 +592,7 @@ object Multimodal {
       eval0.select(evalId.as("__pid"),
         payloadBlockTokens(evalBytes, blockBytes).as("__bt")),
       col("__pid"), col("__bt"),
-      shingleWidth, bands, rowsPerBand, minJaccard, checkpointDir)
+      shingleWidth, bands, rowsPerBand, minJaccard)
 
   // === Perceptual-hash near-dup (dHash) =================================
   // payloadNearDups catches byte-level copies; a RE-ENCODED image shares
@@ -697,15 +695,12 @@ object Multimodal {
     * pinned (4 ints + id per row; three consumers).
     * Output: (doc_a, doc_b, hamming), doc_a < doc_b. */
   def phashNearDups(df: DataFrame, id: Column, pixels: Column,
-      maxDist: Int = 3,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ck = graft.api.TextDedup.ckptFn(df.sparkSession, checkpointDir)
+      maxDist: Int = 3): DataFrame =
     // candidate/verify core shared with the md5-SimHash family
     // (TextDedup.bandedHammingPairs): collapse-guarded band equi-join +
     // exact Σ bit_count(xor) hamming, pigeonhole-complete at ≤ 3
-    graft.api.TextDedup.bandedHammingPairs(
-      ck(df.select(id.as("__id"), dhashBands(pixels).as("__bd"))), maxDist)
-  }
+    graft.api.TextDedup.bandedHammingPairs(graft.util.Pin(
+      df.select(id.as("__id"), dhashBands(pixels).as("__bd"))), maxDist)
 
   /** Persist a dHash band index — the nightly form of perceptual dedup
     * (the writeSignatureIndex discipline applied to pixel space): the
@@ -746,8 +741,7 @@ object Multimodal {
     * frame feeds both screens (r12). */
   def phashDedupShardAgainstIndex(shard: DataFrame, id: Column,
       pixels: Column, path: String, maxDist: Int = 3): DataFrame =
-    shard.join(graft.api.TextDedup.bandDrops(
-        graft.api.TextDedup.ckptFn(shard.sparkSession, None)(
+    shard.join(graft.api.TextDedup.bandDrops(graft.util.Pin(
           shard.select(id.as("__id"), dhashBands(pixels).as("__bd"))),
         path, maxDist),
       id === col("__drop_id"), "left_anti")

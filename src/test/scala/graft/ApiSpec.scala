@@ -1054,25 +1054,23 @@ class ApiSpec extends AnyFunSuite {
       (100L until 110L).map(i => (i, i + 1))).toDF("a", "b")
     val ckDir = SparkFixture.tempDir("graft_ck_")
     // localFinishEdges=0 forces the distributed rounds — the only path
-    // that checkpoints per round
-    val base = TextDedup.clusters(edges, col("a"), col("b"),
-      localFinishEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = TextDedup.clusters(edges, col("a"), col("b"),
-      localFinishEdges = 0L, checkpointDir = Some(ckDir.getAbsolutePath))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // that pins per round
+    def run(star: Boolean) =
+      (if (star) TextDedup.clustersStar(edges, col("a"), col("b"),
+        localFinishEdges = 0L)
+       else TextDedup.clusters(edges, col("a"), col("b"),
+        localFinishEdges = 0L))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val base = run(star = false)
+    val (reliable, starReliable) =
+      SparkFixture.withCheckpointDir(ckDir.getAbsolutePath) {
+        val r = run(star = false)
+        assert(SparkFixture.checkpointFiles(ckDir) > 0,
+          "no checkpoint part-files written — rounds still executor-local")
+        (r, run(star = true))
+      }
     assert(reliable == base,
       "reliable-checkpoint result diverges from the default")
-    def rddFiles(d: java.io.File): Int = {
-      val fs = Option(d.listFiles()).getOrElse(Array.empty)
-      fs.count(f => f.isFile && f.getName.startsWith("part-")) +
-        fs.filter(_.isDirectory).map(rddFiles).sum
-    }
-    assert(rddFiles(ckDir) > 0,
-      "no checkpoint part-files written — rounds still executor-local")
-    val starReliable = TextDedup.clustersStar(edges, col("a"), col("b"),
-      localFinishEdges = 0L, checkpointDir = Some(ckDir.getAbsolutePath))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(starReliable == base,
       "clustersStar reliable-checkpoint result diverges")
   }
@@ -1567,12 +1565,15 @@ class ApiSpec extends AnyFunSuite {
       .langIdConfusion(df, col("k"), col("lbl"), col("body"))
       .orderBy("label", "pred_label").collect().toSeq
     val dir = SparkFixture.tempDir("graft-langid-ckpt")
-    val ck = TextQuality
-      .langIdConfusion(df, col("k"), col("lbl"), col("body"),
-        checkpointDir = Some(dir.getAbsolutePath))
-      .orderBy("label", "pred_label").collect().toSeq
+    val ck = SparkFixture.withCheckpointDir(dir.getAbsolutePath) {
+      TextQuality
+        .langIdConfusion(df, col("k"), col("lbl"), col("body"))
+        .orderBy("label", "pred_label").collect().toSeq
+    }
     assert(base.nonEmpty && base == ck,
-      s"checkpointDir result diverged: $ck vs $base")
+      s"checkpoint-dir result diverged: $ck vs $base")
+    assert(SparkFixture.checkpointFiles(dir) > 0,
+      "no checkpoint part-files written — pins still executor-local")
   }
 
   test("TextDedup.dupSubstringStats catches a boundary-straddling exact " +
@@ -2649,35 +2650,41 @@ class ApiSpec extends AnyFunSuite {
 
   test("containmentWithinBucket / kMeansFit / pqTrainCodebook with a " +
       "reliable checkpointDir match the localCheckpoint default") {
-    val ckDir = SparkFixture.tempDir("graft_ck3_").getAbsolutePath
+    val ckFile = SparkFixture.tempDir("graft_ck3_")
+    def reliable[A](run: => A): A = {
+      val before = SparkFixture.checkpointFiles(ckFile)
+      val out = SparkFixture.withCheckpointDir(ckFile.getAbsolutePath)(run)
+      assert(SparkFixture.checkpointFiles(ckFile) > before,
+        "no checkpoint part-files written — pins still executor-local")
+      out
+    }
     // containment: the embedded-pair fixture from the recall test
     val big = (1 to 60).map(i => s"w$i").mkString(" ")
     val docs = Seq((1L, "web", big),
       (2L, "web", (21 to 35).map(i => s"w$i").mkString(" ")),
       (3L, "web", (100 to 130).map(i => s"u$i").mkString(" "))
     ).toDF("id", "grp", "body")
-    def contain(dir: Option[String]) = TextDedup
+    def contain() = TextDedup
       .containmentWithinBucket(docs, col("id"), col("grp"), col("body"),
-        minContainment = 0.9, checkpointDir = dir)
+        minContainment = 0.9)
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(contain(Some(ckDir)) == contain(None),
+    assert(reliable(contain()) == contain(),
       "containment reliable-checkpoint result diverges from default")
     // k-means + PQ: a small deterministic vector cloud
     val rnd = new scala.util.Random(11)
     val vecs = (0L until 40L)
       .map(i => (i, Seq.fill(8)(rnd.nextFloat() * 2 - 1))).toDF("id", "v")
-    def kmeans(dir: Option[String]) = Similarity
-      .kMeansFit(vecs, col("id"), col("v"), k = 3, iters = 2,
-        checkpointDir = dir)
+    def kmeans() = Similarity
+      .kMeansFit(vecs, col("id"), col("v"), k = 3, iters = 2)
       .collect().map(r => r.getInt(0) -> r.getSeq[Float](1)).toMap
-    assert(kmeans(Some(ckDir)) == kmeans(None),
+    assert(reliable(kmeans()) == kmeans(),
       "kMeansFit reliable-checkpoint centroids diverge from default")
-    def pq(dir: Option[String]) = Similarity
+    def pq() = Similarity
       .pqTrainCodebook(vecs, col("id"), col("v"), m = 2, subDim = 4,
-        k = 4, iters = 2, checkpointDir = dir)
+        k = 4, iters = 2)
       .collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2)).toMap
-    assert(pq(Some(ckDir)) == pq(None),
+    assert(reliable(pq()) == pq(),
       "pqTrainCodebook reliable-checkpoint codebook diverges from default")
   }
 
@@ -3678,7 +3685,7 @@ class ApiSpec extends AnyFunSuite {
     // matches the explicit-bucket result bit-for-bit
     val (gAuto, nAuto, _) = graft.api.Overlap.assignGroups(overlapEvents,
       unix_micros(col("ts").cast("timestamp")),
-      Seq(col("ts"), col("event_id")), 0, 2, None)
+      Seq(col("ts"), col("event_id")), 0, 2)
     assert(nAuto > 1, "auto sizing degenerated to one group")
     assert(gAuto.groupBy("__ovl_grp").count().collect()
       .forall(_.getLong(1) >= 2), "a group under minRows escaped the walk")
@@ -3867,7 +3874,7 @@ class ApiSpec extends AnyFunSuite {
     // the fallback itself: the value-range walk collapses on lit(0),
     // rank buckets over the total order take over
     val (_, groups, _) = graft.api.Overlap.assignGroups(overlapEvents,
-      lit(0), Seq(col("ts"), col("event_id")), 16, 3, None)
+      lit(0), Seq(col("ts"), col("event_id")), 16, 3)
     assert(groups > 1,
       s"tie-split fallback did not engage (groups=$groups)")
     val naiveW = Window.orderBy(col("ts"), col("event_id"))

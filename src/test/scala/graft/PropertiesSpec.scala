@@ -162,32 +162,96 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("winnowCandidates releases its fingerprint pin per call " +
-      "(generation discipline — only the pair-sized final pin accretes)") {
+  test("every iterative Pin user releases its superseded generations " +
+      "(at most the result's pin accretes per call)") {
     val spark = SparkFixture.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
+    import graft.api._
     val sc = spark.sparkContext
-    // start from a drained context so counts are exact
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    assert(sc.getPersistentRDDs.isEmpty)
     val docs = (0 until 12).map(i =>
-      (i.toLong, s"alpha beta gamma delta epsilon zeta token$i eta theta"))
+      (i.toLong, s"alpha beta gamma delta epsilon zeta token$i eta theta " +
+        "iota kappa lambda mu"))
       .toDF("doc_id", "text")
-    (1 to 3).foreach { call =>
-      val n = graft.api.TextDedup
-        .winnowCandidates(docs, col("doc_id"), col("text")).count()
-      assert(n > 0)
-      // AT MOST one new persisted RDD per call — the final pair pin;
-      // the fingerprint-set pin each call creates must have been
-      // released (a leak shows 2 per call). "At most" because the
-      // ContextCleaner may GC-unpersist earlier calls' discarded
-      // result pins in the meantime — that direction is fine.
-      assert(sc.getPersistentRDDs.size <= call,
-        s"after call $call: ${sc.getPersistentRDDs.size} persisted " +
-          "RDDs — the superseded fingerprint pin is leaking")
+    val edges = (Seq((1L, 2L), (2L, 3L), (9L, 7L), (5L, 5L)) ++
+      (100L until 108L).map(i => (i, i + 1))).toDF("a", "b")
+    // one 3-fragment chain: every joint is a w = 3 overlap
+    val frags = Seq((40L, "a1 a2 a3 b1 b2 b3"), (41L, "b1 b2 b3 c1 c2 c3"),
+      (42L, "c1 c2 c3 d1 d2 d3")).toDF("fid", "tx")
+    val rnd = new scala.util.Random(7)
+    val vecs = (0L until 24L)
+      .map(i => (i, Seq.fill(8)(rnd.nextFloat() * 2 - 1))).toDF("id", "v")
+    val feats = Corpus.hashFeatures(docs, col("doc_id"), col("text"))
+    val labels = docs.select(col("doc_id"),
+      (col("doc_id") % 2).cast("int").as("y"))
+    val vocab = Bpe.wordFreq(docs, col("text"))
+      .select(Bpe.wrapChars(col("word")).as("sym"), col("w_n"))
+    // each row forces its rounds (localFinishEdges = 0, epochs > 2, …)
+    // and materializes whatever it returns
+    val users: Seq[(String, () => Unit)] = Seq(
+      "clusters" -> (() => TextDedup.clusters(edges, col("a"), col("b"),
+        localFinishEdges = 0L).count()),
+      "clustersStar" -> (() => TextDedup.clustersStar(edges, col("a"),
+        col("b"), localFinishEdges = 0L).count()),
+      "stitchChains" -> (() => TextDedup.stitchChains(frags, col("fid"),
+        col("tx"), w = 3).count()),
+      "winnowCandidates" -> (() => TextDedup.winnowCandidates(docs,
+        col("doc_id"), col("text")).count()),
+      "kMeansFit" -> (() => Similarity.kMeansFit(vecs, col("id"), col("v"),
+        k = 3, iters = 3).count()),
+      "pqTrainCodebook" -> (() => Similarity.pqTrainCodebook(vecs,
+        col("id"), col("v"), m = 2, subDim = 4, k = 4, iters = 3).count()),
+      "Quality.train" -> (() => Quality.train(feats, labels,
+        epochs = 4).count()),
+      "Quality.crossValidate" -> (() => Quality.crossValidate(feats, labels,
+        folds = 2, epochs = 3).count()),
+      "Quality.labelNoiseAudit" -> (() => Quality.labelNoiseAudit(feats,
+        labels, epochs = 3).count()),
+      "Bpe.trainFromVocab" -> (() => Bpe.trainFromVocab(vocab, 9)),
+      "Wordpiece.trainFromVocab" -> (() =>
+        Wordpiece.trainFromVocab(vocab, 4)),
+      "Unigram.train" -> (() => Unigram.train(docs, col("text"),
+        3).count()),
+      "SuffixArray.windowClasses" -> (() => SuffixArray.duplicateSpans(
+        docs.union(docs.select(col("doc_id") + 100, col("text"))),
+        col("doc_id"), col("text"), minLen = 8).count()))
+    val leaks = users.flatMap { case (name, call) =>
+      // start from a drained context so counts are exact
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      assert(sc.getPersistentRDDs.isEmpty)
+      // AT MOST one new persisted RDD per call — the result's pin; a
+      // leaked generation or input shows more. "At most" because the
+      // ContextCleaner may GC-unpersist earlier calls' discarded result
+      // pins in the meantime — that direction is fine.
+      (1 to 3).map { n => call(); n -> sc.getPersistentRDDs.size }
+        .collectFirst { case (n, held) if held > n =>
+          s"$name after call $n: $held persisted RDDs" }
     }
     sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    assert(leaks.isEmpty, "superseded pins leaking: " + leaks.mkString("; "))
+  }
+
+  test("every eager materialization in src/main goes through Pin") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: $root")
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f).filter(_.getName
+          .endsWith(".scala")))
+    val banned = Seq(".localCheckpoint(", ".checkpoint(", "checkpointDir")
+    val hits = files(root)
+      .filterNot(_.getPath.replace('\\', '/')
+        .endsWith("graft/util/Pin.scala"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.getLines().zipWithIndex.collect {
+          case (line, i) if banned.exists(line.contains) =>
+            s"${f.getPath}:${i + 1}: ${line.trim}"
+        }.toList
+        finally src.close()
+      }
+    assert(hits.isEmpty, "pin outside graft.util.Pin:\n" +
+      hits.mkString("\n"))
   }
 
   test("the manifest checksum is permutation-invariant and moves on any " +

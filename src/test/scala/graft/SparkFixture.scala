@@ -21,6 +21,29 @@ object SparkFixture {
   val sf001 = "/root/testdata/sf0.01"
   val sf01 = "/root/testdata/sf0.1"
 
+  /** Run `body` with `dir` as the session's checkpoint dir, so every
+    * graft.util.Pin inside it is a reliable checkpoint written there. The
+    * dir is unset afterwards (Spark maps null to no dir), so reliable
+    * mode never leaks into later suites. */
+  def withCheckpointDir[A](dir: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    require(sc.getCheckpointDir.isEmpty,
+      s"a checkpoint dir is already set: ${sc.getCheckpointDir}")
+    sc.setCheckpointDir(dir)
+    try body
+    finally {
+      sc.setCheckpointDir(null)
+      assert(sc.getCheckpointDir.isEmpty, "checkpoint dir still set")
+    }
+  }
+
+  /** Checkpoint `part-*` files anywhere under `dir`. */
+  def checkpointFiles(dir: java.io.File): Int = {
+    val fs = Option(dir.listFiles()).getOrElse(Array.empty)
+    fs.count(f => f.isFile && f.getName.startsWith("part-")) +
+      fs.filter(_.isDirectory).map(checkpointFiles).sum
+  }
+
   /** Temp dir recursively deleted at JVM exit — File.deleteOnExit on a
     * non-empty directory silently leaves it behind, so every spec fixture
     * dir goes through this instead of bare createTempDirectory. */
