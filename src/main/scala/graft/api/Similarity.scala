@@ -1196,24 +1196,19 @@ object Similarity {
     * writes deliberately DON'T feed a Catalyst size estimate here:
     * measured inflated on the join-rooted encode plans (trained write
     * 2.72 → 3.10 s isolated from over-partitioning) — they keep the
-    * floor/cap formula plus the conf override. Overridable via
-    * `spark.graft.index.writePartitions` for operators whose stores
-    * price task commits differently. */
+    * floor/cap formula. */
   private def listWritePartitions(spark: SparkSession,
-      numLists: Option[Int], inputBytes: Option[Long] = None): Int =
-    spark.conf.getOption("spark.graft.index.writePartitions")
-      .map(_.toInt)
-      .getOrElse {
-        val floor = math.max(8, spark.sparkContext.defaultParallelism / 4)
-        val advisory = math.max(1L,
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get(
-              "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")))
-        val target = inputBytes.fold(floor)(b =>
-          math.max(floor,
-            math.min(Int.MaxValue.toLong, b / advisory + 1L).toInt))
-        math.max(1, numLists.fold(target)(math.min(_, target)))
-      }
+      numLists: Option[Int], inputBytes: Option[Long] = None): Int = {
+    val floor = math.max(8, spark.sparkContext.defaultParallelism / 4)
+    val advisory = math.max(1L,
+      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get(
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")))
+    val target = inputBytes.fold(floor)(b =>
+      math.max(floor,
+        math.min(Int.MaxValue.toLong, b / advisory + 1L).toInt))
+    math.max(1, numLists.fold(target)(math.min(_, target)))
+  }
 
   /** The stored row shape: (vec_id, bucket, scale, qvec) — one row per
     * vector, bucket = [[signBucket]] at the index's recorded bits, codes
@@ -1450,21 +1445,22 @@ object Similarity {
     * removal set shuffles as bare ids (no broadcast hint — a typical
     * forget list is tiny and AQE will broadcast it, but a bulk purge
     * can be corpus-scale). The rewrite keeps the one-file-per-list
-    * layout; pass `partitionCol = "cluster_id"` for a
-    * [[writeIvfIndexTrained]] index. */
+    * layout of either index family. */
   def removeFromIvfIndex(spark: SparkSession, path: String,
-      ids: DataFrame, partitionCol: String = "bucket"): Unit = {
+      ids: DataFrame): Unit = {
     val rm = ids.select(col("vec_id")).distinct()
-    rewriteLists(spark, path, partitionCol)(
-      _.join(rm, Seq("vec_id"), "left_anti"))
+    rewriteLists(spark, path)(_.join(rm, Seq("vec_id"), "left_anti"))
   }
 
   /** Staged rewrite of an IVF index's lists table shared by
     * [[removeFromIvfIndex]] and [[compactIvfIndex]]: the transformed
     * table is materialized in full, then committed through
-    * [[graft.util.Swap]] (its crash contract applies). */
-  private def rewriteLists(spark: SparkSession, path: String,
-      partitionCol: String)(transform: DataFrame => DataFrame): Unit = {
+    * [[graft.util.Swap]] (its crash contract applies). The partition
+    * column — `bucket` for [[writeIvfIndex]], `cluster_id` for
+    * [[writeIvfIndexTrained]] — is read off the live table's
+    * `<col>=<value>` directories. */
+  private def rewriteLists(spark: SparkSession, path: String)(
+      transform: DataFrame => DataFrame): Unit = {
     val live = s"$path/lists"
     val tmp = graft.util.Swap.next(live)
     val lPath = new org.apache.hadoop.fs.Path(live)
@@ -1474,14 +1470,19 @@ object Similarity {
     // the task count, so a corpus-scale rewrite gets data-sized
     // partitions instead of ~cores/4 huge ones (one FS listing + one
     // content summary — driver metadata, no Spark job)
-    val numLists = scala.util.Try(fs.listStatus(lPath)
-      .count(s => s.isDirectory &&
-        s.getPath.getName.startsWith(partitionCol + "="))).toOption
-      .filter(_ > 0)
+    val lists = fs.listStatus(lPath).filter(_.isDirectory)
+      .map(_.getPath.getName).filter(_.contains('='))
+    val partitionCol = lists.map(_.takeWhile(_ != '=')).distinct match {
+      case Array(c) => c
+      case cols => throw new IllegalStateException(
+        s"lists table $live must hold partition dirs of one column, " +
+          s"found ${if (cols.isEmpty) "none" else cols.mkString(", ")}")
+    }
     val liveBytes = scala.util.Try(
       fs.getContentSummary(lPath).getLength).toOption
     transform(spark.read.parquet(live))
-      .repartition(listWritePartitions(spark, numLists, liveBytes),
+      .repartition(
+        listWritePartitions(spark, Some(lists.length), liveBytes),
         col(partitionCol))
       .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
     // a ZERO-row transform writes no parquet files under a partitioned
@@ -1511,11 +1512,9 @@ object Similarity {
     * one-file-per-list layout through the staged [[rewriteLists]] swap.
     * Rows are per-vector and unique, so compaction is pure
     * file consolidation — probe results are identical before and after
-    * (ApiSpec pin). Works on both the sign-bucket and trained layouts
-    * (`partitionCol` = "bucket" / "cluster_id"). */
-  def compactIvfIndex(spark: SparkSession, path: String,
-      partitionCol: String = "bucket"): Unit =
-    rewriteLists(spark, path, partitionCol)(identity)
+    * (ApiSpec pin). Works on both the sign-bucket and trained layouts. */
+  def compactIvfIndex(spark: SparkSession, path: String): Unit =
+    rewriteLists(spark, path)(identity)
 
   /** Top-k against a PERSISTED IVF index ([[writeIvfIndex]] /
     * [[appendToIvfIndex]]): each query probes its own sign-bucket list

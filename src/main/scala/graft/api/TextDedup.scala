@@ -32,56 +32,16 @@ object TextDedup {
     exact(df, trim(regexp_replace(lower(text), "\\s+", " ")), id)
 
   /** MinHash-LSH near-duplicate pairs verified by shingle jaccard ≥
-    * `minJaccard`. Bands × rowsPerBand minhashes; candidate generation is
-    * a streaming self-join on (band, signature) — bounded state at any
-    * corpus size. Output: (doc_a, doc_b, jaccard). */
+    * `minJaccard`, hashed in-engine with xxhash64 (shingles, minhashes
+    * and band keys — [[Xxhash]]). Bands × rowsPerBand minhashes;
+    * candidate generation is a streaming self-join on (band, signature)
+    * — bounded state at any corpus size. Output: (doc_a, doc_b,
+    * jaccard). */
   def nearMinhash(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      minJaccard: Double = 0.8): DataFrame = {
-    val k = bands * rowsPerBand
-    // (__id, hs): sorted distinct shingle hashes — the verify operand.
-    // PINNED (r9, the materialization decision table): three consumers
-    // (band sigs + both verify sides), all map-side construction below
-    // any exchange, so ReuseExchange cannot dedupe it; the pinned frame
-    // is hash-sized (8-byte values), never text.
-    val docs = Pin(df.select(id.as("__id"),
-        array_sort(VectorExprs.shingleHashes(split(text, " "), shingleWidth))
-          .as("hs"))
-      .filter(size(col("hs")) > 0))
-    val bandCols = (0 until bands).map { b =>
-      val slice = (0 until rowsPerBand)
-        .map(r => element_at(col("mh"), b * rowsPerBand + r + 1))
-      struct(lit(b).as("band"), xxhash64(slice: _*).as("sig"))
-    }
-    // (__id, mh) PINNED: the k-minhash pass is the expensive step and
-    // the identical-signature collapse reads the frame three times
-    val mh = Pin(docs.select(col("__id"),
-      VectorExprs.minhashSig(col("hs"), k).as("mh")))
-    val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
-    // band rows carry ONLY (__id, band, sig): shuffling the full shingle
-    // array ×bands through the self-join exchange was 4× the bytes the
-    // join needs (r6 fix — the verify re-acquires shingles below) — and
-    // only REPRESENTATIVE rows reach the band self-join (r10 hot-bucket
-    // guard, see collapseSigGroups)
-    val sigs = reps
-      .select(col("__id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("__id"),
-        col("bs.band").as("band"), col("bs.sig").as("sig"))
-    // candidates are LSH-bounded and tiny relative to the corpus, so
-    // these joins broadcast the candidate side and the shingle frames
-    // stream map-side — no corpus-wide array shuffle anywhere
-    val pairs = expandSelfPairs(selfBandCandidates(sigs), members)
-      .join(docs.select(col("__id").as("doc_a"), col("hs").as("sa")),
-        "doc_a")
-      .join(docs.select(col("__id").as("doc_b"), col("hs").as("sb")),
-        "doc_b")
-    val inter = VectorExprs.sortedInterSize(col("sa"), col("sb"))
-      .cast("double")
-    val union = (size(col("sa")) + size(col("sb"))).cast("double") - inter
-    pairs.select(col("doc_a"), col("doc_b"),
-        round(inter / union, 4).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
-  }
+      minJaccard: Double = 0.8): DataFrame =
+    selfPairs(signShard(df, id, text, shingleWidth, bands, rowsPerBand,
+      Xxhash), minJaccard)
 
   /** [[nearMinhash]] with ENGINE-PORTABLE hashing: the k minhash
     * functions are h_i(s) = md5(i ‖ ':' ‖ shingle) with the min taken
@@ -131,50 +91,18 @@ object TextDedup {
     * digest per shingle, split into two 32-bit halves (h1, h2); the k
     * minhash functions are h_i = h1 + i·h2 (exact in 64-bit — values
     * stay < 2³⁶, so the arithmetic is portable to engines with strict
-    * BIGINT overflow like DuckDB). Same banding theory, same LSH-bounded
-    * candidate join, same exact jaccard verify — at ~1/k of the md5
-    * work, which is the dominant cost of the 16-digest scheme. Use THIS
+    * BIGINT overflow like DuckDB). The same lattice ([[signShard]])
+    * under the [[Km]] spec — at ~1/k of the md5 work, which is the
+    * dominant cost of the 16-digest scheme. Use THIS
     * variant for portable signatures when both engines agree on the
     * scheme; [[nearMinhashMd5]]'s independent-digest form stays for
     * compatibility with already-written signature indexes. Output:
     * (doc_a, doc_b, jaccard 4 dp). */
   def nearMinhashKM(df: DataFrame, id: Column, text: Column,
       shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-      minJaccard: Double = 0.8): DataFrame = {
-    // same pins and hot-bucket collapse as nearMinhashMd5
-    val sh = Pin(md5Shingles(df, id, text, shingleWidth))
-    val mh = Pin(kmMinhashSigs(sh, bands * rowsPerBand))
-    val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
-    val cand = expandSelfPairs(
-      selfBandCandidates(kmBandsFromMh(reps, bands, rowsPerBand)),
-      members)
-    jaccardVerify(joinShingles(cand, sh, sh), minJaccard)
-  }
-
-  /** K-M sibling of [[md5BandSigs]]: one digest per shingle, k minima
-    * in ONE native-expression traversal (the HOF spelling pays an
-    * interpreted closure per (i, shingle) — measured 5× slower than
-    * even the 16-digest scheme; bit-identity to the HOF chain is pinned
-    * in ApiSpec). Same no-shingles exchange-volume rule. */
-  private def kmMinhashSigs(shingles: DataFrame, k: Int): DataFrame =
-    shingles.select(col("__id"),
-      VectorExprs.minhashKM(col("sh"), k).as("mh"))
-
-  /** K-M sibling of [[bandsFromMh]] (mh is array<long>, so the band
-    * key stringifies each value before the md5-of-joined-rows). */
-  private def kmBandsFromMh(mhSigs: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws("|",
-          transform(slice(col("mh"), b * rowsPerBand + 1, rowsPerBand),
-            v => v.cast("string")))).as("sig"))
-    }
-    mhSigs
-      .select(col("__id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("__id"),
-        col("bs.band").as("band"), col("bs.sig").as("sig"))
-  }
+      minJaccard: Double = 0.8): DataFrame =
+    selfPairs(signShard(df, id, text, shingleWidth, bands, rowsPerBand,
+      Km), minJaccard)
 
   /** Persist an md5-MinHash signature index for [[screenAgainstIndex]]
     * — the nightly-production incremental-dedup shape: the accumulated
@@ -241,34 +169,35 @@ object TextDedup {
       indexPath, minJaccard)
   }
 
-  /** Eagerly-pinned md5-MinHash signature lattice of one frame — the one
-    * thing every md5-MinHash entry point composes from (self pairs,
-    * cross pairs against another lattice or against a persisted index,
-    * the accept-screen). ONE shingle pass, ONE k-digest minhash pass, ONE
-    * identical-signature collapse feed every screen over it (the r12
-    * rule). Built apart from the screens (r16, guide §2.6) so a caller
-    * that pays an index WRITE in the same timed path can sign the shard
-    * CONCURRENTLY with the write from a second driver thread
-    * (graft.util.Par.both): the lattice is a pure function of its frame
-    * and never touches an index. */
+  /** Eagerly-pinned MinHash signature lattice of one frame — the one
+    * thing every MinHash entry point composes from (self pairs, cross
+    * pairs against another lattice or against a persisted index, the
+    * accept-screen), whatever its [[MinhashSpec]]. ONE shingle pass, ONE
+    * k-minhash pass, ONE identical-signature collapse feed every screen
+    * over it (the r12 rule). Built apart from the screens (r16, guide
+    * §2.6) so a caller that pays an index WRITE in the same timed path
+    * can sign the shard CONCURRENTLY with the write from a second driver
+    * thread (graft.util.Par.both): the lattice is a pure function of its
+    * frame and never touches an index. */
   private[graft] final case class SignedShard(sh: DataFrame,
       members: DataFrame, bandSigs: DataFrame,
-      shingleWidth: Int, bands: Int, rowsPerBand: Int)
+      shingleWidth: Int, bands: Int, rowsPerBand: Int, spec: MinhashSpec)
 
   /** Build a [[SignedShard]]: the two pins run NOW (eager checkpoint
-    * jobs — the shingle frame has three map-side consumers, the k-digest
-    * minhash pass is the expensive step and the collapse reads it three
-    * times); everything else stays lazy. Band rows carry ONLY
-    * (__id, band, sig) and only REPRESENTATIVE rows reach them (the r6
-    * exchange-volume rule, the r10 hot-bucket guard). */
+    * jobs — the shingle frame has three map-side consumers, the k-minhash
+    * pass is the expensive step and the collapse reads it three times);
+    * everything else stays lazy. Band rows carry ONLY (__id, band, sig)
+    * and only REPRESENTATIVE rows reach them (the r6 exchange-volume
+    * rule, the r10 hot-bucket guard). The default spec is [[Md5]], the
+    * family of every persisted signature index. */
   private[graft] def signShard(df: DataFrame, id: Column, text: Column,
-      shingleWidth: Int = 3, bands: Int = 4,
-      rowsPerBand: Int = 4): SignedShard = {
-    val sh = Pin(md5Shingles(df, id, text, shingleWidth))
-    val mh = Pin(md5MinhashSigs(sh, bands * rowsPerBand))
+      shingleWidth: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
+      spec: MinhashSpec = Md5): SignedShard = {
+    val sh = Pin(spec.shingles(df, id, text, shingleWidth))
+    val mh = Pin(spec.sigs(sh, bands * rowsPerBand))
     val (reps, members) = collapseSigGroups(mh, fullSigKey(col("mh")))
-    SignedShard(sh, members, bandsFromMh(reps, bands, rowsPerBand),
-      shingleWidth, bands, rowsPerBand)
+    SignedShard(sh, members, spec.banded(reps, bands, rowsPerBand),
+      shingleWidth, bands, rowsPerBand, spec)
   }
 
   /** Verified near-dup pairs WITHIN one lattice: band self-join over the
@@ -278,7 +207,7 @@ object TextDedup {
     jaccardVerify(joinShingles(
         expandSelfPairs(selfBandCandidates(s.bandSigs), s.members),
         s.sh, s.sh),
-      minJaccard)
+      s.spec, minJaccard)
 
   /** Verified near-dup pairs BETWEEN a lattice and another side given as
     * its band keys, member map (None when the side was not collapsed — a
@@ -294,7 +223,7 @@ object TextDedup {
         expandCrossPairs(crossBandCandidates(a.bandSigs, bSigs),
           Some(a.members), bMembers),
         a.sh, bSh),
-      minJaccard)
+      a.spec, minJaccard)
 
   /** [[crossPairs]] against the persisted index at `indexPath`, after the
     * index-params contract is re-checked against the lattice's. */
@@ -425,13 +354,17 @@ object TextDedup {
 
   /** (doc_a, doc_b) distinct candidate pairs from ONE signature frame's
     * (band, sig) self-join, doc_a < doc_b — the LSH candidate stage
-    * every self-dedup variant shares (xxhash64, md5, K-M): one
-    * definition, so a join fix lands everywhere at once. */
-  private[graft] def selfBandCandidates(sigs: DataFrame): DataFrame = {
+    * every self-dedup variant shares (xxhash64, md5, K-M, SimHash): one
+    * definition, so a join fix lands everywhere at once. `near`, over
+    * the `a.`/`b.` sides of the band rows, drops pairs inside the join,
+    * before the dedup shuffle, when the rows carry what the verify
+    * reads. */
+  private[graft] def selfBandCandidates(sigs: DataFrame,
+      near: Option[Column] = None): DataFrame = {
     val a = sigs.alias("a"); val b = sigs.alias("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&
-          col("a.__id") < col("b.__id"))
+    val band = col("a.band") === col("b.band") &&
+      col("a.sig") === col("b.sig") && col("a.__id") < col("b.__id")
+    a.join(b, near.fold(band)(band && _))
       .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
   }
@@ -549,44 +482,82 @@ object TextDedup {
         i => concat_ws(" ", slice(col("tk"), i, lit(shingleWidth)))))
         .as("sh"))
 
-  /** (\_\_id, band, sig) band-bucket keys from a [[md5Shingles]] frame:
-    * k = bands × rowsPerBand md5 minhashes (ONE native-expression
-    * traversal with a reused MessageDigest — bit-identical to the
-    * k-chain array_min(transform(sh, s => md5(concat(lit(s"$i:"), s))))
-    * it replaces; golden + oracle pin the equality), one md5 bucket key
-    * per band. Deliberately does NOT carry `sh`: band rows ride the
-    * candidate self-join exchange, and shuffling the full shingle array
-    * ×bands was 4× the bytes the join needs (r6 fix) — the verify joins
-    * candidates back to the shingle frame instead, map-side (the
-    * candidate side is LSH-bounded and broadcasts). */
-  private def md5BandSigs(shingles: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame =
-    bandsFromMh(md5MinhashSigs(shingles, bands * rowsPerBand),
-      bands, rowsPerBand)
+  /** What one MinHash variant is; everything else — the two pins, the
+    * identical-signature collapse, the band join, member expansion and
+    * the exact jaccard verify — is the one lattice ([[signShard]],
+    * [[selfPairs]], [[crossPairs]]). `shingles` builds the (\_\_id, sh)
+    * verify operand, `minhash` the k-vector signature of `sh`,
+    * `bandKey(mh, b, rowsPerBand)` band b's bucket key, `interSize` the
+    * verify's set-intersection size. The three instances below are the
+    * variants, not an extension point. */
+  private[graft] final class MinhashSpec private[TextDedup] (
+      val shingles: (DataFrame, Column, Column, Int) => DataFrame,
+      minhash: (Column, Int) => Column,
+      bandKey: (Column, Int, Int) => Column,
+      val interSize: (Column, Column) => Column) {
 
-  /** (\_\_id, mh) k-vector md5 minhash signatures from a [[md5Shingles]]
-    * frame — the banding-independent half of [[md5BandSigs]], split out
-    * (r9) so [[lshAudit]] can compute the ONE k=16 signature pass its
-    * bands options share instead of once per option. */
-  private def md5MinhashSigs(shingles: DataFrame, k: Int): DataFrame =
-    shingles.select(col("__id"),
-      VectorExprs.minhashMd5(col("sh"), k).as("mh"))
+    /** (\_\_id, mh) k-vector signatures of a [[shingles]] frame — the
+      * banding-independent half, apart so [[lshAudit]] computes the ONE
+      * k=16 signature pass its bands options share (r9). */
+    def sigs(sh: DataFrame, k: Int): DataFrame =
+      sh.select(col("__id"), minhash(col("sh"), k).as("mh"))
 
-  /** (\_\_id, band, sig) from a precomputed [[md5MinhashSigs]] frame —
-    * bit-identical banding to the fused [[md5BandSigs]] (same slice +
-    * md5-of-joined-rows chain over the same mh vector). */
-  private def bandsFromMh(mhSigs: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws("|",
-          slice(col("mh"), b * rowsPerBand + 1, rowsPerBand))).as("sig"))
+    /** (\_\_id, band, sig) band-bucket rows of a [[sigs]] frame.
+      * Deliberately does NOT carry `sh`: band rows ride the candidate
+      * self-join exchange, and shuffling the full shingle array ×bands
+      * was 4× the bytes the join needs (r6 fix) — the verify joins
+      * candidates back to the shingle frame instead, map-side (the
+      * candidate side is LSH-bounded and broadcasts). */
+    def banded(mh: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
+      val bandCols = (0 until bands).map(b => struct(lit(b).as("band"),
+        bandKey(col("mh"), b, rowsPerBand).as("sig")))
+      mh.select(col("__id"), explode(array(bandCols: _*)).as("bs"))
+        .select(col("__id"),
+          col("bs.band").as("band"), col("bs.sig").as("sig"))
     }
-    mhSigs
-      .select(col("__id"), explode(array(bandCols: _*)).as("bs"))
-      .select(col("__id"),
-        col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
+
+  /** The engine-portable variant and the family of every persisted
+    * signature index: string shingles, k md5 minhashes (ONE
+    * native-expression traversal with a reused MessageDigest —
+    * bit-identical to the k-chain
+    * array_min(transform(sh, s => md5(concat(lit(s"$i:"), s)))) it
+    * replaces; golden + oracle pin the equality), md5 of each band's
+    * joined rows. */
+  private val Md5 = new MinhashSpec(md5Shingles,
+    VectorExprs.minhashMd5,
+    (mh, b, r) => md5(concat_ws("|", slice(mh, b * r + 1, r))),
+    (a, b) => size(array_intersect(a, b)))
+
+  /** [[nearMinhash]]'s in-engine variant: sorted distinct xxhash64
+    * shingle hashes (8-byte values, never text), xxhash64 minhashes and
+    * band keys, and a merge-walk intersection over the sorted arrays. */
+  private val Xxhash = new MinhashSpec(
+    (df, id, text, w) => df.select(id.as("__id"),
+        array_sort(VectorExprs.shingleHashes(split(text, " "), w)).as("sh"))
+      .filter(size(col("sh")) > 0),
+    VectorExprs.minhashSig,
+    (mh, b, r) =>
+      xxhash64((0 until r).map(i => element_at(mh, b * r + i + 1)): _*),
+    VectorExprs.sortedInterSize)
+
+  /** [[nearMinhashKM]]'s Kirsch–Mitzenmacher variant: [[Md5]]'s shingles
+    * and verify; k minima from ONE digest per shingle in one
+    * native-expression traversal (the HOF spelling pays an interpreted
+    * closure per (i, shingle) — measured 5× slower than even the
+    * 16-digest scheme; bit-identity to the HOF chain is pinned in
+    * ApiSpec); mh is array<long>, so the band key stringifies each value
+    * before the md5-of-joined-rows. */
+  private val Km = new MinhashSpec(md5Shingles, VectorExprs.minhashKM,
+    (mh, b, r) => md5(concat_ws("|",
+      transform(slice(mh, b * r + 1, r), v => v.cast("string")))),
+    Md5.interSize)
+
+  /** (\_\_id, band, sig) [[Md5]] band-bucket keys of a [[md5Shingles]]
+    * frame — the persisted `sigs` table. */
+  private def md5BandSigs(sh: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame =
+    Md5.banded(Md5.sigs(sh, bands * rowsPerBand), bands, rowsPerBand)
 
   /** Attach both sides' shingle arrays to a (doc_a, doc_b) candidate
     * frame: (doc_a, doc_b, sa, sb) for [[jaccardVerify]]. */
@@ -599,10 +570,11 @@ object TextDedup {
         "doc_b")
 
   /** Exact jaccard on distinct shingle sets over (doc_a, doc_b, sa, sb)
-    * candidate pairs; keeps pairs at or above `minJaccard`. */
-  private def jaccardVerify(pairs: DataFrame,
+    * candidate pairs, intersected by the lattice's spec; keeps pairs at
+    * or above `minJaccard`. */
+  private def jaccardVerify(pairs: DataFrame, spec: MinhashSpec,
       minJaccard: Double): DataFrame = {
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
+    val inter = spec.interSize(col("sa"), col("sb")).cast("double")
     val union = (size(col("sa")) + size(col("sb"))).cast("double") - inter
     pairs.select(col("doc_a"), col("doc_b"),
         round(inter / union, 4).as("jaccard"))
@@ -1081,11 +1053,15 @@ object TextDedup {
     * splits into `bands` equal bands; by pigeonhole any pair within
     * hamming distance `bands - 1` shares at least one intact band, so
     * candidate generation is an equi-join on (band, value) — bounded per
-    * bucket, never all-pairs — and the verify is one codegen'd
-    * bit_count(xor), applied MAP-SIDE before the pair dedup shuffle (far
-    * pairs that merely share one band never reach the shuffle).
-    * `maxHamming` must stay ≤ bands - 1 or recall silently drops.
-    * Output: (doc_a, doc_b, hamming). */
+    * bucket, never all-pairs — through the shared band engine
+    * ([[selfBandCandidates]], hot buckets collapsed by
+    * [[collapseSigGroups]] and restored by [[expandSelfPairs]]), and the
+    * verify is one codegen'd bit_count(xor), applied inside the band join
+    * and again over each expanded pair's signatures. `maxHamming` must
+    * stay ≤ bands - 1 or recall silently drops; when 64 is not a multiple
+    * of `bands` the top 64 mod bands bits lie in no band, which the exact
+    * verify still counts. Null signatures never pair. Output: (doc_a,
+    * doc_b, hamming). */
   def simhashPairs(sigs: DataFrame, id: Column, sig: Column,
       maxHamming: Int = 3, bands: Int = 4): DataFrame = {
     require(bands >= 2 && bands <= 64,
@@ -1096,49 +1072,33 @@ object TextDedup {
       s"pigeonhole broken: maxHamming=$maxHamming needs > $maxHamming bands")
     val width = 64 / bands
     val mask = -1L >>> (64 - width)
-    // hot-bucket guard (r10, same engine as the MinHash/dHash families):
-    // g byte-identical docs share the SAME 64-bit simhash, hence every
-    // band bucket — the band join would emit bands·g² rows. Collapse
-    // identical signatures to a min-id representative first (the
-    // signature frame is 16 bytes/doc — pinned, three consumers), pair
-    // at rep level, then restore member pairs: cross-group pairs carry
-    // their reps' hamming (members are sig-identical to their rep) and
-    // within-group pairs are hamming-0 candidates by construction.
-    // null signatures never equi-join in the band buckets — keep that
-    // contract by excluding them before the collapse (a null GROUP would
-    // otherwise emit within-group pairs the original join never made)
+    // the signature frame is 16 bytes/doc — pinned, three consumers (the
+    // collapse and both verify sides). Null signatures never equi-join
+    // in the band buckets — keep that contract by excluding them before
+    // the collapse (a null GROUP would otherwise emit within-group pairs
+    // the band join never made)
     val sigsSel = Pin(sigs.select(id.as("__id"), sig.as("__sig"))
       .filter(col("__sig").isNotNull))
     val (reps, members) = collapseSigGroups(sigsSel, col("__sig"))
-    val banded = reps
-      .select(col("__id"), col("__sig"),
+    def ham(a: String, b: String) = bit_count(col(a).bitwiseXOR(col(b)))
+    val banded = reps.select(col("__id"), col("__sig"),
         explode(array((0 until bands).map(b =>
           struct(lit(b).as("band"),
             shiftright(col("__sig"), b * width)
-              .bitwiseAND(lit(mask)).as("v"))): _*)).as("bs"))
+              .bitwiseAND(lit(mask)).as("sig"))): _*)).as("bs"))
       .select(col("__id"), col("__sig"),
-        col("bs.band").as("band"), col("bs.v").as("v"))
-    val a = banded.alias("a"); val b = banded.alias("b")
-    val repPairs = a
-      .join(b, col("a.band") === col("b.band") && col("a.v") === col("b.v")
-        && col("a.__id") < col("b.__id"))
-      .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
-        bit_count(col("a.__sig").bitwiseXOR(col("b.__sig"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .dropDuplicates("doc_a", "doc_b") // identical rows across bands
-    val cross = repPairs
-      .join(members.select(col("__rep").as("doc_a"), col("__id").as("__ma")),
+        col("bs.band").as("band"), col("bs.sig").as("sig"))
+    // band rows carry the signature, so far pairs that merely share one
+    // band are dropped inside the band join: most of its output on
+    // low-entropy text, and none of it need reach the dedup shuffle
+    val near = ham("a.__sig", "b.__sig") <= maxHamming
+    expandSelfPairs(selfBandCandidates(banded, Some(near)), members)
+      .join(sigsSel.select(col("__id").as("doc_a"), col("__sig").as("__sa")),
         "doc_a")
-      .join(members.select(col("__rep").as("doc_b"), col("__id").as("__mb")),
+      .join(sigsSel.select(col("__id").as("doc_b"), col("__sig").as("__sb")),
         "doc_b")
-      .select(least(col("__ma"), col("__mb")).as("doc_a"),
-        greatest(col("__ma"), col("__mb")).as("doc_b"), col("hamming"))
-    val within = members.alias("x")
-      .join(members.alias("y"),
-        col("x.__rep") === col("y.__rep") && col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"),
-        lit(0).cast("int").as("hamming"))
-    cross.unionByName(within)
+      .select(col("doc_a"), col("doc_b"), ham("__sa", "__sb").as("hamming"))
+      .filter(col("hamming") <= maxHamming)
   }
 
   /** The classic signature-based near-dup dedup: [[simhash]] signatures →
@@ -2118,7 +2078,7 @@ object TextDedup {
       // only re-slices the same mh vector), pinned like its consumers'
       // other inputs — 3 options otherwise re-run the k×|shingles| md5
       // traversal three times
-      Pin(md5MinhashSigs(sh, k))
+      Pin(Md5.sigs(sh, k))
     })
     val truthCnt = truth.agg(count(lit(1)).as("n_truth"))
     // ONE band self-join shared by every bands option (r12): when the
@@ -2135,7 +2095,7 @@ object TextDedup {
       .forall { case (c, f) => f % c == 0 }
     if (nested) {
       val fineBn = bandsOptions.last
-      val sigs = bandsFromMh(mh, fineBn, k / fineBn)
+      val sigs = Md5.banded(mh, fineBn, k / fineBn)
       val a = sigs.alias("a"); val b = sigs.alias("b")
       // ≤ fineBn match rows per candidate pair (one row per doc per
       // band on each side, so (pair, band) is already distinct)
@@ -2178,7 +2138,7 @@ object TextDedup {
         .orderBy("bands")
     } else {
       val per = bandsOptions.map { bn =>
-        val cand = selfBandCandidates(bandsFromMh(mh, bn, k / bn))
+        val cand = selfBandCandidates(Md5.banded(mh, bn, k / bn))
         val nc = cand.agg(count(lit(1)).as("candidates"))
         cand.join(truth, Seq("doc_a", "doc_b"), "left_semi")
           .agg(count(lit(1)).as("hits"))
@@ -2265,11 +2225,11 @@ object TextDedup {
     * the final output-sized join back to the corpus (twice, id-keyed
     * equi-joins). */
   def stitchApply(df: DataFrame, id: Column, text: Column,
-      w: Int = 8): DataFrame = {
+      w: Int = 8): DataFrame = Pin.scope { pin =>
     // edge frame pinned (r16): three consumers below (the pair frame
     // and both chain-interior anti-join probes) — same rule as the
-    // stitchCandidates cand pin
-    val edges = Pin(stitchCandidates(df, id, text, w)
+    // stitchCandidates cand pin, which `edges` supersedes
+    val edges = pin(pin.adopt(stitchCandidates(df, id, text, w))
       .filter(col("unambiguous")))
     // pair-only chains: prev must not be a next, next must not be a prev
     val pairOnly = edges
@@ -2278,7 +2238,7 @@ object TextDedup {
       .join(edges.select(col("prev_id").as("next_id")), Seq("next_id"),
         "left_anti")
     val body = df.select(id.as("__id"), text.as("__tx"))
-    pairOnly
+    pin.keep(pairOnly
       .join(body.select(col("__id").as("prev_id"), col("__tx").as("__ta")),
         "prev_id")
       .join(body.select(col("__id").as("next_id"), col("__tx").as("__tb")),
@@ -2291,7 +2251,7 @@ object TextDedup {
         concat_ws(" ", concat(split(col("__ta"), " "),
           slice(split(col("__tb"), " "), lit(w + 1),
             greatest(size(split(col("__tb"), " ")) - w, lit(0)))))
-          .as("text_merged"))
+          .as("text_merged")))
   }
 
   /** Full chain assembly — the general form of [[stitchApply]]:

@@ -159,7 +159,7 @@ object LlmExtras {
 
     // SimHash near-dup pairing (the classic web-dedup method) — thin
     // delegate to graft.api.TextDedup.nearSimhash: banded equi-join
-    // candidates, map-side hamming verify BEFORE the pair-dedup shuffle.
+    // candidates through the shared band engine, then the hamming verify.
     // No oracle (engine-specific xxhash64 inside the signature, same
     // sanction as llm_simhash); planted-duplicate + synthetic-band specs
     // pin recall and exclusion.

@@ -156,8 +156,9 @@ object LlmOps {
           minJaccard = 0.8)
         .orderBy("doc_a", "doc_b")),
 
-    // Kirsch–Mitzenmacher variant (TextDedup.nearMinhashKM): ONE md5
-    // per shingle, k hashes derived as h1 + i·h2 from the digest's two
+    // Kirsch–Mitzenmacher variant (TextDedup.nearMinhashKM, the `Km`
+    // MinhashSpec over the shared signShard lattice): ONE md5 per
+    // shingle, k hashes derived as h1 + i·h2 from the digest's two
     // 32-bit halves — the standard "less hashing, same performance"
     // trick, still engine-portable (exact 64-bit integer arithmetic,
     // reproduced verbatim in the oracle) at ~1/k of the md5 work the

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 import graft.util.Tables._
 import graft.util.Det._
@@ -13,7 +14,10 @@ import graft.util.Det._
   * evaluate identically in batch and in Structured Streaming, so each key
   * declares the BATCH plan (oracle-able in DuckDB) while the `twin*`
   * builders expose the same computation over a streaming DataFrame with
-  * watermarks, and [[perBatch]] streams any stateless batch operator.
+  * watermarks, [[perBatch]] streams any stateless batch operator, and
+  * [[withState]] streams a batch operator whose cross-batch state is one
+  * persisted frame (running sum, trailing windows, sessionizer), stating
+  * the cadence and retry contracts once for all of them.
   * The one deliberate divergence: streaming dedup uses
   * dropDuplicatesWithinWatermark, which equals the batch distinct only for
   * replays arriving within the watermark horizon — the price of a state
@@ -181,9 +185,7 @@ object Streaming {
     * `emit` receives each batch's ranked rows (a real pipeline writes a
     * sink here). */
   def twinWindowTopK(stream: DataFrame, k: Int)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+      emit: DataFrame => Unit): DataStreamWriter[Row] = {
     val counts = stream.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
@@ -254,42 +256,70 @@ object Streaming {
     * single batch run. StreamingSpec pins multi-batch ≡ batch-union for
     * every operator above. */
   def perBatch(stream: DataFrame)(batchOp: DataFrame => DataFrame)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
+      emit: DataFrame => Unit): DataStreamWriter[Row] =
     stream.writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) => emit(batchOp(batch))
     }
 
-  /** Streaming twin of `Overlap.runningSum` (r11) — the global-order
-    * cumulative sum continued across micro-batches: each batch runs the
-    * BATCH engine verbatim (bucket + two-phase prefix sum, no
-    * single-partition window anywhere), shifted by the persisted running
-    * offset of everything before it; the offset then advances by the
-    * batch total. The one-row offset frame is the only state — the
-    * index-file discipline of the [[perBatch]] screens applied to an
-    * aggregate (zero state store; `offsetPath` advances once per batch
-    * through the crash-safe staged swap below — EXACT under foreachBatch
-    * retries: a batch whose swap already landed re-reads its pre-batch
-    * offset from the retained `.bak` generation and skips the re-advance,
-    * so emits recompute identically and the sum never double-advances).
-    * Correct under the family's standard cadence contract: batches
-    * arrive in global `order` (every row of batch b+1 follows every row
-    * of batch b — a time-ordered ingest); rows violating the cadence are
-    * the ingest's bug, exactly as late lines are for the per-batch line
-    * screen. `value` must be an EXACT (decimal/integral) expression — the
-    * runningSum contract, and what makes offset addition order-free.
-    * Multi-batch ≡ batch-union pinned in StreamingSpec. */
-  // ----- crash-safe one-frame state for the foreachBatch twins --------
+  /** One micro-batch of a [[withState]] stream: (the pinned batch, the
+    * state generation it computes from — None before the first advance)
+    * to (the frame to emit, the next state — None leaves the state as it
+    * is). The next state is a thunk: it runs after the emit, and only
+    * when this batch has not advanced the state already. */
+  type StateStep =
+    (DataFrame, Option[DataFrame]) => (DataFrame, () => Option[DataFrame])
+
+  /** The one streaming form of a batch operator whose cross-batch state
+    * is ONE persisted frame at `statePath` — the global-order running sum
+    * ([[runningSum]]), the trailing row and value windows
+    * ([[rollingRows]], [[rollingRange]]) and the gaps-and-islands
+    * sessionizer ([[sessionize]]). Each micro-batch runs the BATCH engine
+    * verbatim through `step`, over the batch and the state; `emit`
+    * receives the result (a real pipeline writes a sink here). There is
+    * no state store: the frame is the whole state, sized by the step
+    * (one row, or a halo of trailing rows).
+    *
+    * Cadence contract: batches arrive in the step's global order (every
+    * row of batch b+1 follows every row of batch b — a time-ordered
+    * ingest). Rows that violate it are the ingest's bug, exactly as late
+    * lines are for the per-batch line screen.
+    *
+    * Retry contract: the state advances LAST, once per batch, through
+    * the crash-safe staged swap of [[writeTwinState]], and a retried
+    * batch is EXACT, not just at-least-once: a batch whose swap already
+    * landed re-reads its pre-batch generation and skips the re-advance,
+    * so its re-emit is computed from the same inputs as the crashed
+    * attempt and the state never double-advances. Every pin a batch
+    * makes — its own and the engines' — is released once the batch
+    * finishes, so a long stream holds no executor memory per batch.
+    * StreamingSpec pins multi-batch ≡ batch-union for every step, and the
+    * retry case. */
+  def withState(stream: DataFrame, statePath: String)(step: StateStep)(
+      emit: DataFrame => Unit): DataStreamWriter[Row] =
+    stream.writeStream.outputMode("append").foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        stateBatch(batch, batchId, statePath)(step)(emit)
+    }
+
+  /** One [[withState]] micro-batch (a foreachBatch retry is exactly a
+    * second call with the same `batchId`). */
+  private[graft] def stateBatch(batch: DataFrame, batchId: Long,
+      statePath: String)(step: StateStep)(emit: DataFrame => Unit): Unit =
+    graft.util.Pin.scope { p =>
+      val (prior, advanced) =
+        readTwinState(batch.sparkSession, statePath, batchId)
+      val (out, next) = step(p(batch), prior)
+      emit(p.adopt(out))
+      if (!advanced) next().foreach(writeTwinState(_, statePath, batchId))
+    }
+
+  // ----- crash-safe one-frame state for withState --------------------
   // The state at `path` advances once per micro-batch through a staged
   // swap: stage at `path.next`, retire the current generation to
   // `path.bak`, promote — and `.bak` is RETAINED until the next swap.
   // Every single-point crash leaves a readable generation (`.next` is
-  // ignorable garbage), and the `__twin_batch_id` column makes a RETRY
-  // of the same batch exact, not just at-least-once: a batch whose swap
-  // already landed re-reads its PRE-batch state from `.bak` and skips
-  // the re-advance — state never double-advances, re-emits are computed
-  // from the same inputs as the crashed attempt.
+  // ignorable garbage); `.bak` and the `__twin_batch_id` column are what
+  // make a retry exact (withState's retry contract).
 
   private def twinStatePaths(spark: SparkSession, path: String) = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -342,292 +372,156 @@ object Streaming {
     require(fs.rename(next, p), s"twin state swap: $next -> $p failed")
   }
 
-  def twinRunningSum(stream: DataFrame,
-      bucketKey: org.apache.spark.sql.Column,
-      order: Seq[org.apache.spark.sql.Column],
-      value: org.apache.spark.sql.Column, out: String, offsetPath: String)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        runningSumBatchStep(batch, batchId, bucketKey, order, value, out,
-          offsetPath)(emit)
+  /** The global-order cumulative sum (`Overlap.runningSum`, r11) as a
+    * [[withState]] step: each batch runs the batch engine (bucket +
+    * two-phase prefix sum, no single-partition window anywhere), shifted
+    * by the running offset of everything before it; the offset — the
+    * one-row state — then advances by the batch total. `value` must be
+    * an EXACT (decimal/integral) expression — the runningSum contract,
+    * and what makes offset addition order-free. */
+  def runningSum(bucketKey: Column, order: Seq[Column], value: Column,
+      out: String): StateStep =
+    (batch, state) => {
+      val summed = graft.api.Overlap.runningSum(batch, bucketKey, order,
+        value, out)
+      val sumType = summed.schema(out).dataType
+      val prior: Any = state.map(_.collect()(0).get(0)).orNull
+      // cast the shift back to the batch engine's output type: decimal
+      // addition re-narrows scale at max precision, and the contract is
+      // BIT-identity with the batch-union result
+      val shifted =
+        if (prior == null) summed
+        else summed.withColumn(out,
+          (col(out) + lit(prior).cast(sumType)).cast(sumType))
+      (shifted, () => {
+        val batchTotal = batch.agg(sum(value).cast(sumType)).collect()(0)
+        Some(batch.sparkSession.range(1).select(
+          (coalesce(lit(prior).cast(sumType), lit(0).cast(sumType)) +
+            coalesce(lit(batchTotal.get(0)).cast(sumType),
+              lit(0).cast(sumType))).as("running_total")))
+      })
     }
 
-  /** One [[twinRunningSum]] micro-batch — split out (r12, the
-    * [[sessionizeBatchStep]] pattern) so the retry pin can re-invoke a
-    * batch directly (a foreachBatch retry IS a second call with the
-    * same batchId). */
-  private[graft] def runningSumBatchStep(batch: DataFrame, batchId: Long,
-      bucketKey: org.apache.spark.sql.Column,
-      order: Seq[org.apache.spark.sql.Column],
-      value: org.apache.spark.sql.Column, out: String, offsetPath: String)(
-      emit: DataFrame => Unit): Unit = {
-    val spark = batch.sparkSession
-    // the exact batch total and the emitted shift both need the
-    // batch twice — pin once (micro-batch-sized)
-    val pinned = graft.util.Pin(batch)
-    val summed = graft.api.Overlap.runningSum(pinned, bucketKey,
-      order, value, out)
-    val sumType = summed.schema(out).dataType
-    val (state, alreadyAdvanced) =
-      readTwinState(spark, offsetPath, batchId)
-    val prior: Any = state.map(_.collect()(0).get(0)).orNull
-    // cast the shift back to the batch engine's output type: decimal
-    // addition re-narrows scale at max precision, and the twin's
-    // contract is BIT-identity with the batch-union result
-    val shifted =
-      if (prior == null) summed
-      else summed.withColumn(out,
-        (col(out) + lit(prior).cast(sumType)).cast(sumType))
-    emit(shifted)
-    // advance the offset LAST (see the state-helper contract):
-    // new = prior + batch sum; a retry whose swap already landed
-    // re-emits from the pre-batch offset and must not re-advance
-    if (!alreadyAdvanced) {
-      val batchTotal = pinned.agg(sum(value).cast(sumType)).collect()(0)
-      writeTwinState(spark.range(1).select(
-        (coalesce(lit(prior).cast(sumType), lit(0).cast(sumType)) +
-          coalesce(lit(batchTotal.get(0)).cast(sumType),
-            lit(0).cast(sumType))).as("running_total")),
-        offsetPath, batchId)
-    }
-    // release the per-batch pin (generation discipline — a long
-    // stream would otherwise accumulate one persisted RDD per batch)
-    graft.util.Pin.release(pinned)
-  }
-
-  /** Streaming twin of `Overlap.rollingRows` for TRAILING frames (r11)
-    * — the global-order rolling window continued across micro-batches:
-    * each batch unions the persisted TAIL of everything before it (the
-    * last `before` rows in `order` — dask's map_overlap halo carried
-    * across batches as state), runs the batch bucket+halo engine
-    * verbatim over the union, drops the tail rows' outputs (they were
-    * emitted by their own batch), then advances the tail. Trailing
-    * frames only (`after` would need FUTURE rows no stream has yet —
-    * callers needing centered frames buffer downstream); the tail frame
-    * is the only state — `before` rows, advanced once per batch through
-    * the crash-safe staged swap (exact under retries — see the state
-    * helpers). Cadence
-    * contract and emit semantics as [[twinRunningSum]]. Multi-batch ≡
-    * batch-union pinned in StreamingSpec. */
-  def twinRollingRows(stream: DataFrame,
-      bucketKey: org.apache.spark.sql.Column,
-      order: Seq[org.apache.spark.sql.Column], before: Int,
-      tailPath: String)(
-      aggs: org.apache.spark.sql.expressions.WindowSpec =>
-        Seq[org.apache.spark.sql.Column])(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+  /** `Overlap.rollingRows` for TRAILING frames (r11) as a [[withState]]
+    * step: each batch unions the state — the last `before` rows in
+    * `order`, dask's map_overlap halo carried across batches — runs the
+    * batch bucket+halo engine over the union and drops the tail rows'
+    * outputs (they were emitted by their own batch). Trailing frames
+    * only: `after` would need FUTURE rows no stream has yet — callers
+    * needing centered frames buffer downstream. */
+  def rollingRows(bucketKey: Column, order: Seq[Column], before: Int)(
+      aggs: WindowSpec => Seq[Column]): StateStep = {
     require(before >= 0, "before must be >= 0")
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        rollingRowsBatchStep(batch, batchId, bucketKey, order, before,
-          tailPath)(aggs)(emit)
+    (batch, state) => {
+      val unioned = withTail(batch, state)
+      val rolled = graft.api.Overlap.rollingRows(unioned, bucketKey,
+        order, before, after = 0)(aggs)
+      (rolled.filter(!col("__tail")).drop("__tail"), () => {
+        // the last `before` rows of tail ∪ batch — a TakeOrdered, never a
+        // full sort. Collected (≤ before rows, the Overlap bounded-scalar
+        // rule) so the staged write never reads the path it replaces.
+        val rows = if (before == 0) Array.empty[Row]
+          else unioned.drop("__tail").orderBy(order.map(_.desc): _*)
+            .limit(before).orderBy(order: _*).collect()
+        if (rows.isEmpty) None
+        else Some(batch.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), batch.schema))
+      })
     }
   }
 
-  /** One [[twinRollingRows]] micro-batch — split out (r12) for the
-    * direct retry pin, as [[sessionizeBatchStep]]. */
-  private[graft] def rollingRowsBatchStep(batch: DataFrame, batchId: Long,
-      bucketKey: org.apache.spark.sql.Column,
-      order: Seq[org.apache.spark.sql.Column], before: Int,
-      tailPath: String)(
-      aggs: org.apache.spark.sql.expressions.WindowSpec =>
-        Seq[org.apache.spark.sql.Column])(
-      emit: DataFrame => Unit): Unit = {
-    val spark = batch.sparkSession
-    val pinned = graft.util.Pin(batch)
-    val tagged = pinned.withColumn("__tail", lit(false))
-    val (state, alreadyAdvanced) =
-      readTwinState(spark, tailPath, batchId)
-    val unioned = state match {
-      case Some(tail) =>
-        tail.withColumn("__tail", lit(true)).unionByName(tagged)
-      case None => tagged
-    }
-    val rolled = graft.api.Overlap.rollingRows(unioned, bucketKey,
-      order, before, after = 0)(aggs)
-    emit(rolled.filter(!col("__tail")).drop("__tail"))
-    // advance the tail LAST (see the state-helper contract): the
-    // last `before` rows of tail ∪ batch — a TakeOrdered, never a
-    // full sort. Collected (≤ before rows, the Overlap
-    // bounded-scalar rule) so the staged write never reads the path
-    // it replaces.
-    if (before > 0 && !alreadyAdvanced) {
-      val tailRows = unioned.drop("__tail")
-        .orderBy(order.map(_.desc): _*).limit(before)
-        .orderBy(order: _*).collect()
-      if (tailRows.nonEmpty)
-        writeTwinState(spark.createDataFrame(
-            java.util.Arrays.asList(tailRows: _*), pinned.schema),
-          tailPath, batchId)
-    }
-    graft.util.Pin.release(pinned)
-  }
-
-  /** Streaming twin of `Overlap.rollingRange` for TRAILING value frames
-    * (r11) — the rolling-'24h'-style window continued across
-    * micro-batches, completing the Overlap twin family (runningSum /
-    * rollingRows / rollingRange): the persisted tail is every prior row
-    * within `rangeBefore` of the stream's max key (value-predicate halo
-    * — rows, not a count, so the state is data-rate × window sized and
-    * stays a parquet frame, never a collect). Each batch unions the
-    * tail in, runs the batch engine verbatim at rangeAfter = 0, drops
-    * tail outputs, then advances the tail through the crash-safe
-    * staged swap (exact under retries — see the state helpers; the
-    * staged `.next` write also never overwrites the path the union plan
-    * is reading). Trailing
-    * only, cadence contract and emit semantics as [[twinRunningSum]];
-    * an empty batch leaves the tail untouched. Multi-batch ≡
-    * batch-union pinned in StreamingSpec. */
-  def twinRollingRange(stream: DataFrame,
-      key: org.apache.spark.sql.Column, rangeBefore: Long,
-      tailPath: String)(
-      aggs: org.apache.spark.sql.expressions.WindowSpec =>
-        Seq[org.apache.spark.sql.Column])(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+  /** `Overlap.rollingRange` for TRAILING value frames (r11) — the
+    * rolling-'24h'-style window — as a [[withState]] step: the state is
+    * every prior row within `rangeBefore` of the stream's max key (a
+    * value-predicate halo — rows, not a count, so it is data-rate ×
+    * window sized and stays a parquet frame, never a collect). Each
+    * batch unions it in, runs the batch engine at rangeAfter = 0 and
+    * drops the tail rows' outputs; an empty batch leaves the tail as it
+    * is. */
+  def rollingRange(key: Column, rangeBefore: Long)(
+      aggs: WindowSpec => Seq[Column]): StateStep = {
     require(rangeBefore >= 0, "rangeBefore must be >= 0")
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        rollingRangeBatchStep(batch, batchId, key, rangeBefore,
-          tailPath)(aggs)(emit)
+    (batch, state) => {
+      val unioned = withTail(batch, state)
+      val rolled = graft.api.Overlap.rollingRange(unioned, key,
+        rangeBefore, rangeAfter = 0L)(aggs)
+      (rolled.filter(!col("__tail")).drop("__tail"), () => {
+        // union rows within rangeBefore of the batch max (>= max -
+        // rangeBefore — the inclusive RANGE-frame lower edge every
+        // future row can reach); the staged write lands at `.next` and
+        // renames only after the write job finished, so the union plan's
+        // read of the old generation is never pulled out from under it
+        val mx = batch.agg(max(key.cast("long"))).collect()(0)
+        if (mx.isNullAt(0)) None
+        else Some(unioned.drop("__tail")
+          .filter(key.cast("long") >= mx.getLong(0) - rangeBefore))
+      })
     }
   }
 
-  /** One [[twinRollingRange]] micro-batch — split out (r12) for the
-    * direct retry pin, as [[sessionizeBatchStep]]. */
-  private[graft] def rollingRangeBatchStep(batch: DataFrame, batchId: Long,
-      key: org.apache.spark.sql.Column, rangeBefore: Long,
-      tailPath: String)(
-      aggs: org.apache.spark.sql.expressions.WindowSpec =>
-        Seq[org.apache.spark.sql.Column])(
-      emit: DataFrame => Unit): Unit = {
-    val spark = batch.sparkSession
-    val pinned = graft.util.Pin(batch)
-    val tagged = pinned.withColumn("__tail", lit(false))
-    val (state, alreadyAdvanced) =
-      readTwinState(spark, tailPath, batchId)
-    val unioned = state match {
-      case Some(tail) =>
-        tail.withColumn("__tail", lit(true)).unionByName(tagged)
-      case None => tagged
-    }
-    val rolled = graft.api.Overlap.rollingRange(unioned, key,
-      rangeBefore, rangeAfter = 0L)(aggs)
-    emit(rolled.filter(!col("__tail")).drop("__tail"))
-    // advance the tail LAST (see the state-helper contract): union
-    // rows within rangeBefore of the batch max (>= max - rangeBefore
-    // — the inclusive RANGE-frame lower edge every future row can
-    // reach). The tail is data-rate × window sized, so it stays a
-    // staged parquet write, never a collect — the union plan reads
-    // the RETIRED generation (`.bak` after the swap), not the path
-    // being written.
-    val mx = pinned.agg(max(key.cast("long"))).collect()(0)
-    if (!mx.isNullAt(0) && !alreadyAdvanced) {
-      // the staged write lands at `.next` and the swap renames only
-      // AFTER the write job finished, so the plan's read of the old
-      // generation is never pulled out from underneath it
-      writeTwinState(unioned.drop("__tail")
-          .filter(key.cast("long") >= mx.getLong(0) - rangeBefore),
-        tailPath, batchId)
-    }
-    graft.util.Pin.release(pinned)
+  /** The batch tagged `__tail = false` after the state's rows tagged
+    * `true` — the halo'd input of the two rolling steps. */
+  private def withTail(batch: DataFrame,
+      state: Option[DataFrame]): DataFrame = {
+    val tagged = batch.withColumn("__tail", lit(false))
+    state.fold(tagged)(_.withColumn("__tail", lit(true))
+      .unionByName(tagged))
   }
 
-  /** Streaming twin of the global gaps-and-islands sessionizer (r12 —
-    * the `window_sessionize_global` composition continued across
-    * micro-batches): per batch, gap flags come from the batch
-    * bucket+halo engine (`Overlap.rollingRows` lag-1) with the FIRST
-    * batch row's flag decided by the persisted previous key, the
-    * session id from the batch two-phase prefix sum
-    * (`Overlap.runningSum`) shifted by the persisted session offset.
-    * State is ONE row — (prev_key, session_offset): the last key seen
-    * and the last session id assigned — advanced once per batch through
-    * the crash-safe staged swap (EXACT under foreachBatch retries: a
-    * batch whose swap landed re-reads its pre-batch generation from
-    * `.bak` and skips the re-advance — the [[twinRunningSum]]
-    * discipline). Sessionize is incremental-friendly because a session
-    * boundary only ever looks ONE row back — the whole halo the state
-    * must carry is a single key.
-    *
-    * Cadence contract as the other twins: batches arrive in global
-    * `key` order (`tieBreak` completes the total order within a batch);
-    * an empty batch leaves the state untouched. `key` must cast to
-    * long, NULL-free (the Overlap fail-fast applies); a boundary tie
-    * (batch head equal to the stored prev key) lands in the same
+  /** The global gaps-and-islands sessionizer (r12 — the
+    * `window_sessionize_global` composition) as a [[withState]] step:
+    * gap flags come from the batch bucket+halo engine
+    * (`Overlap.rollingRows` lag-1) with the FIRST batch row's flag
+    * decided by the stored previous key, the session id from the batch
+    * two-phase prefix sum (`Overlap.runningSum`) shifted by the stored
+    * session offset. The state is ONE row — (prev_key, session_offset):
+    * a session boundary only ever looks one row back, so the whole halo
+    * is a single key. `tieBreak` completes the `key` order within a
+    * batch, and an empty batch leaves the state as it is; `key` must
+    * cast to long, NULL-free (the Overlap fail-fast applies); a boundary
+    * tie (batch head equal to the stored prev key) lands in the same
     * session, gap 0 being ≤ `gap`. Output: the batch's columns plus
-    * `out` = the 1-based global session id. Multi-batch ≡ batch-union
-    * pinned in StreamingSpec, including a retry case. */
-  def twinSessionize(stream: DataFrame,
-      key: org.apache.spark.sql.Column,
-      tieBreak: Seq[org.apache.spark.sql.Column], gap: Long, out: String,
-      statePath: String)(
-      emit: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
+    * `out` = the 1-based global session id. */
+  def sessionize(key: Column, tieBreak: Seq[Column], gap: Long,
+      out: String): StateStep = {
     require(gap >= 0, "gap must be >= 0")
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        sessionizeBatchStep(batch, batchId, key, tieBreak, gap, out,
-          statePath)(emit)
-    }
-  }
-
-  /** One [[twinSessionize]] micro-batch — split out so the retry pin
-    * can re-invoke a batch directly (a foreachBatch retry IS exactly a
-    * second call with the same batchId). */
-  private[graft] def sessionizeBatchStep(batch: DataFrame, batchId: Long,
-      key: org.apache.spark.sql.Column,
-      tieBreak: Seq[org.apache.spark.sql.Column], gap: Long, out: String,
-      statePath: String)(emit: DataFrame => Unit): Unit = {
-    val spark = batch.sparkSession
-    val pinned = graft.util.Pin(batch)
-    val keyed = pinned.withColumn("__sess_k", key.cast("long"))
-    val (state, alreadyAdvanced) =
-      readTwinState(spark, statePath, batchId)
-    val (prevKey, offset): (Option[Long], Long) = state match {
-      case Some(st) =>
+    (batch, state) => {
+      val keyed = batch.withColumn("__sess_k", key.cast("long"))
+      val (prevKey, offset) = state.fold((Option.empty[Long], 0L)) { st =>
         val r = st.collect()(0) // one-row state frame by contract
         (Some(r.getLong(0)), r.getLong(1))
-      case None => (None, 0L)
+      }
+      val order = col("__sess_k") +: tieBreak
+      // lag-1 through the halo'd batch engine; only the batch's very
+      // first row in the total order has no predecessor — that is where
+      // the stored prev key substitutes. The prefix sum re-pins the
+      // flags, superseding the lag engine's pin.
+      val summed = graft.util.Pin.scope { p =>
+        val flagged = p.adopt(graft.api.Overlap.rollingRows(keyed,
+            col("__sess_k"), order, before = 1, after = 0)(w0 => Seq(
+          first(col("__sess_k")).over(w0.rowsBetween(-1, -1))
+            .as("__sess_prev"))))
+          .withColumn("__sess_prev",
+            coalesce(col("__sess_prev"),
+              prevKey.map(lit(_)).getOrElse(lit(null))))
+          .withColumn("__sess_new",
+            when(col("__sess_prev").isNull ||
+              col("__sess_k") - col("__sess_prev") > gap, 1L)
+              .otherwise(0L))
+        p.keep(graft.api.Overlap.runningSum(flagged,
+          col("__sess_k"), order, col("__sess_new"), out))
+      }.withColumn(out, col(out) + lit(offset))
+      (summed.drop("__sess_k", "__sess_prev", "__sess_new"), () => {
+        // the new prev key is the batch max, the new offset the last
+        // session id assigned — a two-scalar bounded collect
+        val stats = summed
+          .agg(max(col("__sess_k")), max(col(out))).collect()(0)
+        if (stats.isNullAt(0)) None
+        else Some(batch.sparkSession.range(1).select(
+          lit(stats.getLong(0)).as("prev_key"),
+          lit(stats.getLong(1)).as("session_offset")))
+      })
     }
-    val order = col("__sess_k") +: tieBreak
-    // lag-1 through the halo'd batch engine; only the batch's very
-    // first row in the total order has no predecessor — that is
-    // where the persisted prev key substitutes
-    val flagged = graft.api.Overlap.rollingRows(keyed,
-        col("__sess_k"), order, before = 1, after = 0)(w0 => Seq(
-      first(col("__sess_k")).over(w0.rowsBetween(-1, -1))
-        .as("__sess_prev")))
-      .withColumn("__sess_prev",
-        coalesce(col("__sess_prev"),
-          prevKey.map(lit(_)).getOrElse(lit(null))))
-      .withColumn("__sess_new",
-        when(col("__sess_prev").isNull ||
-          col("__sess_k") - col("__sess_prev") > gap, 1L)
-          .otherwise(0L))
-    val summed = graft.api.Overlap.runningSum(flagged,
-        col("__sess_k"), order, col("__sess_new"), out)
-      .withColumn(out, col(out) + lit(offset))
-    emit(summed.drop("__sess_k", "__sess_prev", "__sess_new"))
-    // advance LAST (the state-helper contract): the new prev key is
-    // the batch max, the new offset the last session id assigned —
-    // both off the emitted frame, a two-scalar bounded collect
-    if (!alreadyAdvanced) {
-      val stats = summed
-        .agg(max(col("__sess_k")), max(col(out))).collect()(0)
-      if (!stats.isNullAt(0))
-        writeTwinState(spark.range(1).select(
-            lit(stats.getLong(0)).as("prev_key"),
-            lit(stats.getLong(1)).as("session_offset")),
-          statePath, batchId)
-    }
-    graft.util.Pin.release(pinned)
   }
 
   /** CUSTOM state via flatMapGroupsWithState (the escape hatch beyond

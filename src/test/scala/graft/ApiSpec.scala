@@ -787,6 +787,40 @@ class ApiSpec extends AnyFunSuite {
       "far signature must not appear under the threshold")
   }
 
+  test("TextDedup.simhashPairs equals brute force at bands 3, 4 and 8: " +
+      "identical groups, null signatures, a bit outside every band") {
+    val rnd = new scala.util.Random(29)
+    val random = Seq.fill(40)(rnd.nextLong())
+    def flip(s: Long, bits: Int*) = bits.foldLeft(s)((x, b) => x ^ (1L << b))
+    val planted = Seq(
+      random(0), random(0), random(0),            // identical group of 3
+      flip(random(0), 5), flip(random(0), 63),    // near the group
+      flip(random(0), 63, 20),                    // bit 63: no band at 3
+      random(1), random(1),                       // identical pair
+      flip(random(1), 0, 21, 42),                 // one bit per 21-bit band
+      flip(random(1), 15, 16, 31),
+      flip(random(2), 61, 62, 63))
+    val sigs = (random ++ planted).map(Option(_)) ++ Seq(None, None)
+    val df = sigs.zipWithIndex.map { case (s, i) => (i.toLong, s) }
+      .toDF("sid", "sig")
+    val present = sigs.zipWithIndex.collect {
+      case (Some(s), i) => (i.toLong, s) }
+    Seq(3, 4, 8).foreach { bands =>
+      val maxH = math.min(3, bands - 1)
+      val expected = (for {
+        (a, sa) <- present; (b, sb) <- present if a < b
+        h = java.lang.Long.bitCount(sa ^ sb) if h <= maxH
+      } yield (a, b, h)).sorted
+      val got = TextDedup.simhashPairs(df, col("sid"), col("sig"),
+          maxHamming = maxH, bands = bands)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+        .toSeq.sorted
+      assert(expected.size > 10, s"bands=$bands: too few planted pairs")
+      assert(got == expected, s"bands=$bands: extra ${got.diff(expected)}" +
+        s", missing ${expected.diff(got)}")
+    }
+  }
+
   test("TextDedup.simhashPairs rejects bands outside [2,64] — bands=1 " +
       "would wrap the mask to 0 and degenerate to all-pairs") {
     val sigs = Seq((1L, 7L), (2L, 8L)).toDF("sid", "sig")
@@ -2253,6 +2287,31 @@ class ApiSpec extends AnyFunSuite {
       "screen diverges after compaction")
   }
 
+  test("IVF rewrites read the partition column off the lists dirs and " +
+      "refuse a lists table with none or two kinds") {
+    val rnd = new scala.util.Random(5)
+    val vecs = (0L until 20L)
+      .map(i => (i, Array.fill(4)(rnd.nextFloat() - 0.5f))).toDF("vid", "e")
+    val root = SparkFixture.tempDir("graft_ivf_cols_").getAbsolutePath
+    val idx = s"$root/idx"
+    Similarity.writeIvfIndex(vecs, col("vid"), col("e"), idx, bits = 2)
+    Similarity.removeFromIvfIndex(spark, idx, Seq(3L).toDF("vec_id"))
+    Similarity.compactIvfIndex(spark, idx)
+    assert(spark.read.parquet(s"$idx/lists").count() == 19L)
+    // a stray directory of a second partition column
+    assert(new java.io.File(s"$idx/lists/cluster_id=0").mkdirs())
+    val mixed = intercept[IllegalStateException](
+      Similarity.compactIvfIndex(spark, idx))
+    assert(mixed.getMessage.contains("bucket") &&
+      mixed.getMessage.contains("cluster_id"), mixed.getMessage)
+    // an unpartitioned lists table
+    val flat = s"$root/flat"
+    vecs.write.parquet(s"$flat/lists")
+    val none = intercept[IllegalStateException](
+      Similarity.compactIvfIndex(spark, flat))
+    assert(none.getMessage.contains("found none"), none.getMessage)
+  }
+
   test("Similarity IVF index lifecycle: grown-index probe equals " +
       "rebuilt-index probe, self-probe ranks first, dim/nprobe " +
       "mismatches fail loudly") {
@@ -2393,11 +2452,10 @@ class ApiSpec extends AnyFunSuite {
       eAppend.getMessage.contains("6-dim"), eAppend.getMessage)
     // FORGET + COMPACT on the TRAINED layout (r15): the staged
     // rewriteLists swap is shared with the sign-bucket family but the
-    // partition column differs — purge against a rebuilt-without build,
-    // then compact must be probe-invariant (cluster_id passed through)
+    // partition column differs (read off the lists dirs) — purge against
+    // a rebuilt-without build, then compact must be probe-invariant
     val purge = Seq(6L, 12L, 36L)
-    Similarity.removeFromIvfIndex(spark, grown, purge.toDF("vec_id"),
-      partitionCol = "cluster_id")
+    Similarity.removeFromIvfIndex(spark, grown, purge.toDF("vec_id"))
     val rebuiltWithout = new java.io.File(root, "rw").getAbsolutePath
     Similarity.writeIvfIndexTrained(
       day0.unionByName(day1).filter(!col("id").isin(purge: _*)),
@@ -2406,7 +2464,7 @@ class ApiSpec extends AnyFunSuite {
       "trained purged-index probe diverges from rebuilt-without probe")
     val preCompact = probe(grown)
     val preRows = spark.read.parquet(s"$grown/lists").count()
-    Similarity.compactIvfIndex(spark, grown, partitionCol = "cluster_id")
+    Similarity.compactIvfIndex(spark, grown)
     assert(spark.read.parquet(s"$grown/lists").count() == preRows,
       "trained compaction changed the row count")
     assert(probe(grown) == preCompact,

@@ -55,12 +55,12 @@ class PinSpec extends AnyFunSuite {
     site("dedupSubstringsAgainstIndex")(rows(TextDedup
       .dedupSubstringsAgainstIndex(delta, col("doc_id"), col("text"),
         subIdx)))
-    site("Streaming.runningSumBatchStep") {
+    site("Streaming.stateBatch(runningSum)") {
       val batch = (0 until 10).map(i => (i.toLong, i * 7L, i.toLong))
         .toDF("id", "ts", "v")
       var out = Seq.empty[String]
-      Streaming.runningSumBatchStep(batch, 0L, col("ts"),
-          Seq(col("ts"), col("id")), col("v"), "run", fresh("rsum")) { o =>
+      Streaming.stateBatch(batch, 0L, fresh("rsum"))(Streaming.runningSum(
+          col("ts"), Seq(col("ts"), col("id")), col("v"), "run")) { o =>
         out = rows(o)
       }
       out

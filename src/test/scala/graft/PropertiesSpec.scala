@@ -195,6 +195,8 @@ class PropertiesSpec extends AnyFunSuite {
         col("b"), localFinishEdges = 0L).count()),
       "stitchChains" -> (() => TextDedup.stitchChains(frags, col("fid"),
         col("tx"), w = 3).count()),
+      "stitchApply" -> (() => TextDedup.stitchApply(frags, col("fid"),
+        col("tx"), w = 3).count()),
       "winnowCandidates" -> (() => TextDedup.winnowCandidates(docs,
         col("doc_id"), col("text")).count()),
       "kMeansFit" -> (() => Similarity.kMeansFit(vecs, col("id"), col("v"),

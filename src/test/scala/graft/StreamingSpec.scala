@@ -903,9 +903,9 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Long, java.math.BigDecimal)]
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, java.math.BigDecimal)]
-    val q = Streaming.twinRunningSum(
-        in.toDF.toDF("id", "ts", "amount"), col("ts"),
-        Seq(col("ts"), col("id")), col("amount"), "running", dir) {
+    val q = Streaming.withState(in.toDF.toDF("id", "ts", "amount"), dir)(
+        Streaming.runningSum(col("ts"), Seq(col("ts"), col("id")),
+          col("amount"), "running")) {
       out => emitted.synchronized {
         emitted ++= out.select("id", "running").collect()
           .map(r => r.getLong(0) -> r.getDecimal(1))
@@ -950,9 +950,9 @@ class StreamingSpec extends AnyFunSuite {
       Seq((sum(col("amount")).over(w).cast("double") /
         count(lit(1)).over(w)).as("m3"))
     }
-    val q = Streaming.twinRollingRows(
-        in.toDF.toDF("id", "ts", "amount"), col("ts"),
-        Seq(col("ts"), col("id")), before = 2, dir)(meanAggs) {
+    val q = Streaming.withState(in.toDF.toDF("id", "ts", "amount"), dir)(
+        Streaming.rollingRows(col("ts"), Seq(col("ts"), col("id")),
+          before = 2)(meanAggs)) {
       out => emitted.synchronized {
         emitted ++= out.select("id", "m3").collect()
           .map(r => r.getLong(0) -> r.getDouble(1))
@@ -1067,8 +1067,8 @@ class StreamingSpec extends AnyFunSuite {
       .empty[(Long, java.math.BigDecimal)]
     def sumAggs(w: org.apache.spark.sql.expressions.WindowSpec) =
       Seq(sum(col("amount")).over(w).as("s50"))
-    val q = Streaming.twinRollingRange(
-        in.toDF.toDF("id", "ts", "amount"), col("ts"), 50L, dir)(sumAggs) {
+    val q = Streaming.withState(in.toDF.toDF("id", "ts", "amount"), dir)(
+        Streaming.rollingRange(col("ts"), 50L)(sumAggs)) {
       out => emitted.synchronized {
         emitted ++= out.select("id", "s50").collect()
           .map(r => r.getLong(0) -> r.getDecimal(1))
@@ -1114,8 +1114,8 @@ class StreamingSpec extends AnyFunSuite {
     val in = MemoryStream[(Long, Long)]
     val emitted = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long)]
-    val q = Streaming.twinSessionize(in.toDF.toDF("id", "k"), col("k"),
-        Seq(col("id")), gap = 50L, "sess", dir) {
+    val q = Streaming.withState(in.toDF.toDF("id", "k"), dir)(
+        Streaming.sessionize(col("k"), Seq(col("id")), gap = 50L, "sess")) {
       out => emitted.synchronized {
         emitted ++= out.select("id", "sess").collect()
           .map(r => r.getLong(0) -> r.getLong(1))
@@ -1155,8 +1155,8 @@ class StreamingSpec extends AnyFunSuite {
     // (a foreachBatch retry is exactly a second call with the same id)
     // — emission must be bit-identical and the state must not advance
     val replayed = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    Streaming.sessionizeBatchStep(batches(2).toDF("id", "k"), 2L,
-        col("k"), Seq(col("id")), 50L, "sess", dir) {
+    Streaming.stateBatch(batches(2).toDF("id", "k"), 2L, dir)(
+        Streaming.sessionize(col("k"), Seq(col("id")), 50L, "sess")) {
       out => replayed ++= out.select("id", "sess").collect()
         .map(r => r.getLong(0) -> r.getLong(1))
     }
@@ -1202,8 +1202,8 @@ class StreamingSpec extends AnyFunSuite {
     locally {
       val p = tmp("rsum")
       val (all, replay, _) = drive(p) { (df, bid, sink) =>
-        Streaming.runningSumBatchStep(df, bid, col("ts"),
-            Seq(col("ts"), col("id")), col("v"), "run", p) { out =>
+        Streaming.stateBatch(df, bid, p)(Streaming.runningSum(col("ts"),
+            Seq(col("ts"), col("id")), col("v"), "run")) { out =>
           sink ++= out.select("id", "run").collect()
             .map(r => r.getLong(0) -> r.getLong(1))
         }
@@ -1215,9 +1215,9 @@ class StreamingSpec extends AnyFunSuite {
     locally {
       val p = tmp("rrows")
       val (all, replay, _) = drive(p) { (df, bid, sink) =>
-        Streaming.rollingRowsBatchStep(df, bid, col("ts"),
-            Seq(col("ts"), col("id")), before = 2, p)(w0 =>
-            Seq(sum(col("v")).over(w0.rowsBetween(-2, 0)).as("s3"))) {
+        Streaming.stateBatch(df, bid, p)(Streaming.rollingRows(col("ts"),
+            Seq(col("ts"), col("id")), before = 2)(w0 =>
+            Seq(sum(col("v")).over(w0.rowsBetween(-2, 0)).as("s3")))) {
           out => sink ++= out.select("id", "s3").collect()
             .map(r => r.getLong(0) -> r.getLong(1))
         }
@@ -1229,8 +1229,8 @@ class StreamingSpec extends AnyFunSuite {
     locally {
       val p = tmp("rrange")
       val (all, replay, _) = drive(p) { (df, bid, sink) =>
-        Streaming.rollingRangeBatchStep(df, bid, col("ts"), 50L, p)(w =>
-            Seq(sum(col("v")).over(w).as("s50"))) {
+        Streaming.stateBatch(df, bid, p)(Streaming.rollingRange(col("ts"),
+            50L)(w => Seq(sum(col("v")).over(w).as("s50")))) {
           out => sink ++= out.select("id", "s50").collect()
             .map(r => r.getLong(0) -> r.getLong(1))
         }
@@ -1238,5 +1238,39 @@ class StreamingSpec extends AnyFunSuite {
       assert(replay.forall { case (id, v) => all(id) == v } &&
         replay.size == 30, "rollingRange retry diverged")
     }
+  }
+
+  test("every withState step releases every pin its batch made, the " +
+      "engines' included: no persisted RDD outlives a micro-batch") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val mkRows = (b: Int) => (1 to 30).map { i =>
+      (b * 100L + i, b * 1000L + i * 7L, (i * 13 + b) % 97L)
+    }
+    val steps: Seq[(String, Streaming.StateStep)] = Seq(
+      "runningSum" -> Streaming.runningSum(col("ts"),
+        Seq(col("ts"), col("id")), col("v"), "run"),
+      "rollingRows" -> Streaming.rollingRows(col("ts"),
+        Seq(col("ts"), col("id")), before = 2)(w0 =>
+        Seq(sum(col("v")).over(w0.rowsBetween(-2, 0)).as("s3"))),
+      "rollingRange" -> Streaming.rollingRange(col("ts"), 50L)(w =>
+        Seq(sum(col("v")).over(w).as("s50"))),
+      "sessionize" -> Streaming.sessionize(col("ts"), Seq(col("id")),
+        gap = 10L, "sess"))
+    val leaks = steps.flatMap { case (name, step) =>
+      // start from a drained context so counts are exact
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-leak-$name").resolve("st").toString
+      (0 until 3).flatMap { b =>
+        var n = 0L
+        Streaming.stateBatch(mkRows(b).toDF("id", "ts", "v"), b.toLong,
+          path)(step) { out => n = out.count() }
+        val held = sc.getPersistentRDDs.size
+        if (n == 30L && held == 0) None
+        else Some(s"$name batch $b: $n rows emitted, $held persisted RDDs")
+      }
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 }
