@@ -41,6 +41,16 @@ object Similarity {
       when(element_at(e, i + 1) >= 0, 1 << (bits - 1 - i)).otherwise(0))
       .reduce(_ + _)
 
+  /** The buckets a sign-bucket probe reads: the query's own bucket `qb`
+    * plus its first `nprobe − 1` one-bit-flip neighbors — the standard
+    * recall lever for sign LSH (a near-boundary vector lands one sign
+    * flip away). Probe cost grows linearly with nprobe and stays
+    * |list|-bounded; each stored vector lives in exactly one bucket and
+    * the probe buckets are distinct, so no pair dedup is needed. */
+  private def probeBuckets(qb: Column, nprobe: Int): Column =
+    array((Seq(qb) ++
+      (0 until (nprobe - 1)).map(i => qb.bitwiseXOR(lit(1 << i)))): _*)
+
   /** Exact top-k neighbors of a BOUNDED query set (broadcast) by brute
     * force over the corpus — one corpus scan, similarity rounded 6 dp and
     * ranked with an id tie-break. `queries` columns: (qid, qe[, extra]).
@@ -74,17 +84,9 @@ object Similarity {
       s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val e = corpus.select(id.as("vec_id"), vec.as("__v"),
       signBucket(vec, bits).as("__bucket"))
-    // multi-probe: the query's own bucket plus its first nprobe−1 one-bit-
-    // flip neighbors — the standard recall lever for sign LSH (a near-
-    // boundary vector lands one sign flip away). Probe cost grows linearly
-    // with nprobe and stays |list|-bounded; each corpus vector lives in
-    // exactly one bucket and probe buckets are distinct, so no pair dedup
-    // is needed.
-    val probes = (be: Column) =>
-      Seq(be) ++ (0 until (nprobe - 1)).map(i => be.bitwiseXOR(lit(1 << i)))
+    // multi-probe: own bucket + first nprobe−1 one-bit flips
     val q = queries.withColumn("__qbucket", signBucket(col("qe"), bits))
-      .withColumn("__probe",
-        explode(array(probes(col("__qbucket")): _*)))
+      .withColumn("__probe", explode(probeBuckets(col("__qbucket"), nprobe)))
     val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
     val scored = e.join(broadcast(q),
         col("__bucket") === col("__probe") && selfCond)
@@ -116,9 +118,8 @@ object Similarity {
       s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val src = corpus.select(id.as("src_id"), vec.as("__sv"),
       signBucket(vec, bits).as("__sb"))
-    val probes = Seq(col("__sb")) ++
-      (0 until (nprobe - 1)).map(i => col("__sb").bitwiseXOR(lit(1 << i)))
-    val q = src.withColumn("__probe", explode(array(probes: _*)))
+    val q = src.withColumn("__probe",
+      explode(probeBuckets(col("__sb"), nprobe)))
     val dst = corpus.select(id.as("dst_id"), vec.as("__dv"),
       signBucket(vec, bits).as("__db"))
     val scored = q.join(dst, col("__db") === col("__probe") &&
@@ -542,11 +543,9 @@ object Similarity {
       s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val base = corpus.select(id.as("vec_id"), vec.as("__v"),
       signBucket(vec, bits).as("__bucket"))
-    // multi-probe: own cell + first nprobe−1 one-bit flips (see topKIvf)
-    val probes = (be: Column) =>
-      Seq(be) ++ (0 until (nprobe - 1)).map(i => be.bitwiseXOR(lit(1 << i)))
+    // multi-probe: own cell + first nprobe−1 one-bit flips
     val q = queries.withColumn("__qbucket", signBucket(col("qe"), bits))
-      .withColumn("__probe", explode(array(probes(col("__qbucket")): _*)))
+      .withColumn("__probe", explode(probeBuckets(col("__qbucket"), nprobe)))
     // encode ONLY the probed cells: codes are per-vector and
     // deterministic, so the cell semi-join commutes with encoding — and
     // it mirrors the production cost model, where codes are precomputed
@@ -1058,11 +1057,9 @@ object Similarity {
         .agg(count(lit(1)).as("hits"))
       // probe cost: the query's own bucket plus its first p−1 one-bit
       // flips — EXACTLY topKIvf's probe set; empty flip buckets read 0
-      val probeCols = Seq(col("__qb")) ++
-        (0 until (p - 1)).map(i => col("__qb").bitwiseXOR(lit(1 << i)))
       val cand = queries
         .select(signBucket(col("qe"), bits).as("__qb"))
-        .select(explode(array(probeCols: _*)).as("__probe"))
+        .select(explode(probeBuckets(col("__qb"), p)).as("__probe"))
         .join(broadcast(hist), col("__probe") === col("__b"), "left")
         .agg(sum(coalesce(col("__bn"), lit(0L))).as("__scanned"))
       hits.crossJoin(broadcast(cand)).withColumn("nprobe", lit(p))
@@ -1143,12 +1140,12 @@ object Similarity {
 
   /** Vector width from the frame's first row, None for an empty frame —
     * a bounded 1-row collect (the centroid-fetch class), used only on
-    * index write/append/query boundaries to make dimension drift a loud
-    * error instead of a silent zip-truncated dot product. Emptiness is
-    * the CALLER's policy: an empty corpus write is a loud error, an
-    * empty delta append is a no-op, an empty query batch probes nothing
-    * (a streaming source legitimately yields 0-row micro-batches — the
-    * per-batch probes must not die on one). */
+    * index write/append boundaries to make dimension drift a loud
+    * error instead of a silent zip-truncated dot product (probes check
+    * every query inside their [[probedLists]] collect). Emptiness is the
+    * CALLER's policy: an empty corpus write is a loud error, an empty
+    * delta append is a no-op (a streaming source legitimately yields
+    * 0-row micro-batches — the per-batch appends must not die on one). */
   private def vecDimOpt(df: DataFrame, vec: Column): Option[Int] =
     df.select(size(vec).as("__d")).limit(1).collect()
       .headOption.map(_.getAs[Int]("__d"))
@@ -1177,37 +1174,103 @@ object Similarity {
         lit(s") but the index dim is $dim — ragged input; re-embed " +
           "the offending rows or rebuild the index"))).isNull)
 
-  /** Partition count for the inverted-list writes. The previous
-    * spelling — `repartition(col(partitionCol))` with no count — lets
-    * AQE coalesce the small shuffle, and on anything below its advisory
-    * partition size that means ONE task creating every list's file
-    * SERIALLY: measured 1.39 s vs 0.52 s for the 64-list fixture write
-    * (r15 sweep, OPTIMIZATION_r15.md — the cost is per-file open
-    * latency, not rows). An explicit count pins parallel file creation.
-    * The value is scale-adaptive, never a local constant (guide §2):
-    * the cores/4 floor keeps a small host writing in parallel (the
-    * 8/16 floor of the r15 sweep), `inputBytes` — the live table's
-    * TRUE FS size, passed only by the rewrite paths where the listing
-    * is free — raises the count by one task per advisory-partition-
-    * size chunk so a corpus-scale rewrite is never squeezed through
-    * ~cores/4 huge partitions (r16, ADVICE), and the list count caps
-    * it at one task per list (hash partitioning never splits a list —
-    * extra tasks beyond the list count would simply run empty). Fresh
-    * writes deliberately DON'T feed a Catalyst size estimate here:
-    * measured inflated on the join-rooted encode plans (trained write
-    * 2.72 → 3.10 s isolated from over-partitioning) — they keep the
-    * floor/cap formula. */
-  private def listWritePartitions(spark: SparkSession,
-      numLists: Option[Int], inputBytes: Option[Long] = None): Int = {
-    val floor = math.max(8, spark.sparkContext.defaultParallelism / 4)
-    val advisory = math.max(1L,
-      org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get(
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")))
-    val target = inputBytes.fold(floor)(b =>
-      math.max(floor,
-        math.min(Int.MaxValue.toLong, b / advisory + 1L).toInt))
-    math.max(1, numLists.fold(target)(math.min(_, target)))
+  /** The list key columns: `bucket` keys the sign-bucket and IVF-PQ
+    * lists, `cluster_id` the trained lists. */
+  private val ListKeys = Seq("bucket", "cluster_id")
+
+  /** Write inverted-list rows as flat, KEY-CLUSTERED parquet — the one
+    * list layout of every IVF family. The shuffle on the key puts each
+    * list's rows in exactly one task, so a write lands each list in
+    * exactly one file, and the rows of a file are sorted by the key, so
+    * parquet's row-group and page min/max statistics isolate each list
+    * and a probe's pushed `IN` filter ([[probedLists]]) skips the rest.
+    * AQE sizes the file count to its advisory partition size: files
+    * grow with the data written, not with the number of lists, and a
+    * read lists no directory per list. */
+  private def writeLists(rows: DataFrame, key: String, path: String,
+      mode: String): Unit =
+    rows.repartition(col(key)).sortWithinPartitions(key)
+      .write.mode(mode).parquet(path)
+
+  /** The list key of a lists table, read off its schema: exactly one of
+    * [[ListKeys]]. A legacy `lists/<key>=*` table carries its key as the
+    * partition column, so both layouts answer the same way. */
+  private def listKey(lists: DataFrame, live: String): String =
+    lists.columns.filter(ListKeys.contains) match {
+      case Array(k) => k
+      case ks => throw new IllegalStateException(
+        s"lists table $live must carry exactly one list key column of " +
+          s"${ListKeys.mkString(", ")}, found " +
+          s"${if (ks.isEmpty) "none" else ks.mkString(", ")}")
+    }
+
+  /** The probed lists of an index: its lists table filtered to the
+    * keys of `probes` (\_\_d = a query's vector width, \_\_p = one list
+    * key it probes — |queries| × nprobe rows, the same bound as the
+    * frame the probe broadcasts), collected with the width check in ONE
+    * job. Any query whose width is not `dim` fails with
+    * `mismatch(width)`: a dot of mismatched widths silently
+    * zip-truncates. The keys are a driver-side literal on purpose: the
+    * `IN` filter pushes into the parquet scan (row groups and pages of
+    * unprobed keys are skipped by their statistics) and prunes the
+    * partitions of a legacy `lists/<key>=*` table, where a broadcast
+    * join alone pushes nothing into the scan and reads every list. An
+    * empty query batch (a 0-row streaming micro-batch) probes no key
+    * and so yields an empty result. */
+  private def probedLists(spark: SparkSession, indexPath: String,
+      key: String, probes: DataFrame, dim: Int,
+      mismatch: Int => String): DataFrame = {
+    val rows = probes.select(col("__d"), col("__p")).collect()
+    rows.collectFirst { case r if !r.isNullAt(0) && r.getInt(0) != dim =>
+      r.getInt(0) }
+      .foreach(d => throw new IllegalArgumentException(mismatch(d)))
+    val ids = rows.collect { case r if !r.isNullAt(1) => r.get(1) }.distinct
+    spark.read.parquet(s"$indexPath/lists").filter(col(key).isin(ids: _*))
+  }
+
+  /** The [[probedLists]] probe frame of a sign-bucket probe: each
+    * query's [[probeBuckets]]. The bucket is computed only at the index
+    * width — [[signBucket]] reads the first `bits` elements, which a
+    * narrower query may lack. */
+  private def bucketProbes(queries: DataFrame, bits: Int, nprobe: Int,
+      dim: Int): DataFrame = {
+    val qb = when(size(col("qe")) === dim, signBucket(col("qe"), bits))
+    queries.select(size(col("qe")).as("__d"),
+      explode(probeBuckets(qb, nprobe)).as("__p"))
+  }
+
+  /** Refuse an append onto a legacy `lists/<key>=*` index: flat files
+    * beside partition directories make the table unreadable.
+    * [[compactIvfIndex]] rewrites such an index in the current layout. */
+  private def requireFlatLists(spark: SparkSession, path: String): Unit = {
+    val lPath = new org.apache.hadoop.fs.Path(s"$path/lists")
+    val fs = lPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(lPath) && fs.listStatus(lPath)
+        .exists(f => f.isDirectory && f.getPath.getName.contains('=')))
+      throw new IllegalStateException(
+        s"IVF index at $path stores one directory per inverted list (the " +
+          "legacy layout); appending key-clustered files beside them " +
+          "would make the lists unreadable — run compactIvfIndex on it " +
+          "once to rewrite it in the current layout, then append")
+  }
+
+  /** Whether a written parquet table holds any row, from its files'
+    * footer row counts (driver metadata, no Spark job). File presence
+    * proves nothing: an empty write leaves a schema-only file. */
+  private def hasRows(spark: SparkSession, dir: String): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val files = p.getFileSystem(conf).listFiles(p, true)
+    var rows = 0L
+    while (rows == 0L && files.hasNext) {
+      val f = files.next()
+      if (f.getPath.getName.endsWith(".parquet")) {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+        try rows += r.getRecordCount finally r.close()
+      }
+    }
+    rows > 0L
   }
 
   /** The stored row shape: (vec_id, bucket, scale, qvec) — one row per
@@ -1225,9 +1288,9 @@ object Similarity {
   /** Persist a sign-bucket IVF index for [[topKAgainstIvfIndex]] — the
     * nightly-production ANN shape: the corpus is bucketed and
     * int8-quantized ONCE and written as parquet inverted lists
-    * PARTITIONED BY BUCKET, so a probe reads only the probed lists'
-    * files (real partition pruning — on disk, an inverted list IS a
-    * partition directory). Codes are the [[quantizeInt8]] 4×-compressed
+    * CLUSTERED BY BUCKET ([[writeLists]]), so a probe reads only the
+    * probed lists' row groups (its pushed `IN` filter skips the rest by
+    * their statistics). Codes are the [[quantizeInt8]] 4×-compressed
     * form: at 10⁹ vectors the probe scan is memory-bandwidth-bound and
     * the compressed bytes are what make it cheap; raw vectors never
     * persist and never re-read after the write.
@@ -1235,7 +1298,8 @@ object Similarity {
     * Layout: `path/params.txt` = (bits, dim) recorded write-time values
     * (readers fail loudly on mismatch — a bits drift changes every
     * bucket key, a dim drift silently truncates every dot);
-    * `path/lists/bucket=*` = (vec_id, scale, qvec). The multi-table
+    * `path/lists` = (vec_id, bucket, scale, qvec), sorted by bucket
+    * within each file, each list in one file per write. The multi-table
     * write is not atomic — re-run on failure (it overwrites), the
     * [[TextDedup.writeSignatureIndex]] caveat. */
   def writeIvfIndex(corpus: DataFrame, id: Column, vec: Column,
@@ -1249,18 +1313,8 @@ object Similarity {
         "first `bits` dimensions")
     graft.util.IndexMeta.writeInts(spark, path, "bits" -> bits,
       "dim" -> dim)
-    // repartition BY BUCKET before the partitioned write: without it
-    // every write task emits one file per bucket it happens to hold —
-    // up to tasks × 2^bits files of a few rows each (measured: the
-    // fixture write spent most of its time opening tiny files). After
-    // the shuffle each bucket's rows land in one task, so the layout is
-    // one file per non-empty inverted list — exactly the unit a probe
-    // reads; AQE coalesces the small shuffle into few tasks.
-    ivfRows(corpus, id, vec, bits, dim)
-      .repartition(listWritePartitions(spark, Some(1 << bits)),
-        col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/lists")
+    writeLists(ivfRows(corpus, id, vec, bits, dim), "bucket",
+      s"$path/lists", "overwrite")
   }
 
   /** Append a delta shard's rows to an existing IVF index — the accept
@@ -1271,10 +1325,13 @@ object Similarity {
     * Because bucket and codes are deterministic per vector, append ≡
     * rebuild — the grown index answers every probe exactly as one built
     * over the union. Caller guarantees the shard's ids are not already
-    * in the index. */
+    * in the index. The appended files are sized by the delta, not by
+    * the list count. An index in the legacy one-directory-per-list
+    * layout is refused until [[compactIvfIndex]] rewrites it. */
   def appendToIvfIndex(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val (bits, dim) = readIvfParams(delta.sparkSession, path)
+    requireFlatLists(delta.sparkSession, path)
     vecDimOpt(delta, vec) match {
       case None => // empty shard (a quiet ingestion day): nothing to add
       case Some(dDim) =>
@@ -1282,12 +1339,8 @@ object Similarity {
           s"IVF index at $path stores $dim-dim vectors but the delta " +
             s"carries $dDim-dim vectors — the dot product would " +
             "silently truncate; re-embed the shard or rebuild the index")
-        ivfRows(delta, id, vec, bits, dim)
-          // one file per touched list
-          .repartition(listWritePartitions(delta.sparkSession,
-            Some(1 << bits)), col("bucket"))
-          .write.mode("append").partitionBy("bucket")
-          .parquet(s"$path/lists")
+        writeLists(ivfRows(delta, id, vec, bits, dim), "bucket",
+          s"$path/lists", "append")
     }
   }
 
@@ -1304,8 +1357,8 @@ object Similarity {
     * coarse quantizer sees full precision); only the codes compress.
     *
     * Layout: `path/params.txt` = (dim), `path/centroids` = (cid, ce),
-    * `path/lists/cluster_id=*` = (vec_id, scale, qvec) — the
-    * one-file-per-list repartitioned layout. Same non-atomic
+    * `path/lists` = (vec_id, cluster_id, scale, qvec) — the
+    * [[writeLists]] layout clustered by cluster_id. Same non-atomic
     * multi-table caveat as [[writeIvfIndex]]. */
   def writeIvfIndexTrained(corpus: DataFrame, id: Column, vec: Column,
       centroids: DataFrame, path: String): Unit = {
@@ -1322,11 +1375,9 @@ object Similarity {
     centroids.select(col("cid"), col("ce"))
       .write.mode("overwrite").parquet(s"$path/centroids")
     graft.util.IndexMeta.writeInts(spark, path, "dim" -> dim)
-    trainedRows(corpus, id, vec,
-        spark.read.parquet(s"$path/centroids"), dim)
-      .repartition(listWritePartitions(spark, None), col("cluster_id"))
-      .write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$path/lists")
+    writeLists(trainedRows(corpus, id, vec,
+        spark.read.parquet(s"$path/centroids"), dim), "cluster_id",
+      s"$path/lists", "overwrite")
   }
 
   /** The trained-index row shape: argmax-centroid cell + the shared
@@ -1360,23 +1411,22 @@ object Similarity {
     * caller never re-supplies the quantizer) and its quantized rows
     * append to the lists. Assignment and codes are deterministic given
     * the stored centroids ⇒ append ≡ rebuild, the same certificate as
-    * [[appendToIvfIndex]]. Loud dim mismatch. */
+    * [[appendToIvfIndex]]. Loud dim mismatch; a legacy-layout index is
+    * refused (the [[appendToIvfIndex]] rule). */
   def appendToIvfIndexTrained(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val spark = delta.sparkSession
     val dim = graft.util.IndexMeta.readInt(spark, path, "dim")
+    requireFlatLists(spark, path)
     vecDimOpt(delta, vec) match {
       case None => // empty shard: nothing to add (appendToIvfIndex rule)
       case Some(dDim) =>
         require(dDim == dim,
           s"trained IVF index at $path stores $dim-dim vectors but " +
             s"the delta carries $dDim-dim vectors")
-        trainedRows(delta, id, vec,
-            spark.read.parquet(s"$path/centroids"), dim)
-          .repartition(listWritePartitions(spark, None),
-            col("cluster_id"))
-          .write.mode("append").partitionBy("cluster_id")
-          .parquet(s"$path/lists")
+        writeLists(trainedRows(delta, id, vec,
+            spark.read.parquet(s"$path/centroids"), dim), "cluster_id",
+          s"$path/lists", "append")
     }
   }
 
@@ -1386,8 +1436,8 @@ object Similarity {
     * over the stored codes — [[topKIvfTrained]] with the quantizer and
     * lists read from disk instead of rebuilt in-plan. Probe cost =
     * Σ|probed lists| ≈ nprobe·n/k over compressed codes, independent of
-    * corpus size; the cluster_id-partitioned layout prunes the scan to
-    * the probed directories. Same (qid, qe) contract and excludeSelf
+    * corpus size; the probed cells are collected (bounded by |queries|
+    * × nprobe) and pushed into the lists scan ([[probedLists]]). Same (qid, qe) contract and excludeSelf
     * semantics as [[topK]]. Output: (qid, vec_id, sim_r, rk ≤ k). */
   def topKAgainstIvfIndexTrained(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, nprobe: Int = 2,
@@ -1396,14 +1446,7 @@ object Similarity {
     require(k >= 1, s"k=$k must be positive")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val dim = graft.util.IndexMeta.readInt(spark, indexPath, "dim")
-    // empty query micro-batches probe nothing (topKAgainstIvfIndex rule)
-    vecDimOpt(queries, col("qe")).foreach { qDim =>
-      require(qDim == dim,
-        s"trained IVF index at $indexPath stores $dim-dim vectors but " +
-          s"the query frame carries $qDim-dim vectors")
-    }
     val cents = spark.read.parquet(s"$indexPath/centroids")
-    val lists = spark.read.parquet(s"$indexPath/lists")
     val probeW = Window.partitionBy("qid")
       .orderBy(col("__csim").desc, col("cid"))
     val qprobe = queries
@@ -1413,6 +1456,10 @@ object Similarity {
       .withColumn("__crk", row_number().over(probeW))
       .filter(col("__crk") <= nprobe)
       .select(col("qid"), col("cid"), col("qe"))
+    val lists = probedLists(spark, indexPath, "cluster_id",
+      qprobe.select(size(col("qe")).as("__d"), col("cid").as("__p")), dim,
+      qDim => s"trained IVF index at $indexPath stores $dim-dim vectors " +
+        s"but the query frame carries $qDim-dim vectors")
     val qq = quantized(qprobe.select(col("qid"),
         col("cid").as("__pcid"), col("qe").as("__v")))
       .select(col("qid"), col("__pcid"), col("scale").as("__qscale"),
@@ -1437,15 +1484,15 @@ object Similarity {
     * independent — the llm_sim_index_forget oracle certifies it). Do
     * not run concurrently with an append or probe on the same index.
     * A purge that would remove EVERY remaining vector is refused
-    * loudly (an empty partitioned table is unreadable parquet —
-    * delete the whole index instead).
+    * loudly — delete the whole index instead.
     *
     * `ids` must carry a `vec_id` column. Cost: one scan + rewrite of
     * the compressed-code table (~1/4 of raw embedding bytes); the
     * removal set shuffles as bare ids (no broadcast hint — a typical
     * forget list is tiny and AQE will broadcast it, but a bulk purge
-    * can be corpus-scale). The rewrite keeps the one-file-per-list
-    * layout of either index family. */
+    * can be corpus-scale). The rewrite writes the [[writeLists]]
+    * layout for every index family, so it also migrates a legacy
+    * one-directory-per-list index. */
   def removeFromIvfIndex(spark: SparkSession, path: String,
       ids: DataFrame): Unit = {
     val rm = ids.select(col("vec_id")).distinct()
@@ -1454,65 +1501,44 @@ object Similarity {
 
   /** Staged rewrite of an IVF index's lists table shared by
     * [[removeFromIvfIndex]] and [[compactIvfIndex]]: the transformed
-    * table is materialized in full, then committed through
-    * [[graft.util.Swap]] (its crash contract applies). The partition
-    * column — `bucket` for [[writeIvfIndex]], `cluster_id` for
-    * [[writeIvfIndexTrained]] — is read off the live table's
-    * `<col>=<value>` directories. */
+    * table is written in full in the [[writeLists]] layout, keyed by
+    * the live table's [[listKey]] — `bucket` for [[writeIvfIndex]] and
+    * [[writeIvfPqIndex]], `cluster_id` for [[writeIvfIndexTrained]] —
+    * then committed through [[graft.util.Swap]] (its crash contract
+    * applies). A legacy `lists/<key>=*` table is read through its
+    * partition column and rewritten flat. */
   private def rewriteLists(spark: SparkSession, path: String)(
       transform: DataFrame => DataFrame): Unit = {
     val live = s"$path/lists"
     val tmp = graft.util.Swap.next(live)
-    val lPath = new org.apache.hadoop.fs.Path(live)
-    val fs = lPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the live table prices the rewrite for free (r16, ADVICE): its
-    // partition-dir count IS the list count and its byte size scales
-    // the task count, so a corpus-scale rewrite gets data-sized
-    // partitions instead of ~cores/4 huge ones (one FS listing + one
-    // content summary — driver metadata, no Spark job)
-    val lists = fs.listStatus(lPath).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.contains('='))
-    val partitionCol = lists.map(_.takeWhile(_ != '=')).distinct match {
-      case Array(c) => c
-      case cols => throw new IllegalStateException(
-        s"lists table $live must hold partition dirs of one column, " +
-          s"found ${if (cols.isEmpty) "none" else cols.mkString(", ")}")
-    }
-    val liveBytes = scala.util.Try(
-      fs.getContentSummary(lPath).getLength).toOption
-    transform(spark.read.parquet(live))
-      .repartition(
-        listWritePartitions(spark, Some(lists.length), liveBytes),
-        col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(tmp)
-    // a ZERO-row transform writes no parquet files under a partitioned
-    // write; promoting that empty dir would leave an unreadable lists
-    // table (opaque schema-inference errors on every later read), so
-    // refuse here, from the FS listing (no Spark job)
-    val tPath = new org.apache.hadoop.fs.Path(tmp)
-    val files = fs.listFiles(tPath, true)
-    var hasData = false
-    while (!hasData && files.hasNext)
-      hasData = files.next().getPath.getName.endsWith(".parquet")
-    if (!hasData) {
-      fs.delete(tPath, true)
+    val lists = spark.read.parquet(live)
+    writeLists(transform(lists), listKey(lists, live), tmp, "overwrite")
+    // a ZERO-row rewrite would promote an index that answers nothing
+    // and has lost its rows, so refuse it from the staged files'
+    // footer row counts (no Spark job)
+    if (!hasRows(spark, tmp)) {
+      val tPath = new org.apache.hadoop.fs.Path(tmp)
+      tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(tPath, true)
       throw new IllegalStateException(
         s"lists rewrite of $live produced ZERO rows — refusing to " +
-          "promote an empty (unreadable) table; the live table is " +
-          "untouched. A removal that purges every remaining vector " +
-          "should delete the whole index instead.")
+          "promote an empty table; the live table is untouched. A " +
+          "removal that purges every remaining vector should delete the " +
+          "whole index instead.")
     }
     graft.util.Swap.promote(spark, live)
   }
 
   /** COMPACT a persisted IVF index's lists table — the maintenance step
-    * after a run of nightly appends: each append lands one more small
-    * file per touched list directory, and probe scan cost is paid per
-    * FILE open, not per row. Compaction rewrites the lists back to the
-    * one-file-per-list layout through the staged [[rewriteLists]] swap.
-    * Rows are per-vector and unique, so compaction is pure
-    * file consolidation — probe results are identical before and after
-    * (ApiSpec pin). Works on both the sign-bucket and trained layouts. */
+    * after a run of nightly appends: each append lands its own files,
+    * so a list's rows spread over one file per append that touched it,
+    * and probe scan cost is paid per FILE open, not per row. Compaction
+    * rewrites the lists back to one file per list through the staged
+    * [[rewriteLists]] swap; on a legacy one-directory-per-list index it
+    * is the migration to the current layout. Rows are per-vector and
+    * unique, so compaction is pure file consolidation — probe results
+    * are identical before and after (ApiSpec pin). Works on the
+    * sign-bucket, trained and IVF-PQ layouts. */
   def compactIvfIndex(spark: SparkSession, path: String): Unit =
     rewriteLists(spark, path)(identity)
 
@@ -1525,12 +1551,13 @@ object Similarity {
     * oracle-checkable). Bits/dim come from the index's recorded params;
     * the query frame's width is checked loudly.
     *
-    * Scale shape: the bounded query set broadcasts; the lists parquet
-    * is bucket-partitioned, so the equi-join on the partition column
-    * prunes the scan to the probed directories (dynamic partition
-    * pruning) — probe cost is Σ|probed lists| of compressed codes,
-    * independent of corpus size. Nothing shuffles but the (|queries| ·
-    * Σ|list|)-bounded scored frame into the per-query top-k window.
+    * Scale shape: the bounded query set broadcasts; its probed buckets
+    * are collected with the width check in one job and pushed into the
+    * lists scan ([[probedLists]]), so the scan
+    * skips every unprobed list's row groups — probe cost is Σ|probed
+    * lists| of compressed codes, independent of corpus size. Nothing
+    * shuffles but the (|queries| · Σ|list|)-bounded scored frame into
+    * the per-query top-k window.
     * Same (qid, qe) contract and excludeSelf semantics as [[topK]].
     * Output: (qid, vec_id, sim_r, rk ≤ k). */
   def topKAgainstIvfIndex(spark: SparkSession, indexPath: String,
@@ -1541,25 +1568,17 @@ object Similarity {
     val (bits, dim) = readIvfParams(spark, indexPath)
     require(nprobe >= 1 && nprobe <= bits + 1,
       s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
-    // empty query frame (e.g. a 0-row streaming micro-batch): nothing
-    // to check — the plan below yields an empty result
-    vecDimOpt(queries, col("qe")).foreach { qDim =>
-      require(qDim == dim,
+    val lists = probedLists(spark, indexPath, "bucket",
+      bucketProbes(queries, bits, nprobe, dim), dim, qDim =>
         s"IVF index at $indexPath stores $dim-dim vectors but the " +
           s"query frame carries $qDim-dim vectors — the dot product " +
           "would silently truncate")
-    }
-    val lists = spark.read.parquet(s"$indexPath/lists")
     val q = quantized(queries.select(col("qid"), col("qe").as("__v"),
         signBucket(col("qe"), bits).as("__qb")))
       .select(col("qid"), col("__qb"), col("scale").as("__qscale"),
         col("qvec").as("__qq"))
-    // multi-probe: own bucket + first nprobe−1 one-bit flips (topKIvf's
-    // probe set — each stored vector lives in exactly one bucket and
-    // probe buckets are distinct, so no pair dedup is needed)
-    val probes = Seq(col("__qb")) ++
-      (0 until (nprobe - 1)).map(i => col("__qb").bitwiseXOR(lit(1 << i)))
-    val qp = q.withColumn("__probe", explode(array(probes: _*)))
+    // multi-probe: own bucket + first nprobe−1 one-bit flips
+    val qp = q.withColumn("__probe", explode(probeBuckets(col("__qb"), nprobe)))
     val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
     val scored = lists.join(broadcast(qp),
         col("bucket") === col("__probe") && selfCond)
@@ -1625,9 +1644,9 @@ object Similarity {
   }
 
   /** Persist an IVF-PQ index for [[topKAgainstIvfPqIndex]]: sign-bucket
-    * inverted lists (partitioned by bucket — a probe reads only the
-    * probed directories) holding PQ codes, with the CODEBOOK stored as
-    * index state. `codebook` is any (j, code, cvec) frame —
+    * inverted lists (the [[writeLists]] layout clustered by bucket — a
+    * probe reads only the probed lists' row groups) holding PQ codes,
+    * with the CODEBOOK stored as index state. `codebook` is any (j, code, cvec) frame —
     * [[pqSeedCodebook]] keeps the whole lifecycle deterministic and
     * oracle-checkable (the llm_sim_index_pq key), [[pqTrainCodebook]]
     * drops in for production recall with zero plan change (float
@@ -1635,7 +1654,7 @@ object Similarity {
     * The PQ geometry must tile the vector width exactly (m·subDim =
     * dim) — a silent tail of unencoded dimensions would make every
     * ADC score wrong. Layout: `path/params.txt` = (bits, dim, m, sub_dim,
-    * codes_k), `path/codebook`, `path/lists/bucket=*` = (vec_id,
+    * codes_k), `path/codebook`, `path/lists` = (vec_id, bucket,
     * codes). [[removeFromIvfIndex]]/[[compactIvfIndex]] work on the
     * lists table unchanged (same layout contract). Same non-atomic
     * multi-table caveat as [[writeIvfIndex]]. */
@@ -1664,12 +1683,6 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/codebook")
     val cb = spark.read.parquet(s"$path/codebook")
     val rows = ivfPqRows(corpus, id, vec, cb, bits, dim, m, subDim)
-    // NOTE kept estimate-free (r16): Catalyst sizeInBytes for these
-    // join-rooted encode plans is multiplied garbage — feeding it to
-    // listWritePartitions over-partitioned the trained write (measured
-    // 2.72 -> 3.10 s isolated) — so fresh writes keep the floor/cap
-    // formula; only the REWRITE paths size by the live table's true FS
-    // bytes.
     // the codes_k aggregate (recorded so the probe's LUT slot
     // arithmetic j·codesK + code can never drift from the stored
     // codebook — a bounded 1-row job, the centroid-fetch class) and
@@ -1685,12 +1698,7 @@ object Similarity {
           "dim" -> dim, "m" -> m, "sub_dim" -> subDim,
           "codes_k" -> codesK)
       },
-      rows
-        // one file per non-empty inverted list
-        .repartition(listWritePartitions(spark, Some(1 << bits)),
-          col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/lists"))
+      writeLists(rows, "bucket", s"$path/lists", "overwrite"))
     ()
   }
 
@@ -1698,11 +1706,13 @@ object Similarity {
     * the STORED codebook at the recorded geometry — bucket and codes
     * are deterministic per vector given the stored state ⇒ append ≡
     * rebuild, the same certificate as [[appendToIvfIndex]]. Loud dim
-    * mismatch; an empty shard is a no-op. */
+    * mismatch; an empty shard is a no-op; a legacy-layout index is
+    * refused (the [[appendToIvfIndex]] rule). */
   def appendToIvfPqIndex(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val spark = delta.sparkSession
     val (bits, dim, m, subDim, _) = readIvfPqParams(spark, path)
+    requireFlatLists(spark, path)
     vecDimOpt(delta, vec) match {
       case None => // empty shard: nothing to add (appendToIvfIndex rule)
       case Some(dDim) =>
@@ -1710,13 +1720,9 @@ object Similarity {
           s"IVF-PQ index at $path stores $dim-dim vectors but the " +
             s"delta carries $dDim-dim vectors — re-embed the shard or " +
             "rebuild the index")
-        ivfPqRows(delta, id, vec,
-            spark.read.parquet(s"$path/codebook"), bits, dim, m, subDim)
-          // one file per touched list
-          .repartition(listWritePartitions(spark, Some(1 << bits)),
-            col("bucket"))
-          .write.mode("append").partitionBy("bucket")
-          .parquet(s"$path/lists")
+        writeLists(ivfPqRows(delta, id, vec,
+            spark.read.parquet(s"$path/codebook"), bits, dim, m, subDim),
+          "bucket", s"$path/lists", "append")
     }
   }
 
@@ -1742,14 +1748,11 @@ object Similarity {
     val (bits, dim, m, subDim, codesK) = readIvfPqParams(spark, indexPath)
     require(nprobe >= 1 && nprobe <= bits + 1,
       s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
-    // empty query micro-batches probe nothing (topKAgainstIvfIndex rule)
-    vecDimOpt(queries, col("qe")).foreach { qDim =>
-      require(qDim == dim,
+    val lists = probedLists(spark, indexPath, "bucket",
+      bucketProbes(queries, bits, nprobe, dim), dim, qDim =>
         s"IVF-PQ index at $indexPath stores $dim-dim vectors but the " +
           s"query frame carries $qDim-dim vectors")
-    }
     val cb = spark.read.parquet(s"$indexPath/codebook")
-    val lists = spark.read.parquet(s"$indexPath/lists")
     // per-query ADC LUT: slot j·codesK + code → dot(query sub-slice,
     // centroid); assembled as one flat array per query via the
     // slot-sorted collect (the pqReconstruct idiom) — m·codesK doubles,
@@ -1766,9 +1769,8 @@ object Similarity {
       .agg(transform(
         array_sort(collect_list(struct(col("__slot"), col("__pdot")))),
         s => s.getField("__pdot")).as("__lut"))
-    val probes = Seq(col("__qb")) ++
-      (0 until (nprobe - 1)).map(i => col("__qb").bitwiseXOR(lit(1 << i)))
-    val qp = qlut.withColumn("__probe", explode(array(probes: _*)))
+    val qp = qlut.withColumn("__probe",
+      explode(probeBuckets(col("__qb"), nprobe)))
     val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
     // ADC score: Σ_j lut[j·codesK + codes[j]] in subspace order — a
     // fixed-order double fold over m lookups, codegen'd, no join to the

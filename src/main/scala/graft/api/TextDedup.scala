@@ -371,12 +371,12 @@ object TextDedup {
 
   /** Cross-frame sibling of [[selfBandCandidates]]: candidates BETWEEN
     * two signature frames (no id-order constraint — the frames are
-    * different id domains). */
-  private def crossBandCandidates(aSigs: DataFrame,
-      bSigs: DataFrame): DataFrame = {
+    * different id domains), with the same optional `near` predicate. */
+  private def crossBandCandidates(aSigs: DataFrame, bSigs: DataFrame,
+      near: Option[Column] = None): DataFrame = {
     val a = aSigs.alias("a"); val b = bSigs.alias("b")
-    a.join(b,
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
+    val band = col("a.band") === col("b.band") && col("a.sig") === col("b.sig")
+    a.join(b, near.fold(band)(band && _))
       .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
   }
@@ -1115,14 +1115,19 @@ object TextDedup {
     * band frame (three consumers). Candidates are pairs sharing ≥ 1
     * band (equi-join, LSH-bounded, hot buckets collapsed via
     * [[collapseSigGroups]] — within-group pairs are hamming-0
-    * candidates by construction); verify is [[hammingVerify]].
+    * candidates by construction). Far pairs are dropped inside the band
+    * join ([[nearBands]]), before the dedup shuffle and the member
+    * expansion: a rep pair's hamming is each of its member pairs'. The
+    * verify is [[hammingVerify]], which produces the output column.
     * Output: (doc_a, doc_b, hamming), doc_a < doc_b. */
   private[graft] def bandedHammingPairs(bw: DataFrame,
       maxDist: Int): DataFrame = {
     requireHammingComplete(maxDist)
     val (reps, members) = collapseSigGroups(bw, col("__bd"))
     hammingVerify(
-      expandSelfPairs(selfBandCandidates(bandRows(reps)), members),
+      expandSelfPairs(
+        selfBandCandidates(bandRows(reps), Some(nearBands(maxDist))),
+        members),
       bw, bw, maxDist)
   }
 
@@ -1133,7 +1138,8 @@ object TextDedup {
     * precondition on an arbitrary index (a rebuilt one, a fixture with
     * planted dups), and g identical index rows would turn every matching
     * probe into g band-join rows. The member expansion reinstates every
-    * (shard, index) pair before the verify, so outputs are identical.
+    * (shard, index) pair before the verify, so outputs are identical;
+    * far pairs are dropped inside the band join ([[nearBands]]).
     * Output: (doc_a = shard id, doc_b = index id, hamming ≤ maxDist). */
   private[graft] def bandedHammingCrossPairs(sb: DataFrame, ib: DataFrame,
       maxDist: Int): DataFrame = {
@@ -1141,7 +1147,8 @@ object TextDedup {
     val (reps, members) = collapseSigGroups(sb, col("__bd"))
     val (repsB, membersB) = collapseSigGroups(ib, col("__bd"))
     hammingVerify(
-      expandCrossPairs(crossBandCandidates(bandRows(reps), bandRows(repsB)),
+      expandCrossPairs(crossBandCandidates(bandRows(reps), bandRows(repsB),
+          Some(nearBands(maxDist))),
         Some(members), Some(membersB)),
       sb, ib, maxDist)
   }
@@ -1154,18 +1161,29 @@ object TextDedup {
       s"maxDist=$maxDist: the 4-band screen is complete only for " +
         "hamming <= 3 (pigeonhole); shrink maxDist or add bands")
 
-  /** (\_\_id, band, sig) band-bucket rows of a (\_\_id, \_\_bd) frame. */
+  /** (\_\_id, \_\_bd, band, sig) band-bucket rows of a (\_\_id, \_\_bd)
+    * frame — each row keeps its full band array for [[nearBands]]. */
   private def bandRows(bd: DataFrame): DataFrame =
-    bd.select(col("__id"), posexplode(col("__bd")).as(Seq("band", "sig")))
+    bd.select(col("__id"), col("__bd"),
+      posexplode(col("__bd")).as(Seq("band", "sig")))
 
-  /** Exact 64-bit hamming (Σ bit_count(xor) over the four bands) of
-    * (doc_a, doc_b) candidates, doc_a's bands from `a`, doc_b's from `b`;
-    * keeps pairs at or below `maxDist`. */
+  /** Exact 64-bit hamming of two 4-band arrays: Σ bit_count(xor). */
+  private def bandHamming(x: Column, y: Column): Column =
+    (0 until 4).map(k =>
+      bit_count(element_at(x, k + 1).bitwiseXOR(element_at(y, k + 1))))
+      .reduce(_ + _)
+
+  /** The band-join `near` predicate of the 4-band families: the `a.`
+    * and `b.` band rows' full hamming is at most `maxDist`. */
+  private def nearBands(maxDist: Int): Column =
+    bandHamming(col("a.__bd"), col("b.__bd")) <= maxDist
+
+  /** Exact 64-bit hamming ([[bandHamming]]) of (doc_a, doc_b)
+    * candidates, doc_a's bands from `a`, doc_b's from `b`; keeps pairs
+    * at or below `maxDist`. */
   private def hammingVerify(cand: DataFrame, a: DataFrame, b: DataFrame,
       maxDist: Int): DataFrame = {
-    val ham = (0 until 4).map(k =>
-      bit_count(element_at(col("__ba"), k + 1)
-        .bitwiseXOR(element_at(col("__bb"), k + 1)))).reduce(_ + _)
+    val ham = bandHamming(col("__ba"), col("__bb"))
     cand
       .join(a.select(col("__id").as("doc_a"), col("__bd").as("__ba")),
         "doc_a")

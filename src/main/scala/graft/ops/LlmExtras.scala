@@ -35,11 +35,11 @@ object LlmExtras {
   /** Bucket width of the PERSISTED IVF index keys (llm_sim_index/_grow)
     * — one constant for the Spark writes and the generated oracle. 6
     * bits = 64 inverted lists: at the fixture's 500 vectors that is
-    * ~8 vectors/list (a real probe exercise), while 8 bits would mean
-    * ~256 near-empty partition DIRECTORIES whose per-file commit cost
-    * dominates the key (measured 6.1/7.9 s at bits=8 vs the ~3 s write
-    * the data warrants). Production grows bits with the corpus so lists
-    * stay bounded — the [[graft.api.Similarity.topKIvfTrained]] note. */
+    * ~8 vectors/list (a real probe exercise). The bucket count no
+    * longer prices the write: lists are key-clustered rows inside
+    * data-sized files, not a directory each. Production grows bits with
+    * the corpus so lists stay bounded — the
+    * [[graft.api.Similarity.topKIvfTrained]] note. */
   private val IvfIndexBits = 6
 
   /** DuckDB twin of the codegen'd sequential double dot-product fold */
@@ -397,11 +397,11 @@ object LlmExtras {
     // PERSISTED IVF index (r13 verdict #1) — the similarity family's
     // nightly form, closing the one family without one: the corpus
     // (vec_id % 10 != 0) is sign-bucketed + int8-quantized ONCE into
-    // bucket-partitioned parquet inverted lists (writeIvfIndex — an
-    // inverted list IS a partition directory, so a probe reads only the
-    // probed files); the day's query shard (% 10 == 0) then probes the
-    // STORED index with nprobe=2 multi-probe and exact-integer
-    // quantizedDot scoring. Raw corpus vectors are never re-read at
+    // bucket-clustered parquet inverted lists (writeIvfIndex — rows
+    // sorted by bucket, so a probe's pushed IN filter reads only the
+    // probed lists' row groups); the day's query shard (% 10 == 0)
+    // then probes the STORED index with nprobe=2 multi-probe and
+    // exact-integer quantizedDot scoring. Raw corpus vectors are never re-read at
     // query time — at 10⁹ vectors the probe scans only compressed codes
     // of the probed lists. The write is timed in-key (the honesty rule).
     "llm_sim_index" -> ((s, d) => {
@@ -445,10 +445,11 @@ object LlmExtras {
     // the COMPACT step of the persisted IVF index, oracle-checked (r14
     // verdict #3 — the one lifecycle step without a hash-checked key):
     // day-0 corpus indexed once, day-1 shard ACCEPTED via append (each
-    // append lands one extra small file per touched list directory —
-    // probe cost is paid per FILE open), then compactIvfIndex rewrites
-    // the lists back to the one-file-per-list layout through the staged
-    // rename swap, and the query shard probes the compacted index. Rows
+    // append lands its own files, sized by the delta, so a list's rows
+    // spread over one file per append — probe cost is paid per FILE
+    // open), then compactIvfIndex rewrites the lists back to one file
+    // per list through the staged rename swap, and the query shard
+    // probes the compacted index. Rows
     // are per-vector and unique, so compaction is pure file
     // consolidation: the oracle is the same rebuilt-over-everything
     // definition as _grow — compacted ≡ grown ≡ rebuilt, certified by

@@ -2287,8 +2287,8 @@ class ApiSpec extends AnyFunSuite {
       "screen diverges after compaction")
   }
 
-  test("IVF rewrites read the partition column off the lists dirs and " +
-      "refuse a lists table with none or two kinds") {
+  test("IVF rewrites read the list key off the lists schema and refuse " +
+      "a lists table with neither key or both") {
     val rnd = new scala.util.Random(5)
     val vecs = (0L until 20L)
       .map(i => (i, Array.fill(4)(rnd.nextFloat() - 0.5f))).toDF("vid", "e")
@@ -2298,18 +2298,204 @@ class ApiSpec extends AnyFunSuite {
     Similarity.removeFromIvfIndex(spark, idx, Seq(3L).toDF("vec_id"))
     Similarity.compactIvfIndex(spark, idx)
     assert(spark.read.parquet(s"$idx/lists").count() == 19L)
-    // a stray directory of a second partition column
-    assert(new java.io.File(s"$idx/lists/cluster_id=0").mkdirs())
+    // a lists table carrying both keys
+    val both = s"$root/both"
+    vecs.withColumn("bucket", lit(0)).withColumn("cluster_id", lit(0))
+      .write.parquet(s"$both/lists")
     val mixed = intercept[IllegalStateException](
-      Similarity.compactIvfIndex(spark, idx))
+      Similarity.compactIvfIndex(spark, both))
     assert(mixed.getMessage.contains("bucket") &&
       mixed.getMessage.contains("cluster_id"), mixed.getMessage)
-    // an unpartitioned lists table
+    // a lists table carrying neither
     val flat = s"$root/flat"
     vecs.write.parquet(s"$flat/lists")
     val none = intercept[IllegalStateException](
       Similarity.compactIvfIndex(spark, flat))
     assert(none.getMessage.contains("found none"), none.getMessage)
+  }
+
+  /** Rows of the lists table read by `df`'s scans, from the scans'
+    * output-row metrics after one collect (the final adaptive plan). */
+  private def listsRowsRead(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    df.collect()
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case s: FileSourceScanExec => Seq(s)
+      case o => o.children.flatMap(scans)
+    }
+    val lists = scans(df.queryExecution.executedPlan)
+      .filter(_.relation.location.rootPaths.exists(_.getName == "lists"))
+    assert(lists.nonEmpty, "no lists scan in the probe plan")
+    lists.map(_.metrics("numOutputRows").value).sum
+  }
+
+  /** Distinct files holding each list key's rows. */
+  private def filesPerList(listsDir: String, key: String): Map[Any, Long] =
+    spark.read.parquet(listsDir)
+      .select(col(key), input_file_name().as("file")).distinct()
+      .groupBy(key).count()
+      .collect().map(r => r.get(0) -> r.getLong(1)).toMap
+
+  test("IVF lists are key-clustered: a probe's pushed IN filter skips " +
+      "unprobed row groups and answers like brute force over the codes") {
+    val rnd = new scala.util.Random(41)
+    val dims = 8
+    val corpus = (0L until 8000L)
+      .map(i => (i, Array.fill(dims)(rnd.nextFloat() * 2 - 1)))
+      .toDF("id", "emb")
+    val root = SparkFixture.tempDir("graft_ivf_prune_").getAbsolutePath
+    val idx = s"$root/idx"
+    // small row groups, so the 64 lists span many of them
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val small = Seq("parquet.block.size" -> "4096",
+      "parquet.page.size.row.check.min" -> "10",
+      "parquet.page.size.row.check.max" -> "50")
+    val saved = small.map { case (k, _) => k -> Option(hconf.get(k)) }
+    small.foreach { case (k, v) => hconf.set(k, v) }
+    try Similarity.writeIvfIndex(corpus, col("id"), col("emb"), idx, bits = 6)
+    finally saved.foreach {
+      case (k, Some(v)) => hconf.set(k, v)
+      case (k, None) => hconf.unset(k)
+    }
+    val queries = corpus.filter(col("id") < 3)
+      .select(col("id").as("qid"), col("emb").as("qe"))
+    val probe = Similarity.topKAgainstIvfIndex(spark, idx, queries, k = 5)
+    val read = listsRowsRead(probe)
+    assert(read > 0 && read < 8000L / 4,
+      s"probe read $read of 8000 list rows; the IN filter must skip most")
+    // brute force over each query's own (nprobe = 1) bucket's codes
+    val bucketed = corpus.withColumn("__b", Similarity.signBucket(col("emb"), 6))
+    val brute = queries.collect().map { q =>
+      val b = bucketed.filter(col("id") === q.getLong(0)).head()
+        .getAs[Int]("__b")
+      Similarity.topKQuantized(bucketed.filter(col("__b") === b), col("id"),
+        col("emb"), Seq((q.getLong(0), q.getSeq[Float](1).toArray))
+          .toDF("qid", "qe"), k = 5)
+    }.reduce(_.unionByName(_))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("qid", "vec_id", "sim_r", "rk").orderBy("qid", "rk")
+        .collect().map(_.toString).toSeq
+    assert(rows(probe).nonEmpty && rows(probe) == rows(brute),
+      "pruned probe diverges from brute force over the probed codes")
+  }
+
+  test("IVF writes land each list in exactly one file, in both the " +
+      "sign-bucket and trained layouts") {
+    val rnd = new scala.util.Random(43)
+    val corpus = (0L until 400L)
+      .map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("id", "emb")
+    val cents = corpus.filter(col("id") < 6)
+      .select(col("id").cast("int").as("cid"), col("emb").as("ce"))
+    val root = SparkFixture.tempDir("graft_ivf_files_").getAbsolutePath
+    // without AQE's coalescing the writes span all shuffle partitions,
+    // so the lists spread over several files
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.getOption(coalesce)
+    spark.conf.set(coalesce, "false")
+    try {
+      Similarity.writeIvfIndex(corpus, col("id"), col("emb"),
+        s"$root/ivf", bits = 4)
+      Similarity.writeIvfIndexTrained(corpus, col("id"), col("emb"), cents,
+        s"$root/trained")
+    } finally saved.fold(spark.conf.unset(coalesce))(
+      spark.conf.set(coalesce, _))
+    Seq(s"$root/ivf/lists" -> "bucket",
+        s"$root/trained/lists" -> "cluster_id").foreach { case (dir, key) =>
+      val per = filesPerList(dir, key)
+      val files = spark.read.parquet(dir).inputFiles.length
+      assert(files > 1, s"$dir: expected a multi-file write, got $files")
+      assert(per.size > 1 && per.values.forall(_ == 1L),
+        s"$dir: every list must sit in exactly one file: $per")
+    }
+  }
+
+  test("IVF probes of a 0-row query frame return an empty result in all " +
+      "three families") {
+    val rnd = new scala.util.Random(47)
+    val corpus = (0L until 40L)
+      .map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("id", "emb")
+    val root = SparkFixture.tempDir("graft_ivf_emptyq_").getAbsolutePath
+    Similarity.writeIvfIndex(corpus, col("id"), col("emb"), s"$root/ivf",
+      bits = 4)
+    Similarity.writeIvfIndexTrained(corpus, col("id"), col("emb"),
+      corpus.filter(col("id") < 4)
+        .select(col("id").cast("int").as("cid"), col("emb").as("ce")),
+      s"$root/trained")
+    Similarity.writeIvfPqIndex(corpus, col("id"), col("emb"),
+      Similarity.pqSeedCodebook(corpus, col("id"), col("emb"), m = 2,
+        subDim = 4, k = 4),
+      s"$root/pq", bits = 4, m = 2, subDim = 4)
+    val none = corpus.filter(col("id") < 0)
+      .select(col("id").as("qid"), col("emb").as("qe"))
+    Seq(Similarity.topKAgainstIvfIndex(spark, s"$root/ivf", none, k = 3,
+        nprobe = 2),
+      Similarity.topKAgainstIvfIndexTrained(spark, s"$root/trained", none,
+        k = 3),
+      Similarity.topKAgainstIvfPqIndex(spark, s"$root/pq", none, k = 3))
+      .foreach(r => assert(r.collect().isEmpty, "empty queries probed rows"))
+  }
+
+  test("legacy one-directory-per-list IVF indexes: probes read them, " +
+      "appends are refused naming compactIvfIndex, compaction migrates " +
+      "them to the flat layout with unchanged probes") {
+    val rnd = new scala.util.Random(53)
+    val corpus = (0L until 60L)
+      .map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("id", "emb")
+    val cents = corpus.filter(col("id") < 4)
+      .select(col("id").cast("int").as("cid"), col("emb").as("ce"))
+    val queries = corpus.filter(col("id") % 9 === 0)
+      .select(col("id").as("qid"), col("emb").as("qe"))
+    val delta = Seq((100L, Array.fill(8)(0.1f))).toDF("id", "emb")
+    val root = SparkFixture.tempDir("graft_ivf_legacy_").getAbsolutePath
+    case class Family(name: String, key: String,
+        write: String => Unit, append: String => Unit,
+        probe: String => Seq[String])
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("qid", "rk").collect().map(_.toString).toSeq
+    val families = Seq(
+      Family("sign-bucket", "bucket",
+        Similarity.writeIvfIndex(corpus, col("id"), col("emb"), _, bits = 3),
+        Similarity.appendToIvfIndex(delta, col("id"), col("emb"), _),
+        p => rows(Similarity.topKAgainstIvfIndex(spark, p, queries, k = 3,
+          nprobe = 2))),
+      Family("trained", "cluster_id",
+        Similarity.writeIvfIndexTrained(corpus, col("id"), col("emb"),
+          cents, _),
+        Similarity.appendToIvfIndexTrained(delta, col("id"), col("emb"), _),
+        p => rows(Similarity.topKAgainstIvfIndexTrained(spark, p, queries,
+          k = 3))))
+    families.foreach { f =>
+      val flat = s"$root/${f.name}-flat"
+      val legacy = s"$root/${f.name}-legacy"
+      f.write(flat)
+      f.write(legacy)
+      // the pre-flat layout: one `<key>=<value>` directory per list
+      spark.read.parquet(s"$flat/lists").repartition(col(f.key))
+        .write.mode("overwrite").partitionBy(f.key)
+        .parquet(s"$legacy/lists")
+      def keyDirs = new java.io.File(s"$legacy/lists").listFiles()
+        .count(d => d.isDirectory && d.getName.contains('='))
+      assert(keyDirs > 1, s"${f.name}: legacy fixture has no key dirs")
+      val expected = f.probe(flat)
+      assert(expected.nonEmpty)
+      assert(f.probe(legacy) == expected,
+        s"${f.name}: legacy-layout probe diverges from the flat probe")
+      val e = intercept[IllegalStateException](f.append(legacy))
+      assert(e.getMessage.contains("compactIvfIndex"), e.getMessage)
+      Similarity.compactIvfIndex(spark, legacy)
+      assert(keyDirs == 0, s"${f.name}: compaction left key directories")
+      assert(f.probe(legacy) == expected,
+        s"${f.name}: probe changed after migrating compaction")
+      assert(filesPerList(s"$legacy/lists", f.key).values.forall(_ == 1L))
+      f.append(legacy) // the migrated index accepts appends again
+    }
   }
 
   test("Similarity IVF index lifecycle: grown-index probe equals " +
