@@ -143,9 +143,11 @@ object TextDedup {
     // between writes leaves a partial index — re-run the write (it
     // overwrites), or stage to a temp path and rename on stores that
     // support atomic rename.
-    md5Shingles(df, id, text, shingleWidth)
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    val sh = spark.read.parquet(s"$path/shingles")
+    // re-read with the schema just written: inferring it from the
+    // files is one more Spark job per write
+    val shingles = md5Shingles(df, id, text, shingleWidth)
+    shingles.write.mode("overwrite").parquet(s"$path/shingles")
+    val sh = spark.read.schema(shingles.schema).parquet(s"$path/shingles")
     md5BandSigs(sh, bands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$path/sigs")
   }
@@ -477,10 +479,8 @@ object TextDedup {
       shingleWidth: Int): DataFrame =
     df.select(id.as("__id"), split(text, " ").as("tk"))
       .filter(size(col("tk")) >= shingleWidth)
-      .select(col("__id"), array_distinct(transform(
-        sequence(lit(1), size(col("tk")) - (shingleWidth - 1)),
-        i => concat_ws(" ", slice(col("tk"), i, lit(shingleWidth)))))
-        .as("sh"))
+      .select(col("__id"),
+        VectorExprs.wordShingles(col("tk"), shingleWidth).as("sh"))
 
   /** What one MinHash variant is; everything else — the two pins, the
     * identical-signature collapse, the band join, member expansion and
@@ -518,12 +518,12 @@ object TextDedup {
   }
 
   /** The engine-portable variant and the family of every persisted
-    * signature index: string shingles, k md5 minhashes (ONE
-    * native-expression traversal with a reused MessageDigest —
-    * bit-identical to the k-chain
+    * signature index: string shingles ([[VectorExprs.wordShingles]]),
+    * k md5 minhashes (ONE native-expression traversal keeping the k
+    * minima as raw digests — bit-identical to the k-chain
     * array_min(transform(sh, s => md5(concat(lit(s"$i:"), s)))) it
-    * replaces; golden + oracle pin the equality), md5 of each band's
-    * joined rows. */
+    * replaces; ApiSpec, golden and oracle pin the equality), md5 of each
+    * band's joined rows. */
   private val Md5 = new MinhashSpec(md5Shingles,
     VectorExprs.minhashMd5,
     (mh, b, r) => md5(concat_ws("|", slice(mh, b * r + 1, r))),
@@ -781,10 +781,8 @@ object TextDedup {
     val base = Pin(df.select(id.as("__id"), bucket.as("__bucket"),
         split(text, " ").as("tk"))
       .filter(size(col("tk")) >= shingleWidth)
-      .select(col("__id"), col("__bucket"), array_sort(array_distinct(
-        transform(sequence(lit(1), size(col("tk")) - (shingleWidth - 1)),
-          i => concat_ws(" ", slice(col("tk"), i, lit(shingleWidth))))))
-        .as("sh"))
+      .select(col("__id"), col("__bucket"), array_sort(
+        VectorExprs.wordShingles(col("tk"), shingleWidth)).as("sh"))
       .withColumn("nsh", size(col("sh"))))
     // prefix rows carry keys only (the exchange-volume rule); the
     // verify joins the bounded candidate set back to `base`

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expressions for the similarity/dedup hot paths.
@@ -23,9 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *  - [[DotProductFloat]] — full whole-stage-codegen (`doGenCode` emits the
   *    loop straight into the generated consume path);
-  *  - [[WordShingleHashes]] / [[MinHashSig]] — `eval` with a per-row tight
-  *    loop (the output is an array, the loop is the whole cost; codegen
-  *    would only remove a single virtual call per ROW, so eval is enough).
+  *  - [[WordShingles]] / [[WordShingleHashes]] / [[MinHashSig]] — `eval`
+  *    with a per-row tight loop (the output is an array, the loop is the
+  *    whole cost; codegen would only remove a single virtual call per ROW,
+  *    so eval is enough).
   *
   * Determinism: DotProductFloat accumulates float→double products
   * sequentially — bit-identical to the `zip_with`+`aggregate` fold it
@@ -38,6 +40,14 @@ object VectorExprs {
   def dotf(a: Column, b: Column): Column =
     GraftShim.column(DotProductFloat(
       GraftShim.expression(a), GraftShim.expression(b)))
+
+  /** Distinct n-word shingles of a token array, first occurrence first —
+    * bit-identical to the interpreted chain
+    * `array_distinct(transform(sequence(1, size(tk) - (n - 1)),
+    * i => concat_ws(" ", slice(tk, i, n))))` on arrays of ≥ n tokens;
+    * fewer than n tokens yield an empty array. */
+  def wordShingles(tokens: Column, n: Int): Column =
+    GraftShim.column(WordShingles(GraftShim.expression(tokens), n))
 
   /** Distinct XXH64 hashes of n-word shingles of a token array. */
   def shingleHashes(tokens: Column, n: Int): Column =
@@ -144,6 +154,61 @@ case class DotProductFloat(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The n-word window loop of [[WordShingles]] and [[WordShingleHashes]]:
+  * each window of n consecutive tokens, joined exactly as
+  * `concat_ws(" ", slice(tk, i, n))` joins it (null tokens skipped), in
+  * array order. Fewer than n tokens → no window. */
+private object ShingleWindows {
+  private val space = UTF8String.fromString(" ")
+
+  /** Number of windows of `toks`. */
+  def count(toks: ArrayData, n: Int): Int =
+    math.max(toks.numElements() - n + 1, 0)
+
+  def foreach(toks: ArrayData, n: Int)(f: UTF8String => Unit): Unit = {
+    val parts = new Array[UTF8String](n)
+    val count = this.count(toks, n)
+    var i = 0
+    while (i < count) {
+      var j = 0
+      while (j < n) { parts(j) = toks.getUTF8String(i + j); j += 1 }
+      f(UTF8String.concatWs(space, parts: _*))
+      i += 1
+    }
+  }
+}
+
+/** Distinct n-word shingles ("w1 w2 … wn") of a token array in
+  * first-occurrence order — one row-level loop replacing the
+  * sequence→transform→slice→concat_ws→array_distinct chain, whose
+  * `transform` is CodegenFallback (an interpreted lambda walk per
+  * shingle). Strings are compared by their UTF-8 bytes, as
+  * array_distinct compares them. */
+case class WordShingles(child: Expression, n: Int)
+    extends UnaryExpression
+    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+  require(n >= 1)
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an array<string> input")
+    }
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "word_shingles"
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val toks = input.asInstanceOf[ArrayData]
+    val seen = new java.util.LinkedHashSet[UTF8String](
+      2 * ShingleWindows.count(toks, n))
+    ShingleWindows.foreach(toks, n)(seen.add(_))
+    new GenericArrayData(seen.toArray.asInstanceOf[Array[Any]])
+  }
+
+  override protected def withNewChildInternal(newChild: Expression) =
+    copy(child = newChild)
+}
+
 /** Distinct XXH64 hashes of all n-word shingles ("w1 w2 … wn") of a token
   * array — one row-level loop replacing a sequence→transform→element_at→
   * concat_ws→xxhash64→array_distinct interpreted chain. */
@@ -160,23 +225,13 @@ case class WordShingleHashes(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_shingle_hashes"
 
-  private val space = UTF8String.fromString(" ")
-
   override protected def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[ArrayData]
-    val m = toks.numElements()
-    val count = m - n + 1
-    if (count <= 0) return new GenericArrayData(Array.empty[Long])
-    val seen = new java.util.LinkedHashSet[java.lang.Long](count * 2)
-    var i = 0
-    while (i < count) {
-      val parts = new Array[UTF8String](n)
-      var j = 0
-      while (j < n) { parts(j) = toks.getUTF8String(i + j); j += 1 }
-      val sh = UTF8String.concatWs(space, parts: _*)
+    val seen = new java.util.LinkedHashSet[java.lang.Long](
+      2 * ShingleWindows.count(toks, n))
+    ShingleWindows.foreach(toks, n) { sh =>
       seen.add(XXH64.hashUnsafeBytes(
         sh.getBaseObject, sh.getBaseOffset, sh.numBytes, 42L))
-      i += 1
     }
     val out = new Array[Long](seen.size)
     val it = seen.iterator(); var k = 0
@@ -358,17 +413,24 @@ case class MinHashSig(child: Expression, k: Int)
     copy(child = newChild)
 }
 
-/** All k md5 minhash digests of a shingle array in ONE traversal with one
-  * reused MessageDigest — replaces k interpreted
-  * array_min(transform(sh, s ⇒ md5("i:" ‖ s))) chains (k array scans, a
-  * fresh digest and UTF8String concat per call). Semantics are
-  * BIT-IDENTICAL to that chain: per i the minimum lowercase-hex digest of
-  * the UTF-8 bytes of "i:" + shingle, min taken in binary string order
-  * (hex is ASCII, so binary = lexicographic); null shingle elements are
-  * skipped exactly as array_min skips the null md5(concat(null)) would
-  * produce; an empty array yields k nulls like array_min(empty). The
-  * DuckDB oracle reproduces the same digests, so md5-minhash keys stay
-  * hash-checked. */
+/** All k md5 minhash digests of a shingle array in ONE traversal —
+  * replaces k interpreted array_min(transform(sh, s ⇒ md5("i:" ‖ s)))
+  * chains (k array scans, a fresh digest and UTF8String concat per call).
+  * Semantics are BIT-IDENTICAL to that chain: per i the minimum
+  * lowercase-hex digest of the UTF-8 bytes of "i:" + shingle, min taken
+  * in binary string order; null shingle elements are skipped exactly as
+  * array_min skips the null md5(concat(null)) would produce; an empty or
+  * all-null array yields k nulls like array_min(empty). The DuckDB oracle
+  * reproduces the same digests, so md5-minhash keys stay hash-checked.
+  *
+  * Lowercase hex sorts like the digest's unsigned bytes (each byte is two
+  * nibble digits, '0'–'9' < 'a'–'f' in ASCII), so the k running minima
+  * are kept as raw digests in one 16·k byte array, compared unsigned,
+  * and only the k winners are hex-encoded. One MessageDigest, one
+  * digest buffer and one shingle byte buffer per row, reused across its
+  * k·m digests: the per-digest work allocates nothing, and all state is
+  * local to the row's evaluation (no mutable field is shared between the
+  * tasks that evaluate one expression). */
 case class MinHashMd5Sigs(child: Expression, k: Int)
     extends UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -384,43 +446,67 @@ case class MinHashMd5Sigs(child: Expression, k: Int)
 
   @transient private lazy val prefixes: Array[Array[Byte]] =
     Array.tabulate(k)(i => s"$i:".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  private val hexDigits = "0123456789abcdef".toCharArray
 
   override protected def nullSafeEval(input: Any): Any = {
     val sh = input.asInstanceOf[ArrayData]
     val m = sh.numElements()
     val md = java.security.MessageDigest.getInstance("MD5")
-    val mins = new Array[String](k)
+    val dg = new Array[Byte](16)
+    val mins = new Array[Byte](16 * k)
+    var buf = new Array[Byte](64)
+    var seen = false
     var i = 0
     while (i < m) {
       if (!sh.isNullAt(i)) {
-        val sBytes = sh.getUTF8String(i).getBytes
+        val s = sh.getUTF8String(i)
+        val len = s.numBytes
+        if (len > buf.length) buf = new Array[Byte](math.max(len, 2 * buf.length))
+        s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET)
         var j = 0
         while (j < k) {
-          md.reset()
           md.update(prefixes(j))
-          md.update(sBytes)
-          val dg = md.digest()
-          val hex = new Array[Char](32)
-          var b = 0
-          while (b < 16) {
-            hex(2 * b) = hexDigits((dg(b) >> 4) & 0xf)
-            hex(2 * b + 1) = hexDigits(dg(b) & 0xf)
-            b += 1
+          md.update(buf, 0, len)
+          val o = 16 * j
+          if (!seen) md.digest(mins, o, 16)
+          else {
+            md.digest(dg, 0, 16)
+            var b = 0
+            while (b < 16 && dg(b) == mins(o + b)) b += 1
+            if (b < 16 && (dg(b) & 0xff) < (mins(o + b) & 0xff))
+              System.arraycopy(dg, 0, mins, o, 16)
           }
-          val hs = new String(hex)
-          if (mins(j) == null || hs.compareTo(mins(j)) < 0) mins(j) = hs
           j += 1
         }
+        seen = true
       }
       i += 1
     }
-    new GenericArrayData(mins.map(s =>
-      if (s == null) null else UTF8String.fromString(s)))
+    val out = new Array[Any](k)
+    if (seen) {
+      var j = 0
+      while (j < k) {
+        val hex = new Array[Byte](32)
+        var b = 0
+        while (b < 16) {
+          val v = mins(16 * j + b)
+          hex(2 * b) = MinHashMd5Sigs.hexDigits((v >> 4) & 0xf)
+          hex(2 * b + 1) = MinHashMd5Sigs.hexDigits(v & 0xf)
+          b += 1
+        }
+        out(j) = UTF8String.fromBytes(hex)
+        j += 1
+      }
+    }
+    new GenericArrayData(out)
   }
 
   override protected def withNewChildInternal(newChild: Expression) =
     copy(child = newChild)
+}
+
+object MinHashMd5Sigs {
+  private val hexDigits: Array[Byte] =
+    "0123456789abcdef".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
 }
 
 /** md5-SimHash band signature of a (distinct) token array in ONE

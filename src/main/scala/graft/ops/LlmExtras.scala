@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.VectorExprs
 import graft.util.Pin
 import graft.util.Tables._
 
@@ -123,9 +124,7 @@ object LlmExtras {
       documents(s, d)
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 3)
-        .withColumn("sh", array_distinct(transform(
-          sequence(lit(1), size(col("tk")) - 2),
-          i => concat_ws(" ", slice(col("tk"), i, lit(3))))))
+        .withColumn("sh", VectorExprs.wordShingles(col("tk"), 3))
         .select(col("doc_id"),
           concat_ws("|", slice(array_sort(transform(col("sh"),
             s => md5(s))), 1, 16)).as("fingerprint"))

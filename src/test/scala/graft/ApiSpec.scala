@@ -669,6 +669,89 @@ class ApiSpec extends AnyFunSuite {
     assert(n(3L).forall(_ == null), "empty shingle array must yield nulls")
   }
 
+  /** rid → string-array column of a (rid, array<string>) frame. */
+  private def byRid(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+
+  test("VectorExprs.minhashMd5 is bit-identical to the k-chain " +
+      "array_min(transform(md5)) spelling the DuckDB oracle mirrors") {
+    val rnd = new scala.util.Random(11)
+    val words = Seq("a", "b", "the", "fox", "ß", "ü", "日本", "𝔘𝔫𝔦", "😀",
+      "x y", "")
+    // ≥ 2 shingles per random set: the min then compares digests whose
+    // leading bytes straddle 0x80, which a signed-byte compare orders
+    // the other way
+    val random = (1 to 240).map { r =>
+      (100L + r, Seq.fill(2 + rnd.nextInt(12))(
+        Seq.fill(1 + rnd.nextInt(3))(words(rnd.nextInt(words.size)))
+          .mkString(" ")))
+    }
+    val fixed = Seq(
+      (1L, Seq("a b c", "b c d", "c d e")),
+      (2L, Seq("x y z")),
+      (3L, Seq.empty[String]),
+      (4L, Seq(null, "a b c", null)),
+      (5L, Seq[String](null, null)),
+      (6L, Seq("😀 𝔘𝔫𝔦 日本", "𝔘𝔫𝔦 日本 😀", "😀 𝔘𝔫𝔦 日本")))
+    val rows = (fixed ++ random).toDF("rid", "sh")
+    val k = 16
+    val native = rows.select(col("rid"),
+      graft.functions.VectorExprs.minhashMd5(col("sh"), k).as("mh"))
+    val chain = rows.select(col("rid"), array((0 until k).map(i =>
+      array_min(transform(col("sh"), s => md5(concat(lit(s"$i:"), s))))): _*)
+      .as("mh"))
+    val n = byRid(native)
+    val c = byRid(chain)
+    assert(n.size == fixed.size + random.size)
+    val diff = n.keys.filter(r => n(r) != c(r)).toSeq.sorted
+    assert(diff.isEmpty, s"native vs chain minhash diverge on rows " +
+      s"${diff.take(5)}: ${diff.headOption.map(r => n(r) -> c(r))}")
+    Seq(3L, 5L).foreach(r => assert(n(r) == Seq.fill(k)(null),
+      s"row $r: an empty or all-null array must yield $k nulls"))
+    assert(n(4L).forall(_ != null), "null elements are skipped, not minima")
+  }
+
+  test("VectorExprs.wordShingles equals the interpreted distinct-shingle " +
+      "chain for widths 1-5, on any partitioning") {
+    val texts = Seq(
+      "the quick brown fox jumps over the lazy dog",
+      "a  b   c  a  b", // double spaces: empty tokens inside shingles
+      "x y x y x y x y z", // repeated shingles: first occurrence wins
+      " leading and trailing ",
+      "one",
+      "two words",
+      "😀 𝔘𝔫𝔦 日本 😀 𝔘𝔫𝔦 日本 ß",
+      "") ++ {
+      val rnd = new scala.util.Random(5)
+      (1 to 60).map(_ => Seq.fill(rnd.nextInt(14))(
+        Seq("a", "b", "", "c", "日本", "😀")(rnd.nextInt(6))).mkString(" "))
+    }
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("rid", "text")
+      .select(col("rid"), split(col("text"), " ").as("tk"))
+    def shingles(d: org.apache.spark.sql.DataFrame, w: Int) =
+      d.select(col("rid"),
+        graft.functions.VectorExprs.wordShingles(col("tk"), w).as("sh"))
+    (1 to 5).foreach { w =>
+      val native = shingles(docs, w)
+      val chain = docs.filter(size(col("tk")) >= w).select(col("rid"),
+        array_distinct(transform(
+          sequence(lit(1), size(col("tk")) - (w - 1)),
+          i => concat_ws(" ", slice(col("tk"), i, lit(w))))).as("sh"))
+      val (n, c) = (byRid(native), byRid(chain))
+      assert(c.nonEmpty && c.forall { case (r, sh) => n(r) == sh },
+        s"width $w: native vs chain diverge")
+      val short = n.keySet -- c.keySet
+      // split never yields an empty array: width 1 has no short rows
+      assert((w == 1 || short.nonEmpty) && short.forall(r => n(r).isEmpty),
+        s"width $w: fewer than $w tokens must yield no shingles")
+      assert(byRid(shingles(docs.repartition(16), w)) ==
+          byRid(shingles(docs.repartition(1), w)),
+        s"width $w: a 16-partition run differs from a 1-partition run")
+    }
+    assert(byRid(shingles(docs, 2))(2L) == Seq("x y", "y x", "y z"))
+  }
+
   test("TextDedup.clusters equals a reference union-find on random graphs") {
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { _ =>

@@ -233,15 +233,20 @@ class PropertiesSpec extends AnyFunSuite {
     assert(leaks.isEmpty, "superseded pins leaking: " + leaks.mkString("; "))
   }
 
-  test("every eager materialization in src/main goes through Pin") {
+  /** Every Scala source file under src/main/scala. */
+  private def mainSources: Seq[java.io.File] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: $root")
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName
           .endsWith(".scala")))
+    files(root)
+  }
+
+  test("every eager materialization in src/main goes through Pin") {
     val banned = Seq(".localCheckpoint(", ".checkpoint(", "checkpointDir")
-    val hits = files(root)
+    val hits = mainSources
       .filterNot(_.getPath.replace('\\', '/')
         .endsWith("graft/util/Pin.scala"))
       .flatMap { f =>
@@ -254,6 +259,25 @@ class PropertiesSpec extends AnyFunSuite {
       }
     assert(hits.isEmpty, "pin outside graft.util.Pin:\n" +
       hits.mkString("\n"))
+  }
+
+  test("every distinct word-shingle array in src/main goes through " +
+      "VectorExprs.wordShingles") {
+    // the interpreted chain array_distinct(transform(sequence(…),
+    // i => concat_ws(" ", slice(tk, i, w)))) walks a lambda tree per
+    // shingle; matched over the code lines (comment lines dropped) with
+    // whitespace removed, so a chain split over lines is caught too
+    val chain = """array_distinct\(transform\(sequence\([^=]*=>concat_ws\(""".r
+    val comment = Seq("*", "/*", "//")
+    val hits = mainSources.filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try chain.findFirstIn(src.getLines()
+          .filterNot(l => comment.exists(l.trim.startsWith))
+          .mkString.filterNot(_.isWhitespace)).isDefined
+      finally src.close()
+    }
+    assert(hits.isEmpty, "interpreted shingle chain in:\n" +
+      hits.map(_.getPath).mkString("\n"))
   }
 
   test("the manifest checksum is permutation-invariant and moves on any " +
