@@ -38,17 +38,36 @@ object NgramLm {
   private def costMicro(p: Column): Column =
     round(-log(p) * 1e6).cast("long")
 
-  /** (doc_id, w1, w2) bigram pairs of each doc; docs under 2 tokens
+  /** (doc_id, w1, …, wn) n-gram tuples of each doc; docs under n tokens
     * contribute nothing. */
-  private def bigrams(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val tk = split(text, " ")
-    df.select(id.as("doc_id"), tk.as("__tk"))
-      .filter(size(col("__tk")) >= 2)
+  private def ngrams(df: DataFrame, id: Column, text: Column,
+      n: Int): DataFrame = {
+    val ws = (1 to n).map(j => s"w$j")
+    df.select(id.as("doc_id"), split(text, " ").as("__tk"))
+      .filter(size(col("__tk")) >= n)
       .select(col("doc_id"), explode(transform(
-          sequence(lit(1), size(col("__tk")) - 1),
-          i => struct(element_at(col("__tk"), i).as("w1"),
-            element_at(col("__tk"), i + 1).as("w2")))).as("__b"))
-      .select(col("doc_id"), col("__b.w1").as("w1"), col("__b.w2").as("w2"))
+          sequence(lit(1), size(col("__tk")) - (n - 1)),
+          i => struct(ws.indices.map(j => element_at(col("__tk"),
+            if (j == 0) i else i + j).as(ws(j))): _*))).as("__g"))
+      .select(col("doc_id") +: ws.map(w => col(s"__g.$w").as(w)): _*)
+  }
+
+  /** The per-doc finalization of every scorer: `grams` (doc_id + one row
+    * per scored n-gram) summed over the per-gram `cost`, then left-joined
+    * from the doc list so a doc with no n-gram keeps a row: (doc_id,
+    * `nCol`, total_cost_micro, avg_cost_micro DOUBLE raw — one IEEE
+    * division over exact integers, NULL for a doc with none). */
+  private def perDoc(df: DataFrame, id: Column, grams: DataFrame,
+      cost: Column, nCol: String): DataFrame = {
+    val scored = grams.groupBy("doc_id")
+      .agg(count(lit(1)).as(nCol), sum(cost).as("total_cost_micro"))
+    df.select(id.as("doc_id"))
+      .join(scored, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col(nCol), lit(0L)).as(nCol),
+        coalesce(col("total_cost_micro"), lit(0L)).as("total_cost_micro"),
+        (col("total_cost_micro").cast("double")
+          / col(nCol).cast("double")).as("avg_cost_micro"))
   }
 
   /** Train an add-1-smoothed bigram LM from a corpus. Output: the
@@ -59,7 +78,7 @@ object NgramLm {
     * position (tokens appearing only in sub-2-token docs are outside
     * the model — they can never be scored either). */
   def train(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val cb = bigrams(df, id, text)
+    val cb = ngrams(df, id, text, 2)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c_bi"))
     val cu = cb.groupBy("w1").agg(sum(col("c_bi")).as("c_w1"))
     val v = cb.select(col("w1").as("w")).unionByName(
@@ -89,28 +108,18 @@ object NgramLm {
     * n_bigrams = 0. */
   def scoreDocs(df: DataFrame, id: Column, text: Column,
       model: DataFrame): DataFrame = {
-    val bi = bigrams(df, id, text)
     val seen = model.filter(col("w1").isNotNull && col("w2").isNotNull)
       .select(col("w1"), col("w2"), col("cost").as("__c_seen"))
     val unseen = model.filter(col("w1").isNotNull && col("w2").isNull)
       .select(col("w1"), col("cost").as("__c_unseen"))
     val oov = model.filter(col("w1").isNull)
       .select(col("cost").as("__c_oov"))
-    val scored = bi
-      .join(seen, Seq("w1", "w2"), "left")
-      .join(unseen, Seq("w1"), "left")
-      .crossJoin(broadcast(oov))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(coalesce(col("__c_seen"), col("__c_unseen"), col("__c_oov")))
-          .as("total_cost_micro"))
-    df.select(id.as("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("total_cost_micro"), lit(0L)).as("total_cost_micro"),
-        (col("total_cost_micro").cast("double")
-          / col("n_bigrams").cast("double")).as("avg_cost_micro"))
+    perDoc(df, id, ngrams(df, id, text, 2)
+        .join(seen, Seq("w1", "w2"), "left")
+        .join(unseen, Seq("w1"), "left")
+        .crossJoin(broadcast(oov)),
+      coalesce(col("__c_seen"), col("__c_unseen"), col("__c_oov")),
+      "n_bigrams")
   }
 
   /** Interpolated Kneser–Ney bigram probabilities (Kneser & Ney 1995;
@@ -140,37 +149,33 @@ object NgramLm {
     * for every observed bigram, p_kn RAW double. */
   def trainKn(df: DataFrame, id: Column, text: Column,
       discount: Double = 0.75): DataFrame = {
+    val (seen, _, _, _) = knCounts(df, id, text, discount)
+    seen.select(col("w1"), col("w2"), col("c_bi"), pKn(discount).as("p_kn"))
+  }
+
+  /** The count frames [[trainKn]] and [[trainKnBackoff]] share, all off
+    * ONE (w1, w2) count frame: (every observed bigram with its c_bi,
+    * c_w1, n_fw, n_bw and b_types; per w1 (c_w1, n_fw); per w2 (n_bw);
+    * the 1-row b_types). */
+  private def knCounts(df: DataFrame, id: Column, text: Column,
+      discount: Double): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     require(discount > 0.0 && discount < 1.0,
       s"absolute discount must be in (0,1), got $discount")
-    val cb = bigrams(df, id, text)
+    val cb = ngrams(df, id, text, 2)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c_bi"))
     val fw = cb.groupBy("w1").agg(sum(col("c_bi")).as("c_w1"),
       count(lit(1)).as("n_fw"))
     val bw = cb.groupBy("w2").agg(count(lit(1)).as("n_bw"))
     val b = cb.agg(count(lit(1)).as("b_types"))
-    cb.join(fw, "w1").join(bw, "w2").crossJoin(broadcast(b))
-      .select(col("w1"), col("w2"), col("c_bi"),
-        (greatest(col("c_bi").cast("double") - lit(discount), lit(0.0))
-          / col("c_w1")
-          + ((lit(discount) * col("n_fw")) / col("c_w1"))
-            * (col("n_bw").cast("double") / col("b_types")))
-          .as("p_kn"))
+    (cb.join(fw, "w1").join(bw, "w2").crossJoin(broadcast(b)), fw, bw, b)
   }
 
-  /** (doc_id, w1, w2, w3) trigram triples of each doc; docs under 3
-    * tokens contribute nothing. */
-  private def trigrams(df: DataFrame, id: Column, text: Column): DataFrame = {
-    val tk = split(text, " ")
-    df.select(id.as("doc_id"), tk.as("__tk"))
-      .filter(size(col("__tk")) >= 3)
-      .select(col("doc_id"), explode(transform(
-          sequence(lit(1), size(col("__tk")) - 2),
-          i => struct(element_at(col("__tk"), i).as("w1"),
-            element_at(col("__tk"), i + 1).as("w2"),
-            element_at(col("__tk"), i + 2).as("w3")))).as("__t"))
-      .select(col("doc_id"), col("__t.w1").as("w1"),
-        col("__t.w2").as("w2"), col("__t.w3").as("w3"))
-  }
+  /** p_kn(w2|w1) over the observed-bigram columns of [[knCounts]]. */
+  private def pKn(discount: Double): Column =
+    (greatest(col("c_bi").cast("double") - lit(discount), lit(0.0))
+      / col("c_w1")
+      + ((lit(discount) * col("n_fw")) / col("c_w1"))
+        * (col("n_bw").cast("double") / col("b_types")))
 
   /** Interpolated Kneser–Ney TRIGRAM probabilities — the order-3 step
     * toward the real KenLM shape (Chen & Goodman 1999 eq. 18: the
@@ -195,35 +200,52 @@ object NgramLm {
     * aggregates/joins + one 1-row broadcast. Output: (w1, w2, w3,
     * c_tri, p_kn3 RAW) for every observed trigram. */
   def trainKn3(df: DataFrame, id: Column, text: Column,
-      discount: Double = 0.75): DataFrame = {
+      discount: Double = 0.75): DataFrame =
+    kn3Counts(df, id, text, discount).p3
+      .select(col("w1"), col("w2"), col("w3"), col("c_tri"),
+        pKn3(discount).as("p_kn3"))
+
+  /** The count frames [[trainKn3]] and [[trainKn3Backoff]] share, all
+    * off ONE (w1, w2, w3) count frame: `p3` is every observed trigram
+    * with all its counts; `c12` the history (w1, w2)'s raw continuation
+    * total and distinct-successor types; `pre23` N₁₊(·w2w3), the
+    * distinct w1 preceding (w2, w3); `mid2` per w2 N₁₊(·w2·) = Σ_w3
+    * N₁₊(·w2w3) and N₁₊(w2·); `w3c` N₁₊(··w3), the distinct (w2, w3)
+    * types per w3; `b2` the 1-row count B₂ of all (w2, w3) types. */
+  private case class Kn3Counts(p3: DataFrame, c12: DataFrame,
+      pre23: DataFrame, mid2: DataFrame, w3c: DataFrame, b2: DataFrame)
+
+  private def kn3Counts(df: DataFrame, id: Column, text: Column,
+      discount: Double): Kn3Counts = {
     require(discount > 0.0 && discount < 1.0,
       s"absolute discount must be in (0,1), got $discount")
-    val c3 = trigrams(df, id, text)
+    val c3 = ngrams(df, id, text, 3)
       .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c_tri"))
-    // history (w1,w2): raw continuation total + distinct-successor types
     val c12 = c3.groupBy("w1", "w2").agg(sum(col("c_tri")).as("c_12"),
       count(lit(1)).as("n_fw12"))
-    // N1+(·w2w3): distinct w1 preceding the (w2,w3) bigram
     val pre23 = c3.groupBy("w2", "w3").agg(count(lit(1)).as("n_pre23"))
-    // per w2: N1+(·w2·) = Σ_w3 N1+(·w2w3) and N1+(w2·) as type count
     val mid2 = pre23.groupBy("w2").agg(sum(col("n_pre23")).as("n_pre2dot"),
       count(lit(1)).as("n_fw2"))
-    // N1+(··w3): distinct (w2,w3) types per w3; B2 = all (w2,w3) types
     val w3c = pre23.groupBy("w3").agg(count(lit(1)).as("n_pre3"))
     val b2 = pre23.agg(count(lit(1)).as("b2_types"))
-    c3.join(c12, Seq("w1", "w2")).join(pre23, Seq("w2", "w3"))
-      .join(mid2, Seq("w2")).join(w3c, Seq("w3"))
-      .crossJoin(broadcast(b2))
-      .select(col("w1"), col("w2"), col("w3"), col("c_tri"),
-        (greatest(col("c_tri").cast("double") - lit(discount), lit(0.0))
-          / col("c_12")
-          + ((lit(discount) * col("n_fw12")) / col("c_12"))
-            * (greatest(col("n_pre23").cast("double") - lit(discount),
-                lit(0.0)) / col("n_pre2dot")
-              + ((lit(discount) * col("n_fw2")) / col("n_pre2dot"))
-                * (col("n_pre3").cast("double") / col("b2_types"))))
-          .as("p_kn3"))
+    Kn3Counts(c3.join(c12, Seq("w1", "w2")).join(pre23, Seq("w2", "w3"))
+      .join(mid2, Seq("w2")).join(w3c, Seq("w3")).crossJoin(broadcast(b2)),
+      c12, pre23, mid2, w3c, b2)
   }
+
+  /** p₂(w3|w2), the continuation-count bigram KN, over [[kn3Counts]]
+    * columns. */
+  private def pKn2(discount: Double): Column =
+    greatest(col("n_pre23").cast("double") - lit(discount), lit(0.0)) /
+      col("n_pre2dot") +
+      ((lit(discount) * col("n_fw2")) / col("n_pre2dot")) *
+        (col("n_pre3").cast("double") / col("b2_types"))
+
+  /** p₃(w3|w1,w2) over the observed-trigram columns of [[kn3Counts]]. */
+  private def pKn3(discount: Double): Column =
+    (greatest(col("c_tri").cast("double") - lit(discount), lit(0.0))
+      / col("c_12")
+      + ((lit(discount) * col("n_fw12")) / col("c_12")) * pKn2(discount))
 
   /** [[trainKn3]] re-shaped as a self-contained backoff table in integer
     * micro-costs, keyed by an explicit `kind` column (six row shapes —
@@ -242,44 +264,26 @@ object NgramLm {
     * ±1 μ contract). Same scale shape as [[trainKn3]]. */
   def trainKn3Backoff(df: DataFrame, id: Column, text: Column,
       discount: Double = 0.75): DataFrame = {
-    require(discount > 0.0 && discount < 1.0,
-      s"absolute discount must be in (0,1), got $discount")
-    val c3 = trigrams(df, id, text)
-      .groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c_tri"))
-    val c12 = c3.groupBy("w1", "w2").agg(sum(col("c_tri")).as("c_12"),
-      count(lit(1)).as("n_fw12"))
-    val pre23 = c3.groupBy("w2", "w3").agg(count(lit(1)).as("n_pre23"))
-    val mid2 = pre23.groupBy("w2").agg(sum(col("n_pre23")).as("n_pre2dot"),
-      count(lit(1)).as("n_fw2"))
-    val w3c = pre23.groupBy("w3").agg(count(lit(1)).as("n_pre3"))
-    val b2 = pre23.agg(count(lit(1)).as("b2_types"))
+    val kc = kn3Counts(df, id, text, discount)
     def row(kind: String, w1: Column, w2: Column, w3: Column,
         cost: Column): Seq[Column] =
       Seq(lit(kind).as("kind"), w1.as("w1"), w2.as("w2"), w3.as("w3"),
         cost.as("cost"))
     val nullS = lit(null).cast("string")
-    val p2Expr =
-      greatest(col("n_pre23").cast("double") - lit(discount), lit(0.0)) /
-        col("n_pre2dot") +
-        ((lit(discount) * col("n_fw2")) / col("n_pre2dot")) *
-          (col("n_pre3").cast("double") / col("b2_types"))
-    val p3 = c3.join(c12, Seq("w1", "w2")).join(pre23, Seq("w2", "w3"))
-      .join(mid2, Seq("w2")).join(w3c, Seq("w3")).crossJoin(broadcast(b2))
-      .select(row("p3", col("w1"), col("w2"), col("w3"), costMicro(
-        greatest(col("c_tri").cast("double") - lit(discount), lit(0.0))
-          / col("c_12")
-          + ((lit(discount) * col("n_fw12")) / col("c_12")) * p2Expr)): _*)
-    val lam12 = c12.select(row("lam12", col("w1"), col("w2"), nullS,
+    val p3 = kc.p3.select(row("p3", col("w1"), col("w2"), col("w3"),
+      costMicro(pKn3(discount))): _*)
+    val lam12 = kc.c12.select(row("lam12", col("w1"), col("w2"), nullS,
       costMicro((lit(discount) * col("n_fw12")) / col("c_12"))): _*)
-    val p2 = pre23.join(mid2, Seq("w2")).join(w3c, Seq("w3"))
-      .crossJoin(broadcast(b2))
-      .select(row("p2", nullS, col("w2"), col("w3"), costMicro(p2Expr)): _*)
-    val lam2 = mid2.select(row("lam2", nullS, col("w2"), nullS,
+    val p2 = kc.pre23.join(kc.mid2, Seq("w2")).join(kc.w3c, Seq("w3"))
+      .crossJoin(broadcast(kc.b2))
+      .select(row("p2", nullS, col("w2"), col("w3"),
+        costMicro(pKn2(discount))): _*)
+    val lam2 = kc.mid2.select(row("lam2", nullS, col("w2"), nullS,
       costMicro((lit(discount) * col("n_fw2")) / col("n_pre2dot"))): _*)
-    val cont = w3c.crossJoin(broadcast(b2))
+    val cont = kc.w3c.crossJoin(broadcast(kc.b2))
       .select(row("cont", nullS, nullS, col("w3"),
         costMicro(col("n_pre3").cast("double") / col("b2_types"))): _*)
-    val oov = b2.select(row("oov", nullS, nullS, nullS,
+    val oov = kc.b2.select(row("oov", nullS, nullS, nullS,
       costMicro(lit(1.0) / col("b2_types"))): _*)
     p3.unionByName(lam12).unionByName(p2).unionByName(lam2)
       .unionByName(cont).unionByName(oov)
@@ -293,35 +297,25 @@ object NgramLm {
     * plain shuffle joins throughout (Heaps'-law vocabularies). */
   def scoreDocsKn3(df: DataFrame, id: Column, text: Column,
       model: DataFrame): DataFrame = {
-    val tri = trigrams(df, id, text)
     def part(kind: String, keys: Seq[String], as: String): DataFrame =
       model.filter(col("kind") === kind)
         .select(keys.map(col) :+ col("cost").as(as): _*)
-    val scored = tri
-      .join(part("p3", Seq("w1", "w2", "w3"), "__c3"),
-        Seq("w1", "w2", "w3"), "left")
-      .join(part("lam12", Seq("w1", "w2"), "__l12"),
-        Seq("w1", "w2"), "left")
-      .join(part("p2", Seq("w2", "w3"), "__c2"), Seq("w2", "w3"), "left")
-      .join(part("lam2", Seq("w2"), "__l2"), Seq("w2"), "left")
-      .join(part("cont", Seq("w3"), "__cc"), Seq("w3"), "left")
-      .crossJoin(broadcast(model.filter(col("kind") === "oov")
-        .select(col("cost").as("__oo"))))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(coalesce(col("__c3"),
-          coalesce(col("__l12"), col("__oo"))
-            + coalesce(col("__c2"),
-              coalesce(col("__l2"), col("__oo"))
-                + coalesce(col("__cc"), col("__oo")))))
-          .as("total_cost_micro"))
-    df.select(id.as("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
-        coalesce(col("total_cost_micro"), lit(0L)).as("total_cost_micro"),
-        (col("total_cost_micro").cast("double")
-          / col("n_trigrams").cast("double")).as("avg_cost_micro"))
+    perDoc(df, id, ngrams(df, id, text, 3)
+        .join(part("p3", Seq("w1", "w2", "w3"), "__c3"),
+          Seq("w1", "w2", "w3"), "left")
+        .join(part("lam12", Seq("w1", "w2"), "__l12"),
+          Seq("w1", "w2"), "left")
+        .join(part("p2", Seq("w2", "w3"), "__c2"), Seq("w2", "w3"), "left")
+        .join(part("lam2", Seq("w2"), "__l2"), Seq("w2"), "left")
+        .join(part("cont", Seq("w3"), "__cc"), Seq("w3"), "left")
+        .crossJoin(broadcast(model.filter(col("kind") === "oov")
+          .select(col("cost").as("__oo")))),
+      coalesce(col("__c3"),
+        coalesce(col("__l12"), col("__oo"))
+          + coalesce(col("__c2"),
+            coalesce(col("__l2"), col("__oo"))
+              + coalesce(col("__cc"), col("__oo")))),
+      "n_trigrams")
   }
 
   /** [[trainKn]] re-shaped as a [[train]]-style self-contained backoff
@@ -340,20 +334,9 @@ object NgramLm {
     * shuffle, everything else model-sized. */
   def trainKnBackoff(df: DataFrame, id: Column, text: Column,
       discount: Double = 0.75): DataFrame = {
-    require(discount > 0.0 && discount < 1.0,
-      s"absolute discount must be in (0,1), got $discount")
-    val cb = bigrams(df, id, text)
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c_bi"))
-    val fw = cb.groupBy("w1").agg(sum(col("c_bi")).as("c_w1"),
-      count(lit(1)).as("n_fw"))
-    val bw = cb.groupBy("w2").agg(count(lit(1)).as("n_bw"))
-    val b = cb.agg(count(lit(1)).as("b_types"))
-    val seen = cb.join(fw, "w1").join(bw, "w2").crossJoin(broadcast(b))
-      .select(col("w1"), col("w2"), costMicro(
-        greatest(col("c_bi").cast("double") - lit(discount), lit(0.0))
-          / col("c_w1")
-          + ((lit(discount) * col("n_fw")) / col("c_w1"))
-            * (col("n_bw").cast("double") / col("b_types"))).as("cost"))
+    val (obs, fw, bw, b) = knCounts(df, id, text, discount)
+    val seen = obs.select(col("w1"), col("w2"),
+      costMicro(pKn(discount)).as("cost"))
     val lam = fw
       .select(col("w1"), lit(null).cast("string").as("w2"),
         costMicro((lit(discount) * col("n_fw")) / col("c_w1")).as("cost"))
@@ -375,7 +358,6 @@ object NgramLm {
     * shuffle joins (Heaps'-law vocabularies, the [[scoreDocs]] rule). */
   def scoreDocsKn(df: DataFrame, id: Column, text: Column,
       model: DataFrame): DataFrame = {
-    val bi = bigrams(df, id, text)
     val seen = model.filter(col("w1").isNotNull && col("w2").isNotNull)
       .select(col("w1"), col("w2"), col("cost").as("__c_seen"))
     val lam = model.filter(col("w1").isNotNull && col("w2").isNull)
@@ -384,23 +366,14 @@ object NgramLm {
       .select(col("w2"), col("cost").as("__c_cont"))
     val oov = model.filter(col("w1").isNull && col("w2").isNull)
       .select(col("cost").as("__c_oov"))
-    val scored = bi
-      .join(seen, Seq("w1", "w2"), "left")
-      .join(lam, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(oov))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(coalesce(col("__c_seen"),
-          coalesce(col("__c_lam"), col("__c_oov"))
-            + coalesce(col("__c_cont"), col("__c_oov"))))
-          .as("total_cost_micro"))
-    df.select(id.as("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        coalesce(col("total_cost_micro"), lit(0L)).as("total_cost_micro"),
-        (col("total_cost_micro").cast("double")
-          / col("n_bigrams").cast("double")).as("avg_cost_micro"))
+    perDoc(df, id, ngrams(df, id, text, 2)
+        .join(seen, Seq("w1", "w2"), "left")
+        .join(lam, Seq("w1"), "left")
+        .join(cont, Seq("w2"), "left")
+        .crossJoin(broadcast(oov)),
+      coalesce(col("__c_seen"),
+        coalesce(col("__c_lam"), col("__c_oov"))
+          + coalesce(col("__c_cont"), col("__c_oov"))),
+      "n_bigrams")
   }
 }

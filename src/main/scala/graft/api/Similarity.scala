@@ -18,9 +18,19 @@ import graft.util.Pin
   *   Similarity.thresholdJoin(corpus, $"id", $"vec", $"label", 0.25)
   * }}}
   *
-  * Contract: the `queries` frame must carry columns `qid` (query id) and
-  * `qe` (query vector) — validated eagerly with a clear error; corpus
-  * columns are caller-chosen via the Column parameters.
+  * The top-k contract, shared by every `topK*` method:
+  *  - `queries` carries columns `qid` (query id) and `qe` (query vector),
+  *    validated eagerly with a clear error; corpus columns are
+  *    caller-chosen via the Column parameters;
+  *  - `excludeSelf` (default true) drops the corpus row whose id equals
+  *    the query's `qid` — right when queries are drawn FROM the corpus id
+  *    space; pass false when qids live in another id domain, or a
+  *    legitimate neighbor with a coincidentally equal id is lost;
+  *  - each similarity is rounded to 6 dp, and each query's neighbors rank
+  *    by that rounded value with ties broken by the smaller `vec_id`, so
+  *    rankings are engine-reproducible;
+  *  - `k` must be ≥ 1;
+  *  - the output is (qid, vec_id, sim_r, rk) with rk in 1..k.
   */
 object Similarity {
 
@@ -32,6 +42,26 @@ object Similarity {
         "vec.as(\"qe\")) before calling")
   }
 
+  /** The scoring-and-ranking tail of every top-k entry point (the object
+    * contract): the candidate rows (carrying `vec_id`) join the
+    * broadcast probe rows (carrying `qid`) on `on`, self-matches dropped
+    * when `excludeSelf`; `sim` is rounded to 6 dp as `sim_r` and
+    * [[ranked]]. */
+  private def topKTail(cands: DataFrame, probes: DataFrame, on: Column,
+      sim: Column, k: Int, excludeSelf: Boolean): DataFrame =
+    ranked(cands.join(broadcast(probes),
+        if (excludeSelf) on && col("vec_id") =!= col("qid") else on)
+      .select(col("qid"), col("vec_id"), round(sim, 6).as("sim_r")), k)
+
+  /** The rank half of [[topKTail]]: per query `q`, row numbers `rk` by
+    * (sim_r desc, `v`), kept to rk ≤ k. */
+  private def ranked(scored: DataFrame, k: Int, q: String = "qid",
+      v: String = "vec_id"): DataFrame = {
+    require(k >= 1, s"k=$k must be positive")
+    val w = Window.partitionBy(q).orderBy(col("sim_r").desc, col(v))
+    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+  }
+
   /** Sequential-double cosine/dot of two float vectors (codegen'd). */
   def dot(a: Column, b: Column): Column = VectorExprs.dotf(a, b)
 
@@ -41,59 +71,44 @@ object Similarity {
       when(element_at(e, i + 1) >= 0, 1 << (bits - 1 - i)).otherwise(0))
       .reduce(_ + _)
 
-  /** The buckets a sign-bucket probe reads: the query's own bucket `qb`
-    * plus its first `nprobe − 1` one-bit-flip neighbors — the standard
-    * recall lever for sign LSH (a near-boundary vector lands one sign
-    * flip away). Probe cost grows linearly with nprobe and stays
-    * |list|-bounded; each stored vector lives in exactly one bucket and
-    * the probe buckets are distinct, so no pair dedup is needed. */
-  private def probeBuckets(qb: Column, nprobe: Int): Column =
-    array((Seq(qb) ++
-      (0 until (nprobe - 1)).map(i => qb.bitwiseXOR(lit(1 << i)))): _*)
+  /** The buckets a sign-bucket probe reads, one row each: the query's
+    * own bucket `qb` plus its first `nprobe − 1` one-bit-flip neighbors —
+    * the standard recall lever for sign LSH (a near-boundary vector lands
+    * one sign flip away), so `nprobe` is in [1, bits + 1]. Probe cost
+    * grows linearly with nprobe and stays |list|-bounded; each stored
+    * vector lives in exactly one bucket and the probe buckets are
+    * distinct, so no pair dedup is needed. */
+  private def probeBuckets(qb: Column, bits: Int, nprobe: Int): Column = {
+    require(nprobe >= 1 && nprobe <= bits + 1,
+      s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
+    explode(array((Seq(qb) ++
+      (0 until (nprobe - 1)).map(i => qb.bitwiseXOR(lit(1 << i)))): _*))
+  }
 
   /** Exact top-k neighbors of a BOUNDED query set (broadcast) by brute
-    * force over the corpus — one corpus scan, similarity rounded 6 dp and
-    * ranked with an id tie-break. `queries` columns: (qid, qe[, extra]).
-    * Corpus columns: (id, vec).
-    *
-    * `excludeSelf` (default true) drops corpus rows whose id equals the
-    * query's `qid` — correct when queries are drawn FROM the corpus id
-    * space. Pass false when qids live in a different id domain, or a
-    * legitimate neighbor with a coincidentally equal id would be lost. */
+    * force over the corpus — one corpus scan. Corpus columns: (id, vec);
+    * the top-k contract of [[Similarity]]. */
   def topK(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    val cond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = corpus.select(id.as("vec_id"), vec.as("__v"))
-      .join(broadcast(queries), cond)
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("__v")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(corpus.select(id.as("vec_id"), vec.as("__v")), queries,
+      lit(true), dot(col("qe"), col("__v")), k, excludeSelf)
   }
 
-  /** IVF-style top-k: probe only the query's sign-bucket inverted list.
-    * Probe cost = |list|, not |corpus|; recall tunes via `bits`.
-    * `queries` must carry (qid, qe) — see the object contract.
-    * `excludeSelf` semantics as in [[topK]]. */
+  /** IVF-style top-k: probe only the query's sign-bucket inverted list
+    * plus `nprobe − 1` one-bit-flip neighbor lists ([[probeBuckets]]).
+    * Probe cost = |list|, not |corpus|; recall tunes via `bits`. The
+    * top-k contract of [[Similarity]]. */
   def topKIvf(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int, bits: Int = 8,
       excludeSelf: Boolean = true, nprobe: Int = 1): DataFrame = {
     requireQuerySchema(queries)
-    require(nprobe >= 1 && nprobe <= bits + 1,
-      s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val e = corpus.select(id.as("vec_id"), vec.as("__v"),
       signBucket(vec, bits).as("__bucket"))
-    // multi-probe: own bucket + first nprobe−1 one-bit flips
     val q = queries.withColumn("__qbucket", signBucket(col("qe"), bits))
-      .withColumn("__probe", explode(probeBuckets(col("__qbucket"), nprobe)))
-    val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = e.join(broadcast(q),
-        col("__bucket") === col("__probe") && selfCond)
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("__v")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .withColumn("__probe", probeBuckets(col("__qbucket"), bits, nprobe))
+    topKTail(e, q, col("__bucket") === col("__probe"),
+      dot(col("qe"), col("__v")), k, excludeSelf)
   }
 
   /** Corpus-to-corpus k-nearest-neighbor GRAPH: every vector's top-k
@@ -113,22 +128,16 @@ object Similarity {
     * dedup is needed. */
   def knnGraph(corpus: DataFrame, id: Column, vec: Column, k: Int,
       bits: Int = 8, nprobe: Int = 1): DataFrame = {
-    require(k >= 1, s"k=$k must be positive")
-    require(nprobe >= 1 && nprobe <= bits + 1,
-      s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val src = corpus.select(id.as("src_id"), vec.as("__sv"),
       signBucket(vec, bits).as("__sb"))
-    val q = src.withColumn("__probe",
-      explode(probeBuckets(col("__sb"), nprobe)))
+    val q = src.withColumn("__probe", probeBuckets(col("__sb"), bits, nprobe))
     val dst = corpus.select(id.as("dst_id"), vec.as("__dv"),
       signBucket(vec, bits).as("__db"))
     val scored = q.join(dst, col("__db") === col("__probe") &&
         col("dst_id") =!= col("src_id"))
       .select(col("src_id"), col("dst_id"),
         round(dot(col("__sv"), col("__dv")), 6).as("sim_r"))
-    val w = Window.partitionBy("src_id")
-      .orderBy(col("sim_r").desc, col("dst_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    ranked(scored, k, "src_id", "dst_id")
       .select("src_id", "rk", "dst_id", "sim_r")
   }
 
@@ -467,7 +476,8 @@ object Similarity {
 
   /** Top-k by dot product against PQ-RECONSTRUCTED corpus vectors
     * (asymmetric distance computation: queries stay full-precision) —
-    * the 32×-compressed scale path. Same contracts as [[topK]]. */
+    * the 32×-compressed scale path. The top-k contract of
+    * [[Similarity]]. */
   def topKPq(corpus: DataFrame, id: Column, vec: Column,
       codebook: DataFrame, queries: DataFrame, k: Int, m: Int, subDim: Int,
       excludeSelf: Boolean = true): DataFrame = {
@@ -488,33 +498,36 @@ object Similarity {
     * ranking); the corpus never shuffles. Training is float — recall is
     * unit-test pinned (no oracle), like [[kMeansFit]] itself; the
     * oracle-checked IVF keys stay on the deterministic sign-bucket
-    * quantizer. Same (qid, qe) / (cid, ce) contracts and excludeSelf
-    * semantics as the rest of the module. */
+    * quantizer. Centroids follow the (cid, ce) contract of
+    * [[assignClusters]]; the top-k contract of [[Similarity]]. */
   def topKIvfTrained(corpus: DataFrame, id: Column, vec: Column,
       centroids: DataFrame, queries: DataFrame, k: Int, nprobe: Int = 2,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val qprobe = centroidProbes(queries, centroids, nprobe)
     val cells = assignClusters(corpus, id, vec, centroids)
       .select(col("vec_id"), col("cluster_id"))
     val e = corpus.select(id.as("vec_id"), vec.as("__v")).join(cells,
       "vec_id")
+    topKTail(e, qprobe, col("cluster_id") === col("cid"),
+      dot(col("qe"), col("__v")), k, excludeSelf)
+  }
+
+  /** The probe rows of a trained-quantizer query, (qid, qe, cid): each
+    * query's `nprobe` most-similar centroids of a (cid, ce) frame by
+    * rounded dot, ties broken by the smaller cid. */
+  private def centroidProbes(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val probeW = Window.partitionBy("qid")
       .orderBy(col("__csim").desc, col("cid"))
-    val qprobe = queries
+    queries
       .crossJoin(broadcast(centroids.select(col("cid"), col("ce"))))
       .select(col("qid"), col("qe"), col("cid"),
         round(dot(col("qe"), col("ce")), 6).as("__csim"))
       .withColumn("__crk", row_number().over(probeW))
       .filter(col("__crk") <= nprobe)
       .select(col("qid"), col("qe"), col("cid"))
-    val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = e.join(broadcast(qprobe),
-        col("cluster_id") === col("cid") && selfCond)
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("__v")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
 
   /** IVF+PQ — THE production 100 TB ANN architecture, composing the two
@@ -532,20 +545,17 @@ object Similarity {
     * IVF residuals, keeping every stage engine-reproducible and
     * oracle-checkable); queries stay full-precision on their side of
     * the dot. The codes→cell join is a plain equi-join on the vector id
-    * (both sides hash-partition on it at scale). Same (qid, qe) query
-    * contract, excludeSelf and tie-break semantics as [[topK]]. */
+    * (both sides hash-partition on it at scale). The top-k contract of
+    * [[Similarity]]. */
   def topKIvfPq(corpus: DataFrame, id: Column, vec: Column,
       codebook: DataFrame, queries: DataFrame, k: Int, m: Int, subDim: Int,
       bits: Int = 8, nprobe: Int = 1,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    require(nprobe >= 1 && nprobe <= bits + 1,
-      s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val base = corpus.select(id.as("vec_id"), vec.as("__v"),
       signBucket(vec, bits).as("__bucket"))
-    // multi-probe: own cell + first nprobe−1 one-bit flips
     val q = queries.withColumn("__qbucket", signBucket(col("qe"), bits))
-      .withColumn("__probe", explode(probeBuckets(col("__qbucket"), nprobe)))
+      .withColumn("__probe", probeBuckets(col("__qbucket"), bits, nprobe))
     // encode ONLY the probed cells: codes are per-vector and
     // deterministic, so the cell semi-join commutes with encoding — and
     // it mirrors the production cost model, where codes are precomputed
@@ -559,19 +569,14 @@ object Similarity {
       codebook)
     val e = recon.join(hit.select(col("vec_id"), col("__bucket")),
       "vec_id")
-    val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = e.join(broadcast(q),
-        col("__bucket") === col("__probe") && selfCond)
-      .select(col("qid"), col("vec_id"),
-        round(dot(col("qe"), col("recon")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(e, q, col("__bucket") === col("__probe"),
+      dot(col("qe"), col("recon")), k, excludeSelf)
   }
 
   /** Brute-force top-k over int8-quantized vectors — the memory-bound
     * scale path: 4× less corpus to scan/broadcast than [[topK]], with
-    * recall pinned by a unit test against the exact ranking. Same
-    * (qid, qe) query contract and excludeSelf semantics as [[topK]]. */
+    * recall pinned by a unit test against the exact ranking. The top-k
+    * contract of [[Similarity]]. */
   def topKQuantized(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int, excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
@@ -579,13 +584,8 @@ object Similarity {
     val qq = quantizeInt8(queries, col("qid"), col("qe"))
       .select(col("vec_id").as("qid"), col("scale").as("__qscale"),
         col("qvec").as("__qq"))
-    val cond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = qc.join(broadcast(qq), cond)
-      .select(col("qid"), col("vec_id"),
-        round(quantizedDot(col("__qscale"), col("__qq"),
-          col("scale"), col("qvec")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(qc, qq, lit(true), quantizedDot(col("__qscale"), col("__qq"),
+      col("scale"), col("qvec")), k, excludeSelf)
   }
 
   // ---------------------------------------------------------------------
@@ -640,7 +640,8 @@ object Similarity {
     * less. Recall vs the exact ranking is pinned in ApiSpec; fully
     * engine-reproducible (rounded projections, double fold, rounded
     * score, id tie-break) so unlike PCA/trained-codebook paths this one
-    * is oracle-checkable end to end. */
+    * is oracle-checkable end to end. The top-k contract of
+    * [[Similarity]]. */
   def topKRandomProjection(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int, inDim: Int, outDim: Int, seed: Int = 7,
       excludeSelf: Boolean = true): DataFrame = {
@@ -649,12 +650,8 @@ object Similarity {
     val pq = randomProjection(queries, col("qid"), col("qe"),
         inDim, outDim, seed)
       .select(col("vec_id").as("qid"), col("rp").as("__qrp"))
-    val cond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = pc.join(broadcast(pq), cond)
-      .select(col("qid"), col("vec_id"),
-        round(dotd(col("rp"), col("__qrp")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(pc, pq, lit(true), dotd(col("rp"), col("__qrp")), k,
+      excludeSelf)
   }
 
   /** Two-stage retrieval — coarse scan then exact rerank, the pattern
@@ -669,7 +666,7 @@ object Similarity {
     * Raising `coarseK` buys recall at a rerank-only cost, which is the
     * deployment's tuning knob. Fully engine-reproducible (both stages
     * round + id-tie-break), so the composition is oracle-checkable.
-    * Output: (qid, vec_id, sim_r exact, rk ≤ k). */
+    * The top-k contract of [[Similarity]], with sim_r the exact score. */
   def topKRerank(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int, coarseK: Int, inDim: Int, outDim: Int,
       seed: Int = 7, excludeSelf: Boolean = true): DataFrame = {
@@ -685,8 +682,7 @@ object Similarity {
       .join(broadcast(queries.select(col("qid"), col("qe"))), "qid")
       .select(col("qid"), col("vec_id"),
         round(dot(col("qe"), col("__cv")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    ranked(scored, k)
   }
 
   /** Fitted PCA state: per-feature means, top-k principal components
@@ -939,8 +935,8 @@ object Similarity {
     * over the fitted [[PcaModel]] projection: same k-wide scan economy,
     * better recall per dimension (components chase variance instead of
     * random directions; the gap is pinned in ApiSpec). Scores are
-    * cosine-of-projection against the CENTERED query, ranked on the
-    * rounded value with an id tie-break. */
+    * cosine-of-projection against the CENTERED query. The top-k
+    * contract of [[Similarity]]. */
   def topKPca(corpus: DataFrame, id: Column, vec: Column,
       queries: DataFrame, k: Int, model: PcaModel,
       excludeSelf: Boolean = true): DataFrame = {
@@ -948,12 +944,8 @@ object Similarity {
     val pc = pcaProject(corpus, id, vec, model)
     val pq = pcaProject(queries, col("qid"), col("qe"), model)
       .select(col("vec_id").as("qid"), col("pc").as("__qpc"))
-    val cond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = pc.join(broadcast(pq), cond)
-      .select(col("qid"), col("vec_id"),
-        round(dotd(col("pc"), col("__qpc")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(pc, pq, lit(true), dotd(col("pc"), col("__qpc")), k,
+      excludeSelf)
   }
 
   /** Per-group embedding OUTLIERS — the corrupt-row audit an embedding
@@ -1024,10 +1016,10 @@ object Similarity {
     * division of exact integers — so the whole audit is
     * oracle-checkable, unlike a float-threshold recall estimate.
     *
-    * `excludeSelf` semantics as in [[topK]]; when true the candidate
-    * count subtracts the query's own vector (its bucket is always the
-    * m=0 probe), which assumes queries are drawn FROM the corpus id
-    * space — same caveat as the ranking itself.
+    * `excludeSelf` as in the top-k contract of [[Similarity]]; when true
+    * the candidate count subtracts the query's own vector (its bucket is
+    * always the m=0 probe), which assumes queries are drawn FROM the
+    * corpus id space — same caveat as the ranking itself.
     *
     * Scale shape: |nprobes| corpus scans (the audit runs on a SAMPLED
     * query set, so each scan is the cheap side) + one 2^bits-row bucket
@@ -1042,8 +1034,6 @@ object Similarity {
     requireQuerySchema(queries)
     require(nprobes.nonEmpty && nprobes == nprobes.sorted,
       s"nprobes must be a non-empty ascending list, got $nprobes")
-    require(nprobes.head >= 1 && nprobes.last <= bits + 1,
-      s"every nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobes")
     val exact = topK(corpus, id, vec, queries, k, excludeSelf)
       .select(col("qid"), col("vec_id"))
     val exactCnt = exact.agg(count(lit(1)).as("n_exact"))
@@ -1055,11 +1045,10 @@ object Similarity {
         .select(col("qid"), col("vec_id"))
         .join(exact, Seq("qid", "vec_id"), "left_semi")
         .agg(count(lit(1)).as("hits"))
-      // probe cost: the query's own bucket plus its first p−1 one-bit
-      // flips — EXACTLY topKIvf's probe set; empty flip buckets read 0
+      // probe cost: EXACTLY topKIvf's probe set; empty flip buckets read 0
       val cand = queries
         .select(signBucket(col("qe"), bits).as("__qb"))
-        .select(explode(probeBuckets(col("__qb"), p)).as("__probe"))
+        .select(probeBuckets(col("__qb"), bits, p).as("__probe"))
         .join(broadcast(hist), col("__probe") === col("__b"), "left")
         .agg(sum(coalesce(col("__bn"), lit(0L))).as("__scanned"))
       hits.crossJoin(broadcast(cand)).withColumn("nprobe", lit(p))
@@ -1068,8 +1057,8 @@ object Similarity {
       .crossJoin(broadcast(exactCnt))
       .crossJoin(broadcast(nq))
       .select(col("nprobe"), col("n_exact"),
-        (col("__scanned") -
-          (if (excludeSelf) col("__nq") else lit(0L))).as("candidates"),
+        (col("__scanned") - when(lit(excludeSelf), col("__nq"))
+          .otherwise(lit(0L))).as("candidates"),
         col("hits"),
         (col("hits").cast("double") / col("n_exact").cast("double"))
           .as("recall"))
@@ -1083,13 +1072,14 @@ object Similarity {
     * leakage exact n-grams structurally miss (the screen used alongside
     * SemDeDup-style pipelines; Abbas et al. 2023, public).
     *
-    * `evalSet` columns: (qid, qe) — the [[topK]] query contract. Eval
-    * suites are benchmark-sized (thousands, not corpus-sized), so the
-    * eval side is BROADCAST and the plan is one corpus scan of codegen'd
-    * dot products — no shuffle of the corpus, no pair materialization
-    * beyond threshold survivors. For an eval set too big to broadcast,
-    * route both sides through the IVF bucket screen instead ([[topKIvf]]
-    * is the shape); the flag semantics stay the same.
+    * `evalSet` columns: (qid, qe) — the query frame of the top-k contract
+    * of [[Similarity]]. Eval suites are benchmark-sized (thousands, not
+    * corpus-sized), so the eval side is BROADCAST and the plan is one
+    * corpus scan of codegen'd dot products — no shuffle of the corpus,
+    * no pair materialization beyond threshold survivors. For an eval
+    * set too big to broadcast, route both sides through the IVF bucket
+    * screen instead ([[topKIvf]] is the shape); the flag semantics stay
+    * the same.
     *
     * Output: one row per FLAGGED corpus vector — (id, n_hits, eval_id,
     * sim_r) with eval_id = the best-matching eval vector (ties on the
@@ -1103,13 +1093,9 @@ object Similarity {
       .select(col("__cid"), col("qid"),
         round(dot(col("qe"), col("__v")), 6).as("sim_r"))
       .filter(col("sim_r") >= tau)
-    val w = Window.partitionBy("__cid")
-      .orderBy(col("sim_r").desc, col("qid").asc)
-    scored
       .withColumn("n_hits", count(lit(1)).over(
         Window.partitionBy(col("__cid"))))
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
+    ranked(scored, 1, "__cid", "qid")
       .select(col("__cid").as("id"), col("n_hits"),
         col("qid").as("eval_id"), col("sim_r"))
   }
@@ -1236,7 +1222,7 @@ object Similarity {
       dim: Int): DataFrame = {
     val qb = when(size(col("qe")) === dim, signBucket(col("qe"), bits))
     queries.select(size(col("qe")).as("__d"),
-      explode(probeBuckets(qb, nprobe)).as("__p"))
+      probeBuckets(qb, bits, nprobe).as("__p"))
   }
 
   /** Refuse an append onto a legacy `lists/<key>=*` index: flat files
@@ -1252,6 +1238,27 @@ object Similarity {
           "legacy layout); appending key-clustered files beside them " +
           "would make the lists unreadable — run compactIvfIndex on it " +
           "once to rewrite it in the current layout, then append")
+  }
+
+  /** The append step of every IVF family: a legacy-layout index is
+    * refused ([[requireFlatLists]]), an empty delta is a no-op (a quiet
+    * ingestion day, or a 0-row streaming micro-batch), a delta whose
+    * width is not the recorded `dim` fails loudly, and otherwise the
+    * family's `rows` of the delta append in the [[writeLists]] layout
+    * under their [[listKey]]. Rows are deterministic per vector given
+    * the stored index state, so append ≡ rebuild; the appended files are
+    * sized by the delta, not by the list count. */
+  private def appendLists(delta: DataFrame, vec: Column, path: String,
+      dim: Int)(rows: => DataFrame): Unit = {
+    requireFlatLists(delta.sparkSession, path)
+    vecDimOpt(delta, vec).foreach { dDim =>
+      require(dDim == dim,
+        s"IVF index at $path stores $dim-dim vectors but the delta " +
+          s"carries $dDim-dim vectors — the dot product would silently " +
+          "truncate; re-embed the shard or rebuild the index")
+      val r = rows
+      writeLists(r, listKey(r, s"$path/lists"), s"$path/lists", "append")
+    }
   }
 
   /** Whether a written parquet table holds any row, from its files'
@@ -1325,23 +1332,13 @@ object Similarity {
     * Because bucket and codes are deterministic per vector, append ≡
     * rebuild — the grown index answers every probe exactly as one built
     * over the union. Caller guarantees the shard's ids are not already
-    * in the index. The appended files are sized by the delta, not by
-    * the list count. An index in the legacy one-directory-per-list
-    * layout is refused until [[compactIvfIndex]] rewrites it. */
+    * in the index. An index in the legacy one-directory-per-list layout
+    * is refused until [[compactIvfIndex]] rewrites it ([[appendLists]]
+    * holds the append rules of every IVF family). */
   def appendToIvfIndex(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val (bits, dim) = readIvfParams(delta.sparkSession, path)
-    requireFlatLists(delta.sparkSession, path)
-    vecDimOpt(delta, vec) match {
-      case None => // empty shard (a quiet ingestion day): nothing to add
-      case Some(dDim) =>
-        require(dDim == dim,
-          s"IVF index at $path stores $dim-dim vectors but the delta " +
-            s"carries $dDim-dim vectors — the dot product would " +
-            "silently truncate; re-embed the shard or rebuild the index")
-        writeLists(ivfRows(delta, id, vec, bits, dim), "bucket",
-          s"$path/lists", "append")
-    }
+    appendLists(delta, vec, path, dim)(ivfRows(delta, id, vec, bits, dim))
   }
 
   /** Persist a TRAINED-coarse-quantizer IVF index — [[writeIvfIndex]]'s
@@ -1411,23 +1408,13 @@ object Similarity {
     * caller never re-supplies the quantizer) and its quantized rows
     * append to the lists. Assignment and codes are deterministic given
     * the stored centroids ⇒ append ≡ rebuild, the same certificate as
-    * [[appendToIvfIndex]]. Loud dim mismatch; a legacy-layout index is
-    * refused (the [[appendToIvfIndex]] rule). */
+    * [[appendToIvfIndex]], under the [[appendLists]] rules. */
   def appendToIvfIndexTrained(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val spark = delta.sparkSession
     val dim = graft.util.IndexMeta.readInt(spark, path, "dim")
-    requireFlatLists(spark, path)
-    vecDimOpt(delta, vec) match {
-      case None => // empty shard: nothing to add (appendToIvfIndex rule)
-      case Some(dDim) =>
-        require(dDim == dim,
-          s"trained IVF index at $path stores $dim-dim vectors but " +
-            s"the delta carries $dDim-dim vectors")
-        writeLists(trainedRows(delta, id, vec,
-            spark.read.parquet(s"$path/centroids"), dim), "cluster_id",
-          s"$path/lists", "append")
-    }
+    appendLists(delta, vec, path, dim)(trainedRows(delta, id, vec,
+      spark.read.parquet(s"$path/centroids"), dim))
   }
 
   /** Top-k against a persisted TRAINED IVF index: each query ranks the
@@ -1437,25 +1424,15 @@ object Similarity {
     * lists read from disk instead of rebuilt in-plan. Probe cost =
     * Σ|probed lists| ≈ nprobe·n/k over compressed codes, independent of
     * corpus size; the probed cells are collected (bounded by |queries|
-    * × nprobe) and pushed into the lists scan ([[probedLists]]). Same (qid, qe) contract and excludeSelf
-    * semantics as [[topK]]. Output: (qid, vec_id, sim_r, rk ≤ k). */
+    * × nprobe) and pushed into the lists scan ([[probedLists]]). The
+    * top-k contract of [[Similarity]]. */
   def topKAgainstIvfIndexTrained(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    require(k >= 1, s"k=$k must be positive")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val dim = graft.util.IndexMeta.readInt(spark, indexPath, "dim")
-    val cents = spark.read.parquet(s"$indexPath/centroids")
-    val probeW = Window.partitionBy("qid")
-      .orderBy(col("__csim").desc, col("cid"))
-    val qprobe = queries
-      .crossJoin(broadcast(cents))
-      .select(col("qid"), col("qe"), col("cid"),
-        round(dot(col("qe"), col("ce")), 6).as("__csim"))
-      .withColumn("__crk", row_number().over(probeW))
-      .filter(col("__crk") <= nprobe)
-      .select(col("qid"), col("cid"), col("qe"))
+    val qprobe = centroidProbes(queries,
+      spark.read.parquet(s"$indexPath/centroids"), nprobe)
     val lists = probedLists(spark, indexPath, "cluster_id",
       qprobe.select(size(col("qe")).as("__d"), col("cid").as("__p")), dim,
       qDim => s"trained IVF index at $indexPath stores $dim-dim vectors " +
@@ -1464,14 +1441,9 @@ object Similarity {
         col("cid").as("__pcid"), col("qe").as("__v")))
       .select(col("qid"), col("__pcid"), col("scale").as("__qscale"),
         col("qvec").as("__qq"))
-    val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = lists.join(broadcast(qq),
-        col("cluster_id") === col("__pcid") && selfCond)
-      .select(col("qid"), col("vec_id"),
-        round(quantizedDot(col("__qscale"), col("__qq"),
-          col("scale"), col("qvec")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(lists, qq, col("cluster_id") === col("__pcid"),
+      quantizedDot(col("__qscale"), col("__qq"), col("scale"), col("qvec")),
+      k, excludeSelf)
   }
 
   /** DELETE vectors from a persisted IVF index — the
@@ -1557,17 +1529,12 @@ object Similarity {
     * skips every unprobed list's row groups — probe cost is Σ|probed
     * lists| of compressed codes, independent of corpus size. Nothing
     * shuffles but the (|queries| · Σ|list|)-bounded scored frame into
-    * the per-query top-k window.
-    * Same (qid, qe) contract and excludeSelf semantics as [[topK]].
-    * Output: (qid, vec_id, sim_r, rk ≤ k). */
+    * the per-query top-k window. The top-k contract of [[Similarity]]. */
   def topKAgainstIvfIndex(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, nprobe: Int = 1,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    require(k >= 1, s"k=$k must be positive")
     val (bits, dim) = readIvfParams(spark, indexPath)
-    require(nprobe >= 1 && nprobe <= bits + 1,
-      s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val lists = probedLists(spark, indexPath, "bucket",
       bucketProbes(queries, bits, nprobe, dim), dim, qDim =>
         s"IVF index at $indexPath stores $dim-dim vectors but the " +
@@ -1577,16 +1544,10 @@ object Similarity {
         signBucket(col("qe"), bits).as("__qb")))
       .select(col("qid"), col("__qb"), col("scale").as("__qscale"),
         col("qvec").as("__qq"))
-    // multi-probe: own bucket + first nprobe−1 one-bit flips
-    val qp = q.withColumn("__probe", explode(probeBuckets(col("__qb"), nprobe)))
-    val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
-    val scored = lists.join(broadcast(qp),
-        col("bucket") === col("__probe") && selfCond)
-      .select(col("qid"), col("vec_id"),
-        round(quantizedDot(col("__qscale"), col("__qq"),
-          col("scale"), col("qvec")), 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    val qp = q.withColumn("__probe", probeBuckets(col("__qb"), bits, nprobe))
+    topKTail(lists, qp, col("bucket") === col("__probe"),
+      quantizedDot(col("__qscale"), col("__qq"), col("scale"), col("qvec")),
+      k, excludeSelf)
   }
 
   // ---------------------------------------------------------------------
@@ -1705,25 +1666,14 @@ object Similarity {
   /** Append a delta shard to an IVF-PQ index: the shard encodes against
     * the STORED codebook at the recorded geometry — bucket and codes
     * are deterministic per vector given the stored state ⇒ append ≡
-    * rebuild, the same certificate as [[appendToIvfIndex]]. Loud dim
-    * mismatch; an empty shard is a no-op; a legacy-layout index is
-    * refused (the [[appendToIvfIndex]] rule). */
+    * rebuild, the same certificate as [[appendToIvfIndex]], under the
+    * [[appendLists]] rules. */
   def appendToIvfPqIndex(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val spark = delta.sparkSession
     val (bits, dim, m, subDim, _) = readIvfPqParams(spark, path)
-    requireFlatLists(spark, path)
-    vecDimOpt(delta, vec) match {
-      case None => // empty shard: nothing to add (appendToIvfIndex rule)
-      case Some(dDim) =>
-        require(dDim == dim,
-          s"IVF-PQ index at $path stores $dim-dim vectors but the " +
-            s"delta carries $dDim-dim vectors — re-embed the shard or " +
-            "rebuild the index")
-        writeLists(ivfPqRows(delta, id, vec,
-            spark.read.parquet(s"$path/codebook"), bits, dim, m, subDim),
-          "bucket", s"$path/lists", "append")
-    }
+    appendLists(delta, vec, path, dim)(ivfPqRows(delta, id, vec,
+      spark.read.parquet(s"$path/codebook"), bits, dim, m, subDim))
   }
 
   /** Top-k against a persisted IVF-PQ index by TRUE asymmetric-distance
@@ -1737,17 +1687,13 @@ object Similarity {
     * memory-bandwidth over Σ|probed lists| · m bytes. Scores equal
     * dot(query, pqReconstruct(row)) up to FP addition order (ApiSpec
     * pins the equivalence at 1e-6); deterministic per engine (fixed
-    * fold order), so the seed-codebook key is oracle-checkable.
-    * Same (qid, qe) contract and excludeSelf semantics as [[topK]].
-    * Output: (qid, vec_id, sim_r, rk ≤ k). */
+    * fold order), so the seed-codebook key is oracle-checkable. The
+    * top-k contract of [[Similarity]]. */
   def topKAgainstIvfPqIndex(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    require(k >= 1, s"k=$k must be positive")
     val (bits, dim, m, subDim, codesK) = readIvfPqParams(spark, indexPath)
-    require(nprobe >= 1 && nprobe <= bits + 1,
-      s"nprobe must be in [1, bits + 1 = ${bits + 1}], got $nprobe")
     val lists = probedLists(spark, indexPath, "bucket",
       bucketProbes(queries, bits, nprobe, dim), dim, qDim =>
         s"IVF-PQ index at $indexPath stores $dim-dim vectors but the " +
@@ -1769,9 +1715,7 @@ object Similarity {
       .agg(transform(
         array_sort(collect_list(struct(col("__slot"), col("__pdot")))),
         s => s.getField("__pdot")).as("__lut"))
-    val qp = qlut.withColumn("__probe",
-      explode(probeBuckets(col("__qb"), nprobe)))
-    val selfCond = if (excludeSelf) col("vec_id") =!= col("qid") else lit(true)
+    val qp = qlut.withColumn("__probe", probeBuckets(col("__qb"), bits, nprobe))
     // ADC score: Σ_j lut[j·codesK + codes[j]] in subspace order — a
     // fixed-order double fold over m lookups, codegen'd, no join to the
     // codebook on the corpus side
@@ -1779,10 +1723,7 @@ object Similarity {
       transform(col("codes"), (c, j) =>
         element_at(col("__lut"), j * codesK + c.cast("int") + 1)),
       lit(0.0), (acc, x) => acc + x)
-    val scored = lists.join(broadcast(qp),
-        col("bucket") === col("__probe") && selfCond)
-      .select(col("qid"), col("vec_id"), round(adc, 6).as("sim_r"))
-    val w = Window.partitionBy("qid").orderBy(col("sim_r").desc, col("vec_id"))
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+    topKTail(lists, qp, col("bucket") === col("__probe"), adc, k,
+      excludeSelf)
   }
 }

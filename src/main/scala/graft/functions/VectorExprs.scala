@@ -178,6 +178,17 @@ private object ShingleWindows {
   }
 }
 
+/** The input check of the token-array kernels: one `array<string>`
+  * child, refused at analysis otherwise. */
+trait StringArrayInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an array<string> input")
+    }
+}
+
 /** Distinct n-word shingles ("w1 w2 … wn") of a token array in
   * first-occurrence order — one row-level loop replacing the
   * sequence→transform→slice→concat_ws→array_distinct chain, whose
@@ -185,15 +196,9 @@ private object ShingleWindows {
   * shingle). Strings are compared by their UTF-8 bytes, as
   * array_distinct compares them. */
 case class WordShingles(child: Expression, n: Int)
-    extends UnaryExpression
+    extends StringArrayInput
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(n >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> input")
-    }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
 
@@ -213,15 +218,9 @@ case class WordShingles(child: Expression, n: Int)
   * array — one row-level loop replacing a sequence→transform→element_at→
   * concat_ws→xxhash64→array_distinct interpreted chain. */
 case class WordShingleHashes(child: Expression, n: Int)
-    extends UnaryExpression
+    extends StringArrayInput
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(n >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> input")
-    }
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_shingle_hashes"
 
@@ -336,14 +335,8 @@ case class SortedIntersectionWeight(left: Expression, right: Expression)
   * array once per bit. Bit order matches the HOF fold it replaced
   * (bit 0 of the hash lands in the MSB). */
 case class SimHash64(child: Expression)
-    extends UnaryExpression
+    extends StringArrayInput
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> input")
-    }
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
@@ -432,15 +425,9 @@ case class MinHashSig(child: Expression, k: Int)
   * local to the row's evaluation (no mutable field is shared between the
   * tasks that evaluate one expression). */
 case class MinHashMd5Sigs(child: Expression, k: Int)
-    extends UnaryExpression
+    extends StringArrayInput
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(k >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> input")
-    }
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "minhash_md5_sigs"
 
@@ -524,14 +511,8 @@ object MinHashMd5Sigs {
   * lattice's groupBy). The DuckDB twins mirror the same md5
   * arithmetic, so every consumer key stays hash-checked. */
 case class Md5SimhashBands(child: Expression)
-    extends UnaryExpression
+    extends StringArrayInput
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> input")
-    }
   override def dataType: DataType =
     ArrayType(IntegerType, containsNull = true)
   override def nullable: Boolean = true
@@ -594,15 +575,9 @@ case class Md5SimhashBands(child: Expression)
   * skipped; all-null/empty input → k nulls, matching the
   * array_min-over-empty HOF semantics). */
 case class MinHashKMSigs(child: Expression, k: Int)
-    extends UnaryExpression
+    extends StringArrayInput
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
   require(k >= 1)
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<string> input")
-    }
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "minhash_km_sigs"
 

@@ -2524,6 +2524,76 @@ class ApiSpec extends AnyFunSuite {
       .foreach(r => assert(r.collect().isEmpty, "empty queries probed rows"))
   }
 
+  test("every Similarity top-k entry point refuses k = 0 with one message") {
+    val rnd = new scala.util.Random(59)
+    val corpus = (0L until 40L)
+      .map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("id", "emb")
+    val (id, v) = (col("id"), col("emb"))
+    val q = corpus.filter(col("id") < 3)
+      .select(col("id").as("qid"), col("emb").as("qe"))
+    val cents = corpus.filter(col("id") < 4)
+      .select(col("id").cast("int").as("cid"), col("emb").as("ce"))
+    val cb = Similarity.pqSeedCodebook(corpus, id, v, m = 2, subDim = 4,
+      k = 4)
+    val pca = Similarity.pcaFit(corpus, v, inDim = 8, k = 2)
+    val root = SparkFixture.tempDir("graft_topk_k0_").getAbsolutePath
+    Similarity.writeIvfIndex(corpus, id, v, s"$root/ivf", bits = 4)
+    Similarity.writeIvfIndexTrained(corpus, id, v, cents, s"$root/trained")
+    Similarity.writeIvfPqIndex(corpus, id, v, cb, s"$root/pq", bits = 4,
+      m = 2, subDim = 4)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "topK" -> (() => Similarity.topK(corpus, id, v, q, k = 0)),
+      "topKIvf" -> (() => Similarity.topKIvf(corpus, id, v, q, k = 0,
+        bits = 4)),
+      "topKPq" -> (() => Similarity.topKPq(corpus, id, v, cb, q, k = 0,
+        m = 2, subDim = 4)),
+      "topKIvfTrained" -> (() => Similarity.topKIvfTrained(corpus, id, v,
+        cents, q, k = 0)),
+      "topKIvfPq" -> (() => Similarity.topKIvfPq(corpus, id, v, cb, q,
+        k = 0, m = 2, subDim = 4, bits = 4)),
+      "topKQuantized" -> (() => Similarity.topKQuantized(corpus, id, v, q,
+        k = 0)),
+      "topKRandomProjection" -> (() => Similarity.topKRandomProjection(
+        corpus, id, v, q, k = 0, inDim = 8, outDim = 4)),
+      "topKRerank" -> (() => Similarity.topKRerank(corpus, id, v, q, k = 0,
+        coarseK = 4, inDim = 8, outDim = 4)),
+      "topKPca" -> (() => Similarity.topKPca(corpus, id, v, q, k = 0, pca)),
+      "topKAgainstIvfIndex" -> (() => Similarity.topKAgainstIvfIndex(spark,
+        s"$root/ivf", q, k = 0)),
+      "topKAgainstIvfIndexTrained" -> (() =>
+        Similarity.topKAgainstIvfIndexTrained(spark, s"$root/trained", q,
+          k = 0)),
+      "topKAgainstIvfPqIndex" -> (() => Similarity.topKAgainstIvfPqIndex(
+        spark, s"$root/pq", q, k = 0)),
+      "knnGraph" -> (() => Similarity.knnGraph(corpus, id, v, k = 0,
+        bits = 4)))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage == "requirement failed: k=0 must be positive",
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("the token-array kernels refuse a non-string array at analysis") {
+    import graft.functions.VectorExprs
+    val ints = Seq(Seq(1, 2, 3)).toDF("a")
+    val a = col("a")
+    Seq("word_shingles" -> VectorExprs.wordShingles(a, 2),
+      "word_shingle_hashes" -> VectorExprs.shingleHashes(a, 2),
+      "simhash64" -> VectorExprs.simhash64(a),
+      "minhash_md5_sigs" -> VectorExprs.minhashMd5(a, 4),
+      "md5_simhash_bands" -> VectorExprs.md5SimhashBands(a),
+      "minhash_km_sigs" -> VectorExprs.minhashKM(a, 4)).foreach {
+      case (name, c) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          ints.select(c))
+        assert(e.getMessage.contains(name) &&
+          e.getMessage.contains("requires an array<string> input"),
+          s"$name: ${e.getMessage}")
+    }
+  }
+
   test("legacy one-directory-per-list IVF indexes: probes read them, " +
       "appends are refused naming compactIvfIndex, compaction migrates " +
       "them to the flat layout with unchanged probes") {

@@ -280,6 +280,26 @@ class PropertiesSpec extends AnyFunSuite {
       hits.map(_.getPath).mkString("\n"))
   }
 
+  test("Similarity ranks and drops self-matches in one place") {
+    // every top-k entry point composes from one scoring-and-ranking
+    // tail; a re-spelled sim_r rank window or self-exclusion is a second
+    // ranking policy. Matched over the code lines (comment lines
+    // dropped) with whitespace removed, as the shingle guard above
+    val f = new java.io.File("src/main/scala/graft/api/Similarity.scala")
+    val comment = Seq("*", "/*", "//")
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val code =
+      try src.getLines().filterNot(l => comment.exists(l.trim.startsWith))
+        .mkString.filterNot(_.isWhitespace)
+      finally src.close()
+    val rankWindow =
+      """orderBy\((col\("sim_r"\)\.desc|desc\("sim_r"\)|\$"sim_r"\.desc)""".r
+    assert(rankWindow.findAllIn(code).size == 1,
+      "Similarity.scala must hold exactly one sim_r rank window")
+    assert("""if\(excludeSelf\)""".r.findAllIn(code).size == 1,
+      "Similarity.scala must hold exactly one `if (excludeSelf)`")
+  }
+
   test("the manifest checksum is permutation-invariant and moves on any " +
       "single-row tamper") {
     (1 to 100).foreach { _ =>
