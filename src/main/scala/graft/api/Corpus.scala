@@ -568,14 +568,13 @@ object Corpus {
 
   /** Compact appended generations to one row per token + one rewrite
     * (vocab-sized — a file-count concern, never correctness; reads are
-    * generation-blind). Committed through [[graft.util.Swap]]. Not
+    * generation-blind). Committed by [[graft.util.Store.replace]]. Not
     * concurrent-safe with appends/reads. */
   def compactTokenCounts(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    readTokenCounts(spark, path).write.mode("overwrite")
-      .parquet(graft.util.Swap.next(path))
-    graft.util.Swap.promote(spark, path)
-  }
+      path: String): Unit =
+    graft.util.Store.replace(spark, path) { (_, staged) =>
+      readTokenCounts(spark, path).write.mode("overwrite").parquet(staged)
+    }
 
   /** Per-token drift of a new slice against the PERSISTED reference
     * vocabulary — [[tokenDrift]] with the old side read from `path`

@@ -423,15 +423,8 @@ object Quality {
     require(binMicro > 0, s"binMicro=$binMicro must be positive")
     require(minBin < maxBin, s"need minBin < maxBin, got [$minBin, $maxBin]")
     import org.apache.spark.sql.expressions.Window
-    val sc = labels.join(margins(feats, broadcast(weights)),
-        Seq("doc_id"), "left")
-      .select(col("y"),
-        greatest(lit(minBin.toLong), least(lit(maxBin.toLong),
-          floor(coalesce(col("z_micro"), lit(0L)).cast("double")
-            / binMicro.toDouble))).as("bin"))
-    val perBin = sc.groupBy("bin")
-      .agg(sum(col("y").cast("long")).as("__pos"),
-        sum(lit(1L) - col("y").cast("long")).as("__neg"))
+    val perBin = binLabelCounts(feats, labels, weights, binMicro, minBin,
+      maxBin)
     val tot = perBin.agg(sum(col("__pos")).as("__tp_all"))
     val w = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -452,6 +445,22 @@ object Quality {
       .orderBy(col("threshold_micro").desc)
   }
 
+  /** (bin, __pos, __neg): per-bin label counts of a fitted model's
+    * margins over `labels`, binned by `binMicro` and clamped to
+    * [minBin, maxBin] (a doc with no features scores 0) — ONE groupBy,
+    * map-side combinable over the corpus-sized score frame. */
+  private def binLabelCounts(feats: DataFrame, labels: DataFrame,
+      weights: DataFrame, binMicro: Long, minBin: Int,
+      maxBin: Int): DataFrame =
+    labels.join(margins(feats, broadcast(weights)), Seq("doc_id"), "left")
+      .select(col("y"),
+        greatest(lit(minBin.toLong), least(lit(maxBin.toLong),
+          floor(coalesce(col("z_micro"), lit(0L)).cast("double")
+            / binMicro.toDouble))).as("bin"))
+      .groupBy("bin")
+      .agg(sum(col("y").cast("long")).as("__pos"),
+        sum(lit(1L) - col("y").cast("long")).as("__neg"))
+
   /** Binned ROC-AUC of a fitted model — the ranking-quality summary
     * next to [[prCurve]]'s threshold pricing. Margins bucket exactly as
     * in prCurve; the cumulative (fp, tp) walk from the highest bin down
@@ -468,15 +477,8 @@ object Quality {
       binMicro: Long = Micro, minBin: Int = -5, maxBin: Int = 5): DataFrame = {
     require(binMicro > 0, s"binMicro=$binMicro must be positive")
     import org.apache.spark.sql.expressions.Window
-    val sc = labels.join(margins(feats, broadcast(weights)),
-        Seq("doc_id"), "left")
-      .select(col("y"),
-        greatest(lit(minBin.toLong), least(lit(maxBin.toLong),
-          floor(coalesce(col("z_micro"), lit(0L)).cast("double")
-            / binMicro.toDouble))).as("bin"))
-    val perBin = sc.groupBy("bin")
-      .agg(sum(col("y").cast("long")).as("__pos"),
-        sum(lit(1L) - col("y").cast("long")).as("__neg"))
+    val perBin = binLabelCounts(feats, labels, weights, binMicro, minBin,
+      maxBin)
     // bounded ≤(maxBin−minBin+1)-row windows — never a corpus sort
     val cw = Window.orderBy(col("bin").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -486,8 +488,8 @@ object Quality {
       .withColumn("fp", sum(col("__neg")).over(cw))
       .withColumn("__tpp", coalesce(lag(col("tp"), 1).over(lw), lit(0L)))
       .withColumn("__fpp", coalesce(lag(col("fp"), 1).over(lw), lit(0L)))
-    val tot = sc.agg(sum(col("y").cast("long")).as("n_pos"),
-      sum(lit(1L) - col("y").cast("long")).as("n_neg"))
+    val tot = perBin.agg(sum(col("__pos")).as("n_pos"),
+      sum(col("__neg")).as("n_neg"))
     pts.agg(sum((col("fp") - col("__fpp")) * (col("tp") + col("__tpp")))
         .as("auc_numer"))
       .crossJoin(broadcast(tot))

@@ -57,8 +57,7 @@ object Retrieval {
     // (n_docs, total_tokens): one map-side-combined pass; avgdl derives
     // from the two exact integers IN the scoring expression, so both
     // engines divide the same exact values
-    val stats = base.agg(count(lit(1)).as("__n_docs"),
-      sum(size(col("__tk"))).as("__total_tokens"))
+    val stats = statsOf(base)
     val qterms = queryTerms(queries, sep)
     // screen the token stream against the broadcast term set BEFORE the
     // (doc, term) shuffle: postings of queried terms, not the corpus
@@ -89,17 +88,24 @@ object Retrieval {
     // both are idempotent overwrites, so a failed side re-runs cleanly
     // (r16; Par.both collects both outcomes before rethrowing)
     graft.util.Par.both(
-      base
-        .select(col("__id"), size(col("__tk")).as("__dl"),
-          explode(col("__tk")).as("__term"))
-        .groupBy("__id", "__term")
-        .agg(count(lit(1)).as("__tf"), first(col("__dl")).as("__dl"))
-        .write.mode("overwrite").parquet(s"$dir/postings"),
-      base.agg(count(lit(1)).as("__n_docs"),
-          sum(size(col("__tk"))).as("__total_tokens"))
-        .write.mode("overwrite").parquet(s"$dir/stats"))
+      postingsOf(base).write.mode("overwrite").parquet(s"$dir/postings"),
+      statsOf(base).write.mode("overwrite").parquet(s"$dir/stats"))
     ()
   }
+
+  /** (__id, __term, __tf, __dl) postings of a (__id, __tk) token frame:
+    * one row per (doc, term), `__dl` the doc's token count. */
+  private def postingsOf(base: DataFrame): DataFrame =
+    base
+      .select(col("__id"), size(col("__tk")).as("__dl"),
+        explode(col("__tk")).as("__term"))
+      .groupBy("__id", "__term")
+      .agg(count(lit(1)).as("__tf"), first(col("__dl")).as("__dl"))
+
+  /** The 1-row (__n_docs, __total_tokens) stats of a token frame. */
+  private def statsOf(base: DataFrame): DataFrame =
+    base.agg(count(lit(1)).as("__n_docs"),
+      sum(size(col("__tk"))).as("__total_tokens"))
 
   /** BM25 top-k against a [[writeBm25Index]] index — identical scoring
     * arithmetic to [[bm25TopK]] (shared code path), so results are
@@ -130,7 +136,7 @@ object Retrieval {
     *
     * Postings append IN PLACE as delta-sized parquet files (O(delta) —
     * disjoint rows need no merge); only the 1-row stats table is
-    * staged and committed through [[graft.util.Swap]], because Spark
+    * staged and committed by [[graft.util.Store.replace]], because Spark
     * cannot read-and-overwrite the same parquet path in one job. Crash
     * consistency is correspondingly weaker than a staged rewrite: a
     * mid-append failure leaves partial postings files — remove them and
@@ -141,11 +147,6 @@ object Retrieval {
     requirePostingsSchema(spark.read.parquet(s"$dir/postings"))
     val toks = split(text, sep)
     val base = delta.select(id.as("__id"), toks.as("__tk"))
-    val newPostings = base
-      .select(col("__id"), size(col("__tk")).as("__dl"),
-        explode(col("__tk")).as("__term"))
-      .groupBy("__id", "__term")
-      .agg(count(lit(1)).as("__tf"), first(col("__dl")).as("__dl"))
     // postings rows are per-(doc, term) and the precondition says delta
     // ids are NEW, so the delta's rows are DISJOINT from the stored
     // ones: a parquet APPEND of delta-sized files is the whole merge —
@@ -157,19 +158,17 @@ object Retrieval {
     // every multi-file append here: a mid-job failure leaves partial
     // delta files — re-run after removing them, or commit via manifest
     // on stores that support it.
-    newPostings.write.mode("append").parquet(s"$dir/postings")
+    postingsOf(base).write.mode("append").parquet(s"$dir/postings")
     // the 1-row stats frame DOES need read-combine-rewrite (it is a
     // sum, not a disjoint union) — staged because Spark cannot read and
     // overwrite the same parquet path in one job; the table is one row,
     // so the rewrite is O(1)
-    val oldStats = spark.read.parquet(s"$dir/stats")
-    val deltaStats = base.agg(count(lit(1)).as("__n_docs"),
-      sum(size(col("__tk"))).as("__total_tokens"))
-    oldStats.unionByName(deltaStats)
-      .agg(sum(col("__n_docs")).as("__n_docs"),
-        sum(col("__total_tokens")).as("__total_tokens"))
-      .write.mode("overwrite").parquet(graft.util.Swap.next(s"$dir/stats"))
-    graft.util.Swap.promote(spark, s"$dir/stats")
+    graft.util.Store.replace(spark, s"$dir/stats") { (live, staged) =>
+      spark.read.parquet(live).unionByName(statsOf(base))
+        .agg(sum(col("__n_docs")).as("__n_docs"),
+          sum(col("__total_tokens")).as("__total_tokens"))
+        .write.mode("overwrite").parquet(staged)
+    }
   }
 
   private def queryTerms(queries: DataFrame, sep: String): DataFrame =

@@ -244,7 +244,7 @@ object Selection {
       .agg(min(coalesce(col("c"), lit(0L))).as("est"))
 
   /** Persist a count-min sketch: `path/cells` holds (r, bucket, c) rows
-    * and `path/params.txt` records (depth, width) — appends and probes
+    * and the index params record (depth, width) — appends and probes
     * verify the geometry against the recorded values (a mismatch
     * changes every bucket key, so it fails loudly instead of silently
     * estimating garbage; the substring-index params precedent).
@@ -253,20 +253,10 @@ object Selection {
     * nightly accept step never reads yesterday's corpus. */
   def writeCms(df: DataFrame, text: Column, path: String,
       depth: Int = 4, width: Int = 64): Unit = {
-    val spark = df.sparkSession
-    graft.util.IndexMeta.writeInts(spark, path, "depth" -> depth,
+    graft.util.Store.record(df.sparkSession, path, "depth" -> depth,
       "width" -> width)
     cmsBuild(df, text, depth, width)
       .write.mode("overwrite").parquet(s"$path/cells")
-  }
-
-  private def requireCmsParams(spark: org.apache.spark.sql.SparkSession,
-      path: String, depth: Int, width: Int): Unit = {
-    val Seq(d0, w0) =
-      graft.util.IndexMeta.readInts(spark, path, "depth", "width")
-    require(d0 == depth && w0 == width,
-      s"cms at $path was written with depth=$d0, width=$w0 but caller " +
-        s"passed depth=$depth, width=$width — every cell key differs")
   }
 
   /** The nightly accept step: build the delta shard's sketch and append
@@ -274,7 +264,8 @@ object Selection {
     * as rows across appends; [[readCms]] collapses them. */
   def appendToCms(df: DataFrame, text: Column, path: String,
       depth: Int = 4, width: Int = 64): Unit = {
-    requireCmsParams(df.sparkSession, path, depth, width)
+    graft.util.Store.open(df.sparkSession, path, "cms",
+      Seq("depth" -> depth, "width" -> width))
     cmsBuild(df, text, depth, width)
       .write.mode("append").parquet(s"$path/cells")
   }
@@ -283,7 +274,8 @@ object Selection {
     * cell-wise sum (count-min additivity). Output: (r, bucket, c). */
   def readCms(spark: org.apache.spark.sql.SparkSession,
       path: String, depth: Int = 4, width: Int = 64): DataFrame = {
-    requireCmsParams(spark, path, depth, width)
+    graft.util.Store.open(spark, path, "cms",
+      Seq("depth" -> depth, "width" -> width))
     spark.read.parquet(s"$path/cells")
       .groupBy("r", "bucket").agg(sum("c").as("c"))
   }
@@ -291,14 +283,14 @@ object Selection {
   /** Compact a grown sketch in place: collapse appended generations to
     * one row per cell + one rewrite (≤ depth·width rows — a file-count
     * concern, never correctness; estimates are generation-blind).
-    * Committed through [[graft.util.Swap]]. Do not run concurrently
+    * Committed by [[graft.util.Store.replace]]. Do not run concurrently
     * with an append or probe on the same sketch. */
   def compactCms(spark: org.apache.spark.sql.SparkSession,
       path: String, depth: Int = 4, width: Int = 64): Unit = {
-    val cells = s"$path/cells"
-    readCms(spark, path, depth, width)
-      .write.mode("overwrite").parquet(graft.util.Swap.next(cells))
-    graft.util.Swap.promote(spark, cells)
+    graft.util.Store.replace(spark, s"$path/cells") { (_, staged) =>
+      readCms(spark, path, depth, width)
+        .write.mode("overwrite").parquet(staged)
+    }
   }
 
   /** Heavy hitters with the sketch next to ground truth: top-`k`

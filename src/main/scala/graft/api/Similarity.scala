@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VectorExprs
-import graft.util.Pin
+import graft.util.{Pin, Store}
 
 /** User-facing similarity-search API over embedding columns
   * (`array<float>`, unit-norm ⇒ cosine ≡ dot). Generic forms behind the
@@ -1111,19 +1111,6 @@ object Similarity {
   // built over everything (certified by the llm_sim_index_grow oracle).
   // ---------------------------------------------------------------------
 
-  /** Loud-failure read of the parameters recorded at [[writeIvfIndex]]
-    * time: (bits, dim). A bits drift would silently change every bucket
-    * key; a dim drift would silently zip-truncate every dot — readers
-    * require() both. Params live in the `params.txt` sidecar
-    * ([[graft.util.IndexMeta]] — driver-side metadata, not a Spark
-    * job). */
-  private def readIvfParams(spark: SparkSession,
-      path: String): (Int, Int) = {
-    val Seq(bits, dim) =
-      graft.util.IndexMeta.readInts(spark, path, "bits", "dim")
-    (bits, dim)
-  }
-
   /** Vector width from the frame's first row, None for an empty frame —
     * a bounded 1-row collect (the centroid-fetch class), used only on
     * index write/append boundaries to make dimension drift a loud
@@ -1302,9 +1289,9 @@ object Similarity {
     * the compressed bytes are what make it cheap; raw vectors never
     * persist and never re-read after the write.
     *
-    * Layout: `path/params.txt` = (bits, dim) recorded write-time values
-    * (readers fail loudly on mismatch — a bits drift changes every
-    * bucket key, a dim drift silently truncates every dot);
+    * Layout: params (bits, dim) recorded through [[Store]] (readers
+    * take both from it — a bits drift changes every bucket key, a dim
+    * drift silently truncates every dot);
     * `path/lists` = (vec_id, bucket, scale, qvec), sorted by bucket
     * within each file, each list in one file per write. The multi-table
     * write is not atomic — re-run on failure (it overwrites), the
@@ -1318,8 +1305,7 @@ object Similarity {
     require(bits <= dim,
       s"bits=$bits exceeds the vector width $dim — signBucket reads the " +
         "first `bits` dimensions")
-    graft.util.IndexMeta.writeInts(spark, path, "bits" -> bits,
-      "dim" -> dim)
+    Store.record(spark, path, "bits" -> bits, "dim" -> dim)
     writeLists(ivfRows(corpus, id, vec, bits, dim), "bucket",
       s"$path/lists", "overwrite")
   }
@@ -1337,7 +1323,8 @@ object Similarity {
     * holds the append rules of every IVF family). */
   def appendToIvfIndex(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
-    val (bits, dim) = readIvfParams(delta.sparkSession, path)
+    val Seq(bits, dim) =
+      Store.open(delta.sparkSession, path, "IVF index").ints("bits", "dim")
     appendLists(delta, vec, path, dim)(ivfRows(delta, id, vec, bits, dim))
   }
 
@@ -1353,7 +1340,7 @@ object Similarity {
     * IVF deployment. Cell assignment reads the ORIGINAL vector (the
     * coarse quantizer sees full precision); only the codes compress.
     *
-    * Layout: `path/params.txt` = (dim), `path/centroids` = (cid, ce),
+    * Layout: params (dim), `path/centroids` = (cid, ce),
     * `path/lists` = (vec_id, cluster_id, scale, qvec) — the
     * [[writeLists]] layout clustered by cluster_id. Same non-atomic
     * multi-table caveat as [[writeIvfIndex]]. */
@@ -1371,7 +1358,7 @@ object Similarity {
       s"corpus vectors are $dim-dim but centroids are $cdim-dim")
     centroids.select(col("cid"), col("ce"))
       .write.mode("overwrite").parquet(s"$path/centroids")
-    graft.util.IndexMeta.writeInts(spark, path, "dim" -> dim)
+    Store.record(spark, path, "dim" -> dim)
     writeLists(trainedRows(corpus, id, vec,
         spark.read.parquet(s"$path/centroids"), dim), "cluster_id",
       s"$path/lists", "overwrite")
@@ -1412,7 +1399,7 @@ object Similarity {
   def appendToIvfIndexTrained(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val spark = delta.sparkSession
-    val dim = graft.util.IndexMeta.readInt(spark, path, "dim")
+    val dim = Store.open(spark, path, "trained IVF index").int("dim")
     appendLists(delta, vec, path, dim)(trainedRows(delta, id, vec,
       spark.read.parquet(s"$path/centroids"), dim))
   }
@@ -1430,7 +1417,7 @@ object Similarity {
       queries: DataFrame, k: Int, nprobe: Int = 2,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    val dim = graft.util.IndexMeta.readInt(spark, indexPath, "dim")
+    val dim = Store.open(spark, indexPath, "trained IVF index").int("dim")
     val qprobe = centroidProbes(queries,
       spark.read.parquet(s"$indexPath/centroids"), nprobe)
     val lists = probedLists(spark, indexPath, "cluster_id",
@@ -1476,29 +1463,24 @@ object Similarity {
     * table is written in full in the [[writeLists]] layout, keyed by
     * the live table's [[listKey]] — `bucket` for [[writeIvfIndex]] and
     * [[writeIvfPqIndex]], `cluster_id` for [[writeIvfIndexTrained]] —
-    * then committed through [[graft.util.Swap]] (its crash contract
+    * then committed by [[Store.replace]] (its crash contract
     * applies). A legacy `lists/<key>=*` table is read through its
     * partition column and rewritten flat. */
   private def rewriteLists(spark: SparkSession, path: String)(
       transform: DataFrame => DataFrame): Unit = {
     val live = s"$path/lists"
-    val tmp = graft.util.Swap.next(live)
     val lists = spark.read.parquet(live)
-    writeLists(transform(lists), listKey(lists, live), tmp, "overwrite")
-    // a ZERO-row rewrite would promote an index that answers nothing
-    // and has lost its rows, so refuse it from the staged files'
-    // footer row counts (no Spark job)
-    if (!hasRows(spark, tmp)) {
-      val tPath = new org.apache.hadoop.fs.Path(tmp)
-      tPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(tPath, true)
-      throw new IllegalStateException(
+    Store.replace(spark, live) { (_, staged) =>
+      writeLists(transform(lists), listKey(lists, live), staged, "overwrite")
+      // a ZERO-row rewrite would promote an index that answers nothing
+      // and has lost its rows, so refuse it from the staged files'
+      // footer row counts (no Spark job)
+      if (!hasRows(spark, staged)) throw new IllegalStateException(
         s"lists rewrite of $live produced ZERO rows — refusing to " +
           "promote an empty table; the live table is untouched. A " +
           "removal that purges every remaining vector should delete the " +
           "whole index instead.")
     }
-    graft.util.Swap.promote(spark, live)
   }
 
   /** COMPACT a persisted IVF index's lists table — the maintenance step
@@ -1534,7 +1516,8 @@ object Similarity {
       queries: DataFrame, k: Int, nprobe: Int = 1,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    val (bits, dim) = readIvfParams(spark, indexPath)
+    val Seq(bits, dim) =
+      Store.open(spark, indexPath, "IVF index").ints("bits", "dim")
     val lists = probedLists(spark, indexPath, "bucket",
       bucketProbes(queries, bits, nprobe, dim), dim, qDim =>
         s"IVF index at $indexPath stores $dim-dim vectors but the " +
@@ -1595,15 +1578,6 @@ object Similarity {
         s => s.getField("code").cast("byte")).as("codes"))
   }
 
-  /** Loud-failure read of the IVF-PQ parameters recorded at write time:
-    * (bits, dim, m, subDim, codesK). */
-  private def readIvfPqParams(spark: SparkSession,
-      path: String): (Int, Int, Int, Int, Int) = {
-    val Seq(bits, dim, m, subDim, codesK) = graft.util.IndexMeta
-      .readInts(spark, path, "bits", "dim", "m", "sub_dim", "codes_k")
-    (bits, dim, m, subDim, codesK)
-  }
-
   /** Persist an IVF-PQ index for [[topKAgainstIvfPqIndex]]: sign-bucket
     * inverted lists (the [[writeLists]] layout clustered by bucket — a
     * probe reads only the probed lists' row groups) holding PQ codes,
@@ -1614,9 +1588,9 @@ object Similarity {
     * training ⇒ that path is test-pinned, the topKIvfTrained rule).
     * The PQ geometry must tile the vector width exactly (m·subDim =
     * dim) — a silent tail of unencoded dimensions would make every
-    * ADC score wrong. Layout: `path/params.txt` = (bits, dim, m, sub_dim,
-    * codes_k), `path/codebook`, `path/lists` = (vec_id, bucket,
-    * codes). [[removeFromIvfIndex]]/[[compactIvfIndex]] work on the
+    * ADC score wrong. Layout: params (bits, dim, m, subDim, codesK),
+    * `path/codebook`, `path/lists` = (vec_id, bucket, codes).
+    * [[removeFromIvfIndex]]/[[compactIvfIndex]] work on the
     * lists table unchanged (same layout contract). Same non-atomic
     * multi-table caveat as [[writeIvfIndex]]. */
   def writeIvfPqIndex(corpus: DataFrame, id: Column, vec: Column,
@@ -1655,9 +1629,8 @@ object Similarity {
       {
         val codesK = cb.agg(countDistinct(col("code")).as("ck")).head()
           .getAs[Long]("ck").toInt
-        graft.util.IndexMeta.writeInts(spark, path, "bits" -> bits,
-          "dim" -> dim, "m" -> m, "sub_dim" -> subDim,
-          "codes_k" -> codesK)
+        Store.record(spark, path, "bits" -> bits, "dim" -> dim, "m" -> m,
+          "subDim" -> subDim, "codesK" -> codesK)
       },
       writeLists(rows, "bucket", s"$path/lists", "overwrite"))
     ()
@@ -1671,7 +1644,8 @@ object Similarity {
   def appendToIvfPqIndex(delta: DataFrame, id: Column, vec: Column,
       path: String): Unit = {
     val spark = delta.sparkSession
-    val (bits, dim, m, subDim, _) = readIvfPqParams(spark, path)
+    val Seq(bits, dim, m, subDim) = Store.open(spark, path, "IVF-PQ index")
+      .ints("bits", "dim", "m", "subDim")
     appendLists(delta, vec, path, dim)(ivfPqRows(delta, id, vec,
       spark.read.parquet(s"$path/codebook"), bits, dim, m, subDim))
   }
@@ -1693,7 +1667,9 @@ object Similarity {
       queries: DataFrame, k: Int, nprobe: Int = 2,
       excludeSelf: Boolean = true): DataFrame = {
     requireQuerySchema(queries)
-    val (bits, dim, m, subDim, codesK) = readIvfPqParams(spark, indexPath)
+    val Seq(bits, dim, m, subDim, codesK) =
+      Store.open(spark, indexPath, "IVF-PQ index")
+        .ints("bits", "dim", "m", "subDim", "codesK")
     val lists = probedLists(spark, indexPath, "bucket",
       bucketProbes(queries, bits, nprobe, dim), dim, qDim =>
         s"IVF-PQ index at $indexPath stores $dim-dim vectors but the " +

@@ -235,24 +235,9 @@ object SuffixArray {
       .filter(packed(col("doc"), col("pos")) =!= col("__cn"))
       .select(col("doc").as("__fd"), col("pos").as("__fp"))
 
-    // cut covered tokens and rebuild (coverage band as join residual,
-    // per-doc rebuild sorts inside the row — no global sort)
-    val toks = docs.select(id.as("doc_id"), split(text, " ").as("__tk"))
-    val tok = toks
-      .select(col("doc_id"), posexplode(col("__tk")).as(Seq("__p0", "token")))
-      .select(col("doc_id"), (col("__p0") + 1).as("t"), col("token"))
-    val kept = tok.join(flagged,
-      col("doc_id") === col("__fd") && col("t") >= col("__fp") &&
-        col("t") <= col("__fp") + (minLen - 1), "left_anti")
-    val rebuilt = kept.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_kept"),
-        concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("t"), col("token")))),
-          s => s("token"))).as("text_dedup"))
-    toks.select(col("doc_id"), size(col("__tk")).cast("long").as("n_tokens"))
-      .join(rebuilt, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tokens"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("text_dedup"), lit("")).as("text_dedup"))
+    // cut covered tokens and rebuild: the window-hash family's apply
+    TextDedup.removeCoveredSpans(
+      docs.select(id.as("doc_id"), split(text, " ").as("__tk")), flagged,
+      minLen)
   }
 }

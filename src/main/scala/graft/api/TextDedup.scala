@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.VectorExprs
-import graft.util.Pin
+import graft.util.{Pin, Store}
 
 /** User-facing deduplication API over arbitrary DataFrames — the generic
   * forms behind the fixture-bound `SparkEntry` queries. A reference-library
@@ -130,11 +130,8 @@ object TextDedup {
     // record the signature parameters IN the index: a parameter
     // mismatch at screen/append time changes every bucket key and would
     // otherwise silently screen nothing — readers require() a match
-    // (params.txt sidecar, graft.util.IndexMeta — driver-side metadata,
-    // not a Spark job)
-    graft.util.IndexMeta.writeInts(spark, path,
-      "shingle_width" -> shingleWidth, "bands" -> bands,
-      "rows_per_band" -> rowsPerBand)
+    Store.record(spark, path, "shingleWidth" -> shingleWidth,
+      "bands" -> bands, "rowsPerBand" -> rowsPerBand)
     // shingles land first; the sig table derives from the WRITTEN
     // parquet, so the corpus is tokenized exactly once regardless of
     // scale (re-deriving from text would re-run split+distinct per
@@ -164,7 +161,7 @@ object TextDedup {
       rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
     // params first (before any pin job): a mismatch must fail before the
     // shard pays its signing pass
-    requireIndexParams(shard.sparkSession, indexPath, shingleWidth, bands,
+    openSignatureIndex(shard.sparkSession, indexPath, shingleWidth, bands,
       rowsPerBand)
     dedupSignedShardAgainstIndex(shard, id,
       signShard(shard, id, text, shingleWidth, bands, rowsPerBand),
@@ -232,7 +229,7 @@ object TextDedup {
   private def indexPairs(a: SignedShard, indexPath: String,
       minJaccard: Double): DataFrame = {
     val spark = a.sh.sparkSession
-    requireIndexParams(spark, indexPath, a.shingleWidth, a.bands,
+    openSignatureIndex(spark, indexPath, a.shingleWidth, a.bands,
       a.rowsPerBand)
     crossPairs(a, spark.read.parquet(s"$indexPath/sigs"), None,
       spark.read.parquet(s"$indexPath/shingles"), minJaccard)
@@ -251,23 +248,16 @@ object TextDedup {
       "left_anti")
   }
 
-  /** Fail loudly when caller parameters disagree with the values the
-    * index was written with (the silent-empty-screen hazard), or when
-    * an interrupted [[removeFromSignatureIndex]] left its two tables
-    * from different generations. */
-  private def requireIndexParams(spark: SparkSession, path: String,
-      shingleWidth: Int, bands: Int, rowsPerBand: Int): Unit = {
-    graft.util.Swap.requireSettled(spark, path,
+  /** [[Store.open]] a signature index with the caller's signing
+    * params; an interrupted [[removeFromSignatureIndex]] is finished by
+    * re-running it. */
+  private def openSignatureIndex(spark: SparkSession, path: String,
+      shingleWidth: Int, bands: Int, rowsPerBand: Int): Unit =
+    Store.open(spark, path, "signature index", Seq(
+        "shingleWidth" -> shingleWidth, "bands" -> bands,
+        "rowsPerBand" -> rowsPerBand),
       "re-run removeFromSignatureIndex with the same ids (it is " +
         "idempotent) before screening or appending")
-    val Seq(w0, b0, r0) = graft.util.IndexMeta.readInts(spark, path,
-      "shingle_width", "bands", "rows_per_band")
-    require(w0 == shingleWidth && b0 == bands && r0 == rowsPerBand,
-      s"signature index at $path was written with (shingleWidth=$w0, " +
-        s"bands=$b0, rowsPerBand=$r0) but caller passed ($shingleWidth, " +
-        s"$bands, $rowsPerBand) — every bucket key differs, the screen " +
-        "would silently match nothing")
-  }
 
   /** Append a shard's signatures to an existing index — the accept step
     * of the nightly cycle ([[screenAgainstIndex]] survivors join the
@@ -284,7 +274,7 @@ object TextDedup {
     // safe to pin) so the shard isn't tokenized twice; deriving sigs
     // from a re-read of the appended table would re-sign the WHOLE
     // index, defeating the append
-    requireIndexParams(df.sparkSession, path, shingleWidth, bands,
+    openSignatureIndex(df.sparkSession, path, shingleWidth, bands,
       rowsPerBand)
     Pin.scope { p =>
       val sh = p(md5Shingles(df, id, text, shingleWidth))
@@ -297,8 +287,8 @@ object TextDedup {
   /** DELETE docs from a persisted signature index — the
     * right-to-be-forgotten step every production index needs: both
     * tables (shingles, sigs) are rewritten WITHOUT the given ids via an
-    * anti-join, staged in full, then committed together through
-    * [[graft.util.Swap]] (its crash contract applies; screens and
+    * anti-join, staged in full, then committed together by
+    * [[Store.replace]] (its crash contract applies; screens and
     * appends refuse a half-swapped index, and re-running the removal
     * is idempotent and repairs it). Params are untouched. After
     * removal, a screen behaves exactly as if the index had been
@@ -316,19 +306,15 @@ object TextDedup {
     // anti-join must stay valid either way. Both tables key docs as
     // `__id` (the md5Shingles/md5BandSigs contract).
     val rm = ids.select(col("doc_id").as("__id")).distinct()
-    val lives = Seq("shingles", "sigs").map(t => s"$path/$t")
-    // STAGE both survivor tables before promoting either. The two
-    // anti-join rewrites are independent jobs, so they run from two
-    // driver threads and Spark back-fills one job's task tail with the
-    // other's tasks (optimization guide §2.6 — r15, measured: remove
-    // phase 0.95 → 0.55 s warm). Par.both collects BOTH outcomes
-    // before rethrowing, so no staged write outlives a failed call.
-    def stage(live: String): Unit =
-      spark.read.parquet(live)
+    // the two anti-join rewrites are independent jobs, so Store stages
+    // them from two driver threads and Spark back-fills one job's task
+    // tail with the other's tasks (optimization guide §2.6 — r15,
+    // measured: remove phase 0.95 → 0.55 s warm)
+    Store.replace(spark, s"$path/shingles", s"$path/sigs") {
+      (live, staged) => spark.read.parquet(live)
         .join(rm, Seq("__id"), "left_anti")
-        .write.mode("overwrite").parquet(graft.util.Swap.next(live))
-    graft.util.Par.both(stage(lives(0)), stage(lives(1)))
-    graft.util.Swap.promote(spark, lives: _*)
+        .write.mode("overwrite").parquet(staged)
+    }
   }
 
   /** Screen a delta shard against a PERSISTED signature index written
@@ -348,7 +334,7 @@ object TextDedup {
       indexPath: String, shingleWidth: Int = 3, bands: Int = 4,
       rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
     // params first (before any pin job), as dedupShardAgainstIndex
-    requireIndexParams(delta.sparkSession, indexPath, shingleWidth, bands,
+    openSignatureIndex(delta.sparkSession, indexPath, shingleWidth, bands,
       rowsPerBand)
     indexPairs(signShard(delta, id, text, shingleWidth, bands, rowsPerBand),
       indexPath, minJaccard)
@@ -1460,8 +1446,8 @@ object TextDedup {
     * rebuild the docs — the shared apply stage: equi-join on doc_id
     * with the coverage band as residual, per-doc rebuild sorting inside
     * the row. `flagged` carries (__fd, __fp). */
-  private def removeCoveredSpans(toks: DataFrame, flagged: DataFrame,
-      w: Int): DataFrame = {
+  private[graft] def removeCoveredSpans(toks: DataFrame,
+      flagged: DataFrame, w: Int): DataFrame = {
     val tok = toks
       .select(col("doc_id"),
         posexplode(col("__tk")).as(Seq("__p0", "token")))
@@ -1494,9 +1480,7 @@ object TextDedup {
     * hashes table); compact periodically. */
   def writeSubstringIndex(df: DataFrame, id: Column, text: Column,
       path: String, windowTokens: Int = 8): Unit = {
-    val spark = df.sparkSession
-    graft.util.IndexMeta.writeInts(spark, path,
-      "window_tokens" -> windowTokens)
+    Store.record(df.sparkSession, path, "windowTokens" -> windowTokens)
     rollingWindows(df.select(id.as("doc_id"), split(text, " ").as("__tk")),
         windowTokens)
       .select("h").distinct()
@@ -1512,10 +1496,11 @@ object TextDedup {
     * nothing — distinct-of-union ≡ union-of-distincts (grown ≡ rebuilt,
     * pinned in ApiSpec). Duplicates and per-append small files DO
     * accumulate bytes; [[compactSubstringIndex]] on its own cadence.
-    * `windowTokens` is checked by [[requireWindowTokens]]. */
+    * `windowTokens` is checked against the recorded width. */
   def appendToSubstringIndex(df: DataFrame, id: Column, text: Column,
       path: String, windowTokens: Int = 8): Unit = {
-    requireWindowTokens(df.sparkSession, path, windowTokens)
+    Store.open(df.sparkSession, path, "substring index",
+      Seq("windowTokens" -> windowTokens))
     rollingWindows(df.select(id.as("doc_id"), split(text, " ").as("__tk")),
         windowTokens)
       .select("h").distinct()
@@ -1526,19 +1511,18 @@ object TextDedup {
     * hashes table + one rewrite — collapses cross-append duplicate rows
     * and the per-append small files (a bytes/file-count concern, never
     * a correctness one; the probe semi-join is duplicate-blind).
-    * Committed through [[graft.util.Swap]]. Do not run concurrently
-    * with a probe or append on the same index. */
+    * Committed by [[Store.replace]]. Do not run concurrently with a
+    * probe or append on the same index. */
   def compactSubstringIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = compactHashes(spark, path)
 
   /** Re-distinct `<path>/hashes` (substring and line indexes). */
   private def compactHashes(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val hashes = s"$path/hashes"
-    spark.read.parquet(hashes).distinct()
-      .write.mode("overwrite").parquet(graft.util.Swap.next(hashes))
-    graft.util.Swap.promote(spark, hashes)
-  }
+      path: String): Unit =
+    Store.replace(spark, s"$path/hashes") { (live, staged) =>
+      spark.read.parquet(live).distinct()
+        .write.mode("overwrite").parquet(staged)
+    }
 
   /** Incremental substring dedup of a delta shard against a
     * [[writeSubstringIndex]] corpus index: a delta token is cut when a
@@ -1555,22 +1539,10 @@ object TextDedup {
       text: Column, indexPath: String, windowTokens: Int = 8): DataFrame = {
     // params first (before any pin job): a mismatch must fail before the
     // shard pays its window pass
-    requireWindowTokens(shard.sparkSession, indexPath, windowTokens)
+    Store.open(shard.sparkSession, indexPath, "substring index",
+      Seq("windowTokens" -> windowTokens))
     dedupWindowedShardAgainstIndex(
       windowShard(shard, id, text, windowTokens), indexPath)
-  }
-
-  /** Fail loudly when `windowTokens` disagrees with the width the
-    * substring index at `path` was written with: every window hash
-    * differs, so a screen would silently cut nothing and an append would
-    * add hashes no probe can ever match. */
-  private def requireWindowTokens(spark: SparkSession, path: String,
-      windowTokens: Int): Unit = {
-    val w0 = graft.util.IndexMeta.readInt(spark, path, "window_tokens")
-    require(w0 == windowTokens,
-      s"substring index at $path was written with windowTokens=$w0 " +
-        s"but the caller's windows are $windowTokens tokens wide — every " +
-        "window hash differs")
   }
 
   /** The eagerly-pinned window lattice of a delta shard, with the width
@@ -1598,7 +1570,8 @@ object TextDedup {
   private[graft] def dedupWindowedShardAgainstIndex(shard: WindowedShard,
       indexPath: String): DataFrame = {
     val spark = shard.toks.sparkSession
-    requireWindowTokens(spark, indexPath, shard.windowTokens)
+    Store.open(spark, indexPath, "substring index",
+      Seq("windowTokens" -> shard.windowTokens))
     val inCorpus = shard.wins
       .join(spark.read.parquet(s"$indexPath/hashes"), Seq("h"), "left_semi")
       .select(col("doc_id").as("__fd"), col("pos").as("__fp"))
@@ -1809,25 +1782,14 @@ object TextDedup {
   // inventory, a small fraction of corpus bytes.
 
   /** Persist a corpus's distinct normalized-line hashes at `path`.
-    * `path/params.txt` records the split delimiter — a mismatched probe
-    * would hash different lines and silently miss everything, so
+    * The index records the split delimiter — a mismatched probe would
+    * hash different lines and silently miss everything, so
     * probes/appends verify it (the substring-index params guard). */
   def writeLineIndex(df: DataFrame, id: Column, text: Column,
       path: String, delim: String = "\n"): Unit = {
-    val spark = df.sparkSession
-    graft.util.IndexMeta.write(spark, path, Seq("delim" -> delim))
+    Store.record(df.sparkSession, path, "delim" -> delim)
     lineFrame(df, id, text, delim).select("h").distinct()
       .write.mode("overwrite").parquet(s"$path/hashes")
-  }
-
-  private def requireLineIndexParams(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      delim: String): Unit = {
-    val d0 = graft.util.IndexMeta.read(spark, path)("delim")
-    require(d0 == delim,
-      s"line index at $path was written with delim=${d0
-        .replace("\n", "\\n")} but caller passed ${delim
-        .replace("\n", "\\n")} — probes would hash different lines")
   }
 
   /** ACCEPT a screened delta into the index: append its distinct line
@@ -1837,13 +1799,13 @@ object TextDedup {
     * [[compactLineIndex]] on its own cadence. */
   def appendToLineIndex(df: DataFrame, id: Column, text: Column,
       path: String, delim: String = "\n"): Unit = {
-    requireLineIndexParams(df.sparkSession, path, delim)
+    Store.open(df.sparkSession, path, "line index", Seq("delim" -> delim))
     lineFrame(df, id, text, delim).select("h").distinct()
       .write.mode("append").parquet(s"$path/hashes")
   }
 
   /** Collapse appended generations to distinct hashes + one rewrite,
-    * committed through [[graft.util.Swap]]. Not concurrent-safe with
+    * committed by [[Store.replace]]. Not concurrent-safe with
     * appends/probes. */
   def compactLineIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = compactHashes(spark, path)
@@ -1865,7 +1827,7 @@ object TextDedup {
   def dedupLinesAgainstIndex(df: DataFrame, id: Column, text: Column,
       path: String, delim: String = "\n"): DataFrame = {
     val spark = df.sparkSession
-    requireLineIndexParams(spark, path, delim)
+    Store.open(spark, path, "line index", Seq("delim" -> delim))
     val idx = spark.read.parquet(s"$path/hashes")
     val ln = guardedLineFrame(df, id, text, delim)
     val fresh = ln.join(idx, Seq("h"), "left_anti")

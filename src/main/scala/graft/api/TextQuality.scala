@@ -260,42 +260,19 @@ object TextQuality {
     * join is a PLAIN shuffle equi-join on token: the model table is
     * |vocab| × |labels| and vocabulary grows with the corpus (Heaps' law),
     * so a broadcast hint would OOM executors at web scale; AQE may still
-    * pick BHJ from runtime stats at small scale — the planner's call.
+    * pick BHJ from runtime stats at small scale — the planner's call
+    * (the one hint, on the |labels|-row side, is [[nbLogProbs]]'s).
     * The per-doc token frame is corpus-sized ([[graft.util.Pin]] states
     * what its pin survives). */
   def langIdConfusion(df: DataFrame, id: Column, label: Column,
       text: Column): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val toks = df.select(id.as("__id"), label.as("__label"),
       explode(split(text, " ")).as("token"))
     val docTok = Pin(toks.groupBy(col("__id"), col("__label"), col("token"))
       .agg(count(lit(1)).as("n_tok")))
     val langTok = Pin(docTok.groupBy(col("__label"), col("token"))
       .agg(sum(col("n_tok")).as("c_lt")))
-    val vocabN = langTok.filter(col("c_lt") > 0)
-      .select("token").distinct().agg(count(lit(1)).as("v"))
-    val langTot = langTok.groupBy(col("__label"))
-      .agg(sum(col("c_lt")).as("c_l"))
-    // complete (token × label) grid so unseen pairs get the smoothed floor;
-    // the grid and the model table both descend from langTok, so the join
-    // below is a self-join — the explicit aliases force the analyzer to
-    // re-key the right side instead of resolving both operands to the same
-    // attribute (the "trivially true equals predicate" hazard)
-    val grid = langTok.filter(col("c_lt") > 0).select("token").distinct()
-      .crossJoin(langTot.select(col("__label").as("m_label"), col("c_l")))
-      .alias("g")
-    val lt = langTok.alias("lt")
-    val probs = grid
-      .join(lt,
-        col("g.token") === col("lt.token") &&
-          col("g.m_label") === col("lt.__label"), "left")
-      .select(col("g.token").as("token"), col("g.m_label").as("m_label"),
-        coalesce(col("lt.c_lt"), lit(0L)).as("c_lt"), col("g.c_l").as("c_l"))
-      .crossJoin(broadcast(vocabN))
-      .select(col("token"), col("m_label"),
-        round(log((col("c_lt") + 1).cast("double") /
-          (col("c_l") + col("v"))), 9)
-          .cast(DecimalType(18, 9)).as("logp"))
+    val probs = nbLogProbs(langTok)
     // Σ logp over token instances ≡ Σ logp·count over distinct
     // (doc, token) pairs, exactly, in decimal arithmetic — and the join
     // probe side shrinks by the average within-doc repetition factor
@@ -314,6 +291,39 @@ object TextQuality {
       .groupBy(col("__label").as("label"),
         col("__best.m_label").as("pred_label"))
       .agg(count(lit(1)).as("n"))
+  }
+
+  /** (token, m_label, logp): the Laplace-smoothed naive-Bayes log-prob
+    * of every (vocab token × label) pair, from the pinned (__label,
+    * token, c_lt) model counts — logp = ln((c_lt + 1) / (c_l + v)),
+    * rounded to 9 dp as DECIMAL(18, 9) so score sums are order-free.
+    * The label side (each label's total c_l beside the vocab size v) is
+    * |labels| rows, so the grid expansion BROADCAST-hints it: without
+    * the hint the planner may fall back to an (equally bounded but
+    * sweep-flagged) CartesianProduct when size estimates are poor. The
+    * vocab side is never hinted (Heaps' law). */
+  private def nbLogProbs(langTok: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.DecimalType
+    val vocab = langTok.filter(col("c_lt") > 0).select("token").distinct()
+    val labelSide = langTok.groupBy(col("__label").as("m_label"))
+      .agg(sum(col("c_lt")).as("c_l"))
+      .crossJoin(vocab.agg(count(lit(1)).as("v")))
+    // complete (token × label) grid so unseen pairs get the smoothed
+    // floor; the grid and the model table both descend from langTok, so
+    // the join below is a self-join — the explicit aliases force the
+    // analyzer to re-key the right side instead of resolving both
+    // operands to the same attribute (the "trivially true equals
+    // predicate" hazard)
+    val grid = vocab.crossJoin(broadcast(labelSide)).alias("g")
+    val lt = langTok.alias("lt")
+    grid
+      .join(lt,
+        col("g.token") === col("lt.token") &&
+          col("g.m_label") === col("lt.__label"), "left")
+      .select(col("g.token").as("token"), col("g.m_label").as("m_label"),
+        round(log((coalesce(col("lt.c_lt"), lit(0L)) + 1).cast("double") /
+          (col("g.c_l") + col("g.v"))), 9)
+          .cast(DecimalType(18, 9)).as("logp"))
   }
 
   /** Per-LINE language identification with a per-document mix profile —
@@ -337,7 +347,6 @@ object TextQuality {
     * them); with the model fit on the same corpus this is vacuous. */
   def langSegments(df: DataFrame, id: Column, label: Column,
       text: Column, delim: String = "\n"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     // ONE tokenization pass feeds both the model fit and the per-line
     // probe: the (doc, line, token) lattice (delim-split, then
     // space-split — a token never spans a line boundary)
@@ -350,36 +359,13 @@ object TextQuality {
         explode(split(col("__line"), " ")).as("token"))
       .groupBy(col("__id"), col("__ln"), col("token"))
       .agg(count(lit(1)).as("n_tok")))
-    // --- model fit: identical arithmetic to langIdConfusion -----------
+    // --- model fit: langIdConfusion's model over the line lattice -----
     val labels = df.select(id.as("__lid"), label.as("__label"))
     val langTok = Pin(lnTok
       .join(labels, col("__id") === col("__lid"))
       .groupBy(col("__label"), col("token"))
       .agg(sum(col("n_tok")).as("c_lt")))
-    val vocabN = langTok.filter(col("c_lt") > 0)
-      .select("token").distinct().agg(count(lit(1)).as("v"))
-    val langTot = langTok.groupBy(col("__label"))
-      .agg(sum(col("c_lt")).as("c_l"))
-    // the label-totals side is |languages|-bounded by construction, so
-    // the vocab × labels grid expansion is BROADCAST-hinted — without
-    // the hint the planner may fall back to an (equally bounded but
-    // sweep-flagged) CartesianProduct when size estimates are poor
-    val grid = langTok.filter(col("c_lt") > 0).select("token").distinct()
-      .crossJoin(broadcast(
-        langTot.select(col("__label").as("m_label"), col("c_l"))))
-      .alias("g")
-    val lt = langTok.alias("lt")
-    val probs = grid
-      .join(lt,
-        col("g.token") === col("lt.token") &&
-          col("g.m_label") === col("lt.__label"), "left")
-      .select(col("g.token").as("token"), col("g.m_label").as("m_label"),
-        coalesce(col("lt.c_lt"), lit(0L)).as("c_lt"), col("g.c_l").as("c_l"))
-      .crossJoin(broadcast(vocabN))
-      .select(col("token"), col("m_label"),
-        round(log((col("c_lt") + 1).cast("double") /
-          (col("c_l") + col("v"))), 9)
-          .cast(DecimalType(18, 9)).as("logp"))
+    val probs = nbLogProbs(langTok)
     // --- per-line votes ----------------------------------------------
     val lnScores = lnTok.join(probs, "token")
       .groupBy(col("__id"), col("__ln"), col("m_label"))

@@ -186,11 +186,7 @@ object Streaming {
     * sink here). */
   def twinWindowTopK(stream: DataFrame, k: Int)(
       emit: DataFrame => Unit): DataStreamWriter[Row] = {
-    val counts = stream.withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("ws"), col("event_type"), col("n"))
-    counts.writeStream.outputMode("append").foreachBatch {
+    twinTumbling(stream).writeStream.outputMode("append").foreachBatch {
       (batch: DataFrame, _: Long) =>
         val w = Window.partitionBy("ws")
           .orderBy(col("n").desc, col("event_type").asc)

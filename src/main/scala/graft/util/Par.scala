@@ -1,5 +1,10 @@
 package graft.util
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Try}
+
 /** Two-thunk driver-side overlap (optimization guide §2.6): Spark's
   * scheduler runs several jobs at once inside one application — actions
   * are only sequential because driver code calls them sequentially, so
@@ -16,10 +21,6 @@ package graft.util
   * order) is rethrown only after both thunks have terminated. */
 object Par {
   def both[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    import scala.util.{Failure, Try}
     val f1 = Future(Try(fa))
     val f2 = Future(Try(fb))
     val r1 = Await.result(f1, Duration.Inf)
@@ -29,5 +30,15 @@ object Par {
       case (_, Failure(e)) => throw e
       case _ => (r1.get, r2.get)
     }
+  }
+
+  /** [[both]] over any number of side effects, under the same failure
+    * contract; a lone thunk runs on the calling thread. */
+  def all(thunks: Seq[() => Unit]): Unit = thunks match {
+    case Seq(t) => t()
+    case _ =>
+      thunks.map(t => Future(Try(t())))
+        .map(Await.result(_, Duration.Inf))
+        .collectFirst { case Failure(e) => throw e }
   }
 }

@@ -643,6 +643,30 @@ class ApiSpec extends AnyFunSuite {
     assert(e.getMessage.contains("windowTokens=8"), e.getMessage)
   }
 
+  test("a signature index refuses a caller signing param other than the " +
+      "one it was written with, naming the param") {
+    val docs = (1 to 6).map(i => (i.toLong, s"a$i b c d e f g")).toDF(
+      "doc_id", "text")
+    val idx = SparkFixture.tempDir("sig_params").getAbsolutePath
+    TextDedup.writeSignatureIndex(docs, col("doc_id"), col("text"), idx,
+      shingleWidth = 3, bands = 4, rowsPerBand = 4)
+    val calls = Seq[(String, (Int, Int, Int) => Unit)](
+      "screenAgainstIndex" -> ((w, b, r) => TextDedup.screenAgainstIndex(
+        docs, col("doc_id"), col("text"), idx, w, b, r).collect()),
+      "dedupShardAgainstIndex" -> ((w, b, r) => TextDedup
+        .dedupShardAgainstIndex(docs, col("doc_id"), col("text"), idx, w,
+          b, r).collect()),
+      "appendToSignatureIndex" -> ((w, b, r) => TextDedup
+        .appendToSignatureIndex(docs, col("doc_id"), col("text"), idx, w,
+          b, r)))
+    val params = Seq("shingleWidth=3" -> (2, 4, 4),
+      "bands=4" -> (3, 2, 4), "rowsPerBand=4" -> (3, 4, 8))
+    for ((name, call) <- calls; (param, (w, b, r)) <- params) {
+      val e = intercept[IllegalArgumentException](call(w, b, r))
+      assert(e.getMessage.contains(param), s"$name: ${e.getMessage}")
+    }
+  }
+
   /** identity helper so the planted exact dup is a distinct String
     * instance (guards against accidental reference-equality shortcuts
     * anywhere downstream). */

@@ -170,11 +170,11 @@ class CommitFaultSpec extends AnyFunSuite {
     bm25Sweep(refuseRename = true)
   }
 
-  test("IndexMeta.write: every commit failure leaves one complete " +
+  test("Store.record: every commit failure leaves one complete " +
       "sidecar") {
     sweep(Seq("params.txt"),
-      p => graft.util.IndexMeta.write(spark, p, Seq("width" -> "64")),
-      p => graft.util.IndexMeta.write(spark, p, Seq("width" -> "32")))
+      p => graft.util.Store.record(spark, p, "width" -> "64"),
+      p => graft.util.Store.record(spark, p, "width" -> "32"))
   }
 
   test("a signature index left mid-swap is refused by screen, append and " +

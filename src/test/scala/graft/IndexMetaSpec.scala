@@ -8,18 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * 1-row-parquet `params` dir stays readable. */
 class IndexMetaSpec extends AnyFunSuite {
   private val spark = SparkFixture.spark
+  private def open(dir: String) = graft.util.Store.open(spark, dir, "index")
 
   test("write/read roundtrip preserves fields incl. newline values, " +
       "leaves no staged or retired copy behind") {
     val dir = SparkFixture.tempDir("idxmeta").getAbsolutePath
-    graft.util.IndexMeta.write(spark, dir,
-      Seq("bits" -> "8", "dim" -> "64", "delim" -> "\n"))
-    val m = graft.util.IndexMeta.read(spark, dir)
+    graft.util.Store.record(spark, dir,
+      "bits" -> "8", "dim" -> "64", "delim" -> "\n")
+    val m = open(dir).fields
     assert(m == Map("bits" -> "8", "dim" -> "64", "delim" -> "\n"))
-    assert(graft.util.IndexMeta.readInts(spark, dir, "bits", "dim")
-      == Seq(8, 64))
+    assert(open(dir).ints("bits", "dim") == Seq(8, 64))
     // write twice so the second commit retires a live sidecar
-    graft.util.IndexMeta.write(spark, dir, Seq("bits" -> "8"))
+    graft.util.Store.record(spark, dir, "bits" -> "8")
     for (sibling <- Seq("params.txt__next", "params.txt__old"))
       assert(!new java.io.File(dir, sibling).exists,
         s"$sibling must not outlive the commit")
@@ -28,7 +28,7 @@ class IndexMetaSpec extends AnyFunSuite {
   test("a truncated sidecar (no terminator) is rejected loudly, not " +
       "silently parsed with a torn value") {
     val dir = SparkFixture.tempDir("idxmeta").getAbsolutePath
-    graft.util.IndexMeta.write(spark, dir, Seq("width" -> "64"))
+    graft.util.Store.record(spark, dir, "width" -> "64")
     // simulate a torn write: chop the file mid-value (through the
     // Hadoop FS API so the local .crc sidecar stays consistent — the
     // point is the terminator check, not local checksumming)
@@ -38,7 +38,7 @@ class IndexMetaSpec extends AnyFunSuite {
     val out = fs.create(p, true)
     try out.write(torn.getBytes("UTF-8")) finally out.close()
     val e = intercept[IllegalArgumentException] {
-      graft.util.IndexMeta.read(spark, dir)
+      open(dir)
     }
     assert(e.getMessage.contains("truncated"))
   }
@@ -48,11 +48,10 @@ class IndexMetaSpec extends AnyFunSuite {
     val dir = SparkFixture.tempDir("idxmeta").getAbsolutePath
     spark.range(1).selectExpr("8 as bits", "64 as dim")
       .write.mode("overwrite").parquet(s"$dir/params")
-    assert(graft.util.IndexMeta.readInts(spark, dir, "bits", "dim")
-      == Seq(8, 64))
-    graft.util.IndexMeta.write(spark, dir, Seq("bits" -> "9"))
+    assert(open(dir).ints("bits", "dim") == Seq(8, 64))
+    graft.util.Store.record(spark, dir, "bits" -> "9")
     assert(!new java.io.File(dir, "params").exists,
       "stale legacy params dir must be retired on write")
-    assert(graft.util.IndexMeta.readInt(spark, dir, "bits") == 9)
+    assert(open(dir).int("bits") == 9)
   }
 }

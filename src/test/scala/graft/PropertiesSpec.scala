@@ -261,6 +261,29 @@ class PropertiesSpec extends AnyFunSuite {
       hits.mkString("\n"))
   }
 
+  test("every index param sidecar and staged commit in src/main goes " +
+      "through Store") {
+    // Streaming's twin state keeps its own retained-.bak swap, so it
+    // may rename; nothing else stages, renames or reads params itself
+    val words = Seq("fs.rename", "\"__next\"", "params.txt")
+    val allowed = Map("graft/util/Store.scala" -> words,
+      "graft/ops/Streaming.scala" -> Seq("fs.rename"))
+    val hits = mainSources.flatMap { f =>
+      val path = f.getPath.replace('\\', '/')
+      val banned = words.diff(allowed.collectFirst {
+        case (suffix, ok) if path.endsWith(suffix) => ok
+      }.getOrElse(Nil))
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if banned.exists(line.contains) =>
+          s"${f.getPath}:${i + 1}: ${line.trim}"
+      }.toList
+      finally src.close()
+    }
+    assert(hits.isEmpty, "index storage outside graft.util.Store:\n" +
+      hits.mkString("\n"))
+  }
+
   test("every distinct word-shingle array in src/main goes through " +
       "VectorExprs.wordShingles") {
     // the interpreted chain array_distinct(transform(sequence(…),
